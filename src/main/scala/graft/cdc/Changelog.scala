@@ -203,16 +203,18 @@ object Changelog {
       .drop("tm")
   }
 
-  /** Last op per (tbl, id) — `rn = 1` over pos-desc within key. A log
-    * that went through [[expandUpdateImages]] carries an `img`
-    * sub-order: at one binlog position the before-image tombstone
-    * (img 0) applies before the after-image upsert (img 1), so a PK
-    * swap inside one multi-row UPDATE resolves to the upsert. */
-  private def lastOpPerKey(log: DataFrame): DataFrame = {
-    val ord =
-      if (log.columns.contains("img")) Seq(col("pos").desc, col("img").desc)
-      else Seq(col("pos").desc)
-    val w = Window.partitionBy(col("tbl"), col("id")).orderBy(ord: _*)
+  /** Last op per key — `row_number() = 1` over `pos desc`, then `img
+    * desc` when the log carries [[expandUpdateImages]]'s sub-order, then
+    * `op desc`. At one binlog position the before-image tombstone (img
+    * 0) applies before the after-image upsert (img 1), and without
+    * `img` the upsert ("upsert" > "delete") still wins the tie — the
+    * delete-before-upsert order of a PK swap inside one multi-row
+    * UPDATE, matching [[graft.streaming.ChangelogStream.Entity.fold]].
+    * Shared by the batch folds here and the live views' merges. */
+  private[graft] def lastOpPerKey(log: DataFrame, keys: String*): DataFrame = {
+    val ord = Seq(col("pos").desc) ++
+      (if (log.columns.contains("img")) Seq(col("img").desc) else Nil) :+ col("op").desc
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
     log.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
   }
 
@@ -271,7 +273,7 @@ object Changelog {
     * than one key's rows, so it spills safely and AQE can split skew.
     */
   def entityState(log: DataFrame): DataFrame =
-    lastOpPerKey(log)
+    lastOpPerKey(log, "tbl", "id")
       .filter(col("op") === "upsert")
       .select(col("tbl"), col("id"), col("val"), col("pos").as("last_pos"))
 
@@ -288,7 +290,7 @@ object Changelog {
     * One key-hash exchange (the lastOpPerKey window); rows only ever
     * shrink. */
   def logCompact(log: DataFrame): DataFrame =
-    lastOpPerKey(log)
+    lastOpPerKey(log, "tbl", "id")
       .select(col("pos"), col("op"), col("tbl"), col("id"), col("val"))
 
   /** Entity state AS OF a position: the fold replayed only over ops
@@ -446,7 +448,7 @@ object Changelog {
     * the snapshot on id, log wins, final deletes drop snapshot rows.
     */
   def applyChangelog(snapshot: DataFrame, log: DataFrame, table: String): DataFrame = {
-    val lastOps = lastOpPerKey(filterTables(filterCommitted(log), Set(table)))
+    val lastOps = lastOpPerKey(filterTables(filterCommitted(log), Set(table)), "tbl", "id")
       .select(col("id").as("l_id"), col("op"), col("val").as("l_val"))
     snapshot
       .select(col("id").as("s_id"), col("val").as("s_val"))

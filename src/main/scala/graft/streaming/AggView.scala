@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.storage.StorageLevel
 
 import graft.streaming.ChangelogStream.{Change, Entity}
 
@@ -30,20 +29,14 @@ import graft.streaming.ChangelogStream.{Change, Entity}
   *     (exactly what entityState already pays); output: append-only
   *     delta facts, batch-sized.
   *  2. [[mergeBatch]]: deltas aggregate per group (map-side combined)
-  *     and merge into the published view, which is hash-bucketed by
-  *     `pmod(xxhash64(grp), numBuckets)` on the [[ViewLayout]] shared
-  *     with [[UpsertSink]]/[[JoinView]] — so a batch rewrites ONLY the
-  *     buckets containing changed groups, O(batch + touched-bucket
-  *     data), never O(groups). A dim-cardinality view (tables,
-  *     regions) fits one bucket and behaves like the old
-  *     whole-view-rewrite; a user who aims the view at a PER-USER
-  *     group key gets bucket-local maintenance instead of an
-  *     O(all-users) single-task rewrite every micro-batch. Publish is
-  *     the layout's versioned-dir + manifest + atomic `_CURRENT`
-  *     pointer flip, idempotent per batchId (replay after a crash
-  *     between flip and checkpoint commit is a no-op; a replay whose
-  *     state already reflected the batch emits zero deltas, which the
-  *     guard also absorbs).
+  *     and merge into the published view, a [[ViewLayout]] view keyed
+  *     by `grp` — so a batch rewrites ONLY the buckets containing
+  *     changed groups, O(batch + touched-bucket data), never O(groups).
+  *     A dim-cardinality view (tables, regions) fits one bucket; a
+  *     PER-USER group key gets bucket-local maintenance instead of an
+  *     O(all-users) rewrite every micro-batch. A replay whose state
+  *     already reflected the batch emits zero deltas, which the
+  *     publish's replay guard also absorbs.
   *
   * Money-grade sums should switch `value` to decimal end-to-end; the
   * double here follows the changelog fixture's schema.
@@ -66,134 +59,62 @@ object AggView {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
         (key: (String, Long), rows: Iterator[Change], state: GroupState[Entity]) => {
           val prior = state.getOption
-          // same fold as entityState: later pos wins; at equal pos the
-          // upsert applies after the delete (PK-swap image order)
-          val sorted = rows.toSeq.sortBy(c => (c.pos, c.op == "upsert"))
-          var cur = prior.orNull
-          sorted.foreach { c =>
-            if (cur == null || c.pos >= cur.lastPos)
-              cur = Entity(key._1, key._2, c.value, c.pos, live = c.op == "upsert")
-          }
-          if (cur != null) state.update(cur)
-          val oldVal = prior.collect { case e if e.live => e.value }.getOrElse(0.0)
-          val newLive = cur != null && cur.live
-          val newVal = if (newLive) cur.value else 0.0
+          val cur = Entity.fold(key, prior, rows)
+          cur.foreach(state.update)
+          val oldVal = prior.filter(_.live).map(_.value).getOrElse(0.0)
+          val newVal = cur.filter(_.live).map(_.value).getOrElse(0.0)
           val dSum = newVal - oldVal
-          val dCnt = (if (newLive) 1L else 0L) - (if (prior.exists(_.live)) 1L else 0L)
+          val dCnt = (if (cur.exists(_.live)) 1L else 0L) - (if (prior.exists(_.live)) 1L else 0L)
           if (dSum == 0.0 && dCnt == 0L) Iterator.empty
           else Iterator.single(GroupDelta(grpOf(key._1, key._2), dSum, dCnt))
         })
   }
 
-  private def emptyView(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[GroupAgg].toDF()
-  }
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) { import spark.implicits._; Seq.empty[GroupAgg].toDF() }
+    else spark.read.parquet(dirs: _*).select(col("grp"), col("sumVal"), col("cnt"))
 
   /** The currently-published view (empty if never published). */
   def readCurrent(spark: SparkSession, dir: String): DataFrame =
-    ViewLayout.currentVersion(dir) match {
-      case Some(v) =>
-        val dirs = ViewLayout.readBucketManifest(dir, v).values.toSeq.sorted
-        if (dirs.isEmpty) emptyView(spark)
-        else spark.read.parquet(dirs.map(d => s"$dir/$d"): _*)
-          .select(col("grp"), col("sumVal"), col("cnt"))
-      case None => emptyView(spark)
-    }
+    readDirs(spark, ViewLayout.currentBucketDirs(dir))
 
-  /** Stage 2: fold one batch of deltas into the published view.
-    * Idempotent per batchId. Groups whose count returns to zero leave
-    * the view (a fully-deleted group is absent, not a 0-row);
-    * `numBuckets` fixes the view's group-bucket count at creation
-    * (enforced via `_META`, exactly as [[UpsertSink.mergeBatch]]);
-    * `retainVersions` bounds on-disk history — without it a
-    * long-running view accumulates one version dir per micro-batch
-    * forever. */
+  /** Stage 2: fold one batch of deltas into the published view
+    * ([[ViewLayout.publish]]: idempotent per batchId; `numBuckets`
+    * pinned at creation; `retainVersions` bounds on-disk history).
+    * Groups whose count returns to zero leave the view (a fully-deleted
+    * group is absent, not a 0-row). */
   def mergeBatch(deltas: Dataset[GroupDelta], dir: String, batchId: Long,
-                 numBuckets: Int = 16, retainVersions: Int = 2): Unit = {
-    if (ViewLayout.publishedBatch(dir).contains(batchId)) return
-    // An empty batch 0 writes no parquet, so the manifest/pointer
-    // writes below must not assume the parquet writer created dir.
-    Files.createDirectories(Paths.get(dir))
-    ViewLayout.requireSameBuckets(dir, numBuckets, "agg view")
-    val spark = deltas.sparkSession
-    val version = ViewLayout.nextVersion(dir)
-    // persisted: referenced by BOTH the touched-bucket collect and the
-    // merge join below — without it the per-batch delta aggregation
-    // executes twice. MEMORY_AND_DISK keeps lineage, so an evicted
-    // block recomputes instead of failing (batch-sized either way).
-    val agg = deltas.groupBy(col("grp"))
-      .agg(sum(col("dSum")).as("dSum"), sum(col("dCnt")).as("dCnt"))
-      .withColumn("__bucket", pmod(xxhash64(col("grp")), lit(numBuckets)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The touched-bucket set is at most numBuckets ints — driver-sized
-    // by construction. (This collect also materializes the persist.)
-    val touched = agg.select("__bucket").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val prior = ViewLayout.currentVersion(dir)
-      .map(v => ViewLayout.readBucketManifest(dir, v)).getOrElse(Map.empty)
-
-    if (touched.nonEmpty) {
-      val curDirs = prior.filter { case (b, _) => touched.contains(b.toLong) }
-        .values.toSeq.sorted.map(d => s"$dir/$d")
-      val cur = (if (curDirs.isEmpty) emptyView(spark)
-                 else spark.read.parquet(curDirs: _*)
-                   .select(col("grp"), col("sumVal"), col("cnt")))
-        .withColumn("__bucket", pmod(xxhash64(col("grp")), lit(numBuckets)))
-      val merged = cur.as("c")
-        .join(agg.as("d"), col("c.grp") === col("d.grp"), "full_outer")
-        .select(coalesce(col("c.grp"), col("d.grp")).as("grp"),
-          (coalesce(col("c.sumVal"), lit(0.0)) + coalesce(col("d.dSum"), lit(0.0))).as("sumVal"),
-          (coalesce(col("c.cnt"), lit(0L)) + coalesce(col("d.dCnt"), lit(0L))).as("cnt"),
-          coalesce(col("c.__bucket"), col("d.__bucket")).as("__bucket"))
-        .where(col("cnt") > 0)
-      // the repartition shuffles only the touched buckets' rows (view
-      // slices + batch deltas), never the whole view
-      merged.repartition(col("__bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-        .parquet(s"$dir/$version")
+                 numBuckets: Int = 16, retainVersions: Int = 2): Unit =
+    ViewLayout.publish(dir, batchId, numBuckets, retainVersions, "agg view") { p =>
+      val spark = deltas.sparkSession
+      // persisted: referenced by BOTH the touched-bucket collect and the
+      // merge join — without it the per-batch delta aggregation executes
+      // twice. MEMORY_AND_DISK keeps lineage, so an evicted block
+      // recomputes instead of failing (batch-sized either way).
+      val agg = deltas.groupBy(col("grp"))
+        .agg(sum(col("dSum")).as("dSum"), sum(col("dCnt")).as("dCnt"))
+        .withColumn("__bucket", p.bucket(col("grp")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try p.rewrite(agg.select("__bucket")) { curDirs =>
+        readDirs(spark, curDirs).withColumn("__bucket", p.bucket(col("grp"))).as("c")
+          .join(agg.as("d"), col("c.grp") === col("d.grp"), "full_outer")
+          .select(coalesce(col("c.grp"), col("d.grp")).as("grp"),
+            (coalesce(col("c.sumVal"), lit(0.0)) + coalesce(col("d.dSum"), lit(0.0))).as("sumVal"),
+            (coalesce(col("c.cnt"), lit(0L)) + coalesce(col("d.dCnt"), lit(0L))).as("cnt"),
+            coalesce(col("c.__bucket"), col("d.__bucket")).as("__bucket"))
+          .where(col("cnt") > 0)
+      } finally agg.unpersist()
+      Nil
     }
 
-    agg.unpersist()
-    // A touched bucket may come back EMPTY (every group retired) —
-    // then no __bucket=<b> dir materializes and the bucket leaves the
-    // manifest. Untouched buckets keep their previous dirs.
-    val written = ViewLayout.writtenBuckets(dir, version)
-    val manifest = prior.filterNot { case (b, _) => touched.contains(b.toLong) } ++ written
-    val body = (s"batch $batchId" +: manifest.toSeq.sortBy(_._1)
-      .map { case (b, d) => s"$b $d" }).mkString("\n")
-    ViewLayout.writeAtomic(dir, s"$version.manifest", body)
-    if (ViewLayout.storedNumBuckets(dir).isEmpty)
-      ViewLayout.writeAtomic(dir, ViewLayout.metaFile, s"numBuckets=$numBuckets")
-    ViewLayout.writeAtomic(dir, ViewLayout.currentFile, version)
-    ViewLayout.pruneVersions(dir, retainVersions)(
-      v => ViewLayout.readBucketManifest(dir, v).values)
-  }
-
-  /** Re-shard the view to `newN` group-buckets — the
-    * [[UpsertSink.rebucket]] migration for the agg view: one
-    * O(view) rewrite published as a new version (atomic pointer flip,
-    * readers on complete manifests throughout, `_META` re-pinned so a
-    * stale writer fails fast). Writer stopped for the duration. */
+  /** Re-shard the view to `newN` group-buckets
+    * ([[ViewLayout.rebucket]]; writer stopped for the duration). */
   def rebucket(spark: SparkSession, dir: String, newN: Int,
-               retainVersions: Int = 2): Unit = {
-    require(newN > 0, s"newN must be positive, got $newN")
-    val lastBatch = ViewLayout.publishedBatch(dir)
-    val version = ViewLayout.nextVersion(dir)
-    readCurrent(spark, dir)
-      .withColumn("__bucket", pmod(xxhash64(col("grp")), lit(newN)))
-      .repartition(col("__bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-      .parquet(s"$dir/$version")
-    val written = ViewLayout.writtenBuckets(dir, version)
-    val body = (Seq(s"batch ${lastBatch.getOrElse(-1L)}") ++
-      written.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" }).mkString("\n")
-    ViewLayout.writeAtomic(dir, s"$version.manifest", body)
-    ViewLayout.writeAtomic(dir, ViewLayout.metaFile, s"numBuckets=$newN")
-    ViewLayout.writeAtomic(dir, ViewLayout.currentFile, version)
-    ViewLayout.pruneVersions(dir, retainVersions)(
-      v => ViewLayout.readBucketManifest(dir, v).values)
-  }
+               retainVersions: Int = 2): Unit =
+    ViewLayout.rebucket(dir, newN, retainVersions) { p =>
+      p.write(readCurrent(spark, dir).withColumn("__bucket", p.bucket(col("grp"))))
+      Nil
+    }
 
   /** Maintain a live (grp, sumVal, cnt) view of `changes` at `dir`. */
   def materialize(changes: Dataset[Change], grpOf: (String, Long) => String,

@@ -34,6 +34,25 @@ object ChangelogStream {
   /** Current state of one (tbl, id) entity. */
   case class Entity(tbl: String, id: Long, value: Double, lastPos: Long, live: Boolean)
 
+  object Entity {
+    /** One key's entity fold: `rows` apply on top of `prior` in
+      * position order, and within one position deletes apply before
+      * upserts — a PK swap expanded by [[ChangelogStream.expandUpdates]]
+      * puts a tombstone and an upsert of the SAME key at the same pos,
+      * and the upsert must win. The `>=` guard makes the same-pos pair
+      * apply (and makes at-least-once re-delivery of the current
+      * position a harmless no-op — replayed content is identical, the
+      * checkpoint pins the offsets). None only when there is neither a
+      * prior entity nor a row. */
+    private[graft] def fold(key: (String, Long), prior: Option[Entity],
+                            rows: Iterator[Change]): Option[Entity] =
+      rows.toSeq.sortBy(c => (c.pos, c.op == "upsert")).foldLeft(prior) { (cur, c) =>
+        if (cur.forall(c.pos >= _.lastPos))
+          Some(Entity(key._1, key._2, c.value, c.pos, live = c.op == "upsert"))
+        else cur
+      }
+  }
+
   /** Transaction-tagged event for the tx-atomicity operator.
     * `kind` ∈ begin | data | commit | rollback. */
   case class TxEvent(tx: Long, seq: Long, kind: String, change: Change)
@@ -110,26 +129,14 @@ object ChangelogStream {
         state.remove()
         return Iterator.empty
       }
-      // within one position, deletes apply before upserts: a PK swap
-      // expanded by [[expandUpdates]] puts a tombstone and an upsert of
-      // the SAME key at the same pos, and the upsert must win. The >=
-      // guard makes the same-pos pair apply (and makes at-least-once
-      // re-delivery of the current position a harmless no-op — replayed
-      // content is identical, the checkpoint pins the offsets).
-      val sorted = rows.toSeq.sortBy(c => (c.pos, c.op == "upsert"))
-      var cur = state.getOption.orNull
-      sorted.foreach { c =>
-        if (cur == null || c.pos >= cur.lastPos) {
-          cur = Entity(key._1, key._2, c.value, c.pos, live = c.op == "upsert")
-        }
-      }
-      if (cur != null) {
-        state.update(cur)
+      val cur = Entity.fold(key, state.getOption, rows)
+      cur.foreach { e =>
+        state.update(e)
         // a group invocation clears any previously-registered timeout,
         // so re-arm it on every tombstone touch and never on live rows
-        if (tombstoneTtlMs > 0 && !cur.live) state.setTimeoutDuration(tombstoneTtlMs)
+        if (tombstoneTtlMs > 0 && !e.live) state.setTimeoutDuration(tombstoneTtlMs)
       }
-      Iterator.single(cur).filter(_ != null)
+      cur.iterator
     }
 
     initial match {
@@ -219,35 +226,26 @@ object ChangelogStream {
         state.remove()
         return Iterator.empty
       }
-      val sorted = rows.map(c => Change(c._1, c._2, c._3, c._4, c._5))
-        .toSeq.sortBy(c => (c.pos, c.op == "upsert"))
-      var cur = state.getOption.orNull
       // retroactive TTL: a stored tombstone already past its horizon
       // (snapshot-seeded keys whose timer never armed, or a timer that
       // lost the race to same-batch data) is logically gone — treat
       // the incoming rows as arriving at an empty key, exactly what a
       // from-scratch replay would see. Makes expiry a pure function of
       // (positions, watermark), not of timer scheduling.
-      if (cur != null && !cur.live &&
-          cur.lastPos / 1000L + tombstoneTtlMs <= state.getCurrentWatermarkMs()) {
-        cur = null
-      }
-      sorted.foreach { c =>
-        if (cur == null || c.pos >= cur.lastPos) {
-          cur = Entity(key._1, key._2, c.value, c.pos, live = c.op == "upsert")
-        }
-      }
-      if (cur != null) {
-        state.update(cur)
+      val prior = state.getOption.filterNot(e =>
+        !e.live && e.lastPos / 1000L + tombstoneTtlMs <= state.getCurrentWatermarkMs())
+      val cur = Entity.fold(key, prior, rows.map(c => Change(c._1, c._2, c._3, c._4, c._5)))
+      cur.foreach { e =>
+        state.update(e)
         // group invocation clears any prior timer; re-arm only on
         // tombstones. The timestamp must sit at/after the current
         // watermark or Spark rejects it — clamp for late stragglers.
-        if (!cur.live) {
+        if (!e.live) {
           val wm = state.getCurrentWatermarkMs()
-          state.setTimeoutTimestamp(math.max(cur.lastPos / 1000L + tombstoneTtlMs, wm + 1))
+          state.setTimeoutTimestamp(math.max(e.lastPos / 1000L + tombstoneTtlMs, wm + 1))
         }
       }
-      Iterator.single(cur).filter(_ != null)
+      cur.iterator
     }
 
     initial match {

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.cdc.Changelog
 
 /** Incrementally-maintained JOIN view (SURVEY §2 B23): a live
   * `facts ⟕ dim` enrichment table under upserts AND deletes on BOTH
@@ -31,10 +30,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * broadcast join) is versioned alongside the view and shared
   * structurally across versions when a batch carries no dim change.
   *
-  * Layout/publish/idempotence mirror [[UpsertSink]]: versioned bucket
-  * dirs + a per-version manifest (`dim <dir>` line + `<bucket> <dir>`
-  * lines) + an atomic `_CURRENT` pointer; replays of a published
-  * batch are no-ops; `_META` pins `numBuckets`.
+  * The view is a [[ViewLayout]] view keyed by `fk`; its manifest
+  * carries one extra `dim <dir>` line naming the dim-state dir.
   */
 object JoinView {
 
@@ -50,185 +47,103 @@ object JoinView {
   def storedNumBuckets(viewDir: String): Option[Int] =
     ViewLayout.storedNumBuckets(viewDir)
 
-  /** Manifest: bucket → dir, plus the dim-state dir ("dim <dir>"). */
-  private def readManifest(viewDir: String,
-                           version: String): (Map[Int, String], Option[String]) = {
-    val dim = ViewLayout.manifestLines(viewDir, version).collectFirst {
-      case l if l.startsWith("dim ") => l.stripPrefix("dim ").trim }
-    (ViewLayout.readBucketManifest(viewDir, version), dim)
-  }
-
-  private def emptyView(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Double, Option[Double], Long)]
-      .toDF("fk", "id", "fact_val", "dim_val", "last_pos")
-  }
-
   private def emptyDim(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Double)].toDF("dim_id", "dim_value")
   }
 
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) {
+      import spark.implicits._
+      Seq.empty[(Long, Long, Double, Option[Double], Long)]
+        .toDF("fk", "id", "fact_val", "dim_val", "last_pos")
+    } else spark.read.parquet(dirs: _*)
+      .select(col("fk"), col("id"), col("fact_val"), col("dim_val"), col("last_pos"))
+
   /** The currently-published enriched view (empty if none). */
   def readCurrent(spark: SparkSession, viewDir: String): DataFrame =
-    ViewLayout.currentVersion(viewDir) match {
-      case Some(v) =>
-        val (buckets, _) = readManifest(viewDir, v)
-        if (buckets.isEmpty) emptyView(spark)
-        else spark.read
-          .parquet(buckets.values.toSeq.sorted.map(d => s"$viewDir/$d"): _*)
-          .select(col("fk"), col("id"), col("fact_val"), col("dim_val"),
-            col("last_pos"))
-      case None => emptyView(spark)
-    }
+    readDirs(spark, ViewLayout.currentBucketDirs(viewDir))
 
   /** The currently-published dim state (empty if none). */
   def readDim(spark: SparkSession, viewDir: String): DataFrame =
-    ViewLayout.currentVersion(viewDir).flatMap(v => readManifest(viewDir, v)._2) match {
+    ViewLayout.currentVersion(viewDir).flatMap(ViewLayout.manifestTag(viewDir, _, "dim")) match {
       case Some(d) => spark.read.parquet(s"$viewDir/$d")
       case None => emptyDim(spark)
     }
 
-  private def pruneVersions(viewDir: String, retain: Int): Unit =
-    ViewLayout.pruneVersions(viewDir, retain) { v =>
-      val (b, d) = readManifest(viewDir, v)
-      b.values ++ d
-    }
-
-  /** Merge one batch of two-sided changes and publish. Idempotent per
-    * batchId ([[UpsertSink.mergeBatch]]'s guard); `numBuckets` pinned
-    * at creation. */
+  /** Merge one batch of two-sided changes and publish
+    * ([[ViewLayout.publish]]: idempotent per batchId; `numBuckets`
+    * pinned at creation). */
   def mergeBatch(batch: Dataset[JoinChange], viewDir: String, batchId: Long,
-                 numBuckets: Int = 64, retainVersions: Int = 2): Unit = {
-    if (ViewLayout.publishedBatch(viewDir).contains(batchId)) return
-    // An empty batch 0 writes no parquet, so the manifest/pointer
-    // writes below must not assume the parquet writer created viewDir.
-    Files.createDirectories(Paths.get(viewDir))
-    ViewLayout.requireSameBuckets(viewDir, numBuckets, "view")
-    val spark = batch.sparkSession
-    val version = ViewLayout.nextVersion(viewDir)
-    val (priorBuckets, priorDim) = ViewLayout.currentVersion(viewDir)
-      .map(v => readManifest(viewDir, v)).getOrElse((Map.empty[Int, String], None))
+                 numBuckets: Int = 64, retainVersions: Int = 2): Unit =
+    ViewLayout.publish(viewDir, batchId, numBuckets, retainVersions, "view") { p =>
+      val spark = batch.sparkSession
+      val priorDim = p.priorTag("dim")
+      val factDelta = Changelog.lastOpPerKey(batch.toDF().filter(col("side") === "fact"), "id", "fk")
+        .select(col("fk"), col("id"), col("op"), col("value"), col("pos"))
+        .withColumn("__bucket", p.bucket(col("fk")))
+      val dimDelta = Changelog.lastOpPerKey(batch.toDF().filter(col("side") === "dim"), "id")
+        .select(col("id").as("dim_id"), col("op"), col("value").as("dim_value"))
 
-    // last op per key on each side; upsert wins a same-pos tie (the
-    // delete-before-upsert image order, as in UpsertSink)
-    def fold(df: DataFrame, keys: Seq[String]): DataFrame = {
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(col("pos").desc, col("op").desc)
-      df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
-    }
-    val factDelta = fold(batch.toDF().filter(col("side") === "fact"), Seq("id", "fk"))
-      .select(col("fk"), col("id"), col("op"), col("value"), col("pos"))
-      .withColumn("__bucket", pmod(xxhash64(col("fk")), lit(numBuckets)))
-    val dimDelta = fold(batch.toDF().filter(col("side") === "dim"), Seq("id"))
-      .select(col("id").as("dim_id"), col("op"), col("value").as("dim_value"))
+      // dim state: dim-sized by contract — merge + rewrite when the
+      // batch touches it, otherwise share the prior version's directory
+      val dimDirRel =
+        if (dimDelta.limit(1).count() == 0) priorDim
+        else {
+          val prior = priorDim.map(d => spark.read.parquet(s"$viewDir/$d"))
+            .getOrElse(emptyDim(spark))
+          val merged = prior.as("p")
+            .join(dimDelta.as("d"), col("p.dim_id") === col("d.dim_id"), "full_outer")
+            .filter(coalesce(col("d.op"), lit("upsert")) === "upsert")
+            .select(
+              coalesce(col("d.dim_id"), col("p.dim_id")).as("dim_id"),
+              when(col("d.dim_id").isNotNull, col("d.dim_value"))
+                .otherwise(col("p.dim_value")).as("dim_value"))
+          merged.write.mode(SaveMode.Overwrite).parquet(s"$viewDir/${p.version}/__dim")
+          Some(s"${p.version}/__dim")
+        }
+      val dimNew = dimDirRel.map(d => spark.read.parquet(s"$viewDir/$d"))
+        .getOrElse(emptyDim(spark))
 
-    // dim state: dim-sized by contract — merge + rewrite when the
-    // batch touches it, otherwise share the prior version's directory
-    val dimChanged = dimDelta.limit(1).count() > 0
-    val dimDirRel =
-      if (!dimChanged) priorDim
-      else {
-        val prior = priorDim.map(d => spark.read.parquet(s"$viewDir/$d"))
-          .getOrElse(emptyDim(spark))
-        val merged = prior.as("p")
-          .join(dimDelta.as("d"), col("p.dim_id") === col("d.dim_id"), "full_outer")
-          .filter(coalesce(col("d.op"), lit("upsert")) === "upsert")
-          .select(
-            coalesce(col("d.dim_id"), col("p.dim_id")).as("dim_id"),
-            when(col("d.dim_id").isNotNull, col("d.dim_value"))
-              .otherwise(col("p.dim_value")).as("dim_value"))
-        merged.write.mode(SaveMode.Overwrite).parquet(s"$viewDir/$version/__dim")
-        Some(s"$version/__dim")
+      // touched buckets: every fk a fact delta lands in, plus every
+      // changed dim key's bucket (all its referencing facts live there);
+      // written under facts/ so the write cannot clobber __dim above
+      p.rewrite(factDelta.select(col("__bucket"))
+          .unionByName(dimDelta.select(p.bucket(col("dim_id")).as("__bucket"))), "facts") {
+        curDirs =>
+          // 1. apply fact deltas on the (fk, id) key — batch wins,
+          //    deletes drop (an FK move's two images hit two buckets)
+          val facts = readDirs(spark, curDirs).as("c")
+            .join(factDelta.as("b"),
+              col("c.fk") === col("b.fk") && col("c.id") === col("b.id"), "full_outer")
+            .filter(coalesce(col("b.op"), lit("upsert")) === "upsert")
+            .select(
+              coalesce(col("b.fk"), col("c.fk")).as("fk"),
+              coalesce(col("b.id"), col("c.id")).as("id"),
+              when(col("b.id").isNotNull, col("b.value"))
+                .otherwise(col("c.fact_val")).as("fact_val"),
+              when(col("b.id").isNotNull, col("b.pos"))
+                .otherwise(col("c.last_pos")).as("last_pos"))
+          // 2. re-enrich the touched buckets against the new dim state
+          //    (broadcast by the dim-sized contract)
+          facts.join(broadcast(dimNew), col("fk") === col("dim_id"), "left")
+            .select(col("fk"), col("id"), col("fact_val"),
+              col("dim_value").as("dim_val"), col("last_pos"),
+              p.bucket(col("fk")).as("__bucket"))
       }
-    val dimNew = dimDirRel.map(d => spark.read.parquet(s"$viewDir/$d"))
-      .getOrElse(emptyDim(spark))
-
-    // touched buckets: every fk a fact delta lands in, plus every
-    // changed dim key's bucket (all its referencing facts live there)
-    val touched = factDelta.select(col("__bucket"))
-      .unionByName(dimDelta.select(
-        pmod(xxhash64(col("dim_id")), lit(numBuckets)).as("__bucket")))
-      .distinct().collect().map(_.getLong(0)).toSet
-
-    if (touched.nonEmpty) {
-      val curDirs = priorBuckets
-        .filter { case (b, _) => touched.contains(b.toLong) }
-        .values.toSeq.sorted.map(d => s"$viewDir/$d")
-      val cur = (if (curDirs.isEmpty) emptyView(spark)
-                 else spark.read.parquet(curDirs: _*)
-                   .select(col("fk"), col("id"), col("fact_val"),
-                     col("dim_val"), col("last_pos")))
-      // 1. apply fact deltas on the (fk, id) key — batch wins,
-      //    deletes drop (an FK move's two images hit two buckets)
-      val facts = cur.as("c")
-        .join(factDelta.as("b"),
-          col("c.fk") === col("b.fk") && col("c.id") === col("b.id"), "full_outer")
-        .filter(coalesce(col("b.op"), lit("upsert")) === "upsert")
-        .select(
-          coalesce(col("b.fk"), col("c.fk")).as("fk"),
-          coalesce(col("b.id"), col("c.id")).as("id"),
-          when(col("b.id").isNotNull, col("b.value"))
-            .otherwise(col("c.fact_val")).as("fact_val"),
-          when(col("b.id").isNotNull, col("b.pos"))
-            .otherwise(col("c.last_pos")).as("last_pos"))
-      // 2. re-enrich the touched buckets against the new dim state
-      //    (broadcast by the dim-sized contract)
-      val enriched = facts
-        .join(broadcast(dimNew), col("fk") === col("dim_id"), "left")
-        .select(col("fk"), col("id"), col("fact_val"),
-          col("dim_value").as("dim_val"), col("last_pos"),
-          pmod(xxhash64(col("fk")), lit(numBuckets)).as("__bucket"))
-      // Overwrite (replay of a crashed pre-flip attempt must clean its
-      // partials) — under facts/ so it cannot clobber __dim above
-      enriched.repartition(col("__bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-        .parquet(s"$viewDir/$version/facts")
+      dimDirRel.map(d => s"dim $d").toSeq
     }
 
-    val written = Option(new java.io.File(s"$viewDir/$version/facts").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-      .map(f => f.getName.stripPrefix("__bucket=").toInt -> s"$version/facts/${f.getName}")
-      .toMap
-    val manifest = priorBuckets
-      .filterNot { case (b, _) => touched.contains(b.toLong) } ++ written
-    val body = (s"batch $batchId" +: dimDirRel.map(d => s"dim $d").toSeq) ++
-      manifest.toSeq.sortBy(_._1).map { case (b, dir) => s"$b $dir" }
-    ViewLayout.writeAtomic(viewDir, s"$version.manifest", body.mkString("\n"))
-    if (storedNumBuckets(viewDir).isEmpty)
-      ViewLayout.writeAtomic(viewDir, ViewLayout.metaFile, s"numBuckets=$numBuckets")
-    ViewLayout.writeAtomic(viewDir, ViewLayout.currentFile, version)
-    pruneVersions(viewDir, retainVersions)
-  }
-
-  /** Re-shard the view's FACT buckets to `newN` — the
-    * [[UpsertSink.rebucket]] migration for the join view. The dim
-    * state is bucket-count-independent (one dir), so the prior dim
-    * directory is carried by reference; readers stay on complete
-    * manifests throughout and the resumed writer must pass the new
-    * count (`_META`, fail-fast). Writer stopped for the duration. */
+  /** Re-shard the view's FACT buckets to `newN`
+    * ([[ViewLayout.rebucket]]; writer stopped for the duration). The
+    * dim state is bucket-count-independent (one dir), so the prior dim
+    * directory is carried by reference. */
   def rebucket(spark: SparkSession, viewDir: String, newN: Int,
-               retainVersions: Int = 2): Unit = {
-    require(newN > 0, s"newN must be positive, got $newN")
-    val lastBatch = ViewLayout.publishedBatch(viewDir)
-    val priorDim = ViewLayout.currentVersion(viewDir)
-      .flatMap(v => readManifest(viewDir, v)._2)
-    val version = ViewLayout.nextVersion(viewDir)
-    readCurrent(spark, viewDir)
-      .withColumn("__bucket", pmod(xxhash64(col("fk")), lit(newN)))
-      .repartition(col("__bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-      .parquet(s"$viewDir/$version/facts")
-    val written = ViewLayout.writtenBuckets(viewDir, s"$version/facts")
-    val body = (Seq(s"batch ${lastBatch.getOrElse(-1L)}") ++
-      priorDim.map(d => s"dim $d").toSeq ++
-      written.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" }).mkString("\n")
-    ViewLayout.writeAtomic(viewDir, s"$version.manifest", body)
-    ViewLayout.writeAtomic(viewDir, ViewLayout.metaFile, s"numBuckets=$newN")
-    ViewLayout.writeAtomic(viewDir, ViewLayout.currentFile, version)
-    pruneVersions(viewDir, retainVersions)
-  }
+               retainVersions: Int = 2): Unit =
+    ViewLayout.rebucket(viewDir, newN, retainVersions) { p =>
+      p.write(readCurrent(spark, viewDir).withColumn("__bucket", p.bucket(col("fk"))), "facts")
+      p.priorTag("dim").map(d => s"dim $d").toSeq
+    }
 
   /** Start maintaining the join view from a two-sided change stream. */
   def materialize(changes: Dataset[JoinChange], viewDir: String,

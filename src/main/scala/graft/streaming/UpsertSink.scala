@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
+import graft.cdc.Changelog
 import graft.sinks.ZoneMap
 import graft.streaming.ChangelogStream.Change
 
@@ -17,69 +17,24 @@ import graft.streaming.ChangelogStream.Change
   * "building live views of data for caching or analytics", reference
   * `README.md`).
   *
-  * == Bucket-incremental layout ==
-  *
-  * The snapshot is hash-partitioned into `numBuckets` key-buckets
-  * (`pmod(xxhash64(tbl, id), numBuckets)` — the same write-once
-  * co-location idea as [[graft.sources.Bucketed]]). On disk:
-  *
-  * {{{
-  *   tableDir/
-  *     v12/__bucket=3/part-*.parquet   bucket 3 as of batch 12
-  *     v17/__bucket=3/part-*.parquet   bucket 3 rewritten by batch 17
-  *     v17.manifest                    "3 v17/__bucket=3\n5 v12/__bucket=5\n…"
-  *     _META                           "numBuckets=64"  (fixed at creation)
-  *     _CURRENT                        "v17"
-  * }}}
-  *
-  * Per micro-batch (`foreachBatch`):
-  *  1. fold the batch to its last op per (tbl, id) — one shuffle on
-  *     the batch only;
-  *  2. merge ONLY the buckets containing batch keys with their batch
-  *     slice (the incremental form of
-  *     [[graft.cdc.Changelog.applyChangelog]]; batch wins, deletes
-  *     drop rows) and write them under `v<batchId>/`;
-  *  3. publish a manifest that points touched buckets at the new
-  *     directories and untouched buckets at their previous ones, then
-  *     flip the `_CURRENT` pointer file.
-  *
-  * This makes a micro-batch cost O(batch + touched-bucket data), not
-  * O(table): a 1 GB batch against a 100 TB / 4096-bucket snapshot
-  * reads and rewrites only the ~25 GB of buckets it actually touches
-  * — the previous full-outer-merge-the-world design re-read and
-  * re-wrote all 100 TB every batch. Untouched buckets are shared
-  * structurally between versions via the manifest (no copy, no read).
-  *
-  * Versioned bucket directories + a manifest + a pointer file give
-  * atomic publish on any filesystem with atomic small-file writes (on
-  * object stores you'd swap the pointer for a table-format transaction
-  * log commit — the merge plan itself is unchanged).
-  *
-  * Restart idempotence: the published batch id is recoverable from the
-  * pointer itself (`v<batchId>`). A crash after the pointer flip but
-  * before the streaming checkpoint commits makes the engine replay the
-  * batch — with the [[alreadyPublished]] guard the replay is a no-op
-  * (the batch contents are identical on replay — the checkpoint pins
-  * the offsets — so the published snapshot is exactly the merge
-  * result). A crash BEFORE the flip leaves orphan `v<batchId>` bucket
-  * dirs that no manifest references; the replay Overwrites them (they
-  * are never also read: the still-current manifest predates them) and
-  * [[pruneVersions]] collects any stragglers.
+  * The table is a [[ViewLayout]] view keyed by `(tbl, id)` (the same
+  * write-once co-location idea as [[graft.sources.Bucketed]]); its
+  * layout, atomic publish and replay idempotence are
+  * [[ViewLayout.publish]]'s. Per micro-batch the merge plan folds the
+  * batch to its last op per key (one shuffle on the batch only), then
+  * full-outer-merges ONLY the touched buckets with their batch slice —
+  * the incremental form of [[graft.cdc.Changelog.applyChangelog]]:
+  * batch wins, deletes drop rows. A 1 GB batch against a 100 TB /
+  * 4096-bucket table reads and rewrites only the ~25 GB of buckets it
+  * touches. Optional per-version zone maps give the live view
+  * file-skipping range reads ([[readCurrentRange]]).
   */
 object UpsertSink {
 
-  /** The table's recorded bucket count, if it has ever published.
-    * `numBuckets` is part of the on-disk layout: rows land in
-    * `pmod(hash, n)` buckets, so merging with a DIFFERENT n would look
-    * up keys in the wrong buckets and silently resurrect stale rows. */
+  /** The table's recorded bucket count, if it has ever published
+    * (see [[ViewLayout.storedNumBuckets]]). */
   def storedNumBuckets(tableDir: String): Option[Int] =
     ViewLayout.storedNumBuckets(tableDir)
-
-  /** True iff `batchId` already published the current snapshot (the
-    * `batch <id>` manifest line; version names themselves are a
-    * publish counter — see [[ViewLayout.nextVersion]]). */
-  private def alreadyPublished(tableDir: String, batchId: Long): Boolean =
-    ViewLayout.publishedBatch(tableDir).contains(batchId)
 
   /** The snapshot's fixed column set (the canonical entity frame). */
   private val snapshotSchema = StructType(Seq(
@@ -91,23 +46,26 @@ object UpsertSink {
     Seq.empty[(String, Long, Double, Long)].toDF("tbl", "id", "value", "lastPos")
   }
 
-  private def statsFields(statsCols: Seq[String]): Seq[StructField] =
-    statsCols.map(c => snapshotSchema(c))
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) emptySnapshot(spark) else spark.read.parquet(dirs: _*)
+
+  /** Zone-map refresh for the JUST-WRITTEN version dir: per-file
+    * min/max from parquet footers (file-count-sized — no second pass
+    * over the bucket data). Untouched buckets keep the zone maps their
+    * own writing version produced. */
+  private def writeZoneMap(spark: SparkSession, p: ViewLayout.Publication,
+                           statsCols: Seq[String]): Unit =
+    if (statsCols.nonEmpty)
+      ZoneMap.writeManifest(spark, s"${p.dir}/${p.version}", statsCols.map(c => snapshotSchema(c)))
 
   /** Read the currently-published snapshot (empty frame if none). */
   def readCurrent(spark: SparkSession, tableDir: String): DataFrame =
-    ViewLayout.currentVersion(tableDir) match {
-      case Some(v) => readManifestSnapshot(spark, tableDir, v)
-      case None => emptySnapshot(spark)
-    }
+    readDirs(spark, ViewLayout.currentBucketDirs(tableDir))
 
   /** Batch ids whose manifests are still on disk, ascending — the
     * versions [[readVersion]] can time-travel to. */
   def retainedVersions(tableDir: String): Seq[Long] =
-    Option(new java.io.File(tableDir).listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isFile && f.getName.matches("v\\d+\\.manifest"))
-      .map(_.getName.stripSuffix(".manifest").drop(1).toLong)
-      .sorted.toSeq
+    ViewLayout.manifestVersions(tableDir)
 
   /** Time travel: the table exactly as published by batch `batchId`.
     * Works for any version whose manifest retention
@@ -121,158 +79,54 @@ object UpsertSink {
     require(Files.exists(Paths.get(tableDir, s"$v.manifest")),
       s"version $v is not retained at $tableDir " +
         s"(retained: ${retainedVersions(tableDir).mkString(", ")})")
-    readManifestSnapshot(spark, tableDir, v)
+    readDirs(spark, ViewLayout.bucketDirs(tableDir, v))
   }
 
-  private def readManifestSnapshot(spark: SparkSession, tableDir: String,
-                                   version: String): DataFrame = {
-    val dirs = ViewLayout.readBucketManifest(tableDir, version).values.toSeq.sorted
-    if (dirs.isEmpty) emptySnapshot(spark)
-    else spark.read.parquet(dirs.map(d => s"$tableDir/$d"): _*)
-  }
-
-  /** Delete manifests beyond the newest `retain` (min 2: readers that
-    * resolved the pointer just before a flip may still be scanning the
-    * previous snapshot) and any version directory none of the retained
-    * manifests reference — including orphans from a crash before a
-    * pointer flip. On an object store you'd defer this to a table
-    * format's vacuum with a reader lease — same policy, different
-    * mechanism. */
+  /** Keep the newest `retain` versions (see [[ViewLayout.pruneVersions]]). */
   def pruneVersions(tableDir: String, retain: Int): Unit =
-    ViewLayout.pruneVersions(tableDir, retain)(
-      v => ViewLayout.readBucketManifest(tableDir, v).values)
+    ViewLayout.pruneVersions(tableDir, retain)
 
-  /** Merge one batch of changes into the snapshot and publish.
-    * Idempotent per batchId: a replay of an already-published batch
-    * (crash between pointer flip and checkpoint commit) is a no-op.
-    * `numBuckets` fixes the table's key-bucket count (size it so one
-    * bucket is a few executor-partitions of data at the target scale);
-    * it is recorded in `_META` on first publish and every later call
-    * must pass the same value (enforced — see [[storedNumBuckets]]);
-    * `retainVersions` bounds on-disk history (min 2: current +
-    * previous). */
+  /** Merge one batch of changes into the snapshot and publish
+    * ([[ViewLayout.publish]]: idempotent per batchId). `numBuckets`
+    * fixes the table's key-bucket count (size it so one bucket is a few
+    * executor-partitions of data at the target scale) and every later
+    * call must pass the same value; `retainVersions` bounds on-disk
+    * history (min 2: current + previous); `statsCols` maintains
+    * per-version zone maps on those columns. */
   def mergeBatch(batch: Dataset[Change], tableDir: String, batchId: Long,
                  numBuckets: Int = 64, retainVersions: Int = 2,
-                 statsCols: Seq[String] = Nil): Unit = {
-    if (alreadyPublished(tableDir, batchId)) return
-    // An empty batch 0 (which Spark does deliver to foreachBatch)
-    // writes no parquet, so nothing else would create the table dir —
-    // the manifest/pointer writes below must not be the first touch.
-    Files.createDirectories(Paths.get(tableDir))
-    // Validate against the recorded layout BEFORE touching anything: a
-    // restart (or second caller) passing a different bucket count would
-    // rehash keys into buckets the batch never marks as touched, so
-    // stale rows for updated/deleted keys would silently survive.
-    ViewLayout.requireSameBuckets(tableDir, numBuckets, "table")
-    val spark = batch.sparkSession
-    // op desc tie-break: a PK swap expanded by ChangelogStream
-    // .expandUpdates puts a tombstone and an upsert of the same key at
-    // one position — the upsert ("upsert" > "delete") must win, matching
-    // the entity fold's delete-before-upsert image order
-    val w = Window.partitionBy(col("tbl"), col("id"))
-      .orderBy(col("pos").desc, col("op").desc)
-    val folded = batch.toDF()
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("tbl"), col("id"), col("value"), col("op"), col("pos"))
-      .withColumn("__bucket", pmod(xxhash64(col("tbl"), col("id")), lit(numBuckets)))
-    // The touched-bucket set is at most numBuckets ints — driver-sized
-    // by construction, like the ANN codebooks.
-    val touched = folded.select("__bucket").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val prior = ViewLayout.currentVersion(tableDir)
-      .map(v => ViewLayout.readBucketManifest(tableDir, v)).getOrElse(Map.empty)
-    val version = ViewLayout.nextVersion(tableDir)
-
-    if (touched.nonEmpty) {
-      val curDirs = prior.filter { case (b, _) => touched.contains(b.toLong) }
-        .values.toSeq.sorted.map(d => s"$tableDir/$d")
-      val cur = (if (curDirs.isEmpty) emptySnapshot(spark)
-                 else spark.read.parquet(curDirs: _*))
-        .withColumn("__bucket", pmod(xxhash64(col("tbl"), col("id")), lit(numBuckets)))
-      val merged = cur.as("c")
-        .join(folded.as("b"),
-          col("c.tbl") === col("b.tbl") && col("c.id") === col("b.id"), "full_outer")
-        .filter(coalesce(col("b.op"), lit("upsert")) === "upsert")
-        .select(
-          coalesce(col("b.tbl"), col("c.tbl")).as("tbl"),
-          coalesce(col("b.id"), col("c.id")).as("id"),
-          when(col("b.id").isNotNull, col("b.value")).otherwise(col("c.value")).as("value"),
-          when(col("b.id").isNotNull, col("b.pos")).otherwise(col("c.lastPos")).as("lastPos"),
-          coalesce(col("b.__bucket"), col("c.__bucket")).as("__bucket"))
-      // one output file set per bucket; the repartition shuffles only
-      // the touched buckets' rows, never the whole table
-      merged.repartition(col("__bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-        .parquet(s"$tableDir/$version")
-      // zone-map refresh for the JUST-WRITTEN version dir: per-file
-      // min/max from parquet footers (file-count-sized — no second
-      // pass over the bucket data), so LIVE views get file-skipping
-      // range reads ([[readCurrentRange]]), not just static writes.
-      // Untouched buckets keep the manifests their own writing batch
-      // produced.
-      if (statsCols.nonEmpty)
-        ZoneMap.writeManifest(spark, s"$tableDir/$version", statsFields(statsCols))
+                 statsCols: Seq[String] = Nil): Unit =
+    ViewLayout.publish(tableDir, batchId, numBuckets, retainVersions, "table") { p =>
+      val spark = batch.sparkSession
+      val folded = Changelog.lastOpPerKey(batch.toDF(), "tbl", "id")
+        .select(col("tbl"), col("id"), col("value"), col("op"), col("pos"))
+        .withColumn("__bucket", p.bucket(col("tbl"), col("id")))
+      val wrote = p.rewrite(folded.select("__bucket")) { curDirs =>
+        readDirs(spark, curDirs)
+          .withColumn("__bucket", p.bucket(col("tbl"), col("id"))).as("c")
+          .join(folded.as("b"),
+            col("c.tbl") === col("b.tbl") && col("c.id") === col("b.id"), "full_outer")
+          .filter(coalesce(col("b.op"), lit("upsert")) === "upsert")
+          .select(
+            coalesce(col("b.tbl"), col("c.tbl")).as("tbl"),
+            coalesce(col("b.id"), col("c.id")).as("id"),
+            when(col("b.id").isNotNull, col("b.value")).otherwise(col("c.value")).as("value"),
+            when(col("b.id").isNotNull, col("b.pos")).otherwise(col("c.lastPos")).as("lastPos"),
+            coalesce(col("b.__bucket"), col("c.__bucket")).as("__bucket"))
+      }
+      if (wrote) writeZoneMap(spark, p, statsCols)
+      Nil
     }
 
-    // A touched bucket may come back EMPTY (every key deleted) — then
-    // no __bucket=<b> dir materializes and the bucket simply leaves
-    // the manifest. Untouched buckets keep their previous dirs.
-    val written = ViewLayout.writtenBuckets(tableDir, version)
-    val manifest = prior.filterNot { case (b, _) => touched.contains(b.toLong) } ++ written
-    val manifestBody = (s"batch $batchId" +: manifest.toSeq.sortBy(_._1)
-      .map { case (b, dir) => s"$b $dir" }).mkString("\n")
-    ViewLayout.writeAtomic(tableDir, s"$version.manifest", manifestBody)
-    if (storedNumBuckets(tableDir).isEmpty)
-      ViewLayout.writeAtomic(tableDir, ViewLayout.metaFile, s"numBuckets=$numBuckets")
-    ViewLayout.writeAtomic(tableDir, ViewLayout.currentFile, version)
-    pruneVersions(tableDir, retainVersions)
-  }
-
-  /** Re-shard a grown table to `newN` buckets, in place, published as
-    * a new version of the same table dir — the migration path for a
-    * table whose creation-time bucket count no longer fits its size
-    * (`numBuckets` is otherwise fixed: merging under a different count
-    * would look keys up in the wrong buckets).
-    *
-    *  - **Readers are safe throughout**: they resolve the atomic
-    *    `_CURRENT` pointer to a complete manifest — until the flip
-    *    they read the old layout, after it the new one; retention
-    *    keeps the pre-rebucket version readable (time travel and
-    *    in-flight scans of the old dirs keep working until pruned).
-    *  - **The writer must be stopped** for the duration (the usual
-    *    offline re-shard discipline). After the flip `_META` records
-    *    `newN`; a resumed stream must pass the new count — a stale
-    *    writer still passing the old count fails fast at
-    *    `requireSameBuckets` instead of corrupting the table.
-    *  - Version numbers are a publish counter decoupled from batch
-    *    ids, so the rebucket version slots between batches and the
-    *    resumed stream's next batch publishes on top of it; the
-    *    `batch` idempotence line carries over so a crash-replay of the
-    *    last pre-rebucket batch stays a no-op.
-    *
-    * One full-table rewrite — O(table) by nature; the cost paid so
-    * every future batch is O(batch + touched buckets) again at a
-    * bucket size that fits the grown table. */
+  /** Re-shard a grown table to `newN` buckets, in place
+    * ([[ViewLayout.rebucket]]; the writer must be stopped meanwhile). */
   def rebucket(spark: SparkSession, tableDir: String, newN: Int,
-               retainVersions: Int = 2, statsCols: Seq[String] = Nil): Unit = {
-    require(newN > 0, s"newN must be positive, got $newN")
-    val lastBatch = ViewLayout.publishedBatch(tableDir)
-    val version = ViewLayout.nextVersion(tableDir)
-    readCurrent(spark, tableDir)
-      .withColumn("__bucket", pmod(xxhash64(col("tbl"), col("id")), lit(newN)))
-      .repartition(col("__bucket"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
-      .parquet(s"$tableDir/$version")
-    if (statsCols.nonEmpty)
-      ZoneMap.writeManifest(spark, s"$tableDir/$version", statsFields(statsCols))
-    val written = ViewLayout.writtenBuckets(tableDir, version)
-    val body = (Seq(s"batch ${lastBatch.getOrElse(-1L)}") ++
-      written.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" }).mkString("\n")
-    ViewLayout.writeAtomic(tableDir, s"$version.manifest", body)
-    ViewLayout.writeAtomic(tableDir, ViewLayout.metaFile, s"numBuckets=$newN")
-    ViewLayout.writeAtomic(tableDir, ViewLayout.currentFile, version)
-    pruneVersions(tableDir, retainVersions)
-  }
+               retainVersions: Int = 2, statsCols: Seq[String] = Nil): Unit =
+    ViewLayout.rebucket(tableDir, newN, retainVersions) { p =>
+      p.write(readCurrent(spark, tableDir).withColumn("__bucket", p.bucket(col("tbl"), col("id"))))
+      writeZoneMap(spark, p, statsCols)
+      Nil
+    }
 
   /** Start materializing a changelog stream into `tableDir`.
     * `retainVersions` > 2 keeps that much [[readVersion]] time-travel

@@ -117,6 +117,25 @@ class AggViewSpec extends AnyFunSuite {
     assert(view(dir) == Map("t" -> ((4.0, 2L)), "u" -> ((5.0, 1L))))
   }
 
+  test("a merge that fails after caching its deltas still releases them") {
+    val dir = Files.createTempDirectory("graft_aggview_fail").toString
+    AggView.mergeBatch(Seq(AggView.GroupDelta("t", 1.0, 1L)).toDS(), dir, 0L)
+    // corrupt the data of the bucket batch 1 touches: the touched-bucket
+    // collect materializes the cached deltas, then the rewrite of that
+    // bucket cannot read it
+    val bucket = java.nio.file.Paths.get(dir,
+      graft.streaming.ViewLayout.readBucketManifest(dir, "v0").values.head)
+    Files.list(bucket).filter(_.getFileName.toString.startsWith("part-"))
+      .forEach(p => Files.write(p, "not parquet".getBytes("UTF-8")))
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception] {
+      AggView.mergeBatch(Seq(AggView.GroupDelta("t", 1.0, 0L)).toDS(), dir, 1L)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == cached,
+      "the failed merge left its delta aggregate cached")
+    assert(graft.streaming.ViewLayout.currentVersion(dir).contains("v0"))
+  }
+
   test("PK-swap image order flows through delta maintenance") {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("graft_aggview_swap").toString
