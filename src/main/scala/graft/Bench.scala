@@ -132,14 +132,15 @@ object Bench {
     // therefore the COMPACT contract surface only (metric/value/unit/
     // per-query medians/totals/failed/sf, ~3 KB for 138 queries); the
     // full evidence maps live exclusively in the file artifact.
-    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,""" +
-      s""""operators_total":${jnum(opsTotal)},"instruments_total":${jnum(instTotal)},""" +
-      s""""failed":$nFailed,"cpus":$cpus,"sf":"$sfDir"}"""
-    val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,""" +
-      s""""operators_total":${jnum(opsTotal)},"instruments_total":${jnum(instTotal)},""" +
-      s""""instruments":$instList,""" +
+    // both strings share one head and one tail, so the stdout contract
+    // and the file artifact cannot drift apart
+    val head = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,""" +
+      s""""operators_total":${jnum(opsTotal)},"instruments_total":${jnum(instTotal)},"""
+    val tail = s""""failed":$nFailed,"cpus":$cpus,"sf":"$sfDir"}"""
+    val line = head + tail
+    val full = head + s""""instruments":$instList,""" +
       s""""samples":$samples,"status":$status,"canary":$canaries,""" +
-      s""""load":["$loadStart","${loadAvg()}"],"failed":$nFailed,"cpus":$cpus,"sf":"$sfDir"}"""
+      s""""load":["$loadStart","${loadAvg()}"],""" + tail
     // File artifacts FIRST (and their stderr notices), so the JSON line
     // is the very last stdout before sbt's own [success] trailer — a
     // tail-limited capture then always contains the complete line.

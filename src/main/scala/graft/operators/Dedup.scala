@@ -528,8 +528,10 @@ object Dedup {
       // one measured attach decision for every arm (the strategy is a
       // property of the group projection, not of the band count)
       val strat = attachStrategy(shProj, col("sh"))
-      bhs = bandsList.map { b =>
-        groups.filter(col("grp_ok") === 1)
+      // each arm joins bhs as soon as it is persisted, so a throw while
+      // building a later arm still leaves the earlier ones to the finally
+      bandsList.foreach { b =>
+        bhs :+= groups.filter(col("grp_ok") === 1)
           .select(col("gid"),
             posexplode(Hashing.bandHashes(col("sig"), b, numHashes / b))
               .as(Seq("band", "bh")))

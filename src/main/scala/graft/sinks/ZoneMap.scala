@@ -213,6 +213,18 @@ object ZoneMap {
       .collect().toSeq
   }
 
+  /** The column names of the manifest under `zonemapDir`, read from
+    * its parquet footer on the driver (no schema-inference job); empty
+    * if it holds no file. */
+  def manifestColumns(spark: SparkSession, zonemapDir: String): Set[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    listDataFiles(conf, zonemapDir).headOption.fold(Set.empty[String]) { st =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
+      finally reader.close()
+    }
+  }
+
   /** The files whose `[min, max]` window on `statsCol` intersects
     * `[lo, hi]` (NULL bounds kept — see NULL semantics above). */
   def candidateFiles(spark: SparkSession, path: String, statsCol: String,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.storage.StorageLevel
@@ -70,9 +70,10 @@ object AggView {
         })
   }
 
+  private val viewSchema = Encoders.product[GroupAgg].schema
+
   private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) { import spark.implicits._; Seq.empty[GroupAgg].toDF() }
-    else spark.read.parquet(dirs: _*).select(col("grp"), col("sumVal"), col("cnt"))
+    ViewLayout.read(spark, dirs, viewSchema)
 
   /** The currently-published view (empty if never published). */
   def readCurrent(spark: SparkSession, dir: String): DataFrame =

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.cdc.Changelog
 
@@ -47,18 +48,18 @@ object JoinView {
   def storedNumBuckets(viewDir: String): Option[Int] =
     ViewLayout.storedNumBuckets(viewDir)
 
-  private def emptyDim(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Double)].toDF("dim_id", "dim_value")
-  }
+  private val factSchema = StructType(Seq(
+    StructField("fk", LongType), StructField("id", LongType), StructField("fact_val", DoubleType),
+    StructField("dim_val", DoubleType), StructField("last_pos", LongType)))
+  private val dimSchema = StructType(Seq(
+    StructField("dim_id", LongType), StructField("dim_value", DoubleType)))
 
   private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) {
-      import spark.implicits._
-      Seq.empty[(Long, Long, Double, Option[Double], Long)]
-        .toDF("fk", "id", "fact_val", "dim_val", "last_pos")
-    } else spark.read.parquet(dirs: _*)
-      .select(col("fk"), col("id"), col("fact_val"), col("dim_val"), col("last_pos"))
+    ViewLayout.read(spark, dirs, factSchema)
+
+  /** The dim state at view-relative `dimDir` (empty if none). */
+  private def readDimAt(spark: SparkSession, viewDir: String, dimDir: Option[String]): DataFrame =
+    ViewLayout.read(spark, dimDir.map(d => s"$viewDir/$d").toSeq, dimSchema)
 
   /** The currently-published enriched view (empty if none). */
   def readCurrent(spark: SparkSession, viewDir: String): DataFrame =
@@ -66,10 +67,8 @@ object JoinView {
 
   /** The currently-published dim state (empty if none). */
   def readDim(spark: SparkSession, viewDir: String): DataFrame =
-    ViewLayout.currentVersion(viewDir).flatMap(ViewLayout.manifestTag(viewDir, _, "dim")) match {
-      case Some(d) => spark.read.parquet(s"$viewDir/$d")
-      case None => emptyDim(spark)
-    }
+    readDimAt(spark, viewDir,
+      ViewLayout.currentVersion(viewDir).flatMap(ViewLayout.manifestTag(viewDir, _, "dim")))
 
   /** Merge one batch of two-sided changes and publish
     * ([[ViewLayout.publish]]: idempotent per batchId; `numBuckets`
@@ -90,9 +89,7 @@ object JoinView {
       val dimDirRel =
         if (dimDelta.limit(1).count() == 0) priorDim
         else {
-          val prior = priorDim.map(d => spark.read.parquet(s"$viewDir/$d"))
-            .getOrElse(emptyDim(spark))
-          val merged = prior.as("p")
+          val merged = readDimAt(spark, viewDir, priorDim).as("p")
             .join(dimDelta.as("d"), col("p.dim_id") === col("d.dim_id"), "full_outer")
             .filter(coalesce(col("d.op"), lit("upsert")) === "upsert")
             .select(
@@ -102,8 +99,7 @@ object JoinView {
           merged.write.mode(SaveMode.Overwrite).parquet(s"$viewDir/${p.version}/__dim")
           Some(s"${p.version}/__dim")
         }
-      val dimNew = dimDirRel.map(d => spark.read.parquet(s"$viewDir/$d"))
-        .getOrElse(emptyDim(spark))
+      val dimNew = readDimAt(spark, viewDir, dimDirRel)
 
       // touched buckets: every fk a fact delta lands in, plus every
       // changed dim key's bucket (all its referencing facts live there);

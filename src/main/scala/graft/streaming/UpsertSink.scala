@@ -28,6 +28,11 @@ import graft.streaming.ChangelogStream.Change
   * 4096-bucket table reads and rewrites only the ~25 GB of buckets it
   * touches. Optional per-version zone maps give the live view
   * file-skipping range reads ([[readCurrentRange]]).
+  *
+  * Every read — the live view, time travel, range reads and the merge's
+  * own read of the touched buckets — resolves its files from the
+  * version manifest and scans them with the table's fixed schema
+  * ([[ViewLayout.read]]): no listing or schema-inference job.
   */
 object UpsertSink {
 
@@ -41,13 +46,8 @@ object UpsertSink {
     StructField("tbl", StringType), StructField("id", LongType),
     StructField("value", DoubleType), StructField("lastPos", LongType)))
 
-  private def emptySnapshot(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Long, Double, Long)].toDF("tbl", "id", "value", "lastPos")
-  }
-
-  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) emptySnapshot(spark) else spark.read.parquet(dirs: _*)
+  private def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
+    ViewLayout.read(spark, paths, snapshotSchema)
 
   /** Zone-map refresh for the JUST-WRITTEN version dir: per-file
     * min/max from parquet footers (file-count-sized — no second pass
@@ -60,7 +60,7 @@ object UpsertSink {
 
   /** Read the currently-published snapshot (empty frame if none). */
   def readCurrent(spark: SparkSession, tableDir: String): DataFrame =
-    readDirs(spark, ViewLayout.currentBucketDirs(tableDir))
+    readPaths(spark, ViewLayout.currentBucketDirs(tableDir))
 
   /** Batch ids whose manifests are still on disk, ascending — the
     * versions [[readVersion]] can time-travel to. */
@@ -79,7 +79,7 @@ object UpsertSink {
     require(Files.exists(Paths.get(tableDir, s"$v.manifest")),
       s"version $v is not retained at $tableDir " +
         s"(retained: ${retainedVersions(tableDir).mkString(", ")})")
-    readDirs(spark, ViewLayout.bucketDirs(tableDir, v))
+    readPaths(spark, ViewLayout.bucketDirs(tableDir, v))
   }
 
   /** Keep the newest `retain` versions (see [[ViewLayout.pruneVersions]]). */
@@ -102,7 +102,7 @@ object UpsertSink {
         .select(col("tbl"), col("id"), col("value"), col("op"), col("pos"))
         .withColumn("__bucket", p.bucket(col("tbl"), col("id")))
       val wrote = p.rewrite(folded.select("__bucket")) { curDirs =>
-        readDirs(spark, curDirs)
+        readPaths(spark, curDirs)
           .withColumn("__bucket", p.bucket(col("tbl"), col("id"))).as("c")
           .join(folded.as("b"),
             col("c.tbl") === col("b.tbl") && col("c.id") === col("b.id"), "full_outer")
@@ -166,11 +166,8 @@ object UpsertSink {
             // statsCols changed between batches) — both degrade to
             // the conservative all-referenced-dirs read, never a
             // false skip
-            def manifestHas(colName: String): Boolean =
-              spark.read.parquet(zm).schema.fieldNames.toSet
-                .intersect(Set(s"min_$colName", s"max_$colName")).size == 2
             if (Files.exists(Paths.get(tableDir, ver, ZoneMap.manifestDir)) &&
-                manifestHas(statsCol))
+                Set(s"min_$statsCol", s"max_$statsCol").subsetOf(ZoneMap.manifestColumns(spark, zm)))
               ZoneMap.candidateFilesAt(spark, zm, statsCol, lo, hi)
                 // the version's manifest covers every file IT wrote;
                 // keep only files under bucket dirs still referenced
@@ -185,11 +182,7 @@ object UpsertSink {
     * bounds are kept), scanning only intersecting files. */
   def readCurrentRange(spark: SparkSession, tableDir: String, statsCol: String,
                        lo: Column, hi: Column): DataFrame = {
-    val files = currentRangeFiles(spark, tableDir, statsCol, lo, hi)
-    val base =
-      if (files.isEmpty) emptySnapshot(spark)
-      else spark.read.parquet(files: _*).select(
-        col("tbl"), col("id"), col("value"), col("lastPos"))
-    base.filter(col(statsCol) >= lo && col(statsCol) <= hi)
+    readPaths(spark, currentRangeFiles(spark, tableDir, statsCol, lo, hi))
+      .filter(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 }

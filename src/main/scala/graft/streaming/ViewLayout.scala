@@ -2,8 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.graftbridge.FileBridge
+import org.apache.spark.sql.types.StructType
 
 /** The versioned bucket-manifest layout and the one publish protocol
   * behind every live view ([[UpsertSink]], [[AggView]], [[JoinView]]).
@@ -123,6 +126,26 @@ private[graft] object ViewLayout {
   def currentBucketDirs(dir: String): Seq[String] =
     currentVersion(dir).toSeq.flatMap(bucketDirs(dir, _))
 
+  /** Read the parquet data under `paths` — a view's write-once data
+    * dirs as its manifest names them, or single files — with the
+    * view's own `schema`. The files are listed here on the driver and
+    * handed to the scan as they are, so a read launches neither a
+    * listing job (`spark.read.parquet` lists more than 32 paths with
+    * one) nor a schema-inference job. A dir is never rewritten once a
+    * manifest references it, so the listing cannot go stale under a
+    * published version; no paths reads as an empty frame. */
+  def read(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = paths.flatMap { p =>
+      val path = new Path(p)
+      path.getFileSystem(conf).listStatus(path).toSeq.filter { st =>
+        val name = st.getPath.getName
+        st.isFile && st.getLen > 0 && !name.startsWith("_") && !name.startsWith(".")
+      }
+    }
+    FileBridge.parquet(spark, files, schema)
+  }
+
   /** Scan the `__bucket=N` directories the parquet writer actually
     * materialized under `dir/relPath` (a touched bucket that came back
     * EMPTY — every key deleted — writes no dir and simply leaves the
@@ -189,14 +212,25 @@ private[graft] object ViewLayout {
     /** The bucket-incremental merge: collect the distinct bucket ids of
       * `buckets` (at most numBuckets ints — driver-sized by
       * construction) and, if any, [[write]] `plan` applied to those
-      * buckets' current data dirs. Returns whether anything was written. */
-    def rewrite(buckets: DataFrame, sub: String = "")(plan: Seq[String] => DataFrame): Boolean = {
-      touched = buckets.distinct().collect().map(_.getLong(0)).toSet
-      if (touched.nonEmpty)
-        write(plan(prior.filter { case (b, _) => touched.contains(b.toLong) }
-          .values.toSeq.sorted.map(d => s"$dir/$d")), sub)
-      touched.nonEmpty
-    }
+      * buckets' current data dirs. Returns whether anything was written.
+      *
+      * A view with no prior bucket (first publish, or every key
+      * deleted) has no dir to choose and none to keep, so `plan(Nil)`
+      * is written at once and the written buckets are the touched set:
+      * the collect would run the caller's whole input plan only for
+      * the write to run it again (on a bulk load, the entire CDC
+      * chain). The manifest and the bucket dirs come out the same. */
+    def rewrite(buckets: DataFrame, sub: String = "")(plan: Seq[String] => DataFrame): Boolean =
+      if (prior.isEmpty) {
+        write(plan(Nil), sub)
+        written.nonEmpty
+      } else {
+        touched = buckets.distinct().collect().map(_.getLong(0)).toSet
+        if (touched.nonEmpty)
+          write(plan(prior.filter { case (b, _) => touched.contains(b.toLong) }
+            .values.toSeq.sorted.map(d => s"$dir/$d")), sub)
+        touched.nonEmpty
+      }
 
     /** Untouched prior buckets, then every bucket dir this publication
       * wrote. A touched bucket that came back EMPTY (every key deleted)
@@ -230,7 +264,10 @@ private[graft] object ViewLayout {
     *  1. `merge` runs the view's plan through the lent [[Publication]]:
     *     [[Publication.rewrite]] collects the touched buckets and
     *     rewrites ONLY those, from their current dirs, under the new
-    *     version; it returns the view's extra manifest lines;
+    *     version; it returns the view's extra manifest lines. On the
+    *     first publish (no prior bucket) there is nothing to choose:
+    *     the plan is written once, with no collect, and the buckets it
+    *     wrote are the touched set;
     *  1. the manifest — `batch <id>`, the extra lines, then one sorted
     *     `<bucket> <dir>` line per bucket — points touched buckets at
     *     the new dirs and untouched ones at their previous dirs;

@@ -20,9 +20,13 @@ object TestSpark {
 
   /** Complete FormattedMode plan regardless of the session's plan-
     * string cap — truncation would silently hide Exchange/Scan nodes
-    * from grep-based assertions. Synchronized: the conf is session-
-    * scoped, so concurrent suites must not observe a half-restored cap
-    * while building their own audited plan text. */
+    * from grep-based assertions. The lock only orders fullPlan callers
+    * against each other; while the cap is lifted, a query running on
+    * another thread (its AQE replans included) would also build
+    * uncapped plan strings. That is safe only because the suites run
+    * one after another: sbt runs forked suites sequentially unless
+    * `Test / testForkedParallel` is set, and build.sbt leaves it off.
+    * Turning it on would need a session per suite instead. */
   def fullPlan(df: Dataset[_]): String = planLock.synchronized {
     val prev = spark.conf.get(capKey)
     spark.conf.set(capKey, (Int.MaxValue - 15).toString)

@@ -336,6 +336,160 @@ class ViewProtocolSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 
+  test("first publish: edge-case batches leave the tree the bucket-collect publish left") {
+    // A view with no prior bucket writes its merge plan once, with no
+    // touched-bucket collect. Each case runs its batches into a fresh
+    // dir; the layout after every batch is the one the collect-then-
+    // write publish produced (captured at d0ea810).
+    def ch(pos: Long, op: String, id: Long) = Change(pos, op, "t", id, pos * 0.5)
+    def fact(pos: Long, op: String, id: Long, fk: Long) = JoinChange(pos, op, "fact", id, fk, id * 1.5)
+    def dim(pos: Long, op: String, id: Long) = JoinChange(pos, op, "dim", id, 0L, id * 10.0)
+    val stats = Seq("lastPos")
+    val cases: Seq[(String, Seq[String => Unit])] = Seq(
+      "upsert: empty batch 0, then a first real batch" -> Seq(
+        d => UpsertSink.mergeBatch(Seq.empty[Change].toDS(), d, 0L, 4, 8, stats),
+        d => UpsertSink.mergeBatch(Seq(ch(1, "upsert", 1), ch(2, "upsert", 2)).toDS(), d, 1L, 4, 8, stats)),
+      "upsert: an all-delete first batch" -> Seq(
+        d => UpsertSink.mergeBatch(Seq(ch(1, "delete", 1), ch(2, "delete", 2)).toDS(), d, 0L, 4, 8, stats)),
+      "agg: empty batch 0, then an all-retract batch" -> Seq(
+        d => AggView.mergeBatch(Seq.empty[GroupDelta].toDS(), d, 0L, 4, 8),
+        d => AggView.mergeBatch(Seq(GroupDelta("g1", -1.0, -1L)).toDS(), d, 1L, 4, 8)),
+      "join: facts and a dim in the first batch" -> Seq(
+        d => JoinView.mergeBatch(Seq(fact(1, "upsert", 1, 10), fact(2, "upsert", 2, 20),
+          dim(3, "upsert", 10)).toDS(), d, 0L, 4, 8)),
+      "join: a dim-only first batch, then all-delete facts" -> Seq(
+        d => JoinView.mergeBatch(Seq(dim(1, "upsert", 10)).toDS(), d, 0L, 4, 8),
+        d => JoinView.mergeBatch(Seq(fact(2, "delete", 1, 10)).toDS(), d, 1L, 4, 8)),
+      "join: empty batch 0" -> Seq(
+        d => JoinView.mergeBatch(Seq.empty[JoinChange].toDS(), d, 0L, 4, 8)))
+    val got = cases.flatMap { case (name, batches) =>
+      val d = tmp("first")
+      batches.zipWithIndex.map { case (b, i) => b(d); s"$name #$i\n${layout(d)}".trim }
+    }
+    val want = Seq(
+      """
+      |upsert: empty batch 0, then a first real batch #0
+      |[_CURRENT]
+      |v0
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |[dirs]
+      |""",
+      """
+      |upsert: empty batch 0, then a first real batch #1
+      |[_CURRENT]
+      |v1
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |[v1.manifest]
+      |batch 1
+      |0 v1/__bucket=0
+      |3 v1/__bucket=3
+      |[dirs]
+      |v1
+      |v1/__bucket=0
+      |v1/__bucket=3
+      |v1/_zonemap
+      |""",
+      """
+      |upsert: an all-delete first batch #0
+      |[_CURRENT]
+      |v0
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |[dirs]
+      |""",
+      """
+      |agg: empty batch 0, then an all-retract batch #0
+      |[_CURRENT]
+      |v0
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |[dirs]
+      |""",
+      """
+      |agg: empty batch 0, then an all-retract batch #1
+      |[_CURRENT]
+      |v1
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |[v1.manifest]
+      |batch 1
+      |[dirs]
+      |""",
+      """
+      |join: facts and a dim in the first batch #0
+      |[_CURRENT]
+      |v0
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |dim v0/__dim
+      |0 v0/facts/__bucket=0
+      |1 v0/facts/__bucket=1
+      |[dirs]
+      |v0
+      |v0/__dim
+      |v0/facts
+      |v0/facts/__bucket=0
+      |v0/facts/__bucket=1
+      |""",
+      """
+      |join: a dim-only first batch, then all-delete facts #0
+      |[_CURRENT]
+      |v0
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |dim v0/__dim
+      |[dirs]
+      |v0
+      |v0/__dim
+      |v0/facts
+      |""",
+      """
+      |join: a dim-only first batch, then all-delete facts #1
+      |[_CURRENT]
+      |v1
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |dim v0/__dim
+      |[v1.manifest]
+      |batch 1
+      |dim v0/__dim
+      |[dirs]
+      |v0
+      |v0/__dim
+      |v0/facts
+      |""",
+      """
+      |join: empty batch 0 #0
+      |[_CURRENT]
+      |v0
+      |[_META]
+      |numBuckets=4
+      |[v0.manifest]
+      |batch 0
+      |[dirs]
+      |""").map(_.stripMargin.trim)
+    val bad = got.zip(want).collect { case (g, w) if g != w => s"--- got ---\n$g\n--- want ---\n$w" }
+    assert(got.size == want.size && bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
   /** One view as the protocol table drives it: merge a batch of
     * upserts of small integer keys, and read back the keys it serves. */
   private case class View(name: String, merge: (String, Long, Seq[Long], Int) => Unit,
