@@ -9,7 +9,9 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.FileBridge
 import org.apache.spark.sql.types._
 
 /** Per-FILE min/max zone maps with a file-skipping reader (SURVEY §2
@@ -218,11 +220,16 @@ object ZoneMap {
     * if it holds no file. */
   def manifestColumns(spark: SparkSession, zonemapDir: String): Set[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    listDataFiles(conf, zonemapDir).headOption.fold(Set.empty[String]) { st =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
-      try reader.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSet
-      finally reader.close()
-    }
+    listDataFiles(conf, zonemapDir).headOption
+      .fold(Set.empty[String])(footerSchema(spark, conf, _).fieldNames.toSet)
+  }
+
+  /** A parquet file's schema, from its footer. */
+  private def footerSchema(spark: SparkSession, conf: Configuration, st: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+    try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(reader.getFooter.getFileMetaData.getSchema)
+    finally reader.close()
   }
 
   /** The files whose `[min, max]` window on `statsCol` intersects
@@ -233,14 +240,20 @@ object ZoneMap {
 
   /** Same, addressing the `_zonemap` directory itself — for layouts
     * where the manifest does not sit directly under the data path
-    * (versioned sink directories). */
+    * (versioned sink directories). The one-file manifest is listed on
+    * the driver and scanned with its footer's schema: one Spark job,
+    * no schema inference. */
   def candidateFilesAt(spark: SparkSession, zonemapDir: String, statsCol: String,
-                       lo: Column, hi: Column): Seq[String] =
-    spark.read.parquet(zonemapDir)
+                       lo: Column, hi: Column): Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val files = listDataFiles(conf, zonemapDir)
+    require(files.nonEmpty, s"no zone map under $zonemapDir")
+    FileBridge.parquet(spark, files, footerSchema(spark, conf, files.head))
       .filter(col(s"max_$statsCol").isNull || col(s"min_$statsCol").isNull ||
         !(col(s"max_$statsCol") < lo || col(s"min_$statsCol") > hi))
       .select(col("file"))
       .collect().map(_.getString(0)).toSeq
+  }
 
   /** Read rows with `statsCol ∈ [lo, hi]`, scanning ONLY files whose
     * zone intersects the range — result-identical to the full scan

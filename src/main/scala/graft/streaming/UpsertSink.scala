@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
@@ -20,19 +21,27 @@ import graft.streaming.ChangelogStream.Change
   * The table is a [[ViewLayout]] view keyed by `(tbl, id)` (the same
   * write-once co-location idea as [[graft.sources.Bucketed]]); its
   * layout, atomic publish and replay idempotence are
-  * [[ViewLayout.publish]]'s. Per micro-batch the merge plan folds the
-  * batch to its last op per key (one shuffle on the batch only), then
-  * full-outer-merges ONLY the touched buckets with their batch slice —
-  * the incremental form of [[graft.cdc.Changelog.applyChangelog]]:
-  * batch wins, deletes drop rows. A 1 GB batch against a 100 TB /
-  * 4096-bucket table reads and rewrites only the ~25 GB of buckets it
-  * touches. Optional per-version zone maps give the live view
-  * file-skipping range reads ([[readCurrentRange]]).
+  * [[ViewLayout.publish]]'s. It is merge-on-read: per micro-batch the
+  * merge folds the batch to its last op per key (one shuffle on the
+  * batch only) and writes that once, deletes kept as tombstones, as one
+  * delta file set ([[ViewLayout.Publication.appendDelta]]). A batch
+  * that touches more than half the buckets keeps the delta as a `-1`
+  * manifest line — an O(batch) publish, where rewriting the buckets
+  * would rewrite most of the table; one that touches at most half is
+  * folded into those buckets at once; and the live deltas are folded
+  * into every bucket they touch once they outgrow the base, in bytes
+  * or in files. A fold is the incremental form of
+  * [[graft.cdc.Changelog.applyChangelog]]: the newest delta wins per
+  * key, base rows no delta key matches stay (an anti-join the planner
+  * broadcasts for small deltas, so the base is never shuffled), and
+  * the deltas' upserts are added. Optional per-version zone maps give
+  * the live view file-skipping range reads ([[readCurrentRange]]).
   *
   * Every read — the live view, time travel, range reads and the merge's
   * own read of the touched buckets — resolves its files from the
-  * version manifest and scans them with the table's fixed schema
-  * ([[ViewLayout.read]]): no listing or schema-inference job.
+  * version manifest, scans them with the table's fixed schema
+  * ([[ViewLayout.read]]: no listing or schema-inference job) and folds
+  * the version's deltas over its buckets.
   */
 object UpsertSink {
 
@@ -46,8 +55,34 @@ object UpsertSink {
     StructField("tbl", StringType), StructField("id", LongType),
     StructField("value", DoubleType), StructField("lastPos", LongType)))
 
+  /** A delta row: the batch's last op per key, tombstones kept. */
+  private val deltaSchema = snapshotSchema.add(StructField("op", StringType))
+
   private def readPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
     ViewLayout.read(spark, paths, snapshotSchema)
+
+  /** The table as of bucket `paths` with `deltaDirs` (newest first)
+    * folded over them. */
+  private def readFolded(spark: SparkSession, paths: Seq[String], deltaDirs: Seq[String]): DataFrame =
+    fold(spark, paths, deltaDirs.map(d => ViewLayout.read(spark, Seq(d), deltaSchema)))
+
+  /** Fold `deltas` (newest first) over the rows of bucket `paths`: the
+    * newest op per key wins, base rows that no delta key matches stay,
+    * and the winning upserts are added. With no base the deltas'
+    * upserts are the table, and a single delta needs no window. */
+  private def fold(spark: SparkSession, paths: Seq[String], deltas: Seq[DataFrame]): DataFrame =
+    if (deltas.isEmpty) readPaths(spark, paths)
+    else {
+      val newest =
+        if (deltas.size == 1) deltas.head
+        else deltas.zipWithIndex.map { case (d, age) => d.withColumn("__age", lit(age)) }
+          .reduce(_.union(_))
+          .withColumn("__rn", row_number().over(Window.partitionBy("tbl", "id").orderBy("__age")))
+          .filter(col("__rn") === 1).drop("__age", "__rn")
+      val upserts = newest.filter(col("op") === "upsert").drop("op")
+      if (paths.isEmpty) upserts
+      else readPaths(spark, paths).join(newest, Seq("tbl", "id"), "left_anti").union(upserts)
+    }
 
   /** Zone-map refresh for the JUST-WRITTEN version dir: per-file
     * min/max from parquet footers (file-count-sized — no second pass
@@ -60,7 +95,14 @@ object UpsertSink {
 
   /** Read the currently-published snapshot (empty frame if none). */
   def readCurrent(spark: SparkSession, tableDir: String): DataFrame =
-    readPaths(spark, ViewLayout.currentBucketDirs(tableDir))
+    readAt(spark, tableDir, ViewLayout.currentVersion(tableDir))
+
+  /** The table as `version`'s manifest holds it — resolved once, so a
+    * publish that flips the pointer meanwhile cannot pair one
+    * version's buckets with another's deltas. */
+  private def readAt(spark: SparkSession, tableDir: String, version: Option[String]): DataFrame =
+    readFolded(spark, version.toSeq.flatMap(ViewLayout.bucketDirs(tableDir, _)),
+      version.toSeq.flatMap(ViewLayout.deltaDirs(tableDir, _)))
 
   /** Batch ids whose manifests are still on disk, ascending — the
     * versions [[readVersion]] can time-travel to. */
@@ -79,7 +121,7 @@ object UpsertSink {
     require(Files.exists(Paths.get(tableDir, s"$v.manifest")),
       s"version $v is not retained at $tableDir " +
         s"(retained: ${retainedVersions(tableDir).mkString(", ")})")
-    readPaths(spark, ViewLayout.bucketDirs(tableDir, v))
+    readAt(spark, tableDir, Some(v))
   }
 
   /** Keep the newest `retain` versions (see [[ViewLayout.pruneVersions]]). */
@@ -87,32 +129,26 @@ object UpsertSink {
     ViewLayout.pruneVersions(tableDir, retain)
 
   /** Merge one batch of changes into the snapshot and publish
-    * ([[ViewLayout.publish]]: idempotent per batchId). `numBuckets`
-    * fixes the table's key-bucket count (size it so one bucket is a few
+    * ([[ViewLayout.publish]]: idempotent per batchId). The batch is
+    * evaluated once and written as one delta file set, which is kept
+    * when it touches more than half the buckets and folded into the
+    * buckets it touches otherwise, or once the live deltas outgrow the
+    * base ([[ViewLayout.Publication.appendDelta]]). `numBuckets` fixes
+    * the table's key-bucket count (size it so one bucket is a few
     * executor-partitions of data at the target scale) and every later
     * call must pass the same value; `retainVersions` bounds on-disk
     * history (min 2: current + previous); `statsCols` maintains
-    * per-version zone maps on those columns. */
+    * per-version zone maps on those columns for the bucket data a
+    * version writes (a kept delta is always read). */
   def mergeBatch(batch: Dataset[Change], tableDir: String, batchId: Long,
                  numBuckets: Int = 64, retainVersions: Int = 2,
                  statsCols: Seq[String] = Nil): Unit =
     ViewLayout.publish(tableDir, batchId, numBuckets, retainVersions, "table") { p =>
       val spark = batch.sparkSession
-      val folded = Changelog.lastOpPerKey(batch.toDF(), "tbl", "id")
-        .select(col("tbl"), col("id"), col("value"), col("op"), col("pos"))
-        .withColumn("__bucket", p.bucket(col("tbl"), col("id")))
-      val wrote = p.rewrite(folded.select("__bucket")) { curDirs =>
-        readPaths(spark, curDirs)
-          .withColumn("__bucket", p.bucket(col("tbl"), col("id"))).as("c")
-          .join(folded.as("b"),
-            col("c.tbl") === col("b.tbl") && col("c.id") === col("b.id"), "full_outer")
-          .filter(coalesce(col("b.op"), lit("upsert")) === "upsert")
-          .select(
-            coalesce(col("b.tbl"), col("c.tbl")).as("tbl"),
-            coalesce(col("b.id"), col("c.id")).as("id"),
-            when(col("b.id").isNotNull, col("b.value")).otherwise(col("c.value")).as("value"),
-            when(col("b.id").isNotNull, col("b.pos")).otherwise(col("c.lastPos")).as("lastPos"),
-            coalesce(col("b.__bucket"), col("c.__bucket")).as("__bucket"))
+      val delta = Changelog.lastOpPerKey(batch.toDF(), "tbl", "id")
+        .select(col("tbl"), col("id"), col("value"), col("pos").as("lastPos"), col("op"))
+      val wrote = p.appendDelta(delta, col("tbl"), col("id")) { (curDirs, deltas) =>
+        fold(spark, curDirs, deltas).withColumn("__bucket", p.bucket(col("tbl"), col("id")))
       }
       if (wrote) writeZoneMap(spark, p, statsCols)
       Nil
@@ -128,13 +164,17 @@ object UpsertSink {
       Nil
     }
 
-  /** Start materializing a changelog stream into `tableDir`.
-    * `retainVersions` > 2 keeps that much [[readVersion]] time-travel
-    * history on disk. `statsCols` (e.g. `Seq("lastPos")`) maintains a
-    * per-version zone-map manifest so [[readCurrentRange]] can skip
-    * files — `lastPos` is the natural choice: each version's files
-    * carry that batch's position range, so "rows changed since pos P"
-    * reads only recently-rewritten buckets. */
+  /** Start materializing a changelog stream into `tableDir`, one
+    * [[mergeBatch]] per micro-batch: a batch touching more than half
+    * the buckets publishes one delta file set, a sparser one rewrites
+    * its buckets, and the deltas are folded into the buckets once they
+    * outgrow them. `retainVersions` > 2 keeps that much [[readVersion]]
+    * time-travel history on disk. `statsCols` (e.g. `Seq("lastPos")`)
+    * maintains a per-version zone-map manifest so [[readCurrentRange]]
+    * can skip files — `lastPos` is the natural choice: each version's
+    * bucket files carry that batch's position range, so "rows changed
+    * since pos P" reads only recently-rewritten buckets, plus the
+    * deltas. */
   def materialize(changes: Dataset[Change], tableDir: String,
                   checkpointDir: String, numBuckets: Int = 64,
                   retainVersions: Int = 2,
@@ -147,14 +187,23 @@ object UpsertSink {
 
   /** The current snapshot's data files whose zone on `statsCol`
     * intersects `[lo, hi]` — resolved per referenced VERSION dir
-    * (each version's `_zonemap` covers exactly the files that version
-    * wrote; only files under bucket dirs the current manifest actually
-    * references count). A version without a manifest (written before
-    * stats were enabled) contributes all its referenced bucket dirs —
-    * conservative, never a false skip. */
+    * (each version's `_zonemap` covers exactly the bucket files that
+    * version wrote; only files under bucket dirs the current manifest
+    * actually references count). A version without a manifest (written
+    * before stats were enabled) contributes all its referenced bucket
+    * dirs — conservative, never a false skip. The current delta dirs
+    * follow, always: a delta carries no zone map, and a fold needs
+    * every delta key. */
   def currentRangeFiles(spark: SparkSession, tableDir: String, statsCol: String,
-                        lo: Column, hi: Column): Seq[String] =
-    ViewLayout.currentVersion(tableDir) match {
+                        lo: Column, hi: Column): Seq[String] = {
+    val v = ViewLayout.currentVersion(tableDir)
+    rangeBucketFiles(spark, tableDir, v, statsCol, lo, hi) ++
+      v.toSeq.flatMap(ViewLayout.deltaDirs(tableDir, _))
+  }
+
+  private def rangeBucketFiles(spark: SparkSession, tableDir: String, version: Option[String],
+                               statsCol: String, lo: Column, hi: Column): Seq[String] =
+    version match {
       case None => Nil
       case Some(v) =>
         val bucketDirs = ViewLayout.readBucketManifest(tableDir, v).values.toSeq
@@ -179,10 +228,15 @@ object UpsertSink {
   /** Range read over the LIVE view with zone-map file skipping:
     * result-identical to `readCurrent(...).filter(statsCol ∈ [lo,
     * hi])` (the residual filter drops in-file non-matches; unknown
-    * bounds are kept), scanning only intersecting files. */
+    * bounds are kept), scanning only intersecting bucket files and the
+    * deltas. The deltas fold over the candidates before the filter, so
+    * a key whose newest op moved it out of the range, or deleted it,
+    * leaves the result; a skipped bucket file holds no row in range. */
   def readCurrentRange(spark: SparkSession, tableDir: String, statsCol: String,
                        lo: Column, hi: Column): DataFrame = {
-    readPaths(spark, currentRangeFiles(spark, tableDir, statsCol, lo, hi))
+    val v = ViewLayout.currentVersion(tableDir)
+    readFolded(spark, rangeBucketFiles(spark, tableDir, v, statsCol, lo, hi),
+      v.toSeq.flatMap(ViewLayout.deltaDirs(tableDir, _)))
       .filter(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 }

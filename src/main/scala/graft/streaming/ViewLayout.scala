@@ -2,8 +2,10 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.graftbridge.FileBridge
 import org.apache.spark.sql.types.StructType
@@ -113,6 +115,17 @@ private[graft] object ViewLayout {
       }
     }.toMap
 
+  /** Delta dirs from `-1 v<N>/<dir>` lines (see [[publish]]),
+    * view-relative and newest version first — the order a fold applies
+    * them in. */
+  private def deltaLines(lines: Seq[String]): Seq[String] =
+    lines.flatMap { line =>
+      line.split(" ", 2) match {
+        case Array("-1", d) if d.matches("v\\d+/.+") => Some(d)
+        case _ => None
+      }
+    }.sortBy(d => -d.takeWhile(_ != '/').drop(1).toLong)
+
   /** Manifest for `version`: bucket id → view-relative data dir. */
   def readBucketManifest(dir: String, version: String): Map[Int, String] =
     bucketLines(manifestLines(dir, version))
@@ -126,6 +139,16 @@ private[graft] object ViewLayout {
   def currentBucketDirs(dir: String): Seq[String] =
     currentVersion(dir).toSeq.flatMap(bucketDirs(dir, _))
 
+  /** The delta dirs of `version` (its `-1` lines), absolute and newest
+    * first: rows of any bucket, newer than the bucket dirs. */
+  def deltaDirs(dir: String, version: String): Seq[String] =
+    deltaLines(manifestLines(dir, version)).map(d => s"$dir/$d")
+
+  /** Where a publish of `version` stages its delta: beside the version
+    * dir, not in it, so a bucket write that Overwrites `version` cannot
+    * delete a delta it is still reading. */
+  private[graft] def stagingDir(dir: String, version: String): String = s"$dir/_staged_$version"
+
   /** Read the parquet data under `paths` — a view's write-once data
     * dirs as its manifest names them, or single files — with the
     * view's own `schema`. The files are listed here on the driver and
@@ -134,16 +157,29 @@ private[graft] object ViewLayout {
     * one) nor a schema-inference job. A dir is never rewritten once a
     * manifest references it, so the listing cannot go stale under a
     * published version; no paths reads as an empty frame. */
-  def read(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame = {
+  def read(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame =
+    FileBridge.parquet(spark, dataFiles(spark, paths), schema)
+
+  /** The parquet data files directly under `paths` (or the paths
+    * themselves, if files), as the driver lists them. */
+  private def dataFiles(spark: SparkSession, paths: Seq[String]): Seq[FileStatus] = {
     val conf = spark.sessionState.newHadoopConf()
-    val files = paths.flatMap { p =>
+    paths.flatMap { p =>
       val path = new Path(p)
       path.getFileSystem(conf).listStatus(path).toSeq.filter { st =>
         val name = st.getPath.getName
         st.isFile && st.getLen > 0 && !name.startsWith("_") && !name.startsWith(".")
       }
     }
-    FileBridge.parquet(spark, files, schema)
+  }
+
+  /** Rows in `files`, from their parquet footers (driver metadata reads). */
+  private def rowCount(spark: SparkSession, files: Seq[FileStatus]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** Scan the `__bucket=N` directories the parquet writer actually
@@ -161,15 +197,12 @@ private[graft] object ViewLayout {
     * resolved the pointer just before a flip may still be scanning the
     * previous version) and every `v*` directory no retained manifest
     * references — including orphans from a crash before a pointer
-    * flip. Every `<tag> <dir>` manifest line but `batch` references a
-    * live dir (bucket lines, [[JoinView]]'s `dim`). On an object store
-    * you'd defer this to a table format's vacuum with a reader lease —
-    * same policy, different mechanism. */
+    * flip, and any delta staging dir one left behind. Every
+    * `<tag> <dir>` manifest line but `batch` references a live dir
+    * (bucket and `-1` delta lines, [[JoinView]]'s `dim`). On an object
+    * store you'd defer this to a table format's vacuum with a reader
+    * lease — same policy, different mechanism. */
   def pruneVersions(dir: String, retain: Int): Unit = {
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
-      f.delete(); ()
-    }
     val versions = manifestVersions(dir).map(v => s"v$v")
     val (dead, retained) = versions.splitAt(versions.length - math.max(retain, 2))
     val live = retained.flatMap(manifestLines(dir, _)).flatMap { line =>
@@ -180,8 +213,14 @@ private[graft] object ViewLayout {
     }.toSet
     dead.foreach(v => Files.deleteIfExists(Paths.get(dir, s"$v.manifest")))
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") && !live.contains(f.getName))
+      .filter(f => f.isDirectory && (f.getName.startsWith("_staged_") ||
+        f.getName.matches("v\\d+") && !live.contains(f.getName)))
       .foreach(deleteRec)
+  }
+
+  private def deleteRec(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
+    f.delete(); ()
   }
 
   /** One publication in flight, lent to a view by [[publish]] or
@@ -192,6 +231,9 @@ private[graft] object ViewLayout {
     private val prior = bucketLines(priorLines)
     private var dataRel = version
     private var touched = Set.empty[Long]
+    /** Delta dirs of the new manifest: the prior ones, plus one kept by
+      * [[appendDelta]], or none once it folded them into buckets. */
+    private[ViewLayout] var deltas: Seq[String] = deltaLines(priorLines)
 
     /** A row's bucket under this publication's bucket count. */
     def bucket(keys: Column*): Column = pmod(xxhash64(keys: _*), lit(numBuckets))
@@ -224,13 +266,85 @@ private[graft] object ViewLayout {
       if (prior.isEmpty) {
         write(plan(Nil), sub)
         written.nonEmpty
-      } else {
-        touched = buckets.distinct().collect().map(_.getLong(0)).toSet
-        if (touched.nonEmpty)
-          write(plan(prior.filter { case (b, _) => touched.contains(b.toLong) }
-            .values.toSeq.sorted.map(d => s"$dir/$d")), sub)
-        touched.nonEmpty
-      }
+      } else rewriteTouched(buckets.distinct().collect().map(_.getLong(0)).toSet, sub)(plan)
+
+    private def rewriteTouched(t: Set[Long], sub: String = "")(plan: Seq[String] => DataFrame): Boolean = {
+      touched = t
+      if (t.nonEmpty)
+        write(plan(prior.filter { case (b, _) => t.contains(b.toLong) }
+          .values.toSeq.sorted.map(d => s"$dir/$d")), sub)
+      t.nonEmpty
+    }
+
+    /** The merge-on-read publish (see [[publish]] for the layout): the
+      * batch `delta` — one row per key of `keys`, deletes kept as
+      * tombstones — is written once, as one unpartitioned file set,
+      * then either kept as this version's `-1` line or folded with the
+      * live deltas into the buckets they touch. `plan(dirs, deltas)`
+      * returns the rows (carrying `__bucket`) of bucket `dirs` folded
+      * with `deltas`, newest first. Returns whether bucket data was
+      * written.
+      *
+      *  - A view with no bucket and no delta writes the folded batch
+      *    straight into buckets, as [[rewrite]] does: one evaluation
+      *    of the input, no staging.
+      *  - Otherwise the delta is staged beside the version dir and
+      *    every later step reads it from there, so the input plan runs
+      *    exactly once. An empty delta changes nothing.
+      *  - With no live delta, the staged one's touched buckets are
+      *    collected from its file: at most half the buckets, and they
+      *    are rewritten at once (the copy-on-write layout, byte for
+      *    byte); more, and the delta is kept.
+      *  - With live deltas the view already carries one that touched
+      *    more than half the buckets, so no collect is needed: the new
+      *    delta is kept unless the deltas have outgrown the base, in
+      *    bytes or in files (a driver listing), and then all of them
+      *    are folded into every bucket they touch and the manifest
+      *    goes back to bucket lines only. */
+    def appendDelta(delta: DataFrame, keys: Column*)
+                   (plan: (Seq[String], Seq[DataFrame]) => DataFrame): Boolean = {
+      if (prior.isEmpty && deltas.isEmpty)
+        return rewrite(delta.select(bucket(keys: _*)))(plan(_, Seq(delta)))
+      val spark = delta.sparkSession
+      val staging = stagingDir(dir, version)
+      delta.coalesce(1).write.mode(SaveMode.Overwrite).parquet(staging)
+      val staged = dataFiles(spark, Seq(staging))
+      try {
+        if (rowCount(spark, staged) == 0L) false
+        else {
+          val liveDirs = deltas.map(d => s"$dir/$d")
+          val frames = (staging +: liveDirs).map(d => read(spark, Seq(d), delta.schema))
+          val fold: Option[Set[Long]] =
+            if (deltas.isEmpty) Some(bucketsOf(frames, keys)).filter(_.size * 2 <= numBuckets)
+            else if (outgrown(dataFiles(spark, prior.values.toSeq.map(d => s"$dir/$d")),
+                              staged ++ dataFiles(spark, liveDirs))) Some(bucketsOf(frames, keys))
+            else None
+          fold match {
+            case Some(t) =>
+              deltas = Nil
+              rewriteTouched(t)(plan(_, frames))
+            case None =>
+              val target = new java.io.File(dir, version)
+              deleteRec(target) // a crashed attempt's orphan
+              Files.createDirectories(target.toPath)
+              Files.move(Paths.get(staging), Paths.get(dir, version, "_delta"), StandardCopyOption.ATOMIC_MOVE)
+              deltas = s"$version/_delta" +: deltas
+              false
+          }
+        }
+      } finally deleteRec(new java.io.File(staging))
+    }
+
+    /** The buckets the rows of delta `frames` fall in: a distinct per
+      * partition (at most numBuckets ids each), so one job, no shuffle. */
+    private def bucketsOf(frames: Seq[DataFrame], keys: Seq[Column]): Set[Long] =
+      frames.map(_.select(bucket(keys: _*))).reduce(_.union(_))
+        .mapPartitions(_.map(_.getLong(0)).distinct)(Encoders.scalaLong)
+        .collect().toSet
+
+    /** Deltas outgrow the base once they hold more bytes or more files. */
+    private def outgrown(base: Seq[FileStatus], deltaFiles: Seq[FileStatus]): Boolean =
+      deltaFiles.map(_.getLen).sum > base.map(_.getLen).sum || deltaFiles.size > base.size
 
     /** Untouched prior buckets, then every bucket dir this publication
       * wrote. A touched bucket that came back EMPTY (every key deleted)
@@ -248,12 +362,28 @@ private[graft] object ViewLayout {
     *     v12/__bucket=3/part-*.parquet   bucket 3 as of version 12
     *     v17/__bucket=3/part-*.parquet   bucket 3 rewritten by version 17
     *     v17.manifest                    "batch 9\n3 v17/__bucket=3\n5 v12/__bucket=5\n…"
+    *     v18/_delta/part-*.parquet       a kept delta: rows of any bucket
+    *     v18.manifest                    "batch 10\n-1 v18/_delta\n3 v17/__bucket=3\n…"
     *     _META                           "numBuckets=64"  (fixed at creation)
-    *     _CURRENT                        "v17"
+    *     _CURRENT                        "v18"
     * }}}
     *
     * Rows are hash-partitioned into `numBuckets` key-buckets
-    * (`pmod(xxhash64(key), numBuckets)`). The protocol:
+    * (`pmod(xxhash64(key), numBuckets)`). A merge-on-read view
+    * ([[UpsertSink]], through [[Publication.appendDelta]]) may also
+    * carry deltas: `-1 <version>/_delta` lines, "bucket −1: rows of any
+    * bucket, newer than the bucket lines", oldest first. A reader folds
+    * them over the buckets, newest first. The `-1` is a bucket id, not
+    * a tag, so every `<int> <dir>` parser still reads the manifest; the
+    * bucket parsers here take digits only and skip it, and the pruner
+    * keeps its dir like any other line. A delta is kept when its batch
+    * touches more than half the buckets (rewriting them would rewrite
+    * most of the view); it is folded into its buckets at once when it
+    * touches at most half, and the live deltas are all folded into the
+    * buckets they touch once they outgrow the base in bytes or in
+    * files. A manifest with no `-1` line is the copy-on-write layout.
+    *
+    * The protocol:
     *  1. a `batchId` that already published the current version returns
     *     at once (see replay idempotence below);
     *  1. `dir` is created (an empty batch 0, which Spark does deliver to
@@ -268,9 +398,10 @@ private[graft] object ViewLayout {
     *     first publish (no prior bucket) there is nothing to choose:
     *     the plan is written once, with no collect, and the buckets it
     *     wrote are the touched set;
-    *  1. the manifest — `batch <id>`, the extra lines, then one sorted
-    *     `<bucket> <dir>` line per bucket — points touched buckets at
-    *     the new dirs and untouched ones at their previous dirs;
+    *  1. the manifest — `batch <id>`, the extra lines, the `-1` delta
+    *     lines, then one sorted `<bucket> <dir>` line per bucket —
+    *     points touched buckets at the new dirs and untouched ones at
+    *     their previous dirs;
     *  1. `_META` is written on first publish, `_CURRENT` is flipped,
     *     and versions beyond `retain` are pruned ([[pruneVersions]]).
     *
@@ -281,15 +412,16 @@ private[graft] object ViewLayout {
     *    merge plans are unchanged);
     *  - **structural sharing**: untouched buckets keep their previous
     *    version's dirs via the manifest (no copy, no read), so a
-    *    micro-batch costs O(batch + touched-bucket data), never O(table);
+    *    micro-batch costs O(batch + touched-bucket data); a kept delta
+    *    costs O(batch);
     *  - **replay idempotence**: a crash after the flip but before the
     *    streaming checkpoint commits replays the batch, and the `batch`
     *    line makes that replay a no-op (the checkpoint pins the offsets,
     *    so the published version is exactly the merge result). A crash
-    *    BEFORE the flip leaves an orphan `v<N>` data dir that no manifest
-    *    references; the replay re-uses `v<N>` and Overwrites it (it is
-    *    never also read: the still-current manifest predates it), and
-    *    the pruner collects any stragglers. */
+    *    BEFORE the flip leaves an orphan `v<N>` data dir (or a staged
+    *    delta) that no manifest references; the replay re-uses `v<N>`
+    *    and Overwrites it (it is never also read: the still-current
+    *    manifest predates it), and the pruner collects any stragglers. */
   def publish(dir: String, batchId: Long, numBuckets: Int, retain: Int, what: String)
              (merge: Publication => Seq[String]): Unit = {
     if (publishedBatch(dir).contains(batchId)) return
@@ -298,7 +430,7 @@ private[graft] object ViewLayout {
     val pinned = storedNumBuckets(dir).isDefined
     val p = lend(dir, numBuckets)
     val extra = merge(p)
-    commit(p, batchId, extra, p.merged, if (pinned) None else Some(numBuckets), retain)
+    commit(p, batchId, extra, p.deltas, p.merged, if (pinned) None else Some(numBuckets), retain)
   }
 
   /** Re-shard the view at `dir` to `newN` buckets, in place, published
@@ -322,16 +454,16 @@ private[graft] object ViewLayout {
     val lastBatch = publishedBatch(dir).getOrElse(-1L)
     val p = lend(dir, newN)
     val extra = write(p)
-    commit(p, lastBatch, extra, p.written, Some(newN), retain)
+    commit(p, lastBatch, extra, Nil, p.written, Some(newN), retain)
   }
 
   private def lend(dir: String, numBuckets: Int): Publication =
     new Publication(dir, nextVersion(dir), numBuckets,
       currentVersion(dir).map(manifestLines(dir, _)).getOrElse(Nil))
 
-  private def commit(p: Publication, batchId: Long, extra: Seq[String],
+  private def commit(p: Publication, batchId: Long, extra: Seq[String], deltas: Seq[String],
                      buckets: Map[Int, String], pin: Option[Int], retain: Int): Unit = {
-    val body = (s"batch $batchId" +: extra) ++
+    val body = (s"batch $batchId" +: extra) ++ deltas.reverse.map(d => s"-1 $d") ++
       buckets.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" }
     writeAtomic(p.dir, s"${p.version}.manifest", body.mkString("\n"))
     pin.foreach(n => writeAtomic(p.dir, metaFile, s"numBuckets=$n"))

@@ -572,4 +572,233 @@ class ViewProtocolSpec extends AnyFunSuite {
         "the replay must overwrite the orphan's files")
     }
   }
+
+  // merge-on-read (UpsertSink): a batch touching more than half the
+  // buckets is kept as one `-1 <version>/_delta` line; the deltas fold
+  // into their buckets once they outgrow the base
+
+  private def upserts(ids: Seq[Long], pos0: Long, v: Double): Seq[Change] =
+    ids.zipWithIndex.map { case (id, i) => Change(pos0 + i, "upsert", "t", id, v) }
+
+  /** An 8-bucket view of 40 keys, then `dense` batches re-writing all
+    * 40 keys: each touches every bucket, so each is kept as a delta. */
+  private def deltaView(name: String, dense: Int, retain: Int): String = {
+    val dir = tmp(name)
+    UpsertSink.mergeBatch(upserts(1L to 40L, 1L, 1.0).toDS(), dir, 0L, 8, retain, Seq("lastPos"))
+    (1 to dense).foreach { b =>
+      UpsertSink.mergeBatch(upserts(1L to 40L, b * 100L, b.toDouble).toDS(), dir, b.toLong, 8, retain,
+        Seq("lastPos"))
+    }
+    dir
+  }
+
+  /** 2000 new keys: a delta far larger than the 40-key base. */
+  private val outgrowing: Seq[Change] = upserts(1001L to 3000L, 10000L, 9.0)
+
+  test("delta layout: dense batches append -1 lines; outgrowing the base compacts to bucket lines") {
+    val dir = deltaView("delta_fmt", 2, 8)
+    val kept = layout(dir)
+    UpsertSink.mergeBatch(outgrowing.toDS(), dir, 3L, 8, 8, Seq("lastPos"))
+    val compacted = layout(dir)
+    val want = Seq(
+      """
+      |[_CURRENT]
+      |v2
+      |[_META]
+      |numBuckets=8
+      |[v0.manifest]
+      |batch 0
+      |0 v0/__bucket=0
+      |1 v0/__bucket=1
+      |2 v0/__bucket=2
+      |3 v0/__bucket=3
+      |4 v0/__bucket=4
+      |5 v0/__bucket=5
+      |6 v0/__bucket=6
+      |7 v0/__bucket=7
+      |[v1.manifest]
+      |batch 1
+      |-1 v1/_delta
+      |0 v0/__bucket=0
+      |1 v0/__bucket=1
+      |2 v0/__bucket=2
+      |3 v0/__bucket=3
+      |4 v0/__bucket=4
+      |5 v0/__bucket=5
+      |6 v0/__bucket=6
+      |7 v0/__bucket=7
+      |[v2.manifest]
+      |batch 2
+      |-1 v1/_delta
+      |-1 v2/_delta
+      |0 v0/__bucket=0
+      |1 v0/__bucket=1
+      |2 v0/__bucket=2
+      |3 v0/__bucket=3
+      |4 v0/__bucket=4
+      |5 v0/__bucket=5
+      |6 v0/__bucket=6
+      |7 v0/__bucket=7
+      |[dirs]
+      |v0
+      |v0/__bucket=0
+      |v0/__bucket=1
+      |v0/__bucket=2
+      |v0/__bucket=3
+      |v0/__bucket=4
+      |v0/__bucket=5
+      |v0/__bucket=6
+      |v0/__bucket=7
+      |v0/_zonemap
+      |v1
+      |v1/_delta
+      |v2
+      |v2/_delta
+      |""",
+      """
+      |[_CURRENT]
+      |v3
+      |[_META]
+      |numBuckets=8
+      |[v0.manifest]
+      |batch 0
+      |0 v0/__bucket=0
+      |1 v0/__bucket=1
+      |2 v0/__bucket=2
+      |3 v0/__bucket=3
+      |4 v0/__bucket=4
+      |5 v0/__bucket=5
+      |6 v0/__bucket=6
+      |7 v0/__bucket=7
+      |[v1.manifest]
+      |batch 1
+      |-1 v1/_delta
+      |0 v0/__bucket=0
+      |1 v0/__bucket=1
+      |2 v0/__bucket=2
+      |3 v0/__bucket=3
+      |4 v0/__bucket=4
+      |5 v0/__bucket=5
+      |6 v0/__bucket=6
+      |7 v0/__bucket=7
+      |[v2.manifest]
+      |batch 2
+      |-1 v1/_delta
+      |-1 v2/_delta
+      |0 v0/__bucket=0
+      |1 v0/__bucket=1
+      |2 v0/__bucket=2
+      |3 v0/__bucket=3
+      |4 v0/__bucket=4
+      |5 v0/__bucket=5
+      |6 v0/__bucket=6
+      |7 v0/__bucket=7
+      |[v3.manifest]
+      |batch 3
+      |0 v3/__bucket=0
+      |1 v3/__bucket=1
+      |2 v3/__bucket=2
+      |3 v3/__bucket=3
+      |4 v3/__bucket=4
+      |5 v3/__bucket=5
+      |6 v3/__bucket=6
+      |7 v3/__bucket=7
+      |[dirs]
+      |v0
+      |v0/__bucket=0
+      |v0/__bucket=1
+      |v0/__bucket=2
+      |v0/__bucket=3
+      |v0/__bucket=4
+      |v0/__bucket=5
+      |v0/__bucket=6
+      |v0/__bucket=7
+      |v0/_zonemap
+      |v1
+      |v1/_delta
+      |v2
+      |v2/_delta
+      |v3
+      |v3/__bucket=0
+      |v3/__bucket=1
+      |v3/__bucket=2
+      |v3/__bucket=3
+      |v3/__bucket=4
+      |v3/__bucket=5
+      |v3/__bucket=6
+      |v3/__bucket=7
+      |v3/_zonemap
+      |""").map(_.stripMargin.trim)
+    val got = Seq(kept, compacted)
+    val bad = got.zip(want).zipWithIndex.collect {
+      case ((g, w), i) if g != w => s"--- layout $i ---\n$g\n--- end ---"
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+    val ids = UpsertSink.readCurrent(spark, dir).select("id", "value").as[(Long, Double)].collect().toMap
+    assert(ids.size == 2040 && (1L to 40L).forall(ids(_) == 2.0) && ids(3000L) == 9.0)
+  }
+
+  test("UpsertSink: retention keeps the delta dirs a retained manifest references") {
+    val dir = deltaView("delta_retain", 3, 2)
+    // v2 and v3 are retained; v3 still reads v0's buckets and v1-v3's deltas
+    assert(topLevel(dir, "v\\d+\\.manifest") == Set("v2.manifest", "v3.manifest"))
+    assert(topLevel(dir, "v\\d+") == Set("v0", "v1", "v2", "v3"))
+    UpsertSink.mergeBatch(outgrowing.toDS(), dir, 4L, 8, 2, Seq("lastPos"))
+    assert(ViewLayout.deltaDirs(dir, "v4").isEmpty)
+    assert(topLevel(dir, "v\\d+") == Set("v0", "v1", "v2", "v3", "v4"))
+    // once v3 ages out, nothing references its deltas or v0's buckets
+    UpsertSink.mergeBatch(upserts(Seq(1L), 20000L, 5.0).toDS(), dir, 5L, 8, 2, Seq("lastPos"))
+    assert(topLevel(dir, "v\\d+") == Set("v4", "v5"))
+    val ids = UpsertSink.readCurrent(spark, dir).select("id", "value").as[(Long, Double)].collect().toMap
+    assert(ids.size == 2040 && ids(1L) == 5.0 && ids(2L) == 3.0 && ids(3000L) == 9.0)
+  }
+
+  /** Crash-before-flip: a scratch copy of `dir` runs `batch` as
+    * `batchId`; `plant` moves what that attempt wrote into `dir`, as if
+    * it crashed before its manifest. The replay of `batchId` with
+    * `replay` must overwrite every planted file, never read one, and
+    * leave no staging dir. */
+  private def crashAndReplay(dir: String, batchId: Long, batch: Seq[Change], replay: Seq[Change])
+                            (plant: String => Unit): Unit = {
+    val v = s"v$batchId"
+    val before = UpsertSink.readCurrent(spark, dir).collect().toSet
+    val crashed = tmp("delta_attempt")
+    FileUtils.copyDirectory(new File(dir), new File(crashed))
+    UpsertSink.mergeBatch(batch.toDS(), crashed, batchId, 8, 8, Seq("lastPos"))
+    plant(crashed)
+    val planted = walk(dir).map(_.toString)
+      .filter(n => n.endsWith(".parquet") && (n.startsWith(s"$v/") || n.startsWith("_staged_"))).toSet
+    assert(planted.nonEmpty)
+    assert(UpsertSink.readCurrent(spark, dir).collect().toSet == before, "an orphan must never be read")
+    UpsertSink.mergeBatch(replay.toDS(), dir, batchId, 8, 8, Seq("lastPos"))
+    assert(ViewLayout.currentVersion(dir).contains(v))
+    assert(walk(dir).map(_.toString).toSet.intersect(planted).isEmpty,
+      "the replay must overwrite the orphan's files")
+    assert(topLevel(dir, "_staged_.*").isEmpty, "no staging dir may be left")
+    val want = replay.map(c => c.id -> c.value).toMap
+    val got = UpsertSink.readCurrent(spark, dir).select("id", "value").as[(Long, Double)].collect().toMap
+    assert(want.forall { case (id, value) => got(id) == value })
+  }
+
+  test("UpsertSink: a crash before the flip of a kept delta leaves an orphan the replay overwrites") {
+    val dir = deltaView("delta_crash", 1, 8)
+    // crashed after staging (the delta never moved), and after the move
+    // into v2/_delta (the manifest never written)
+    crashAndReplay(dir, 2L, upserts(1L to 40L, 500L, 7.0), upserts(1L to 40L, 600L, 8.0)) { c =>
+      FileUtils.copyDirectory(new File(c, "v2/_delta"), new File(ViewLayout.stagingDir(dir, "v2")))
+      FileUtils.copyDirectory(new File(c, "v2"), new File(dir, "v2"))
+    }
+    assert(ViewLayout.deltaDirs(dir, "v2").map(_.stripPrefix(s"$dir/")) == Seq("v2/_delta", "v1/_delta"))
+  }
+
+  test("UpsertSink: a crash before the flip of a compaction leaves an orphan the replay overwrites") {
+    val dir = deltaView("compact_crash", 1, 8)
+    // crashed while compacting: the bucket dirs written, the staged
+    // delta still beside them
+    crashAndReplay(dir, 2L, outgrowing, upserts(1001L to 3000L, 20000L, 4.0)) { c =>
+      FileUtils.copyDirectory(new File(c, "v2"), new File(dir, "v2"))
+      FileUtils.copyDirectory(new File(c, "v1/_delta"), new File(ViewLayout.stagingDir(dir, "v2")))
+    }
+    assert(ViewLayout.deltaDirs(dir, "v2").isEmpty)
+  }
 }

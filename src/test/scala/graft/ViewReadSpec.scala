@@ -3,16 +3,19 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkInternals
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit, udf}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sinks.ZoneMap
-import graft.streaming.{AggView, JoinView, UpsertSink, ViewLayout}
+import graft.streaming.{AggView, ChangelogStream, JoinView, UpsertSink, ViewLayout}
 import graft.streaming.AggView.GroupDelta
-import graft.streaming.ChangelogStream.Change
+import graft.streaming.ChangelogStream.{Change, TxEvent}
 import graft.streaming.JoinView.JoinChange
 
 /** The Spark jobs behind a view's publish and reads: a first publish
@@ -141,5 +144,70 @@ class ViewReadSpec extends AnyFunSuite {
     assert(AggView.readCurrent(spark, dir).columns.toSeq == Seq("grp", "sumVal", "cnt"))
     assert(JoinView.readCurrent(spark, dir).count() == 0L)
     assert(JoinView.readDim(spark, dir).columns.toSeq == Seq("dim_id", "dim_value"))
+  }
+
+  /** Publish `batches`, one committed transaction each, through a live
+    * `filterCommitted` query into a 64-bucket view at `dir`, one
+    * micro-batch each. Returns, per batch, the input rows its plan
+    * computed (a counting key column: the touched-bucket collect needs
+    * the key too, so column pruning cannot hide a second pass) and the
+    * Spark jobs the publish ran. */
+  private def streamed(dir: String, batches: Seq[Seq[Change]]): Seq[(Long, Int)] = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[TxEvent]
+    val seen = spark.sparkContext.longAccumulator("view-read-stream-rows")
+    val count = udf { (k: Long) => seen.add(1L); k }.asNondeterministic()
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+    val q = ChangelogStream.filterCommitted(in.toDS(), txTimeoutMs = 0)
+      .withColumn("id", count(col("id"))).as[Change].writeStream
+      .foreachBatch { (b: Dataset[Change], id: Long) =>
+        val before = seen.value
+        val (_, jobs) = jobsOf(UpsertSink.mergeBatch(b, dir, id, 64, 4, Seq("lastPos")))
+        out.add((seen.value - before, jobs))
+        ()
+      }
+      .option("checkpointLocation", tmp("ckpt"))
+      .start()
+    val none = Change(0L, "none", "", 0L, 0.0)
+    try batches.zipWithIndex.foreach { case (b, tx) =>
+      in.addData((TxEvent(tx, 0L, "begin", none) +:
+        b.zipWithIndex.map { case (c, i) => TxEvent(tx, i + 1L, "data", c) }) :+
+        TxEvent(tx, b.size + 1L, "commit", none))
+      q.processAllAvailable()
+    } finally q.stop()
+    out.asScala.toSeq
+  }
+
+  private def upserts(ids: Seq[Long], pos0: Long, v: Double): Seq[Change] =
+    ids.zipWithIndex.map { case (id, i) => Change(pos0 + i, "upsert", "t", id, v) }
+
+  private def deltaLines(dir: String, v: String): Seq[String] =
+    new String(Files.readAllBytes(java.nio.file.Paths.get(dir, s"$v.manifest")), "UTF-8")
+      .linesIterator.filter(_.startsWith("-1 ")).toSeq
+
+  test("a live mergeBatch evaluates its input once: 2 jobs to keep the first delta, 1 beside a live one") {
+    val dir = tmp("live")
+    // a bulk load, a 1-key batch, then two batches of 300 keys, each
+    // touching every one of the 64 buckets
+    val got = streamed(dir, Seq(upserts(1L to 2000L, 1L, 0.5), upserts(Seq(7L), 5000L, 7.0),
+      upserts(1L to 300L, 10000L, 1.0), upserts(1L to 300L, 20000L, 2.0)))
+    assert(got.map(_._1) == Seq(2000L, 1L, 300L, 300L), s"input rows computed per batch: $got")
+    assert(deltaLines(dir, "v1").isEmpty && ViewLayout.bucketDirs(dir, "v1").count(_.contains("/v1/")) == 1)
+    assert(deltaLines(dir, "v2") == Seq("-1 v2/_delta"))
+    assert(deltaLines(dir, "v3") == Seq("-1 v2/_delta", "-1 v3/_delta"))
+    assert(got(2)._2 == 2, s"keeping the first delta ran ${got(2)._2} jobs (the write, the touched collect)")
+    assert(got(3)._2 == 1, s"a publish beside a live delta ran ${got(3)._2} jobs")
+    val view = UpsertSink.readCurrent(spark, dir).select("id", "value").as[(Long, Double)].collect()
+    assert(view.length == 2000 && view.forall { case (id, v) => v == (if (id <= 300) 2.0 else 0.5) })
+  }
+
+  test("a zone-map candidate lookup runs exactly one job") {
+    val dir = tmp("zmjobs")
+    UpsertSink.mergeBatch((1L to 200L).map(i => Change(i, "upsert", "t", i, i * 0.5)).toDS(),
+      dir, 0L, 8, 2, Seq("lastPos"))
+    val zm = s"$dir/v0/${ZoneMap.manifestDir}"
+    val (files, jobs) = jobsOf(ZoneMap.candidateFilesAt(spark, zm, "lastPos", lit(50L), lit(60L)))
+    assert(files.nonEmpty)
+    assert(jobs == 1, s"a candidate lookup ran $jobs jobs")
   }
 }
