@@ -25,16 +25,18 @@ import graft.streaming.ChangelogStream.Change
   * merge folds the batch to its last op per key (one shuffle on the
   * batch only) and writes that once, deletes kept as tombstones, as one
   * delta file set ([[ViewLayout.Publication.appendDelta]]). A batch
-  * that touches more than half the buckets keeps the delta as a `-1`
-  * manifest line — an O(batch) publish, where rewriting the buckets
-  * would rewrite most of the table; one that touches at most half is
-  * folded into those buckets at once; and the live deltas are folded
-  * into every bucket they touch once they outgrow the base, in bytes
-  * or in files. A fold is the incremental form of
+  * of more than numBuckets/2 keys keeps the delta as a `-1` manifest
+  * line — an O(batch) publish in one job; a smaller one touches at
+  * most half the buckets and is folded into them at once; and the live
+  * deltas are folded into every bucket they touch once they outgrow
+  * the base, in bytes or in files. A fold is the incremental form of
   * [[graft.cdc.Changelog.applyChangelog]]: the newest delta wins per
   * key, base rows no delta key matches stay (an anti-join the planner
   * broadcasts for small deltas, so the base is never shuffled), and
-  * the deltas' upserts are added. Optional per-version zone maps give
+  * the deltas' upserts are added; all deltas are one scan, so a read
+  * costs the same jobs however many are live, and its data grows
+  * with their bytes, which compaction bounds by the base's. Optional
+  * per-version zone maps give
   * the live view file-skipping range reads ([[readCurrentRange]]).
   *
   * Every read — the live view, time travel, range reads and the merge's
@@ -64,21 +66,22 @@ object UpsertSink {
   /** The table as of bucket `paths` with `deltaDirs` (newest first)
     * folded over them. */
   private def readFolded(spark: SparkSession, paths: Seq[String], deltaDirs: Seq[String]): DataFrame =
-    fold(spark, paths, deltaDirs.map(d => ViewLayout.read(spark, Seq(d), deltaSchema)))
+    fold(spark, paths, ViewLayout.Deltas.read(spark, deltaDirs, deltaSchema))
 
-  /** Fold `deltas` (newest first) over the rows of bucket `paths`: the
-    * newest op per key wins, base rows that no delta key matches stay,
-    * and the winning upserts are added. With no base the deltas'
-    * upserts are the table, and a single delta needs no window. */
-  private def fold(spark: SparkSession, paths: Seq[String], deltas: Seq[DataFrame]): DataFrame =
-    if (deltas.isEmpty) readPaths(spark, paths)
+  /** Fold `deltas` over the rows of bucket `paths`: the newest op per
+    * key wins, base rows that no delta key matches stay, and the
+    * winning upserts are added. The deltas are one scan and, when
+    * there are several, one window, however many there are; with no
+    * base the deltas' upserts are the table. */
+  private def fold(spark: SparkSession, paths: Seq[String], deltas: ViewLayout.Deltas): DataFrame =
+    if (deltas.count == 0) readPaths(spark, paths)
     else {
+      val age = ViewLayout.Deltas.Age
       val newest =
-        if (deltas.size == 1) deltas.head
-        else deltas.zipWithIndex.map { case (d, age) => d.withColumn("__age", lit(age)) }
-          .reduce(_.union(_))
-          .withColumn("__rn", row_number().over(Window.partitionBy("tbl", "id").orderBy("__age")))
-          .filter(col("__rn") === 1).drop("__age", "__rn")
+        if (deltas.count == 1) deltas.rows.drop(age)
+        else deltas.rows
+          .withColumn("__rn", row_number().over(Window.partitionBy("tbl", "id").orderBy(age)))
+          .filter(col("__rn") === 1).drop(age, "__rn")
       val upserts = newest.filter(col("op") === "upsert").drop("op")
       if (paths.isEmpty) upserts
       else readPaths(spark, paths).join(newest, Seq("tbl", "id"), "left_anti").union(upserts)
@@ -131,9 +134,12 @@ object UpsertSink {
   /** Merge one batch of changes into the snapshot and publish
     * ([[ViewLayout.publish]]: idempotent per batchId). The batch is
     * evaluated once and written as one delta file set, which is kept
-    * when it touches more than half the buckets and folded into the
+    * when it holds more than numBuckets/2 keys and folded into the
     * buckets it touches otherwise, or once the live deltas outgrow the
-    * base ([[ViewLayout.Publication.appendDelta]]). `numBuckets` fixes
+    * base ([[ViewLayout.Publication.appendDelta]]). Every read beside
+    * live deltas pays one scan of them all and, with more than one,
+    * a window over their keys: work that grows with the deltas'
+    * bytes, up to the base's, until they are folded. `numBuckets` fixes
     * the table's key-bucket count (size it so one bucket is a few
     * executor-partitions of data at the target scale) and every later
     * call must pass the same value; `retainVersions` bounds on-disk
@@ -165,9 +171,9 @@ object UpsertSink {
     }
 
   /** Start materializing a changelog stream into `tableDir`, one
-    * [[mergeBatch]] per micro-batch: a batch touching more than half
-    * the buckets publishes one delta file set, a sparser one rewrites
-    * its buckets, and the deltas are folded into the buckets once they
+    * [[mergeBatch]] per micro-batch: a batch of more than numBuckets/2
+    * keys publishes one delta file set, a smaller one rewrites its
+    * buckets, and the deltas are folded into the buckets once they
     * outgrow them. `retainVersions` > 2 keeps that much [[readVersion]]
     * time-travel history on disk. `statsCols` (e.g. `Seq("lastPos")`)
     * maintains a per-version zone-map manifest so [[readCurrentRange]]
@@ -191,14 +197,14 @@ object UpsertSink {
     * version wrote; only files under bucket dirs the current manifest
     * actually references count). A version without a manifest (written
     * before stats were enabled) contributes all its referenced bucket
-    * dirs — conservative, never a false skip. The current delta dirs
-    * follow, always: a delta carries no zone map, and a fold needs
-    * every delta key. */
+    * dirs — conservative, never a false skip. The current deltas'
+    * data files follow, always: a delta carries no zone map, and a
+    * fold needs every delta key. */
   def currentRangeFiles(spark: SparkSession, tableDir: String, statsCol: String,
                         lo: Column, hi: Column): Seq[String] = {
     val v = ViewLayout.currentVersion(tableDir)
     rangeBucketFiles(spark, tableDir, v, statsCol, lo, hi) ++
-      v.toSeq.flatMap(ViewLayout.deltaDirs(tableDir, _))
+      ViewLayout.dataFiles(spark, v.toSeq.flatMap(ViewLayout.deltaDirs(tableDir, _))).map(_.getPath.toString)
   }
 
   private def rangeBucketFiles(spark: SparkSession, tableDir: String, version: Option[String],

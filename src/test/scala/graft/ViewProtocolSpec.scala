@@ -573,15 +573,15 @@ class ViewProtocolSpec extends AnyFunSuite {
     }
   }
 
-  // merge-on-read (UpsertSink): a batch touching more than half the
-  // buckets is kept as one `-1 <version>/_delta` line; the deltas fold
-  // into their buckets once they outgrow the base
+  // merge-on-read (UpsertSink): a batch of more than numBuckets/2 keys
+  // is kept as one `-1 <version>/_delta` line; the deltas fold into
+  // their buckets once they outgrow the base
 
   private def upserts(ids: Seq[Long], pos0: Long, v: Double): Seq[Change] =
     ids.zipWithIndex.map { case (id, i) => Change(pos0 + i, "upsert", "t", id, v) }
 
   /** An 8-bucket view of 40 keys, then `dense` batches re-writing all
-    * 40 keys: each touches every bucket, so each is kept as a delta. */
+    * 40 keys: each has more than 8/2 keys, so each is kept as a delta. */
   private def deltaView(name: String, dense: Int, retain: Int): String = {
     val dir = tmp(name)
     UpsertSink.mergeBatch(upserts(1L to 40L, 1L, 1.0).toDS(), dir, 0L, 8, retain, Seq("lastPos"))

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -31,13 +30,19 @@ class ViewReadSpec extends AnyFunSuite {
   /** Jobs `body` starts on this thread (by job group, so a stray
     * query of another suite cannot count). */
   private def jobsOf[T](body: => T): (T, Int) = {
+    val (out, jobs) = jobStarts(body)
+    (out, jobs.size)
+  }
+
+  /** The start events of the jobs `body` starts on this thread. */
+  private def jobStarts[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
     val group = s"view-read-${System.nanoTime()}"
-    val jobs = new AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
+          jobs.add(j)
     }
     SparkInternals.drain(sc)
     sc.addSparkListener(listener)
@@ -45,7 +50,7 @@ class ViewReadSpec extends AnyFunSuite {
     try {
       val out = body
       SparkInternals.drain(sc)
-      (out, jobs.get)
+      (out, jobs.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -185,7 +190,7 @@ class ViewReadSpec extends AnyFunSuite {
     new String(Files.readAllBytes(java.nio.file.Paths.get(dir, s"$v.manifest")), "UTF-8")
       .linesIterator.filter(_.startsWith("-1 ")).toSeq
 
-  test("a live mergeBatch evaluates its input once: 2 jobs to keep the first delta, 1 beside a live one") {
+  test("a live mergeBatch evaluates its input once and keeps a delta in one job") {
     val dir = tmp("live")
     // a bulk load, a 1-key batch, then two batches of 300 keys, each
     // touching every one of the 64 buckets
@@ -195,7 +200,7 @@ class ViewReadSpec extends AnyFunSuite {
     assert(deltaLines(dir, "v1").isEmpty && ViewLayout.bucketDirs(dir, "v1").count(_.contains("/v1/")) == 1)
     assert(deltaLines(dir, "v2") == Seq("-1 v2/_delta"))
     assert(deltaLines(dir, "v3") == Seq("-1 v2/_delta", "-1 v3/_delta"))
-    assert(got(2)._2 == 2, s"keeping the first delta ran ${got(2)._2} jobs (the write, the touched collect)")
+    assert(got(2)._2 == 1, s"keeping the first delta ran ${got(2)._2} jobs")
     assert(got(3)._2 == 1, s"a publish beside a live delta ran ${got(3)._2} jobs")
     val view = UpsertSink.readCurrent(spark, dir).select("id", "value").as[(Long, Double)].collect()
     assert(view.length == 2000 && view.forall { case (id, v) => v == (if (id <= 300) 2.0 else 0.5) })
@@ -209,5 +214,39 @@ class ViewReadSpec extends AnyFunSuite {
     val (files, jobs) = jobsOf(ZoneMap.candidateFilesAt(spark, zm, "lastPos", lit(50L), lit(60L)))
     assert(files.nonEmpty)
     assert(jobs == 1, s"a candidate lookup ran $jobs jobs")
+  }
+
+  test("a kept delta's keys are folded at shuffle-partition parallelism; only its write is one task") {
+    val dir = tmp("par")
+    UpsertSink.mergeBatch((1L to 2000L).map(i => Change(i, "upsert", "t", i, 0.5)).toDS(), dir, 0L, 64)
+    // as a streaming micro-batch runs: no adaptive execution, a fixed
+    // shuffle width; 7 is neither the input's partition count nor 1
+    val conf = Map("spark.sql.adaptive.enabled" -> "false", "spark.sql.shuffle.partitions" -> "7")
+    val prev = conf.keys.map(k => k -> spark.conf.get(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (_, jobs) = try jobStarts(UpsertSink.mergeBatch(upserts(1L to 300L, 5000L, 1.0).toDS(), dir, 1L, 64))
+      finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    assert(deltaLines(dir, "v1") == Seq("-1 v1/_delta"))
+    assert(ViewLayout.dataFiles(spark, ViewLayout.deltaDirs(dir, "v1")).size == 1)
+    val write = jobs.head.stageInfos.sortBy(_.stageId)
+    assert(write.map(_.numTasks).contains(7) && write.last.numTasks == 1,
+      s"the delta write's stages ran ${write.map(_.numTasks)} tasks")
+  }
+
+  test("a read beside several live deltas scans them all at once") {
+    val dir = tmp("deltascan")
+    UpsertSink.mergeBatch((1L to 2000L).map(i => Change(i, "upsert", "t", i, 0.5)).toDS(), dir, 0L, 64)
+    def leaves = UpsertSink.readCurrent(spark, dir).queryExecution.optimizedPlan.collectLeaves().size
+    def jobs = jobsOf(UpsertSink.readCurrent(spark, dir).collect())._2
+    UpsertSink.mergeBatch(upserts(1L to 300L, 5000L, 1.0).toDS(), dir, 1L, 64)
+    UpsertSink.mergeBatch(upserts(1L to 300L, 6000L, 2.0).toDS(), dir, 2L, 64)
+    val (leaves2, jobs2) = (leaves, jobs)
+    (3L to 5L).foreach(b => UpsertSink.mergeBatch(upserts(1L to 300L, 1000L * (b + 4), b.toDouble).toDS(), dir, b, 64))
+    assert(ViewLayout.deltaDirs(dir, "v5").size == 5)
+    // the buckets, and the deltas once for the anti-join and once for the upserts
+    assert(leaves2 == 3 && leaves == 3, s"a read over 2 and 5 deltas has $leaves2 and $leaves scans")
+    assert(jobs == jobs2, s"a read over 2 deltas ran $jobs2 jobs, over 5 deltas $jobs")
+    val view = UpsertSink.readCurrent(spark, dir).select("id", "value").as[(Long, Double)].collect()
+    assert(view.length == 2000 && view.forall { case (id, v) => v == (if (id <= 300) 5.0 else 0.5) })
   }
 }
