@@ -263,13 +263,24 @@ object ChangelogStream {
     * on commit, drop on rollback, strip the markers. With
     * `txTimeoutMs > 0` an open tx is dropped (like a never-committed
     * tx) after that much processing-time silence; `0` disables
-    * timeouts (bounded test streams). */
+    * timeouts (bounded test streams).
+    *
+    * The map side of the `tx` exchange runs at most one task per task
+    * slot (`defaultParallelism`): the input is coalesced first, with
+    * no shuffle. A micro-batch made of many small source blocks (a
+    * many-partition Kafka topic at a low rate, a `MemoryStream` fed
+    * per transaction) would otherwise launch one task per block. A
+    * source that already has that many partitions or fewer (a drained
+    * chunk, a bulk load) is left as it is. The output does not change:
+    * the state is keyed by `tx` after the exchange, and a committed tx
+    * is released sorted by `seq`. */
   def filterCommitted(events: Dataset[TxEvent], txTimeoutMs: Long = 60000): Dataset[Change] = {
     import events.sparkSession.implicits._
     val timeoutConf =
       if (txTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
     events
+      .coalesce(events.sparkSession.sparkContext.defaultParallelism)
       .groupByKey(_.tx)
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
         (tx: Long, rows: Iterator[TxEvent], state: GroupState[Seq[TxEvent]]) => {

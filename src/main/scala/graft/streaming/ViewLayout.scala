@@ -333,12 +333,12 @@ private[graft] object ViewLayout {
         if (keyCount == 0L) false
         else {
           val liveDirs = deltas.map(d => s"$dir/$d")
-          val all = Deltas.read(spark, staging +: liveDirs, delta.schema)
           val fold =
             if (deltas.isEmpty) keyCount * 2 <= numBuckets
             else outgrown(dataFiles(spark, prior.values.toSeq.map(d => s"$dir/$d")),
                           staged ++ dataFiles(spark, liveDirs))
           if (fold) {
+            val all = Deltas.read(spark, staging +: liveDirs, delta.schema)
             deltas = Nil
             rewriteTouched(bucketsOf(all, keys))(plan(_, all))
           } else {

@@ -459,9 +459,27 @@ class StreamingSpec extends AnyFunSuite {
       TxEvent(1, 2, "data", Change(3, "upsert", "t", 3, 3.0)),
       TxEvent(1, 3, "commit", dummy), // tx 1 commits (across batches)
       TxEvent(2, 2, "rollback", dummy)) // tx 2 rolls back
+    q.processAllAvailable()
+    // one micro-batch of more source blocks than task slots: tx 3's
+    // begin, data (out of seq order) and commit, and tx 4's rollback,
+    // each in blocks of their own; tx 5 stays open into the next batch
+    def data(tx: Long, seq: Long) = TxEvent(tx, seq, "data", Change(tx * 10 + seq, "upsert", s"t$tx", seq, 1.0))
+    val blocks = Seq(
+      Seq(TxEvent(3, 0, "begin", dummy)), Seq(data(3, 3)), Seq(TxEvent(4, 0, "begin", dummy)),
+      Seq(data(3, 1)), Seq(data(4, 1)), Seq(data(3, 2)), Seq(TxEvent(5, 0, "begin", dummy)),
+      Seq(TxEvent(4, 2, "rollback", dummy)), Seq(TxEvent(3, 4, "commit", dummy)), Seq(data(5, 1)),
+      Seq(TxEvent(6, 0, "begin", dummy), data(6, 1), TxEvent(6, 2, "commit", dummy)))
+    assert(blocks.size > spark.sparkContext.defaultParallelism)
+    blocks.foreach(b => in.addData(b))
+    q.processAllAvailable()
+    assert(!spark.table("b4").as[Change].collect().exists(_.tbl == "t5"), "tx 5 is still open")
+    in.addData(data(5, 2), TxEvent(5, 3, "commit", dummy))
     drain(q)
-    val out = spark.table("b4").select("pos").as[Long].collect().sorted.toSeq
-    assert(out == Seq(1L, 3L))
+    val got = spark.table("b4").as[Change].collect().toSeq
+    assert(got.map(_.pos).sorted == Seq(1L, 3L, 31L, 32L, 33L, 51L, 52L, 61L))
+    // a committed tx comes out in seq order, whatever its blocks' order
+    assert(got.filter(_.tbl == "t3").map(_.pos) == Seq(31L, 32L, 33L))
+    assert(got.filter(_.tbl == "t5").map(_.pos) == Seq(51L, 52L))
   }
 
   test("B8: group-table-maps pairs across micro-batch boundaries (per-file state)") {

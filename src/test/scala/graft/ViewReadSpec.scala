@@ -151,33 +151,38 @@ class ViewReadSpec extends AnyFunSuite {
     assert(JoinView.readDim(spark, dir).columns.toSeq == Seq("dim_id", "dim_value"))
   }
 
-  /** Publish `batches`, one committed transaction each, through a live
-    * `filterCommitted` query into a 64-bucket view at `dir`, one
-    * micro-batch each. Returns, per batch, the input rows its plan
+  /** Publish `batches` through a live `filterCommitted` query into a
+    * 64-bucket view at `dir`, one micro-batch each. A micro-batch is a
+    * list of committed transactions, each added to the source as a
+    * block of its own. Returns, per batch, the input rows its plan
     * computed (a counting key column: the touched-bucket collect needs
     * the key too, so column pruning cannot hide a second pass) and the
-    * Spark jobs the publish ran. */
-  private def streamed(dir: String, batches: Seq[Seq[Change]]): Seq[(Long, Int)] = {
+    * start events of the Spark jobs the publish ran. */
+  private def streamed(dir: String, batches: Seq[Seq[Seq[Change]]]): Seq[(Long, Seq[SparkListenerJobStart])] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[TxEvent]
     val seen = spark.sparkContext.longAccumulator("view-read-stream-rows")
     val count = udf { (k: Long) => seen.add(1L); k }.asNondeterministic()
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]()
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[SparkListenerJobStart])]()
     val q = ChangelogStream.filterCommitted(in.toDS(), txTimeoutMs = 0)
       .withColumn("id", count(col("id"))).as[Change].writeStream
       .foreachBatch { (b: Dataset[Change], id: Long) =>
         val before = seen.value
-        val (_, jobs) = jobsOf(UpsertSink.mergeBatch(b, dir, id, 64, 4, Seq("lastPos")))
+        val (_, jobs) = jobStarts(UpsertSink.mergeBatch(b, dir, id, 64, 4, Seq("lastPos")))
         out.add((seen.value - before, jobs))
         ()
       }
       .option("checkpointLocation", tmp("ckpt"))
       .start()
     val none = Change(0L, "none", "", 0L, 0.0)
-    try batches.zipWithIndex.foreach { case (b, tx) =>
-      in.addData((TxEvent(tx, 0L, "begin", none) +:
-        b.zipWithIndex.map { case (c, i) => TxEvent(tx, i + 1L, "data", c) }) :+
-        TxEvent(tx, b.size + 1L, "commit", none))
+    var tx = 0L
+    try batches.foreach { txs =>
+      txs.foreach { b =>
+        in.addData((TxEvent(tx, 0L, "begin", none) +:
+          b.zipWithIndex.map { case (c, i) => TxEvent(tx, i + 1L, "data", c) }) :+
+          TxEvent(tx, b.size + 1L, "commit", none))
+        tx += 1
+      }
       q.processAllAvailable()
     } finally q.stop()
     out.asScala.toSeq
@@ -195,13 +200,13 @@ class ViewReadSpec extends AnyFunSuite {
     // a bulk load, a 1-key batch, then two batches of 300 keys, each
     // touching every one of the 64 buckets
     val got = streamed(dir, Seq(upserts(1L to 2000L, 1L, 0.5), upserts(Seq(7L), 5000L, 7.0),
-      upserts(1L to 300L, 10000L, 1.0), upserts(1L to 300L, 20000L, 2.0)))
+      upserts(1L to 300L, 10000L, 1.0), upserts(1L to 300L, 20000L, 2.0)).map(Seq(_)))
     assert(got.map(_._1) == Seq(2000L, 1L, 300L, 300L), s"input rows computed per batch: $got")
     assert(deltaLines(dir, "v1").isEmpty && ViewLayout.bucketDirs(dir, "v1").count(_.contains("/v1/")) == 1)
     assert(deltaLines(dir, "v2") == Seq("-1 v2/_delta"))
     assert(deltaLines(dir, "v3") == Seq("-1 v2/_delta", "-1 v3/_delta"))
-    assert(got(2)._2 == 1, s"keeping the first delta ran ${got(2)._2} jobs")
-    assert(got(3)._2 == 1, s"a publish beside a live delta ran ${got(3)._2} jobs")
+    assert(got(2)._2.size == 1, s"keeping the first delta ran ${got(2)._2.size} jobs")
+    assert(got(3)._2.size == 1, s"a publish beside a live delta ran ${got(3)._2.size} jobs")
     val view = UpsertSink.readCurrent(spark, dir).select("id", "value").as[(Long, Double)].collect()
     assert(view.length == 2000 && view.forall { case (id, v) => v == (if (id <= 300) 2.0 else 0.5) })
   }
@@ -248,5 +253,28 @@ class ViewReadSpec extends AnyFunSuite {
     assert(jobs == jobs2, s"a read over 2 deltas ran $jobs2 jobs, over 5 deltas $jobs")
     val view = UpsertSink.readCurrent(spark, dir).select("id", "value").as[(Long, Double)].collect()
     assert(view.length == 2000 && view.forall { case (id, v) => v == (if (id <= 300) 5.0 else 0.5) })
+  }
+
+  test("a live micro-batch of many source blocks runs its first stage at task-slot width") {
+    val dir = tmp("blocks")
+    // a bulk load, then one micro-batch of 40 one-tx blocks: each
+    // upserts two keys and deletes a third, 120 keys in all
+    val bulk = upserts(1L to 2000L, 1L, 0.5)
+    val txs = (1L to 40L).map { t =>
+      val p = 10000L + 10 * t
+      Seq(Change(p, "upsert", "t", t, t.toDouble), Change(p + 1, "upsert", "t", t + 40, -t.toDouble),
+        Change(p + 2, "delete", "t", 2001L - t, 0.0))
+    }
+    val got = streamed(dir, Seq(Seq(bulk), txs))
+    assert(got.map(_._1) == Seq(2000L, 120L), s"input rows computed per batch: ${got.map(_._1)}")
+    val slots = spark.sparkContext.defaultParallelism
+    val first = got(1)._2.head.stageInfos.minBy(_.stageId)
+    assert(slots < 40 && first.numTasks <= slots,
+      s"the live publish's first stage ran ${first.numTasks} tasks for 40 blocks, $slots task slots")
+    val fold = (bulk ++ txs.flatten).groupBy(c => (c.tbl, c.id)).toSeq.flatMap { case (k, cs) =>
+      ChangelogStream.Entity.fold(k, None, cs.iterator) }
+    val want = fold.filter(_.live).map(e => (e.tbl, e.id, e.value, e.lastPos)).sortBy(_._2)
+    val view = UpsertSink.readCurrent(spark, dir).as[(String, Long, Double, Long)].collect().toSeq.sortBy(_._2)
+    assert(view == want && view.size == 1960)
   }
 }
