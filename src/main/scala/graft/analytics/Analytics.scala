@@ -230,12 +230,12 @@ object Analytics {
     * nothing to carry).
     *
     * Shape: the dense (key × hour) grid is keys ⨯ a broadcast 1-row
-    * min/max stats frame exploded through `sequence` — the attachFile
-    * control-table pattern; the grid is |keys|·|hours| rows, tiny
-    * relative to the events that produced it. One left join back to
-    * the hourly aggregate (already map-side combined), one per-key
-    * ordered window for the carry-forward. Money stays decimal until
-    * the final cast. */
+    * min/max stats frame exploded through `sequence` — the
+    * [[graft.operators.RangeJoin]] control-table pattern; the grid is
+    * |keys|·|hours| rows, tiny relative to the events that produced
+    * it. One left join back to the hourly aggregate (already map-side
+    * combined), one per-key ordered window for the carry-forward.
+    * Money stays decimal until the final cast. */
   def gapFillHourly(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("event_type"),
       expr("ts div 3600000000000").as("hr"), col("value"))

@@ -19,11 +19,14 @@ import org.apache.spark.sql.types.DecimalType
   * transforms over any frame with the canonical changelog columns
   * `(pos: long, op: string, tbl: string, id: long, tx: long, ...)`:
   *
-  *  - every operator is a single Catalyst plan — no driver-side state;
-  *  - the only shuffle in the whole pipeline is the hash partition by
+  *  - the log itself only ever flows through Catalyst plans; the only
+  *    shuffle in the whole pipeline is the hash partition by
   *    `(tbl, id)` for the entity-state fold;
-  *  - small "control" relations (rolled-back tx ids, rotate events) are
-  *    broadcast, never shuffled against the log;
+  *  - a control relation bounded by the binlog-file or ALTER count
+  *    (rotate events, schema versions) is collected once on the driver
+  *    when the plan is built and shipped to the tasks, so it costs no
+  *    join and no job of its own; one that grows with the log (the
+  *    rolled-back tx ids) stays a broadcast anti-join;
   *  - at 100 TB the log is a partitioned fact; all of these transforms
   *    scale linearly with it.
   *
@@ -78,55 +81,32 @@ object Changelog {
     * rotate markers themselves.
     *
     * Reference: `add-binlog-filename` (`src/dumpr/stream.clj:56-77`)
-    * tracks the filename from rotate events serially. A serial pass
-    * does not scale, and a naive `r_pos <= pos` broadcast join is a
-    * nested-loop O(|log|·|rotates|). Instead: rotates (a vanishing
-    * fraction of the log) become disjoint `[start, end)` intervals,
-    * each interval is exploded onto position buckets, and the log
-    * equi-joins on its own bucket — one hash join, linear in the log,
-    * no global ordering, AQE-splittable. The only window runs over the
-    * tiny rotate set itself.
-    *
-    * Bucket width ADAPTS to the observed position range: width =
-    * range/2¹⁶, so the exploded control table is always ~2¹⁶ + R rows
-    * (R = rotate count) — a dense event-id log and a sparse 64-bit
-    * binlog byte-offset log both broadcast a few-MB table. (A fixed
-    * width needs range/width bucket rows: at realistic byte offsets
-    * that explodes by orders of magnitude and overflows `sequence()`.)
-    * The range stats are a 1-row aggregate cross-joined onto both
-    * sides — fully declarative, no driver action.
+    * tracks the filename from rotate events serially. The rotates are
+    * a control relation (one per binlog file), so they are collected
+    * once, in one job, when this plan is built, sorted by position and
+    * shipped to the tasks as a broadcast variable (no job). Each event
+    * then takes the file of the last rotate at or before its position
+    * by binary search — the serial fold's answer, O(log R) per row for
+    * R rotates, map-only, for dense event ids and sparse 64-bit byte
+    * offsets alike. Events before the first rotate get [[DefaultFile]].
+    * Rotates tied at one position resolve to the greatest file name.
     */
   def attachFile(log: DataFrame): DataFrame = {
-    val rotates = log
-      .filter(col("etype") === "signup")
-      .select(col("pos").as("r_start"), rotateFile(col("id")).as("r_file"))
-    // window over rotates only — the control stream is small by nature
-    val w = Window.orderBy(col("r_start"))
-    val stats = log.agg(min(col("pos")).as("p_min"), max(col("pos")).as("p_max"))
-      .withColumn("bsize", greatest(lit(1L), expr("(p_max - p_min + 1) div 65536")))
-    val intervals = rotates
-      .withColumn("r_end", lead(col("r_start"), 1).over(w))
-      .unionByName(
-        // sentinel interval: before the first rotate → default file
-        rotates.agg(min(col("r_start")).as("r_end"))
-          .select(lit(Long.MinValue).as("r_start"), lit(DefaultFile).as("r_file"), col("r_end")))
-      .crossJoin(stats)
-      .withColumn("r_end_eff", coalesce(col("r_end"), col("p_max") + 1))
-    // explode each interval onto the position buckets it covers
-    val byBucket = intervals
-      .withColumn("b_lo", expr("(greatest(r_start, p_min) - p_min) div bsize"))
-      .withColumn("b_hi", expr("(r_end_eff - 1 - p_min) div bsize"))
-      .withColumn("bucket", explode(sequence(col("b_lo"), greatest(col("b_lo"), col("b_hi")))))
-      .select(col("bucket"), col("r_start"), col("r_end_eff"), col("r_file"))
-    log
-      .filter(col("etype") =!= "signup")
-      .crossJoin(broadcast(stats.select(col("p_min"), col("bsize"))))
-      .withColumn("bucket", expr("(pos - p_min) div bsize"))
-      .join(broadcast(byBucket), Seq("bucket"), "left")
-      .filter(col("r_start").isNull ||
-        (col("pos") >= col("r_start") && col("pos") < col("r_end_eff")))
-      .withColumn("file", coalesce(col("r_file"), lit(DefaultFile)))
-      .drop("bucket", "r_start", "r_end_eff", "r_file", "p_min", "p_max", "bsize")
+    val rotates = log.filter(col("etype") === "signup")
+      .select(col("pos"), rotateFile(col("id"))).collect()
+      .map(r => (r.getLong(0), r.getString(1))).sorted
+    val starts = log.sparkSession.sparkContext.broadcast((rotates.map(_._1), rotates.map(_._2)))
+    val fileAt = udf { (pos: Long) =>
+      val (at, files) = starts.value
+      var lo = 0 // → the index of the first start > pos
+      var hi = at.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (at(mid) <= pos) lo = mid + 1 else hi = mid
+      }
+      if (lo == 0) DefaultFile else files(lo - 1)
+    }
+    log.filter(col("etype") =!= "signup").withColumn("file", fileAt(col("pos")))
   }
 
   private def rotateFile(id: Column): Column =
@@ -305,15 +285,15 @@ object Changelog {
   /** The binlog position to continue streaming from, as a 1-row frame
     * `(file, next_pos)`. Reference: `next-position`
     * (`src/dumpr/core.clj:107-113`) and the `:next-position` metadata.
+    * One global aggregate: the file of the rotate at the greatest
+    * position (`max_by` over rotate positions only; [[DefaultFile]]
+    * without one) beside `max(pos) + 1` (NULL on an empty log).
     */
-  def nextPosition(log: DataFrame): DataFrame = {
-    val lastRotate = log
-      .filter(col("etype") === "signup")
-      .agg(max_by(rotateFile(col("id")), col("pos")).as("f"))
-      .select(coalesce(col("f"), lit(DefaultFile)).as("file"))
-    val maxPos = log.agg((max(col("pos")) + 1).as("next_pos"))
-    lastRotate.crossJoin(maxPos)
-  }
+  def nextPosition(log: DataFrame): DataFrame =
+    log.agg(
+      coalesce(max_by(rotateFile(col("id")), when(col("etype") === "signup", col("pos"))),
+        lit(DefaultFile)).as("file"),
+      (max(col("pos")) + 1).as("next_pos"))
 
   /** Initial table load: wrap a snapshot table scan in the row-tuple
     * shape `[op tbl id content]`. Reference: `create-table-stream` /

@@ -1,13 +1,16 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{toColumn, toExpr}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Versioned table-schema registry — the Spark-native analogue of the
@@ -247,53 +250,48 @@ object SchemaRegistry {
     * table opens version n, whose schema is the base plus appended
     * columns `extra_1 … extra_n` (the deterministic demo DDL — a real
     * binlog source would carry the parsed ALTER column change here).
-    * Output adds `until_pos` (validity interval end, exclusive),
-    * `n_cols` and `cols_sig` for cheap downstream checks.
+    * Output adds `until_pos` (validity interval end, exclusive: the
+    * next version's `from_pos` in `(from_pos, version)` order, so of
+    * two ALTERs of one table at one position the earlier version gets
+    * the empty interval), `n_cols` and `cols_sig` for cheap downstream
+    * checks.
     *
     * `alters`: (tbl, pos) — a control relation (ALTERs are rare).
     * ALTERs of a table absent from the base registry version forward
     * with NULL column arrays — downstream treats them like any other
     * schema-load failure (DLQ), mirroring the reference's error row
-    * on a failed schema load (`stream.clj:180-193`). */
+    * on a failed schema load (`stream.clj:180-193`).
+    *
+    * Both inputs are control-sized (see the header), so they are
+    * collected and folded into versions on the driver and the result
+    * is a local frame: its readers ([[attach]], [[alignToLatest]])
+    * plan no window or join over it, and local inputs run no job. */
   def withAlters(baseReg: DataFrame, alters: DataFrame): DataFrame = {
-    val vw = Window.partitionBy(col("tbl")).orderBy(col("pos"))
-    val alterVersions = alters
-      .select(col("tbl"), col("pos").as("from_pos"),
-        row_number().over(vw).as("version"))
-    val versioned = baseReg
-      .join(alterVersions.select(col("tbl"), col("from_pos"), col("version")),
-        Seq("tbl", "version", "from_pos"), "full_outer")
-      // carry the base arrays onto every version of the same table
-      .withColumn("col_names", first(col("col_names"), ignoreNulls = true)
-        .over(Window.partitionBy(col("tbl")).orderBy(col("version"))))
-      .withColumn("col_types", first(col("col_types"), ignoreNulls = true)
-        .over(Window.partitionBy(col("tbl")).orderBy(col("version"))))
-      .withColumn("col_charsets", first(col("col_charsets"), ignoreNulls = true)
-        .over(Window.partitionBy(col("tbl")).orderBy(col("version"))))
-      .withColumn("col_names",
-        concat(col("col_names"), extras(col("version"), i => concat(lit("extra_"), i))))
-      .withColumn("col_types",
-        concat(col("col_types"), extras(col("version"), _ => lit("bigint"))))
-      .withColumn("col_charsets",
-        concat(col("col_charsets"), extras(col("version"), _ => lit(null).cast("string"))))
-    versioned
-      // tie-break by version: two ALTERs of one table at the same pos
-      // must deterministically give the earlier version the empty
-      // [from_pos, until_pos) interval
-      .withColumn("until_pos",
-        coalesce(lead(col("from_pos"), 1).over(
-          Window.partitionBy(col("tbl")).orderBy(col("from_pos"), col("version"))),
-          lit(Long.MaxValue)))
+    val bases = baseReg.select("tbl", "version", "from_pos", "col_names", "col_types", "col_charsets")
+      .collect()
+    val baseOf = bases.map(r => r.getString(0) -> r).toMap
+    val opened = alters.select(col("tbl"), col("pos")).collect()
+      .groupBy(_.getString(0)).toSeq.flatMap { case (tbl, rs) =>
+        rs.map(_.getLong(1)).sorted.zipWithIndex.map { case (pos, i) => (tbl, i + 1, pos) }
+      }
+    val versions = (bases.map(r => (r.getString(0), r.getInt(1), r.getLong(2))) ++ opened)
+      .groupBy(_._1).toSeq.flatMap { case (tbl, vs) =>
+        val byFrom = vs.sortBy(v => (v._3, v._2))
+        byFrom.zip(byFrom.drop(1).map(_._3) :+ Long.MaxValue).map { case ((_, version, from), until) =>
+          // the base arrays plus this version's extra columns; NULL without a base
+          def cols(i: Int, extra: Int => String) =
+            baseOf.get(tbl).map(_.getSeq[String](i) ++ (1 to version).map(extra)).orNull
+          Row(tbl, version, from, cols(3, "extra_" + _), cols(4, _ => "bigint"), cols(5, _ => null), until)
+        }
+      }.sortBy(r => (r.getString(0), r.getInt(1)))
+    val arr = ArrayType(StringType)
+    val schema = StructType(Seq(StructField("tbl", StringType), StructField("version", IntegerType),
+      StructField("from_pos", LongType), StructField("col_names", arr), StructField("col_types", arr),
+      StructField("col_charsets", arr), StructField("until_pos", LongType)))
+    baseReg.sparkSession.createDataFrame(versions.asJava, schema)
       .withColumn("n_cols", size(col("col_names")))
       .withColumn("cols_sig", array_join(col("col_names"), ","))
   }
-
-  /** `extra_1 … extra_v` style arrays; empty at version 0 (guarded —
-    * Spark's 2-arg `sequence(1, 0)` would count DOWN). Runs on the
-    * tiny registry only, never per log row. */
-  private def extras(version: Column, f: Column => Column): Column =
-    when(version === 0, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(1), version), f))
 
   /** As-of schema attach: each log row picks up the registry columns
     * of the version in force at its position. Broadcast equi-join on
@@ -448,10 +446,9 @@ object SchemaRegistry {
     val isAlter = col("etype") === "purchase" && col("id") % 100 === 3 &&
       col("id") < 1000
     // the registry (control-sized: one row per schema version) feeds
-    // the attach, the alignment, and nothing else; persist so neither
-    // use re-derives it from a log scan
+    // the attach, the alignment, and nothing else; it is a local frame,
+    // so neither use re-derives it from a log scan
     val registry = demoRegistry(committed, isAlter)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // explicit fan-out before the per-row kernels: the committed frame
     // arrives from a shuffle whose BYTES are small, so AQE coalesces it
     // to ~1 partition — and then the width-heavy decode/align compute

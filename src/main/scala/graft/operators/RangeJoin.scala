@@ -3,10 +3,11 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Generic point-in-interval range join (SURVEY §2 C10) — the
-  * reusable form of the adaptive-bucket technique proven in
-  * [[graft.cdc.Changelog.attachFile]] and
-  * [[graft.cdc.SchemaRegistry.attach]].
+/** Generic point-in-interval range join (SURVEY §2 C10) by adaptive
+  * position buckets, for interval sets that may overlap and need not
+  * be few. A disjoint set bounded by a file count, such as the binlog
+  * rotates, is better binary-searched per row on its driver-collected
+  * starts ([[graft.cdc.Changelog.attachFile]]).
   *
   * A naive `p >= lo AND p < hi` theta-join is a broadcast
   * nested-loop: O(|points|·|intervals|) comparisons. Instead the

@@ -257,10 +257,17 @@ private[graft] object ViewLayout {
 
     /** Write `rows` (carrying `__bucket`) as one file set per bucket
       * under `version/sub`. Overwrite: a replay of a crashed pre-flip
-      * attempt must clean that attempt's partials. */
+      * attempt must clean that attempt's partials.
+      *
+      * The write runs in min(numBuckets, defaultParallelism) tasks,
+      * hashed by `__bucket`: each bucket still lands in one task (one
+      * file per bucket dir), and the explicit width keeps adaptive
+      * execution from coalescing a small view into one task that
+      * writes every bucket file in turn. */
     def write(rows: DataFrame, sub: String = ""): Unit = {
       dataRel = if (sub.isEmpty) version else s"$version/$sub"
-      rows.repartition(col("__bucket"))
+      rows.repartition(math.min(numBuckets, rows.sparkSession.sparkContext.defaultParallelism),
+          col("__bucket"))
         .write.mode(SaveMode.Overwrite).partitionBy("__bucket")
         .parquet(s"$dir/$dataRel")
     }

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.cdc.Changelog
+import graft.cdc.{Changelog, SchemaRegistry}
+import graft.cdc.SchemaRegistry.ColSpec
 
 /** Property-based CDC semantics, mirroring the reference's generative
   * tests (`test/dumpr/core_test.clj`: `gen-ops-sequence`,
@@ -112,5 +113,92 @@ class ChangelogPropertySpec extends AnyFunSuite {
       s1 == s2 && keys.length == keys.toSet.size && keys.toSet == touched &&
         twice == compact.collect().map(_.toSeq).toSet
     }, 6)
+  }
+
+  // (pos, rotate file or None) logs in position order: dense or sparse
+  // 64-bit positions, rotates placed at random, first, last, back to
+  // back, nowhere or everywhere
+  private val genRotateLog: Gen[List[(Long, Option[Long])]] = for {
+    n <- Gen.choose(1, 40)
+    sparse <- Gen.oneOf(false, true)
+    gaps <- Gen.listOfN(n, if (sparse) Gen.choose(1L, 1L << 40) else Gen.const(1L))
+    start <- if (sparse) Gen.choose(0L, 1L << 50) else Gen.const(0L)
+    at <- Gen.choose(0, n - 1)
+    random <- Gen.listOfN(n, Gen.choose(0, 4).map(_ == 0))
+    placement <- Gen.choose(0, 5)
+    files <- Gen.listOfN(n, Gen.choose(0L, 999999L))
+  } yield gaps.scanLeft(start)(_ + _).tail.zipWithIndex.map { case (pos, i) =>
+    val rotate = placement match {
+      case 0 => false
+      case 1 => true
+      case 2 => i == 0
+      case 3 => i == n - 1
+      case 4 => i == at || i == at + 1
+      case _ => random(i)
+    }
+    pos -> Option.when(rotate)(files(i))
+  }
+
+  test("attachFile equals the serial add-binlog-filename fold") {
+    check(Prop.forAll(genRotateLog) { events =>
+      val df = spark.sparkContext.parallelize(events.map { case (pos, rot) =>
+        (pos, "upsert", "t", rot.getOrElse(1L), pos / 5, 1.0, if (rot.isDefined) "signup" else "x")
+      }, 2).toDF("pos", "op", "tbl", "id", "tx", "val", "etype")
+      val planned = Changelog.attachFile(df).select("pos", "file").as[(Long, String)].collect().toMap
+      // stream.clj:56-77: the current file changes at each rotate,
+      // which itself leaves the stream
+      val serial = events.foldLeft((Changelog.DefaultFile, Map.empty[Long, String])) {
+        case ((_, out), (_, Some(f))) => (f"bin.$f%06d", out)
+        case ((file, out), (pos, None)) => (file, out + (pos -> file))
+      }._2
+      planned == serial
+    }, 12)
+  }
+
+  test("withAlters equals the hand-computed registry") {
+    val base = SchemaRegistry.base(spark, Map(
+      "t" -> Seq(ColSpec("id", "bigint"), ColSpec("body", "text", "latin1")),
+      "u" -> Seq(ColSpec("id", "bigint"))))
+    def reg(alters: (String, Long)*) =
+      SchemaRegistry.withAlters(base, alters.toDF("tbl", "pos")).collect().map { r =>
+        (r.getString(0), r.getInt(1), r.getLong(2), Option(r.getSeq[String](3)),
+          Option(r.getSeq[String](4)), Option(r.getSeq[String](5)), r.getLong(6),
+          Option(r.get(7)), Option(r.getString(8)))
+      }.toSet
+    val (min, max) = (Long.MinValue, Long.MaxValue)
+    val t0 = ("t", 0, min, Some(Seq("id", "body")), Some(Seq("bigint", "text")),
+      Some(Seq(null, "latin1")), max, Some(2), Some("id,body"))
+    val u0 = ("u", 0, min, Some(Seq("id")), Some(Seq("bigint")), Some(Seq(null)), max,
+      Some(1), Some("id"))
+    assert(reg() == Set(t0, u0))
+    // three ALTERs of t, out of position order
+    assert(reg(("t", 9L), ("t", 5L), ("t", 7L)) == Set(t0.copy(_7 = 5L), u0,
+      ("t", 1, 5L, Some(Seq("id", "body", "extra_1")), Some(Seq("bigint", "text", "bigint")),
+        Some(Seq(null, "latin1", null)), 7L, Some(3), Some("id,body,extra_1")),
+      ("t", 2, 7L, Some(Seq("id", "body", "extra_1", "extra_2")),
+        Some(Seq("bigint", "text", "bigint", "bigint")), Some(Seq(null, "latin1", null, null)),
+        9L, Some(4), Some("id,body,extra_1,extra_2")),
+      ("t", 3, 9L, Some(Seq("id", "body", "extra_1", "extra_2", "extra_3")),
+        Some(Seq("bigint", "text", "bigint", "bigint", "bigint")),
+        Some(Seq(null, "latin1", null, null, null)), max, Some(5),
+        Some("id,body,extra_1,extra_2,extra_3"))))
+    // an ALTER of an unregistered table: NULL arrays, size and signature
+    assert(reg(("x", 4L)) == Set(t0, u0, ("x", 1, 4L, None, None, None, max, None, None)))
+    // two ALTERs of u at one position: the earlier version's interval is empty
+    assert(reg(("u", 6L), ("u", 6L)) == Set(t0, u0.copy(_7 = 6L),
+      ("u", 1, 6L, Some(Seq("id", "extra_1")), Some(Seq("bigint", "bigint")),
+        Some(Seq(null, null)), 6L, Some(2), Some("id,extra_1")),
+      ("u", 2, 6L, Some(Seq("id", "extra_1", "extra_2")), Some(Seq("bigint", "bigint", "bigint")),
+        Some(Seq(null, null, null)), max, Some(3), Some("id,extra_1,extra_2"))))
+  }
+
+  test("nextPosition on an empty log and on a log without rotates") {
+    def next(events: Seq[(Long, String)]) = Changelog.nextPosition(
+      events.map { case (pos, etype) => (pos, "upsert", "t", 3L, pos / 5, 1.0, etype) }
+        .toDF("pos", "op", "tbl", "id", "tx", "val", "etype"))
+      .collect().map(r => (r.getString(0), Option(r.get(1)))).toSeq
+    assert(next(Nil) == Seq((Changelog.DefaultFile, None)))
+    assert(next(Seq((4L, "x"), (11L, "x"), (7L, "x"))) == Seq((Changelog.DefaultFile, Some(12L))))
+    assert(next(Seq((4L, "signup"), (11L, "x"), (7L, "x"))) == Seq(("bin.000003", Some(12L))))
   }
 }

@@ -80,11 +80,11 @@ class ChangelogSpec extends AnyFunSuite {
     assert(out == Map(1L -> "bin.000000", 3L -> "bin.000003", 5L -> "bin.000005"))
   }
 
-  test("attachFile handles sparse 64-bit byte-offset ranges (adaptive bucketing)") {
+  test("attachFile handles sparse 64-bit byte-offset ranges (binary search)") {
     // realistic binlog positions: byte offsets spread over ~10^12.
-    // A fixed 4096-wide bucket explode needs ~2.4·10^8 rows here (and
-    // overflows sequence() past 2^31 buckets); the adaptive width keeps
-    // the control table at ~2^16 rows regardless of range.
+    // A fixed 4096-wide bucket explode would need ~2.4·10^8 rows here
+    // (and overflow sequence() past 2^31 buckets); a binary search over
+    // the sorted rotate starts does not depend on the range at all.
     val l = log(
       (3L, "upsert", "t", 1, 0, 1.0, "x"),
       (500000000000L, "upsert", "t", 7, 0, 1.0, "signup"), // rotate → bin.000007

@@ -71,6 +71,14 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(n == 1, s"expected 1 shuffle exchange, plan has $n")
   }
 
+  test("cdc_attach_file: map-only — no exchange, no join") {
+    val p = formatted("cdc_attach_file")
+    val n = raw"\(\d+\) Exchange\b".r.findAllIn(p).size
+    assert(n == 0, s"expected no shuffle exchange, plan has $n")
+    assert(!p.contains("Join") && !p.contains("BroadcastExchange"),
+      "the file attach must not join the log against the rotates")
+  }
+
   test("cdc_schema_attach: registry attaches via broadcast join, log side never sorted/shuffled whole") {
     val p = formatted("cdc_schema_attach")
     assert(p.contains("BroadcastHashJoin"), "as-of attach must be a broadcast hash join")

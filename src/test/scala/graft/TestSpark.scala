@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{Dataset, SparkInternals, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** One shared local session for all suites (Spark re-uses the first
@@ -32,5 +35,35 @@ object TestSpark {
     spark.conf.set(capKey, (Int.MaxValue - 15).toString)
     try df.queryExecution.explainString(FormattedMode)
     finally spark.conf.set(capKey, prev)
+  }
+
+  /** The start events of the Spark jobs `body` starts on this thread
+    * (by job group, so a stray query of another suite cannot count). */
+  def jobStarts[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(j)
+    }
+    SparkInternals.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      SparkInternals.drain(sc)
+      (out, jobs.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The number of Spark jobs `body` starts on this thread. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val (out, jobs) = jobStarts(body)
+    (out, jobs.size)
   }
 }

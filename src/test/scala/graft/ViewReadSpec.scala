@@ -4,8 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkInternals
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit, udf}
@@ -24,38 +23,9 @@ import graft.streaming.JoinView.JoinChange
 class ViewReadSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import TestSpark.{jobStarts, jobsOf}
 
   private def tmp(name: String) = Files.createTempDirectory(s"graft_vr_$name").toString
-
-  /** Jobs `body` starts on this thread (by job group, so a stray
-    * query of another suite cannot count). */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val (out, jobs) = jobStarts(body)
-    (out, jobs.size)
-  }
-
-  /** The start events of the jobs `body` starts on this thread. */
-  private def jobStarts[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
-    val sc = spark.sparkContext
-    val group = s"view-read-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.add(j)
-    }
-    SparkInternals.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, group)
-    try {
-      val out = body
-      SparkInternals.drain(sc)
-      (out, jobs.asScala.toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
