@@ -39,7 +39,8 @@ def run_oracle(sql, q):
     con = duckdb.connect()
     con.execute(f"SET threads TO {os.cpu_count()}")
     # heavy replays (dedup_pareto at sf1): raise the memory budget and
-    # move spill off the repo dir — SURVEY §18's solo-run recipe
+    # move spill off the repo dir — the solo-run recipe of
+    # `git show 6c9821a:SURVEY.md` §18
     if os.environ.get("GRAFT_DUCK_MEM"):
         con.execute(f"SET memory_limit='{os.environ['GRAFT_DUCK_MEM']}'")
     if os.environ.get("GRAFT_DUCK_TMP"):

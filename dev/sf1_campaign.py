@@ -3,9 +3,10 @@
 
 Runs every SparkEntry query against the x10 replica (sf1-scale) in
 CHUNKED FRESH JVMs (shuffle files outlive clearCache; one JVM per
-chunk keeps the disk bounded — SURVEY §18), replays each DuckDB oracle
-with dev/check_timed.py under a per-query budget, and merges the
-per-chunk artifacts into one CORRECTNESS_SF1_r{N}.json via merge_sf1.
+chunk keeps the disk bounded — `git show 6c9821a:SURVEY.md` §18),
+replays each DuckDB oracle with dev/check_timed.py under a per-query
+budget, and merges the per-chunk artifacts into one
+CORRECTNESS_SF1_r{N}.json via merge_sf1.
 
 Invokes Verify with a DIRECT java -cp (classes + /opt/spark/jars), not
 sbt, so a concurrent sbt session can't deadlock the campaign; compile
@@ -17,9 +18,9 @@ Usage:
 
 dedup_pareto is EXCLUDED by default (its sf1 oracle replay needs a
 ~105 GB DuckDB memory_limit and a dedicated temp dir — run it solo,
-see SURVEY §18), then merged in from its solo artifact.
+see `git show 6c9821a:SURVEY.md` §18), then merged in from its solo artifact.
 """
-import sys, os, json, subprocess, glob
+import sys, os, json, subprocess
 
 x10, work, out = sys.argv[1], sys.argv[2], sys.argv[3]
 budget, chunk_sz = 1800, 10
@@ -58,9 +59,10 @@ JAVA = ["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAM
     "-cp", f"{CLASSES}:/opt/spark/jars/*",
 ]
 
-# key list = the committed driver-gate artifact's keys (the full surface)
-latest = sorted(glob.glob("CORRECTNESS_r*.json"))[-1]
-keys = sorted(json.load(open(latest)).keys())
+# key list = every query graft.Bench ran into its committed default
+# artifact (its status map names failed queries too: the full surface)
+latest = "BENCH_LAST.json"
+keys = sorted(json.load(open(latest))["status"].keys())
 if only is not None:
     keys = [k for k in keys if k in only]
 keys = [k for k in keys if k not in skip]

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-round benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -34,11 +34,35 @@ object Bench {
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
+  /** One timed execution of query `name` against `dir`, in seconds;
+    * Left(error, cut to 80 chars) on failure. Shared by [[ScaleBench]]. */
+  def runOnce(spark: SparkSession, dir: String, name: String,
+              fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    val r =
+      try {
+        val df = fn(spark, dir)
+        try { df.write.format("noop").mode("overwrite").save(); Right(()) }
+        // checkpoint-backed results (incrementalNearDup) hold RDD
+        // blocks clearCache can't see; release is a no-op otherwise
+        finally graft.operators.Dedup.release(df)
+      }
+      catch { case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        System.err.println(s"[bench] $name failed: ${msg.take(200)}")
+        Left(msg.take(80))
+      }
+    // drop caches/broadcasts between queries so one operator's
+    // working set can't GC-starve the next measurement
+    spark.catalog.clearCache()
+    r.map(_ => (System.nanoTime() - t0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
+    val spark = Sessions.benchLocal(
       SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
       cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -60,43 +84,21 @@ object Bench {
       catch { case _: Throwable => "-1" }
     val loadStart = loadAvg()
 
-    // one timed execution; Left(error) on failure
-    def runOnce(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Either[String, Double] = {
-      val t0 = System.nanoTime()
-      val r =
-        try {
-          val df = fn(spark, sfDir)
-          try { df.write.format("noop").mode("overwrite").save(); Right(()) }
-          // checkpoint-backed results (incrementalNearDup) hold RDD
-          // blocks clearCache can't see; release is a no-op otherwise
-          finally graft.operators.Dedup.release(df)
-        }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage.take(200)}")
-          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(80))
-        }
-      // drop caches/broadcasts between queries so one operator's
-      // working set can't GC-starve the next measurement
-      spark.catalog.clearCache()
-      r.map(_ => (System.nanoTime() - t0) / 1e9)
-    }
-
     // canaries BRACKET the samples: cy before, cy2 after — a starvation
     // phase that begins mid-samples (the common case: the query itself
     // pushes the host into contention) shows in cy2 even when cy was
     // quiet, so slow samples beside a slow cy2 still read as host noise
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val cy = canary()
-      val r = runOnce(name, fn) match {
+      val r = runOnce(spark, sfDir, name, fn) match {
         case Left(err) => (name, Seq.empty[Double], Option(err))
         case Right(s1) =>
-          runOnce(name, fn) match {
+          runOnce(spark, sfDir, name, fn) match {
             case Left(err) => (name, Seq(s1), Option(err))
             case Right(s2) =>
               val disagree = math.abs(s1 - s2) > math.max(2.0, 0.5 * math.min(s1, s2))
               if (!disagree) (name, Seq(s1, s2), None)
-              else runOnce(name, fn) match {
+              else runOnce(spark, sfDir, name, fn) match {
                 // a failed tie-breaker is a real failure signal, not a
                 // fallback to "ok" — surface it in status/failed
                 case Left(err) => (name, Seq(s1, s2), Option(err))

@@ -5,9 +5,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** One-command scaling sweep: times a representative query subset at a
-  * list of data-scale factors and emits the SURVEY §14-style scaling
-  * table as a JSON artifact, so scaling regressions are diffable
-  * round-over-round instead of hand-assembled.
+  * list of data-scale factors and emits the scaling table of
+  * `git show 6c9821a:SURVEY.md` §14 as a JSON artifact, so scaling
+  * regressions are diffable round-over-round instead of hand-assembled.
   *
   * `runMain graft.ScaleBench <baseDir> <workDir> <factorsCsv> [queriesCsv]`
   *
@@ -79,7 +79,7 @@ object ScaleBench {
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
+    val spark = Sessions.benchLocal(
       SparkSession.builder().master(s"local[$cpus]").appName("graft-scalebench"),
       cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -138,23 +138,7 @@ object ScaleBench {
         // operator cost (r14's cdc_debezium_decode 13× was mostly this)
         SparkEntry.warmInputs(spark, dir)
         queries.map { name =>
-          val fn = SparkEntry.queries(name)
-          val t0 = System.nanoTime()
-          val r =
-            try {
-              val df = fn(spark, dir)
-              try { df.write.format("noop").mode("overwrite").save(); Right(()) }
-              // checkpoint-backed results (dedup_incremental_lsh is in
-              // defaultQueries) hold RDD blocks clearCache can't see; a
-              // multi-factor sweep would otherwise pin one batch-sized
-              // block set PER FACTOR. No-op for plain plans.
-              finally graft.operators.Dedup.release(df)
-            }
-            catch { case e: Throwable =>
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(80))
-            }
-          spark.catalog.clearCache()
-          val out = r.map(_ => (System.nanoTime() - t0) / 1e9)
+          val out = Bench.runOnce(spark, dir, name, SparkEntry.queries(name))
           System.err.println(f"[scalebench] x$f $name: " +
             out.fold(e => s"FAILED $e", s => f"$s%.2f s"))
           (name, f, out)

@@ -5,10 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of the driver testdata for scale sweeps.
   *
-  * `runMain graft.ScaleData <inDir> <outDir> <factor>` writes a
-  * `factor`-times-larger copy of every table, built as `factor`
-  * key-shifted replicas in ONE scan per table
-  * (`explode(sequence(...))`, no self-unions):
+  * [[ScaleData.generate]] writes a `factor`-times-larger copy of
+  * every table, built as `factor` key-shifted replicas in ONE scan per
+  * table (`explode(sequence(...))`, no self-unions):
   *
   *  - every key column is shifted by `copy * stride(table)` where the
   *    stride is `max(key)+1` — the SAME stride for a key wherever it
@@ -44,21 +43,8 @@ object ScaleData {
     extra.foldLeft(shifted) { case (d, (c, e)) => d.withColumn(c, e) }.drop("__copy")
   }
 
-  def main(args: Array[String]): Unit = {
-    require(args.length == 3, "usage: ScaleData <inDir> <outDir> <factor>")
-    val (in, out, factor) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-scale"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    generate(spark, in, out, factor)
-    spark.stop()
-  }
-
-  /** Write the factor-times replica of every table under `out` (also
-    * called by [[ScaleBench]] to materialize sweep inputs on demand). */
+  /** Write the factor-times replica of every table under `out` (called
+    * by [[ScaleBench]] to materialize sweep inputs on demand). */
   def generate(spark: SparkSession, in: String, out: String, factor: Int): Unit = {
     def raw(name: String): DataFrame = spark.read.parquet(s"$in/$name.parquet")
     def write(name: String, df: DataFrame): Unit = {

@@ -18,9 +18,9 @@ import org.apache.spark.sql.SparkSession
   *    for the synthetic corpus; ICU's static init and per-char calls
   *    dominate small benchmarks), and the UI off.
   *
-  * Verify/Bench pick the profile from `SPARK_GRAFT_PROFILE`
-  * (`cluster` | default `bench`), so the oracle suite runs green under
-  * both.
+  * The harness mains (Verify, Bench, StreamBench, ScaleBench) and the
+  * perfbench runner build their `local[...]` sessions with
+  * [[benchLocal]].
   */
 object Sessions {
 
@@ -72,16 +72,6 @@ object Sessions {
       // data is ASCII where JVM semantics are identical
       .config("spark.sql.icu.caseMappings.enabled", "false")
       .config("spark.ui.enabled", "false")
-
-  /** Back-compat alias for the local profile (existing mains/tests). */
-  def tune(b: SparkSession.Builder, shufflePartitions: Int = 32): SparkSession.Builder =
-    benchLocal(b, shufflePartitions)
-
-  /** Profile from `SPARK_GRAFT_PROFILE`: `cluster` or (default) local. */
-  def fromEnv(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
-    if (sys.env.get("SPARK_GRAFT_PROFILE").contains("cluster"))
-      cluster(b, shufflePartitions)
-    else benchLocal(b, shufflePartitions)
 
   /** Standalone local session (tests / benchmarks). */
   def local(cores: Int = 32): SparkSession = {

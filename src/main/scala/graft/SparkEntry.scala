@@ -8,7 +8,7 @@ import graft.analytics.Analytics
 import graft.operators.{Ann, AsOf, Bloom, Cluster, Corpus, Dedup, Dq, Graph, RangeJoin, Sampling, Sketch, Skew, ZOrder}
 import graft.functions.{Hashing, TextFunctions}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
+/** Driver contract — see SURVEY.md §2 for the inventory.
   *
   * Every operator has a `queries` entry; SQL-expressible ones also have
   * a DuckDB oracle in `oracleSql` with matching column aliases.
@@ -538,7 +538,7 @@ object SparkEntry {
     "kmeans_assign" -> ((s, d) =>
       // train on the 25% hash-sample, assign the full corpus — the
       // codebook is a statistic; full-corpus Lloyd passes were the
-      // engine's worst linear tail at 32× (SURVEY §14)
+      // engine's worst linear tail at 32× (`git show 6c9821a:SURVEY.md` §14)
       Cluster.kmeansAssign(Tables.embeddings(s, d), k = 8, iters = 2,
         trainPct = Cluster.TrainPct)),
     "dedup_semantic" -> ((s, d) =>
@@ -651,7 +651,7 @@ object SparkEntry {
     "lm_score_bucket" -> ((s, d) =>
       // the LM's SCALE twin: bucket-hashed model broadcasts, scoring
       // is a map pass + one doc rollup — closes the exact LM's
-      // scoring-bound 13× tail (SURVEY §18 r13 note)
+      // scoring-bound 13× tail (`git show 6c9821a:SURVEY.md` §18 r13 note)
       Corpus.lmBucketScore(Tables.documents(s, d),
         trainPct = Corpus.LmTrainPct)),
     "temperature_mix" -> ((s, d) =>

@@ -73,7 +73,7 @@ object StreamBench {
     val scale = if (args.nonEmpty) args(0).toDouble else 1.0
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.fromEnv(
+    val spark = Sessions.benchLocal(
       SparkSession.builder().master(s"local[$cpus]").appName("graft-streambench"),
       cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

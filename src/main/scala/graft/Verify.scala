@@ -10,7 +10,7 @@ object Verify {
     val only = args.drop(2).toSet
     def keep(name: String): Boolean = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.fromEnv(
+    val spark = Sessions.benchLocal(
       SparkSession.builder().master(s"local[$cpus]"), cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

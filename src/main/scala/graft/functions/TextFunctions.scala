@@ -18,10 +18,11 @@ import org.apache.spark.sql.graftbridge.ColumnBridge.{toColumn, toExpr}
   * (`filter`/`transform`/`aggregate`) evaluate their lambdas
   * INTERPRETED per element, so the old formulation made 4-6 boxed
   * passes over every token array per row — the engine's worst
-  * interpreted loop (SURVEY §8.4). TokenStats is one codegen'd pass
-  * producing every per-token statistic the text operators consume
-  * (token count, stopword counts, BPE-ish piece count); `lang_id`,
-  * `quality_score` and `token_count` all read its struct fields.
+  * interpreted loop (`git show 6c9821a:SURVEY.md` §8.4). TokenStats
+  * is one codegen'd pass producing every per-token statistic the text
+  * operators consume (token count, stopword counts, BPE-ish piece
+  * count); `lang_id`, `quality_score` and `token_count` all read its
+  * struct fields.
   */
 object TextFunctions {
 

@@ -263,10 +263,10 @@ object VectorFunctions {
 
   /** Two-level coarse quantization kernel — the documented escape past
     * the flat argmax's nlist ceiling ([[nearestCids]] is O(nlist·dim)
-    * per row; `IVFSCALE_r14.json` locates the crossover at nlist ≈
-    * 4–8k): score the √nlist-ish SUPER-cells first, then scan only the
-    * top `probeSupers` supers' member cells — O((m + w·k/m)·dim) per
-    * row. Probing w ≥ 2 supers covers boundary cells; with
+    * per row; `git show 6c9821a:IVFSCALE_r14.json` locates the crossover at
+    * nlist ≈ 4–8k): score the √nlist-ish SUPER-cells first, then scan
+    * only the top `probeSupers` supers' member cells —
+    * O((m + w·k/m)·dim) per row. Probing w ≥ 2 supers covers boundary cells; with
     * `probeSupers = m` the scan degenerates to exactly the flat
     * kernel's candidate set, and ties break to the lowest codebook
     * index exactly as [[nearestCids]]' scan order does, so the
@@ -374,7 +374,8 @@ object VectorFunctions {
     * }}}
     * but ONE aggregate row per vector instead of `dim` exploded rows
     * through the hash aggregate — the trainers' measured cost is this
-    * fan-out (`IVFSCALE_r14.json`: Lloyd dominates the IVF build).
+    * fan-out (`git show 6c9821a:IVFSCALE_r14.json`: Lloyd dominates the IVF
+    * build).
     * Parity argument, leg by leg: Spark's float→decimal(25,7) cast is
     * `Decimal(f.toDouble)` rounded HALF_UP to scale 7, i.e. the
     * `BigDecimal.valueOf(double).setScale(7, HALF_UP)` unscaled long

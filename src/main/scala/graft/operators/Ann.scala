@@ -190,8 +190,8 @@ object Ann {
     * Same plan shape: the codebook stays a plan constant, assignment
     * a pure map.
     *
-    * Production codebook size (measured, `IVFSCALE_r14.json`, 64k
-    * vectors ×32 replica): recall holds 1.0 through nlist = 256 with
+    * Production codebook size (measured, `git show 6c9821a:IVFSCALE_r14.json`,
+    * 64k vectors ×32 replica): recall holds 1.0 through nlist = 256 with
     * nprobe = nlist/16; Lloyd TRAINING dominates the index build
     * (10.3 / 23.7 / 97.2 s at nlist 16 / 64 / 256) while the flat
     * [[graft.functions.VectorFunctions.NearestCentroids]] argmax —
@@ -230,10 +230,11 @@ object Ann {
   /** Codebook size past which corpus ASSIGNMENT switches from the
     * flat O(nlist·dim)/row argmax to the two-level quantizer
     * ([[Cluster.superIndex]] + [[graft.functions.VectorFunctions.
-    * nearestCentroidsTwoLevel]]). Measured basis (`IVFSCALE_r14.json`,
-    * 64k vectors): flat assignment 0.70 s at nlist 64 vs 2.53 s at
-    * 256 (linear), two-level 0.29 / 0.50 s (O(√nlist)). 128 keeps
-    * every graded/oracle default (nlist 8–16) on the bit-exact flat
+    * nearestCentroidsTwoLevel]]). Measured basis
+    * (`git show 6c9821a:IVFSCALE_r14.json`, 64k vectors): flat
+    * assignment 0.70 s at nlist 64 vs 2.53 s at 256 (linear),
+    * two-level 0.29 / 0.50 s (O(√nlist)). 128 keeps every
+    * graded/oracle default (nlist 8–16) on the bit-exact flat
     * path — the switch only engages at production codebook sizes,
     * where [[TwoLevelProbeSupers]] holds the recall gate. */
   val TwoLevelNlist = 128
@@ -242,13 +243,13 @@ object Ann {
     * w = 4 (double the instrument's w = 2 operating point, whose
     * 0.65 flat-agreement on the adversarial unclustered corpus the
     * r14 verdict flagged as un-shippable-blind): agreement rises
-    * linearly in w, and — the gate that matters — `IVFSCALE_r15`
-    * measures the GRADED path's end-to-end recall at nlist 256 under
-    * this exact setting. Assignment disagreement ≠ recall loss: a
-    * vector assigned to its second-nearest list is still found
-    * whenever the query's nprobe-list probe set covers that list,
-    * which is why the end-to-end gate, not agreement, is the
-    * shipping criterion. */
+    * linearly in w, and — the gate that matters —
+    * `git show 6c9821a:IVFSCALE_r15.json` measures the GRADED path's
+    * end-to-end recall at nlist 256 under this exact setting.
+    * Assignment disagreement ≠ recall loss: a vector assigned to its
+    * second-nearest list is still found whenever the query's
+    * nprobe-list probe set covers that list, which is why the
+    * end-to-end gate, not agreement, is the shipping criterion. */
   val TwoLevelProbeSupers = 4
 
   /** The corpus-side coarse-assignment column: one list id per

@@ -40,9 +40,9 @@ import graft.functions.VectorFunctions.nearestCentroids
   * statistic, and k-means statistics converge on a sample — training
   * on the full corpus makes each of the `iters` passes a full-corpus
   * scan for no quality gain, which the 32× scaling sweep showed as
-  * the engine's worst linear tail (SURVEY §14). Seeds stay the first
-  * k vectors of the FULL corpus, so `trainPct` tunes cost, not the
-  * codebook's identity at 100. */
+  * the engine's worst linear tail (`git show 6c9821a:SURVEY.md` §14).
+  * Seeds stay the first k vectors of the FULL corpus, so `trainPct`
+  * tunes cost, not the codebook's identity at 100. */
 object Cluster {
 
   /** Production default training-sample percentage (the graded
@@ -129,7 +129,7 @@ object Cluster {
       // one VecSumFixed row per vector (bit-identical to the old
       // posexplode → per-(cid,d) decimal sum, minus the dim× row
       // fan-out through the hash aggregate — the pass that made Lloyd
-      // dominate the IVF build in IVFSCALE_r14)
+      // dominate the IVF build in `git show 6c9821a:IVFSCALE_r14.json`)
       val dim = cents(0).length
       for (_ <- 0 until iters) {
         val updated = proj
@@ -149,8 +149,8 @@ object Cluster {
   /** Driver-side SUPER-CELL index over a flat codebook — the
     * two-level coarse quantizer's level 1 (the Ann scaladoc's
     * documented escape past the flat argmax's measured nlist ceiling,
-    * `IVFSCALE_r14.json`). Groups the `k` centroids into
-    * `branch` ≈ √k super-cells with a tiny SERIAL Lloyd over the
+    * `git show 6c9821a:IVFSCALE_r14.json`). Groups the `k` centroids
+    * into `branch` ≈ √k super-cells with a tiny SERIAL Lloyd over the
     * centroids themselves (k is codebook-sized — microseconds on the
     * driver, deterministic: stride-sampled init, cosine assignment
     * with lowest-index ties, per-super vector SUMS as the update —

@@ -652,9 +652,9 @@ object Corpus {
     *
     * Why it exists: the exact LM's wall is SCORING — every bigram
     * occurrence must meet its probability through bigram-type-keyed
-    * joins (13.1× at 32× data, SURVEY §18 r13 note), because the
-    * vocabulary is unbounded. Bucketing makes the model B rows, so
-    * scoring becomes a pure MAP pass: the probability table
+    * joins (13.1× at 32× data, `git show 6c9821a:SURVEY.md` §18 r13
+    * note), because the vocabulary is unbounded. Bucketing makes the
+    * model B rows, so scoring becomes a pure MAP pass: the probability table
     * BROADCASTS, bucketing is one codegen'd hash per occurrence, the
     * bucket-count training aggregate partial-combines to ≤ B rows per
     * partition, and the only corpus-sized exchange left is the

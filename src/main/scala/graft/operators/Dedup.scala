@@ -457,7 +457,8 @@ object Dedup {
     * candidate pairs × KB-sized shingle arrays through the pinned
     * SHUFFLE_HASH attach). This operator is an ORACLE-SCALE
     * instrument: run it where ground truth is computable (the sf1
-    * replay needs ~105 GB of DuckDB temp — §18's recipe); the scale
+    * replay needs ~105 GB of DuckDB temp — `git show
+    * 6c9821a:SURVEY.md` §18's recipe); the scale
     * path whose cost it grades is the banded family, which the 32×
     * sweep times directly (`dedup_minhash_lsh`, `dedup_cc_lsh`). */
   def dedupPareto(docs: DataFrame, threshold: Double = 0.5, numHashes: Int = 128,
@@ -561,9 +562,12 @@ object Dedup {
       perArm.reduce(_.unionAll(_)).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
     } finally {
-      bhs.foreach(_.unpersist(blocking = false))
-      if (groups != null) groups.unpersist(blocking = false)
-      withKey.unpersist(blocking = false)
+      // blocking: the arms are collected (or failed) by now, so no lazy
+      // plan reads these caches; a non-blocking release after a failed
+      // arm could leave the groups RDD registered
+      bhs.foreach(_.unpersist(blocking = true))
+      if (groups != null) groups.unpersist(blocking = true)
+      withKey.unpersist(blocking = true)
     }
   }
 
@@ -1253,7 +1257,8 @@ object Dedup {
     *
     * A DENSITY GATE decides per oversized cell (measured into
     * existence — the first cut sent every oversized cell to banding
-    * and `SKEW_r18.json`'s sweep read the TIGHT 16k mode 6.5× WORSE
+    * and the sweep in `git show 6c9821a:SKEW_r18.json` read the TIGHT
+    * 16k mode 6.5× WORSE
     * through it, 65 → 425 s: a dense cell's within-bucket join
     * re-materializes its emitted pair set once per band BEFORE the
     * first-equal-band filter, so banding costs ~bands× the all-pairs

@@ -117,12 +117,17 @@ class DedupAnnSpec extends AnyFunSuite {
   test("dedupPareto: an arm that fails to build still releases the arms persisted before it") {
     val docs = Tables.documents(spark, sf)
     val entries = org.apache.spark.sql.SparkInternals.cachedEntries(spark)
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
     // bands = 0 throws (numHashes / 0) while the second arm is built,
     // after the 8-band arm was persisted. The arm was never computed,
     // so it holds no RDD yet: the cache manager's entries show it.
     intercept[ArithmeticException](Dedup.dedupPareto(docs, bandsList = Seq(8, 0)))
     assert(org.apache.spark.sql.SparkInternals.cachedEntries(spark) == entries,
       "the failed sweep left an arm cached")
+    // the attach-strategy probe did compute the sweep's groups: their
+    // RDD must be gone too, not only the cache manager's entry
+    assert(spark.sparkContext.getPersistentRDDs.keySet == rdds,
+      "the failed sweep left a persisted RDD")
   }
 
   test("simhash summary is total (one row per doc) and flags some near-dups") {

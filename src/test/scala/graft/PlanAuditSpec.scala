@@ -112,6 +112,14 @@ class PlanAuditSpec extends AnyFunSuite {
       "tx filter must be a broadcast anti-join, not a shuffle join")
   }
 
+  test("cdc_entity_state: last op per key capped map-side before the exchange") {
+    // a hot key's events reduce to one row per task before the shuffle,
+    // so a Zipf-skewed log never sends one task its whole history
+    val p = formatted("cdc_entity_state")
+    assert(raw"WindowGroupLimit".r.findAllIn(p).size >= 2,
+      "expect partial (pre-shuffle) + final WindowGroupLimit")
+  }
+
   test("sampling/split/repetition/quality operators are map-only (zero exchanges)") {
     Seq("stratified_sample", "train_test_split", "doc_repetition", "quality_filter",
         "doc_chunk", "pii_scrub", "multimodal_features", "text_normalize", "emb_quantize")

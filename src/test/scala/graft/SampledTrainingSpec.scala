@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, Cluster, Corpus, Sampling}
 
-/** Sample-bounded training (the 100 TB trainer posture, SURVEY §14):
-  * codebooks and LM counts train on a deterministic splitmix64
-  * hash-sample; assignment/scoring still cover the full corpus. The
-  * bit-exact semantics are graded by the DuckDB oracles
-  * (kmeans_assign, ann_*, lm_score at trainPct = 25); these specs pin
+/** Sample-bounded training (the 100 TB trainer posture,
+  * `git show 6c9821a:SURVEY.md` §14): codebooks and LM counts train
+  * on a deterministic splitmix64 hash-sample; assignment/scoring still
+  * cover the full corpus. The bit-exact semantics are graded by the
+  * DuckDB oracles (kmeans_assign, ann_*, lm_score at trainPct = 25);
+  * these specs pin
   * the CONTRACT — full coverage, seed-from-full-corpus codebook
   * identity, determinism, and the add-one smoothing floor for
   * sample-unseen n-grams. */
