@@ -45,7 +45,7 @@ object Bench {
         try { df.write.format("noop").mode("overwrite").save(); Right(()) }
         // checkpoint-backed results (incrementalNearDup) hold RDD
         // blocks clearCache can't see; release is a no-op otherwise
-        finally graft.operators.Dedup.release(df)
+        finally graft.operators.Materialize.release(df)
       }
       catch { case e: Throwable =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getName)

@@ -37,7 +37,9 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Changelog {
 
-  /** Microseconds in 30 minutes — session/timeout style constants. */
+  /** Binlog file-name prefix: a rotate to file id `n` names the file
+    * `bin.` + `n` zero-padded to six digits; [[DefaultFile]] holds the
+    * events before the first rotate. */
   val RotatePrefix = "bin."
   val DefaultFile: String = RotatePrefix + "000000"
 

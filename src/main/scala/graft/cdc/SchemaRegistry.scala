@@ -87,9 +87,9 @@ object SchemaRegistry {
     toColumn(SynthVals(toExpr(tbl), toExpr(id), toExpr(n.cast("int"))))
 
   /** Native per-charset decode of a raw `array<binary>` row under its
-    * attached schema arrays — the codegen'd twin of
-    * [[decodeWithSchema]]: same TextTypes gate, same MySQL→JVM charset
-    * mapping, same "unknown charset name RAISES" contract as Spark's
+    * attached schema arrays into a positional `array<string>` — the
+    * codegen'd form of [[convertWithSchema]]'s decode: same TextTypes
+    * gate, same MySQL→JVM charset mapping, same "unknown charset name RAISES" contract as Spark's
     * `decode` (names outside the decodable set throw instead of
     * resolving through the JVM alias registry). The decode is REAL
     * (`java.nio.charset` per cell); only the per-element lambda
@@ -298,7 +298,9 @@ object SchemaRegistry {
     * `tbl` + disjoint-interval containment — exactly one match, log
     * never shuffled. Rows of unregistered tables keep flowing with a
     * NULL schema_version (route them to the DLQ like the reference's
-    * `:error` rows, `stream.clj:196-210`). */
+    * `:error` rows, `stream.clj:196-210`). On a live stream (SURVEY §2
+    * B9) the same call is a stream-static join, re-planned per
+    * micro-batch. */
   def attach(log: DataFrame, registry: DataFrame): DataFrame = {
     val reg = registry.select(
       col("tbl"), col("version"), col("from_pos"), col("until_pos"),
@@ -405,23 +407,6 @@ object SchemaRegistry {
       .select(col("tbl"), col("version").as("schema_version"),
         col("target_version"), col("target_cols"),
         size(col("target_cols")).as("target_n_cols"), col("align_idx"))
-  }
-
-  /** Like [[convertWithSchema]] but keeps the decoded values as a
-    * POSITIONAL array (`vals_dec`) instead of building a per-row
-    * name→value map: same per-charset decode branches, none of the
-    * map allocation — the companion of [[alignToLatest]]'s
-    * index-based projection. */
-  def decodeWithSchema(attached: DataFrame, valsCol: String): DataFrame = {
-    val n = least(size(col("col_names")), size(col(valsCol)))
-    attached.withColumn("vals_dec",
-      when(n >= 1, transform(sequence(lit(1), n), i => {
-        val ctype = element_at(col("col_types"), i)
-        val cs = element_at(col("col_charsets"), i)
-        val raw = element_at(col(valsCol), i)
-        when(ctype.isin(TextTypes: _*), decodePerCharset(raw, cs))
-          .otherwise(decode(raw, "UTF-8"))
-      })).otherwise(array().cast("array<string>")))
   }
 
   /** Driver-query wiring (`cdc_schema_migrate`): the [[attachDemo]]

@@ -589,10 +589,10 @@ object Ann {
     val sub = dim / m
     val projAll = embeddings.select(col("vec_id"),
       array((0 until m).map(s => slice(col("embedding"), s * sub + 1, sub)): _*).as("subs"))
-    val proj = (if (trainPct >= 100) projAll
-                else projAll.where(Sampling.bucket(col("vec_id"), seed) < trainPct))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { scope =>
+      val proj = scope.persist(
+        if (trainPct >= 100) projAll
+        else projAll.where(Sampling.bucket(col("vec_id"), seed) < trainPct))
       val init = projAll.filter(col("vec_id") < ksub).collect().sortBy(_.getLong(0))
       require(init.nonEmpty, s"pqCodebooks: no rows with vec_id < ksub=$ksub to seed")
       val cids = init.map(_.getLong(0))
@@ -623,7 +623,7 @@ object Ann {
         }
       }
       (0 until m).map(s => (cids, cents(s)))
-    } finally proj.unpersist(blocking = false)
+    }
   }
 
   /** Product-quantize every vector to m small codes: code s = nearest
@@ -819,39 +819,26 @@ object Ann {
     * round-trips; block-level locking already serializes the 2-3
     * references' first touch of a cached partition).
     *
-    * EAGER, cache-scoped (the `dedupPareto` r16 / `semanticPairsScaled`
-    * r17 lesson applied to the last holdout — r17 verdict wrong #2):
-    * the result `localCheckpoint`s and any input persisted HERE
-    * releases in a `finally`, so a caller sweeping index variants
-    * does not accumulate pinned frames per call. Ownership-aware: an
-    * input the CALLER already persisted is left alone — only frames
-    * this call persisted are released. [[Dedup.release]] frees the
-    * result's checkpoint blocks. NOTE: building this DataFrame
-    * eagerly executes both input pipelines (the eager checkpoint). */
-  def recall(approx: DataFrame, exact: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val aOwned = approx.storageLevel == StorageLevel.NONE
-    val eOwned = exact.storageLevel == StorageLevel.NONE
-    val a = if (aOwned) approx.persist(StorageLevel.MEMORY_AND_DISK) else approx
-    val e = if (eOwned) exact.persist(StorageLevel.MEMORY_AND_DISK) else exact
-    try {
-      // no separate materializing counts (r18): the eager checkpoint
-      // below is the single action that fills both caches — each
-      // input's blocks compute once on first touch (block-level
-      // locking serializes the 2-3 references), so the two extra
-      // driver-synchronized jobs bought nothing
-      val hits = a.join(e.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"), "left_semi")
-        .groupBy(col("q_id")).agg(count(lit(1)).cast("int").as("n_hit"))
-      val nApprox = a.groupBy(col("q_id")).agg(count(lit(1)).cast("int").as("n_approx"))
-      val nExact = e.groupBy(col("q_id")).agg(count(lit(1)).cast("int").as("n_exact"))
-      nExact.join(nApprox, Seq("q_id"), "left")
-        .join(hits, Seq("q_id"), "left")
-        .na.fill(0, Seq("n_approx", "n_hit"))
-        .localCheckpoint(eager = true)
-    } finally {
-      if (aOwned) a.unpersist(blocking = false)
-      if (eOwned) e.unpersist(blocking = false)
-    }
+    * EAGER ([[Materialize.eager]]): the result is a checkpoint, so a
+    * caller sweeping index variants does not accumulate cached inputs
+    * per call; an input the caller already persisted stays the
+    * caller's. NOTE: building this DataFrame eagerly executes both
+    * input pipelines. */
+  def recall(approx: DataFrame, exact: DataFrame): DataFrame = Materialize.eager { s =>
+    val a = s.persist(approx)
+    val e = s.persist(exact)
+    // no separate materializing counts (r18): the eager checkpoint is
+    // the single action that fills both caches — each input's blocks
+    // compute once on first touch (block-level locking serializes the
+    // 2-3 references), so the two extra driver-synchronized jobs
+    // bought nothing
+    val hits = a.join(e.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"), "left_semi")
+      .groupBy(col("q_id")).agg(count(lit(1)).cast("int").as("n_hit"))
+    val nApprox = a.groupBy(col("q_id")).agg(count(lit(1)).cast("int").as("n_approx"))
+    val nExact = e.groupBy(col("q_id")).agg(count(lit(1)).cast("int").as("n_exact"))
+    nExact.join(nApprox, Seq("q_id"), "left")
+      .join(hits, Seq("q_id"), "left")
+      .na.fill(0, Seq("n_approx", "n_hit"))
   }
 
   /** The recall/cost PARETO front across the index family, as ONE
@@ -873,30 +860,18 @@ object Ann {
     * ships is the geometry the front grades, its bands×-explode cost
     * visible as `n_scored`) and IVF at nprobe ∈ {1, 2, 4} — all
     * components with bit-exact SQL replays; each reuses the SAME
-    * brute ground-truth frame (persisted once HERE, caller-scoped —
-    * the ownership-aware [[recall]] leaves it alone).
-    * Eager like [[recall]] (builds counts); every per-method frame is
-    * query-set- or candidate-count-sized, never corpus-materialized,
-    * and everything but the checkpointed front releases in a
-    * `finally` before returning ([[Dedup.release]] frees the rest). */
+    * brute ground-truth frame (cached once HERE).
+    * Eager like [[recall]] ([[Materialize.eager]]); every per-method
+    * frame is query-set- or candidate-count-sized, never
+    * corpus-materialized, and only the checkpointed front outlives
+    * the call. */
   def paretoSweep(embeddings: DataFrame, nQueries: Int = 10, k: Int = 5,
-                  numPlanes: Int = 6, dim: Int = 64, nlist: Int = 16): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
+                  numPlanes: Int = 6, dim: Int = 64,
+                  nlist: Int = 16): DataFrame = Materialize.eager { s =>
     val sp = embeddings.sparkSession
     import sp.implicits._
-    // ground truth: referenced by the hit semi-join and its own count —
-    // persisted once, released in the finally (r17 lifecycle contract)
-    val exact = bruteTopK(embeddings, nQueries, k)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // r19 (advisor): the try starts IMMEDIATELY after the first persist
-    // — the eager actions below (corpus count, codebook collect,
-    // distinctEmbeddingCount) used to run outside it, so a failure
-    // there pinned the caches for the session (the leak class the
-    // dedupPareto comment prices at 36 GB). fused/cand are vars so the
-    // one finally releases whatever was registered before a failure.
-    var fused: DataFrame = null
-    var cand: DataFrame = null
-    try {
+    // ground truth: referenced by the hit semi-join and its own count
+    val exact = s.persist(bruteTopK(embeddings, nQueries, k))
     val nCorpus = embeddings.count()
     // one codebook collect, shared by every nprobe variant
     val centRows = embeddings.filter(col("vec_id") < nlist)
@@ -918,9 +893,8 @@ object Ann {
     // prices the whole curve at its largest arm.
     val (aBands, aPlanes) = Dedup.lshGeometry(Dedup.distinctEmbeddingCount(embeddings))
     val sweep = adaptiveBandSweep(aBands)
-    fused = lshBandedCandidatesWithBand(
-      embeddings, sweep.max, aPlanes, dim, nQueries)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val fused = s.persist(lshBandedCandidatesWithBand(
+      embeddings, sweep.max, aPlanes, dim, nQueries))
     // ONE plan for the whole front (r18 — the per-variant loop was 8
     // recall() rounds × (persist + two counts + an eager checkpoint),
     // ~35 driver-synchronized jobs whose fixed cost dominated the
@@ -937,46 +911,41 @@ object Ann {
     def tag(method: String, knob: Int, cand: DataFrame): DataFrame =
       cand.select(lit(method).as("method"), lit(knob).as("knob"),
         col("q_id"), col("n_id"), col("cos"))
-    cand = (
+    val cand = s.persist((
       tag("lsh", 0, lshCandidates(embeddings, numPlanes, dim, nQueries, probes = 0)) +:
       (sweep.map(b => tag("lsh_adaptive", b,
         fused.where(col("band") < b).select(col("q_id"), col("n_id"), col("cos")))) ++
        Seq(1, 2, 4).map(np =>
          tag("ivf", np, ivfCandidatesWith(embeddings, cids, cents, np, nQueries))))
-    ).reduce(_.unionAll(_)).persist(StorageLevel.MEMORY_AND_DISK)
-      val nExact = exact.count()
-      val scored = cand.groupBy(col("method"), col("knob"))
-        .agg(count(lit(1)).as("n_scored"))
-      val w = Window.partitionBy(col("method"), col("knob"), col("q_id"))
-        .orderBy(col("cos").desc, col("n_id"))
-      val topk = cand.withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= k)
-        .select(col("method"), col("knob"), col("q_id"), col("n_id"))
-      val hits = topk
-        .join(exact.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"), "left_semi")
-        .groupBy(col("method"), col("knob")).agg(count(lit(1)).as("n_hit"))
-      // literal variant axis: a variant with zero candidates must
-      // still emit its row (n_scored = n_hit = 0), exactly as the
-      // old per-variant aggregates did
-      val variants = (("lsh", 0) +: (sweep.map(("lsh_adaptive", _)) ++
-        Seq(1, 2, 4).map(("ivf", _)))).toDF("method", "knob")
-      val front = variants
-        .join(scored, Seq("method", "knob"), "left")
-        .join(hits, Seq("method", "knob"), "left")
-        .na.fill(0L, Seq("n_scored", "n_hit"))
-        .select(col("method"), col("knob"), lit(nExact).as("n_exact"),
-          col("n_hit"), col("n_scored"))
-      // brute is its own ground truth: hits = n_exact, cost = the
-      // full (query, other) scan — arithmetic, not another pipeline
-      val bruteRow = Seq(("brute", 0, nExact, nExact, (nCorpus - 1) * nQueries))
-        .toDF("method", "knob", "n_exact", "n_hit", "n_scored")
-      // only the front itself (one row per (method, knob)) survives
-      bruteRow.unionByName(front).localCheckpoint(eager = true)
-    } finally {
-      if (cand != null) cand.unpersist(blocking = false)
-      if (fused != null) fused.unpersist(blocking = false)
-      exact.unpersist(blocking = false)
-    }
+    ).reduce(_.unionAll(_)))
+    val nExact = exact.count()
+    val scored = cand.groupBy(col("method"), col("knob"))
+      .agg(count(lit(1)).as("n_scored"))
+    val w = Window.partitionBy(col("method"), col("knob"), col("q_id"))
+      .orderBy(col("cos").desc, col("n_id"))
+    val topk = cand.withColumn("rnk", row_number().over(w))
+      .where(col("rnk") <= k)
+      .select(col("method"), col("knob"), col("q_id"), col("n_id"))
+    val hits = topk
+      .join(exact.select(col("q_id"), col("n_id")), Seq("q_id", "n_id"), "left_semi")
+      .groupBy(col("method"), col("knob")).agg(count(lit(1)).as("n_hit"))
+    // literal variant axis: a variant with zero candidates must
+    // still emit its row (n_scored = n_hit = 0), exactly as the
+    // old per-variant aggregates did
+    val variants = (("lsh", 0) +: (sweep.map(("lsh_adaptive", _)) ++
+      Seq(1, 2, 4).map(("ivf", _)))).toDF("method", "knob")
+    val front = variants
+      .join(scored, Seq("method", "knob"), "left")
+      .join(hits, Seq("method", "knob"), "left")
+      .na.fill(0L, Seq("n_scored", "n_hit"))
+      .select(col("method"), col("knob"), lit(nExact).as("n_exact"),
+        col("n_hit"), col("n_scored"))
+    // brute is its own ground truth: hits = n_exact, cost = the
+    // full (query, other) scan — arithmetic, not another pipeline
+    val bruteRow = Seq(("brute", 0, nExact, nExact, (nCorpus - 1) * nQueries))
+      .toDF("method", "knob", "n_exact", "n_hit", "n_scored")
+    // only the front itself (one row per (method, knob)) survives
+    bruteRow.unionByName(front)
   }
 
   /** The band-count knobs [[paretoSweep]] grades for `lsh_adaptive`:

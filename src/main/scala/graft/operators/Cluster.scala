@@ -111,10 +111,10 @@ object Cluster {
     // parquet scans into memory/local-disk reads, and at trainPct=25
     // it is a quarter of the corpus instead of all of it.
     val projAll = embeddings.select(col("vec_id"), col("embedding"))
-    val proj = (if (trainPct >= 100) projAll
-                else projAll.where(Sampling.bucket(col("vec_id"), seed) < trainPct))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { s =>
+      val proj = s.persist(
+        if (trainPct >= 100) projAll
+        else projAll.where(Sampling.bucket(col("vec_id"), seed) < trainPct))
       // seeds from the FULL corpus (pushed-down point filter, one
       // cheap scan): the codebook's identity is independent of
       // trainPct, only the update statistics are sampled
@@ -143,7 +143,7 @@ object Cluster {
         cents = cids.map(c => updated.getOrElse(c, cents(cidIdx(c))))
       }
       (cids, cents)
-    } finally proj.unpersist(blocking = false)
+    }
   }
 
   /** Driver-side SUPER-CELL index over a flat codebook — the

@@ -35,14 +35,9 @@ import graft.functions.{Hashing, TextFunctions}
   * row ([[graft.functions.Hashing]]); no driver-side loops, no forced
   * broadcasts of corpus-sized relations anywhere.
   *
-  * Cache lifetime: operators that return a frame derived from a
-  * persisted intermediate (the shingle/signature projections) leave
-  * that intermediate cached — unpersisting before the caller
-  * materializes would recompute it per downstream action. The blocks
-  * are LRU-evictable; a caller running many dedup queries in one
-  * session can `spark.catalog.clearCache()` between them. Operators
-  * that fully materialize internally ([[connectedComponents]],
-  * [[Graph.pageRank]]) unpersist their own scratch frames.
+  * Operators that return a lazy frame over a persisted intermediate
+  * leave it cached for the caller to release (`catalog.clearCache()`);
+  * the eager ones scope their caches through [[Materialize]].
   */
 object Dedup {
 
@@ -72,15 +67,17 @@ object Dedup {
     * persisted projection (see [[verifyJaccard]] for why the strategy
     * is pinned rather than left to AQE). */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val (t, cand) = jaccardBlocked(docs)
+    val (t, cand) = jaccardBlocked(docs, _.persist())
     verifyJaccard(t, cand, threshold)
   }
 
   /** The blocked candidate generation behind [[jaccardPairs]]:
-    * (persisted shingle projection `t`, candidate id pairs) — exposed
-    * so [[dedupPareto]] can report the baseline's candidate count
-    * without replicating the blocking. */
-  private[graft] def jaccardBlocked(docs: DataFrame): (DataFrame, DataFrame) = {
+    * (shingle projection `t`, kept through `persist`, candidate id
+    * pairs) — exposed so [[dedupPareto]] can report the baseline's
+    * candidate count without replicating the blocking, with `t` in its
+    * own scope. */
+  private[graft] def jaccardBlocked(docs: DataFrame,
+      persist: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     // Shingle sets are hashed to SORTED long arrays once per doc:
     // string compares / hash-set probes disappear from the per-pair
     // hot loop, and each pair costs one O(n) merge
@@ -91,13 +88,12 @@ object Dedup {
     // then carries (doc_id, bucket, hashed-shingle array) — never raw
     // text (caught by the plan audit; the hash arrays are the compact
     // payload the verify join needs anyway)
-    val t = docs
+    val t = persist(docs
       .select(
         col("doc_id"),
         expr("n_chars div 100").as("bucket"),
         Hashing.hashedShingles3Col(TextFunctions.tokens(col("text"))).as("sh"))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .persist()
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id")))
     val a = t.select(col("doc_id").as("a_id"), col("bucket").as("a_bucket"))
     val b = t.select(col("doc_id").as("b_id"),
       explode(array(col("bucket") - 1, col("bucket"), col("bucket") + 1)).as("a_bucket"))
@@ -465,17 +461,13 @@ object Dedup {
                   bandsList: Seq[Int] = Seq(8, 16, 32)): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (t, cand0) = jaccardBlocked(docs)
-    // persist the candidate frame across its two consumers (the cost
-    // count and the verify) — same shape as Ann.paretoSweep.approxRow;
-    // pair-id rows are 16 B, so the cache is pair-count-sized.
-    // unpersist in a finally: a failed count (the r16 32×-sweep disk
-    // exhaustion) must not pin pair-count-sized blocks for the rest
-    // of the process — the leak cost a later sweep 36 GB of disk
-    val cand = cand0.persist()
-    val (nCandExact, nExact) =
-      try (cand.count(), verifyJaccard(t, cand, threshold).count())
-      finally { cand.unpersist(); t.unpersist() }
+    val (nCandExact, nExact) = Materialize.scoped { s =>
+      val (t, cand0) = jaccardBlocked(docs, s.persist)
+      // the candidate frame feeds two consumers (the cost count and the
+      // verify); pair-id rows are 16 B, so the cache is pair-count-sized
+      val cand = s.persist(cand0)
+      (cand.count(), verifyJaccard(t, cand, threshold).count())
+    }
     val rows = ("exact", 0, nExact, nExact, nCandExact) +:
       minhashSweep(docs, numHashes, bandsList, threshold).map { case (b, c, f) =>
         ("minhash_lsh", b, nExact, f, c)
@@ -497,31 +489,22 @@ object Dedup {
     * Σn_dup/2) per arm. */
   private def minhashSweep(docs: DataFrame, numHashes: Int,
                            bandsList: Seq[Int],
-                           threshold: Double): Seq[(Int, Long, Long)] = {
-    val withKey = docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        Hashing.hashedShingles3Col(TextFunctions.tokens(col("text"))).as("sh"))
-      .withColumn("gk", xxhash64(col("sh")))
-      .withColumn("gk2", xxhash64(lit(1L), col("sh")))
-      .persist()
-    // r19 (advisor): the try starts IMMEDIATELY after the first
-    // persist — attachStrategy's eager measurement probe used to run
-    // outside it, so a failure there pinned withKey/groups for the
-    // session. groups/bhs are vars so the one finally releases
-    // whatever was registered before a failure.
-    var groups: DataFrame = null
-    var bhs: Seq[DataFrame] = Nil
-    try {
+                           threshold: Double): Seq[(Int, Long, Long)] =
+    Materialize.scoped { s =>
+      val withKey = s.persist(docs
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"),
+          Hashing.hashedShingles3Col(TextFunctions.tokens(col("text"))).as("sh"))
+        .withColumn("gk", xxhash64(col("sh")))
+        .withColumn("gk2", xxhash64(lit(1L), col("sh"))))
       // collapsed groups carry the FULL minhash signature once; each
       // arm only re-splits it into its own band hashes
-      groups = withKey
+      val groups = s.persist(withKey
         .groupBy(col("gk"), col("gk2"))
         .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"),
           min_by(col("sh"), col("doc_id")).as("sh"))
         .withColumn("grp_ok", (size(col("sh")) > 0).cast("int"))
-        .withColumn("sig", Hashing.minhash(col("sh"), numHashes))
-        .persist()
+        .withColumn("sig", Hashing.minhash(col("sh"), numHashes)))
       val members = withKey.select(col("doc_id"), col("gk"), col("gk2"))
         .join(groups.select(col("gk"), col("gk2"), col("gid"), col("m"), col("grp_ok")),
           Seq("gk", "gk2"))
@@ -529,14 +512,11 @@ object Dedup {
       // one measured attach decision for every arm (the strategy is a
       // property of the group projection, not of the band count)
       val strat = attachStrategy(shProj, col("sh"))
-      // each arm joins bhs as soon as it is persisted, so a throw while
-      // building a later arm still leaves the earlier ones to the finally
-      bandsList.foreach { b =>
-        bhs :+= groups.filter(col("grp_ok") === 1)
+      val bhs = bandsList.map { b =>
+        s.persist(groups.filter(col("grp_ok") === 1)
           .select(col("gid"),
             posexplode(Hashing.bandHashes(col("sig"), b, numHashes / b))
-              .as(Seq("band", "bh")))
-          .persist()
+              .as(Seq("band", "bh"))))
       }
       val perArm = bandsList.zip(bhs).map { case (b, bh) =>
         val candG = bh.as("a")
@@ -561,15 +541,7 @@ object Dedup {
       }
       perArm.reduce(_.unionAll(_)).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    } finally {
-      // blocking: the arms are collected (or failed) by now, so no lazy
-      // plan reads these caches; a non-blocking release after a failed
-      // arm could leave the groups RDD registered
-      bhs.foreach(_.unpersist(blocking = true))
-      if (groups != null) groups.unpersist(blocking = true)
-      withKey.unpersist(blocking = true)
     }
-  }
 
   /** SimHash near-dup summary per document (hamming ≤ `maxHamming`):
     * (doc_id, sh64, n_cand, n_dup, keep).
@@ -877,16 +849,16 @@ object Dedup {
   def embeddingPairsLsh(embeddings: DataFrame, threshold: Double,
                         bands: Int = 8, planesPerBand: Int = 6,
                         dim: Int = 64): DataFrame =
-    embeddingPairsLshPlan(embeddings, threshold, bands, planesPerBand, dim)._1
+    embeddingPairsLshPlan(_.persist(), embeddings, threshold, bands, planesPerBand, dim)
 
-  /** The plan behind [[embeddingPairsLsh]] plus its persisted
-    * intermediates, for callers that must scope the caches
-    * ([[semanticPairsCapped]]'s per-cell fallback) — the graded lazy
-    * path above is unchanged. */
-  private[graft] def embeddingPairsLshPlan(
+  /** The plan behind [[embeddingPairsLsh]], its intermediates kept
+    * through `persist`: plain `persist()` for the lazy operator above,
+    * a [[Materialize.Scope]] for [[semanticPairsCapped]]'s per-cell
+    * fallback, which scopes the caches. */
+  private[graft] def embeddingPairsLshPlan(persist: DataFrame => DataFrame,
       embeddings: DataFrame, threshold: Double,
       bands: Int = 8, planesPerBand: Int = 6,
-      dim: Int = 64): (DataFrame, Seq[DataFrame]) = {
+      dim: Int = 64): DataFrame = {
     import graft.functions.VectorFunctions.{cosine, dot}
     // Collapse exact-duplicate embeddings FIRST (two independent 64-bit
     // hashes of the float array, same argument as minhashLsh's group
@@ -896,21 +868,18 @@ object Dedup {
     // quadratic in k. The final pair set is reconstituted exactly from
     // group members (identical embeddings ⇒ identical buckets and
     // cosines), so the result — and the DuckDB oracle — is unchanged.
-    val keyed = embeddings
+    // persisted: feeds both the collapse and the member attach —
+    // uncached, the embedding scan + double hash runs once per use
+    val keyed = persist(embeddings
       .withColumn("gk", xxhash64(col("embedding")))
-      .withColumn("gk2", xxhash64(lit(1L), col("embedding")))
-      // persisted: feeds both the collapse and the member attach —
-      // uncached, the embedding scan + double hash runs once per use
-      .persist()
-    val groups = keyed
+      .withColumn("gk2", xxhash64(lit(1L), col("embedding"))))
+    val groups = persist(keyed
       .groupBy(col("gk"), col("gk2"))
       .agg(min(col("vec_id")).as("gid"),
-        min_by(col("embedding"), col("vec_id")).as("embedding"))
-      .persist()
-    val members = keyed.select(col("vec_id"), col("gk"), col("gk2"))
+        min_by(col("embedding"), col("vec_id")).as("embedding")))
+    val members = persist(keyed.select(col("vec_id"), col("gk"), col("gk2"))
       .join(groups.select(col("gk"), col("gk2"), col("gid")), Seq("gk", "gk2"))
-      .select(col("vec_id"), col("gid"))
-      .persist()
+      .select(col("vec_id"), col("gid")))
 
     val planes = Ann.hyperplanes(bands * planesPerBand, dim)
     // signatures come from the FUSED plan-constant kernel (one flat
@@ -918,11 +887,11 @@ object Dedup {
     // when(dot > 0) HOF form is bit-identical but allocates per
     // element, and at the adaptive geometry's 300+ planes it dominated
     // the operator at 32× scale (78 s → the verify floor)
-    val base = groups
+    // scanned by the band explode and both verify attaches
+    val base = persist(groups
       .select(col("gid"), col("embedding"),
         graft.functions.VectorFunctions.signBuckets(
-          col("embedding"), planes, bands, planesPerBand).as("bks"))
-      .persist() // scanned by the band explode and both verify attaches
+          col("embedding"), planes, bands, planesPerBand).as("bks")))
     val bb = base.select(col("gid"), col("bks"),
       posexplode(col("bks")).as(Seq("band", "bk")))
     // SHUFFLE_HASH pinned (r18): left to estimates, Catalyst either
@@ -987,7 +956,7 @@ object Dedup {
       .join(members.select(col("gid").as("b_gid"), col("vec_id").as("y"))
         .hint("SHUFFLE_HASH"), Seq("b_gid"))
       .select(least(col("x"), col("y")).as("a_id"), greatest(col("x"), col("y")).as("b_id"))
-    (intra.unionAll(inter), Seq(keyed, groups, members, base))
+    intra.unionAll(inter)
   }
 
   /** Incremental exact dedup — the DAILY-CRAWL shape: a new batch
@@ -1049,56 +1018,35 @@ object Dedup {
     * arrays attach to candidate rows only, one final member fan-out.
     * Empty-shingle docs are never banded: no candidates, kept.
     *
-    * EAGER, cache-scoped: unlike the batch pair miners (whose persists
-    * follow the documented caller-clears-cache convention), this
-    * operator materializes its batch-doc-sized result via
-    * `localCheckpoint` and releases the corpus-sized shingle/group
-    * caches before returning — a library caller looping daily
-    * increments must not accumulate pinned shingle frames. Same
-    * fault-tolerance trade as [[connectedComponents]]'s label
-    * checkpoints: swap reliable `checkpoint()` in for cluster runs
-    * where re-running the operator on executor loss is unacceptable. */
+    * EAGER ([[Materialize.eager]]): the batch-doc-sized result is a
+    * checkpoint, so a caller looping daily increments does not
+    * accumulate the corpus-sized shingle/group caches. */
   def incrementalNearDup(docs: DataFrame, cutoff: Long, numHashes: Int = 128,
-                         bands: Int = 16, threshold: Double = 0.5): DataFrame = {
-    val (out, cached) = incrementalNearDupPlan(docs, cutoff, numHashes, bands, threshold)
-    try out.localCheckpoint(eager = true)
-    finally cached.foreach(_.unpersist(blocking = false))
-  }
+                         bands: Int = 16, threshold: Double = 0.5): DataFrame =
+    Materialize.eager(s => incrementalNearDupPlan(s, docs, cutoff, numHashes, bands, threshold))
 
-  /** Release a frame [[incrementalNearDup]] returned. The result is a
-    * (local)checkpoint scan, and `Dataset.unpersist` cannot free those
-    * blocks (it only clears CacheManager entries) — a caller looping
-    * daily increments would otherwise pin one batch-sized block set
-    * per call until the ContextCleaner happens to GC it. No-op for any
-    * other plan shape, so generic harnesses may call it on every
-    * result. */
-  def release(df: DataFrame, blocking: Boolean = false): Unit =
-    org.apache.spark.sql.graftbridge.RddBridge.unpersistCheckpoint(df, blocking)
-
-  /** The lazy plan behind [[incrementalNearDup]] plus its persisted
-    * intermediates — exposed so plan audits can inspect the real
-    * compute shape (the public method returns a checkpoint scan). */
-  private[graft] def incrementalNearDupPlan(
+  /** The lazy plan behind [[incrementalNearDup]], its caches in `s` —
+    * exposed so plan audits can inspect the real compute shape (the
+    * public method returns a checkpoint scan). */
+  private[graft] def incrementalNearDupPlan(s: Materialize.Scope,
       docs: DataFrame, cutoff: Long, numHashes: Int = 128,
-      bands: Int = 16, threshold: Double = 0.5): (DataFrame, Seq[DataFrame]) = {
+      bands: Int = 16, threshold: Double = 0.5): DataFrame = {
     val rows = numHashes / bands
     // persisted: the frame feeds BOTH the collapse and the final
     // member fan-out — without the cache the corpus would be scanned,
     // fanned out (a text-carrying exchange) and re-shingled twice
     // (plan-audited: exactly one text shuffle in the whole query)
-    val withKey = docs
+    val withKey = s.persist(docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), (col("doc_id") >= cutoff).as("side"),
         Hashing.hashedShingles3Col(TextFunctions.tokens(col("text"))).as("sh"))
       .withColumn("gk", xxhash64(col("sh")))
-      .withColumn("gk2", xxhash64(lit(1L), col("sh")))
-      .persist()
-    val groups = withKey
+      .withColumn("gk2", xxhash64(lit(1L), col("sh"))))
+    val groups = s.persist(withKey
       .groupBy(col("side"), col("gk"), col("gk2"))
       .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"),
         min_by(col("sh"), col("doc_id")).as("sh"))
-      .withColumn("grp_ok", (size(col("sh")) > 0).cast("int"))
-      .persist()
+      .withColumn("grp_ok", (size(col("sh")) > 0).cast("int")))
     val bh = groups
       .filter(col("grp_ok") === 1)
       .withColumn("sig", Hashing.minhash(col("sh"), numHashes))
@@ -1122,14 +1070,13 @@ object Dedup {
         col("i").cast("double") / (size(col("b_sh")) + size(col("s_sh")) - col("i")))
       .filter(col("j") >= threshold)
       .groupBy(col("b_gid")).agg(sum(col("s_m")).as("n_dup"))
-    val out = withKey.filter(col("side")).select(col("doc_id"), col("gk"), col("gk2"))
+    withKey.filter(col("side")).select(col("doc_id"), col("gk"), col("gk2"))
       .join(groups.filter(col("side")).select(col("gk"), col("gk2"), col("gid")),
         Seq("gk", "gk2"))
       .join(perGroup.withColumnRenamed("b_gid", "gid"), Seq("gid"), "left")
       .select(col("doc_id"),
         coalesce(col("n_dup"), lit(0L)).as("n_dup_snap"),
         (coalesce(col("n_dup"), lit(0L)) === 0).cast("int").as("keep"))
-    (out, Seq(withKey, groups))
   }
 
   /** Semantic near-dup pairs, SemDeDup-style (Abbas et al., 2023,
@@ -1306,13 +1253,11 @@ object Dedup {
                           clusterCap: Long = Long.MaxValue,
                           dim: Int = 64): DataFrame = {
     import graft.functions.VectorFunctions.nearestCentroids
-    import org.apache.spark.storage.StorageLevel
     val (cids, cents) = Cluster.kmeansCentroids(embeddings, k, iters, trainPct)
-    val assigned = embeddings.select(
-      element_at(nearestCentroids(col("embedding"), cents, cids, 1), 1).as("cid"),
-      col("vec_id"), col("embedding"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Materialize.scoped { s =>
+      val assigned = s.persist(embeddings.select(
+        element_at(nearestCentroids(col("embedding"), cents, cids, 1), 1).as("cid"),
+        col("vec_id"), col("embedding")))
       val sizes = assigned.groupBy(col("cid"))
         .agg(count(lit(1)).as("n")).collect() // ≤ k rows
       val bigCids = sizes.filter(_.getLong(1) > clusterCap).map(_.getLong(0))
@@ -1354,24 +1299,20 @@ object Dedup {
       // — 35 → 166 s with the gate already routing right; an
       // output-bound result must not materialize twice)
       if (diffuseBig.isEmpty) smallPairs
-      else {
-        // per-diffuse-cell banding, caches scoped per cell: each
-        // cell's pairs checkpoint eagerly (diffuse ⇒ near-empty),
-        // the banding intermediates release immediately, and the
-        // per-cell checkpoints free after the final union
-        // materializes
+      // per-diffuse-cell banding: each cell's pairs checkpoint
+      // eagerly (diffuse ⇒ near-empty) while its banding caches are
+      // live, and the cell checkpoints free once the union has
+      // materialized
+      else Materialize.eager { u =>
         val cellChk = diffuseBig.toSeq.map { c =>
           val cell = cellOf(c)
           val (b, r) = lshGeometry(distinctEmbeddingCount(cell))
-          val (df, cached) = embeddingPairsLshPlan(cell, threshold, b, r, dim)
-          try df.localCheckpoint(eager = true)
-          finally cached.foreach(_.unpersist(blocking = false))
+          Materialize.scoped(t =>
+            u.checkpoint(embeddingPairsLshPlan(t.persist, cell, threshold, b, r, dim)))
         }
-        try (smallPairs +: cellChk).reduce(_.unionAll(_))
-          .localCheckpoint(eager = true)
-        finally cellChk.foreach(release(_))
+        (smallPairs +: cellChk).reduce(_.unionAll(_))
       }
-    } finally assigned.unpersist(blocking = false)
+    }
   }
 
   /** [[semanticPairs]] hardened for scale on BOTH axes the r16 32×
@@ -1400,15 +1341,10 @@ object Dedup {
     * the full-table self-join directly, the lshGeometry replay
     * playbook), so the row hash-matches at any corpus size.
     *
-    * EAGER, cache-scoped like [[incrementalNearDup]] (the r16
-    * dedupPareto lesson applied the round after it was learned): the
-    * three persisted frames (`keyed`/`groups`/`members`) feed both
-    * the collapse and the member fan-out, but a production caller
-    * looping the daily-ingest shape must not accumulate pinned
-    * corpus-sized frames across calls — so the result materializes
-    * via `localCheckpoint` and the caches release in a `finally`
-    * before returning. [[release]] frees the result's checkpoint
-    * blocks. Plan audits use [[semanticPairsScaledPlan]].
+    * EAGER like [[incrementalNearDup]] ([[Materialize.eager]]): the
+    * three cached frames (`keyed`/`groups`/`members`) feed both the
+    * collapse and the member fan-out and are released before the call
+    * returns its checkpoint.
     *
     * `clusterCap` (default OFF): arm the Σ(mode size²) escape hatch —
     * representative cells past the cap verify through scoped banding
@@ -1416,34 +1352,18 @@ object Dedup {
     * query and its oracle run uncapped. */
   def semanticPairsScaled(embeddings: DataFrame, threshold: Double,
                           iters: Int = 2, trainPct: Int = 100,
-                          clusterCap: Long = Long.MaxValue): DataFrame = {
-    val (out, cached) = semanticPairsScaledPlan(embeddings, threshold, iters,
-      trainPct, clusterCap)
-    try out.localCheckpoint(eager = true)
-    finally cached.foreach(_.unpersist(blocking = false))
-  }
-
-  /** The lazy plan behind [[semanticPairsScaled]] plus its persisted
-    * intermediates — exposed so plan audits can inspect the real
-    * compute shape (the public method returns a checkpoint scan). */
-  private[graft] def semanticPairsScaledPlan(
-      embeddings: DataFrame, threshold: Double,
-      iters: Int = 2, trainPct: Int = 100,
-      clusterCap: Long = Long.MaxValue): (DataFrame, Seq[DataFrame]) = {
+                          clusterCap: Long = Long.MaxValue): DataFrame = Materialize.eager { s =>
     import graft.functions.VectorFunctions.cosine
-    val keyed = embeddings
+    val keyed = s.persist(embeddings
       .withColumn("gk", xxhash64(col("embedding")))
-      .withColumn("gk2", xxhash64(lit(1L), col("embedding")))
-      .persist()
-    val groups = keyed
+      .withColumn("gk2", xxhash64(lit(1L), col("embedding"))))
+    val groups = s.persist(keyed
       .groupBy(col("gk"), col("gk2"))
       .agg(min(col("vec_id")).as("gid"),
-        min_by(col("embedding"), col("vec_id")).as("embedding"))
-      .persist()
-    val members = keyed.select(col("vec_id"), col("gk"), col("gk2"))
+        min_by(col("embedding"), col("vec_id")).as("embedding")))
+    val members = s.persist(keyed.select(col("vec_id"), col("gk"), col("gk2"))
       .join(groups.select(col("gk"), col("gk2"), col("gid")), Seq("gk", "gk2"))
-      .select(col("vec_id"), col("gid"))
-      .persist()
+      .select(col("vec_id"), col("gid")))
     // the collapse count IS the geometry input (one job; the same
     // two-hash distinct a separate distinctEmbeddingCount would run)
     val k = Cluster.semanticK(groups.count())
@@ -1474,7 +1394,7 @@ object Dedup {
       .join(members.select(col("gid").as("b_gid"), col("vec_id").as("y"))
         .hint("SHUFFLE_HASH"), Seq("b_gid"))
       .select(least(col("x"), col("y")).as("a_id"), greatest(col("x"), col("y")).as("b_id"))
-    (intra.unionAll(inter), Seq(keyed, groups, members))
+    intra.unionAll(inter)
   }
 
   /** Keeper selection per duplicate component: given `comps` from
@@ -1531,82 +1451,88 @@ object Dedup {
     * driver; a label frame is node-sized, so here the lineage must be
     * cut instead). On a fault-tolerance-critical cluster run, swap in
     * reliable `checkpoint()` against a checkpoint dir — same
-    * truncation, durable blocks instead of executor-local ones. */
+    * truncation, durable blocks instead of executor-local ones.
+    *
+    * The rounds run in one [[Materialize.eager]] scope: each round
+    * frees the one before it, and only the final round's checkpoint,
+    * which the returned frame reads, outlives the call. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIters: Int = 50): DataFrame = {
-    // the caller's edge pipeline is typically pair MINING (shingle →
-    // band → verify — the dominant cost); the symmetrization union
-    // references it twice, so materialize it once and let both union
-    // branches read the cache. Eager count: two un-materialized scans
-    // of one cached frame inside a single job would each compute.
-    val e0 = edges.select(col("a"), col("b")).persist()
-    e0.count()
-    // pre-partitioned by the per-round join key (r18): every round
-    // joins sym on `v`, and each round is its own action (the
-    // checkpoint), so exchange reuse never applies across rounds —
-    // without this the edge frame re-shuffles O(rounds) times; the
-    // cached InMemoryTableScan reports hashpartitioning(v), so
-    // EnsureRequirements drops the sym-side exchange in every round
-    val sym = e0.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(e0.select(col("b").as("u"), col("a").as("v")))
-      .distinct().repartition(col("v")).persist()
-    // only edge ENDPOINTS iterate: in a dedup setting almost every doc
-    // is isolated (no pair touches it), its label can never change,
-    // and carrying it through O(log d) rounds of joins would make each
-    // round corpus-sized instead of dup-graph-sized. Isolated nodes
-    // re-enter as singleton components after the loop (anti-join).
-    var labels = sym.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
-    // each round's checkpoint supersedes the previous one — release it
-    // as soon as the new round is materialized, or a long convergence
-    // accumulates O(rounds) node-sized pinned frames (only the LAST
-    // checkpoint, which the returned frame reads, outlives the call).
-    // Dataset.unpersist can't free a checkpoint (no CacheManager
-    // entry) — RddBridge unpersists the underlying block-backed RDD.
-    var prevCp: DataFrame = labels
-    e0.unpersist() // sym is materialized by the checkpoint above
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      val nbrMin = sym
-        .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
-        .groupBy(col("u").as("node")).agg(min(col("label")).as("nbl"))
-      // persisted (r18): the pointer jump references prop TWICE (the
-      // propagated labels and the label→label lookup), and Spark has
-      // no common-subexpression reuse above exchanges — uncached, the
-      // neighbor-min join+aggregate ran once per reference every
-      // round. The cache fills during the checkpoint action (no extra
-      // job) and releases as soon as the round materializes.
-      val prop = labels.join(nbrMin, Seq("node"), "left")
-        .select(col("node"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbl"), col("label"))).as("label"))
-        .persist()
-      // pointer jump: follow the label one hop (labels are node ids by
-      // construction — min over node ids — so the lookup always lands).
-      // The old label rides along so convergence is read off the
-      // checkpointed frame itself — no extra join against the previous
-      // round's labels.
-      val jumped = prop
-        .join(prop.select(col("node").as("label"), col("label").as("ll")),
-          Seq("label"), "left")
-        .select(col("node"), col("old"), coalesce(col("ll"), col("label")).as("label"))
-        .withColumn("chg", col("label") =!= col("old"))
-        .localCheckpoint()
-      prop.unpersist(blocking = false)
-      val changed = jumped.where(col("chg")).limit(1).count()
-      // jumped is materialized (eager checkpoint) — the previous
-      // round's blocks are no longer referenced
-      org.apache.spark.sql.graftbridge.RddBridge.unpersistCheckpoint(prevCp)
-      prevCp = jumped
-      labels = jumped.select(col("node"), col("label"))
-      converged = changed == 0
-      i += 1
+                          maxIters: Int = 50): DataFrame =
+    withSingletons(nodes, labelRounds(edges, maxIters))
+
+  /** The label rounds of [[connectedComponents]]: the final round's
+    * checkpoint (node, old, label, chg). */
+  private def labelRounds(edges: DataFrame, maxIters: Int = 50): DataFrame =
+    Materialize.eager { s =>
+      // the caller's edge pipeline is typically pair MINING (shingle →
+      // band → verify — the dominant cost); the symmetrization union
+      // references it twice, so materialize it once and let both union
+      // branches read the cache. Eager count: two un-materialized scans
+      // of one cached frame inside a single job would each compute.
+      val e0 = s.persist(edges.select(col("a"), col("b")))
+      e0.count()
+      // pre-partitioned by the per-round join key (r18): every round
+      // joins sym on `v`, and each round is its own action (the
+      // checkpoint), so exchange reuse never applies across rounds —
+      // without this the edge frame re-shuffles O(rounds) times; the
+      // cached InMemoryTableScan reports hashpartitioning(v), so
+      // EnsureRequirements drops the sym-side exchange in every round
+      val sym = s.persist(e0.select(col("a").as("u"), col("b").as("v"))
+        .unionAll(e0.select(col("b").as("u"), col("a").as("v")))
+        .distinct().repartition(col("v")))
+      // only edge ENDPOINTS iterate: in a dedup setting almost every doc
+      // is isolated (no pair touches it), its label can never change,
+      // and carrying it through O(log d) rounds of joins would make each
+      // round corpus-sized instead of dup-graph-sized. Isolated nodes
+      // re-enter as singleton components after the loop (anti-join).
+      var labels = s.checkpoint(sym.select(col("u").as("node")).distinct()
+        .withColumn("label", col("node")))
+      var prevCp = labels
+      s.free(e0) // sym is materialized by the checkpoint above
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIters) {
+        val nbrMin = sym
+          .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
+          .groupBy(col("u").as("node")).agg(min(col("label")).as("nbl"))
+        // persisted (r18): the pointer jump references prop TWICE (the
+        // propagated labels and the label→label lookup), and Spark has
+        // no common-subexpression reuse above exchanges — uncached, the
+        // neighbor-min join+aggregate ran once per reference every
+        // round. The cache fills during the checkpoint action (no extra
+        // job) and is freed as soon as the round materializes.
+        val prop = s.persist(labels.join(nbrMin, Seq("node"), "left")
+          .select(col("node"), col("label").as("old"),
+            least(col("label"), coalesce(col("nbl"), col("label"))).as("label")))
+        // pointer jump: follow the label one hop (labels are node ids by
+        // construction — min over node ids — so the lookup always lands).
+        // The old label rides along so convergence is read off the
+        // checkpointed frame itself — no extra join against the previous
+        // round's labels.
+        val jumped = s.checkpoint(prop
+          .join(prop.select(col("node").as("label"), col("label").as("ll")),
+            Seq("label"), "left")
+          .select(col("node"), col("old"), coalesce(col("ll"), col("label")).as("label"))
+          .withColumn("chg", col("label") =!= col("old")))
+        s.free(prop)
+        val changed = jumped.where(col("chg")).limit(1).count()
+        s.free(prevCp)
+        prevCp = jumped
+        labels = jumped.select(col("node"), col("label"))
+        converged = changed == 0
+        i += 1
+      }
+      require(converged,
+        s"connectedComponents did not converge in $maxIters rounds — " +
+          "with pointer jumping that needs a component diameter over " +
+          s"~2^$maxIters; raise maxIters if the graph is genuinely that deep")
+      prevCp
     }
-    sym.unpersist()
-    require(converged,
-      s"connectedComponents did not converge in $maxIters rounds — " +
-        "with pointer jumping that needs a component diameter over " +
-        s"~2^$maxIters; raise maxIters if the graph is genuinely that deep")
+
+  /** (node, comp) for every requested node: the final round's labels,
+    * plus each node no edge touches as its own component. */
+  private def withSingletons(nodes: DataFrame, rounds: DataFrame): DataFrame = {
+    val labels = rounds.select(col("node"), col("label"))
     val allNodes = nodes.select(col("node")).distinct()
     val singletons = allNodes
       .join(labels.select(col("node")), Seq("node"), "left_anti")
@@ -1621,13 +1547,12 @@ object Dedup {
     * harness runs several graded queries over the SAME closure
     * (components, keepers, cluster histogram), and pair mining is the
     * dominant cost of each — re-running it per query pays the
-    * mining+closure bill three times for one answer. The memoized
-    * frame is backed by [[connectedComponents]]'s final label
-    * checkpoint (node-sized blocks, dup-graph-sized cardinality), so
-    * reuse never re-mines; `spark.catalog.clearCache()` between
-    * queries cannot free checkpoint blocks, and [[release]] no-ops on
-    * the projected plans callers see. Results are deterministic, so
-    * reuse is observationally transparent. */
+    * mining+closure bill three times for one answer. The memo holds
+    * [[connectedComponents]]'s final label checkpoint (node-sized
+    * blocks, dup-graph-sized cardinality), so reuse never re-mines;
+    * `spark.catalog.clearCache()` between queries cannot free it.
+    * Results are deterministic, so reuse is observationally
+    * transparent. */
   private val ccMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
@@ -1637,31 +1562,27 @@ object Dedup {
   def lshComponentsCached(docs: DataFrame, cacheKey: String,
                           numHashes: Int = 128, bands: Int = 16,
                           threshold: Double = 0.5): DataFrame =
-    ccMemo.computeIfAbsent(s"lsh|$cacheKey|$numHashes|$bands|$threshold", _ =>
-      connectedComponents(
-        docs.select(col("doc_id").as("node")),
-        minhashLshPairs(docs, numHashes, bands, threshold)
-          .select(col("a_id").as("a"), col("b_id").as("b"))))
+    withSingletons(docs.select(col("doc_id").as("node")),
+      ccMemo.computeIfAbsent(s"lsh|$cacheKey|$numHashes|$bands|$threshold", _ =>
+        labelRounds(minhashLshPairs(docs, numHashes, bands, threshold)
+          .select(col("a_id").as("a"), col("b_id").as("b")))))
 
   /** Components over the verified all-pairs jaccard set, memoized per
     * corpus key (the `dedup_cc` / `dedup_cc_keep` shared stage). */
   def jaccardComponentsCached(docs: DataFrame, cacheKey: String,
                               threshold: Double = 0.5): DataFrame =
-    ccMemo.computeIfAbsent(s"jac|$cacheKey|$threshold", _ =>
-      connectedComponents(
-        docs.select(col("doc_id").as("node")),
-        jaccardPairs(docs, threshold)
-          .select(col("a_id").as("a"), col("b_id").as("b"))))
+    withSingletons(docs.select(col("doc_id").as("node")),
+      ccMemo.computeIfAbsent(s"jac|$cacheKey|$threshold", _ =>
+        labelRounds(jaccardPairs(docs, threshold)
+          .select(col("a_id").as("a"), col("b_id").as("b")))))
 
-  /** Drop the closure memo AND free its checkpoint blocks (they sit
-    * below projections, so the per-result [[release]] can't see
-    * them). Call between corpora in one process — a multi-factor
-    * scale sweep would otherwise pin two node-sized closures PER
-    * FACTOR until JVM exit. Unsafe while any consumer of a memoized
-    * closure is still pending (truncated lineage can't recompute). */
+  /** Drop the closure memo AND free its checkpoints. Call between
+    * corpora in one process — a multi-factor scale sweep would
+    * otherwise pin two node-sized closures PER FACTOR until JVM exit.
+    * Unsafe while any consumer of a memoized closure is still pending
+    * (truncated lineage can't recompute). */
   def clearComponentsMemo(blocking: Boolean = false): Unit = {
-    ccMemo.values().forEach(df =>
-      org.apache.spark.sql.graftbridge.RddBridge.unpersistAllCheckpoints(df, blocking))
+    ccMemo.values().forEach(Materialize.release(_, blocking))
     ccMemo.clear()
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Link-analysis operators (SURVEY §2 D32).
   *
@@ -44,11 +43,11 @@ object Graph {
     * chain linearly (each referenced once), so no lineage truncation
     * is needed (contrast [[Dedup.connectedComponents]], whose jump
     * step references its frame twice and must checkpoint). The final
-    * ranks are eagerly localCheckpoint-ed so the edge cache can be
-    * unpersisted HERE — otherwise every pageRank call would leak its
-    * cached edge blocks for the life of the session. */
+    * ranks are node-sized, so materializing them here
+    * ([[Materialize.eager]]) is what the caller's first action would
+    * do anyway, and it frees the edge cache before the call returns. */
   def pageRank(edges: DataFrame, nodes: DataFrame, iters: Int,
-               initRank: Long = 1000000000L): DataFrame = {
+               initRank: Long = 1000000000L): DataFrame = Materialize.eager { s =>
     require(iters >= 1, "pageRank: iters >= 1")
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // pre-partitioned by the per-iteration join key (r18): ranks
@@ -58,10 +57,9 @@ object Graph {
     // rank-side differs per iteration and AQE replans each stage);
     // hashpartitioning(src) on the cached frame lets every iteration
     // skip the edge-side exchange outright
-    val linked = edges.join(outdeg, "src")
+    val linked = s.persist(edges.join(outdeg, "src")
       .select(col("src"), col("dst"), col("deg"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
     val base = initRank * 15L / 100L
     var ranks = nodes.select(col("node"), lit(initRank).as("rank"))
     for (_ <- 1 to iters) {
@@ -73,10 +71,6 @@ object Graph {
         .select(col("node"),
           (lit(base) + expr("(85 * coalesce(sc, 0L)) div 100")).as("rank"))
     }
-    // node-sized frame: materializing it here is what the caller's
-    // first action would do anyway, and it frees the edge cache
-    val out = ranks.localCheckpoint(true)
-    linked.unpersist()
-    out
+    ranks
   }
 }

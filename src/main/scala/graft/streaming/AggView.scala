@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.storage.StorageLevel
 
+import graft.operators.Materialize
 import graft.streaming.ChangelogStream.{Change, Entity}
 
 /** Incrementally-maintained grouped aggregate over a changelog stream
@@ -88,23 +88,24 @@ object AggView {
                  numBuckets: Int = 16, retainVersions: Int = 2): Unit =
     ViewLayout.publish(dir, batchId, numBuckets, retainVersions, "agg view") { p =>
       val spark = deltas.sparkSession
-      // persisted: referenced by BOTH the touched-bucket collect and the
+      // cached: referenced by BOTH the touched-bucket collect and the
       // merge join — without it the per-batch delta aggregation executes
       // twice. MEMORY_AND_DISK keeps lineage, so an evicted block
       // recomputes instead of failing (batch-sized either way).
-      val agg = deltas.groupBy(col("grp"))
-        .agg(sum(col("dSum")).as("dSum"), sum(col("dCnt")).as("dCnt"))
-        .withColumn("__bucket", p.bucket(col("grp")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try p.rewrite(agg.select("__bucket")) { curDirs =>
-        readDirs(spark, curDirs).withColumn("__bucket", p.bucket(col("grp"))).as("c")
-          .join(agg.as("d"), col("c.grp") === col("d.grp"), "full_outer")
-          .select(coalesce(col("c.grp"), col("d.grp")).as("grp"),
-            (coalesce(col("c.sumVal"), lit(0.0)) + coalesce(col("d.dSum"), lit(0.0))).as("sumVal"),
-            (coalesce(col("c.cnt"), lit(0L)) + coalesce(col("d.dCnt"), lit(0L))).as("cnt"),
-            coalesce(col("c.__bucket"), col("d.__bucket")).as("__bucket"))
-          .where(col("cnt") > 0)
-      } finally agg.unpersist()
+      Materialize.scoped { s =>
+        val agg = s.persist(deltas.groupBy(col("grp"))
+          .agg(sum(col("dSum")).as("dSum"), sum(col("dCnt")).as("dCnt"))
+          .withColumn("__bucket", p.bucket(col("grp"))))
+        p.rewrite(agg.select("__bucket")) { curDirs =>
+          readDirs(spark, curDirs).withColumn("__bucket", p.bucket(col("grp"))).as("c")
+            .join(agg.as("d"), col("c.grp") === col("d.grp"), "full_outer")
+            .select(coalesce(col("c.grp"), col("d.grp")).as("grp"),
+              (coalesce(col("c.sumVal"), lit(0.0)) + coalesce(col("d.dSum"), lit(0.0))).as("sumVal"),
+              (coalesce(col("c.cnt"), lit(0L)) + coalesce(col("d.dCnt"), lit(0L))).as("cnt"),
+              coalesce(col("c.__bucket"), col("d.__bucket")).as("__bucket"))
+            .where(col("cnt") > 0)
+        }
+      }
       Nil
     }
 

@@ -320,21 +320,6 @@ object ChangelogStream {
     * watermark (highest txno seen). */
   case class GtidHi(hi: Long)
 
-  /** B28: streaming GTID executed-window — the live twin of
-    * [[graft.cdc.Changelog.gtidExecuted]]: running per-source
-    * `(txno_lo, txno_hi)` over a stream of `"source_uuid:txno"`
-    * strings (the column [[graft.sources.Debezium.decode]] lands).
-    * A plain streaming min/max aggregate: state is one row per
-    * replication source (control-sized at any log volume), complete/
-    * update output modes both valid — a consumer persists
-    * `txno_hi + 1` as its GTID resume token each micro-batch. */
-  def gtidExecutedStream(gtids: Dataset[String]): DataFrame =
-    gtids.filter(col("value").isNotNull)
-      .select(substring_index(col("value"), ":", 1).as("source_uuid"),
-        substring_index(col("value"), ":", -1).cast("long").as("txno"))
-      .groupBy(col("source_uuid"))
-      .agg(min(col("txno")).as("txno_lo"), max(col("txno")).as("txno_hi"))
-
   /** B28b: streaming GTID GAP detector — the live twin of the batch
     * capture-gap check (`cdc_position_gap`, A29), re-keyed by
     * transaction id: per source, any txno arriving more than one past
@@ -347,7 +332,9 @@ object ChangelogStream {
     * GTID at-least-once semantics. Within a micro-batch txnos are
     * sorted, so intra-batch reordering never fabricates a gap.
     * Malformed GTIDs (no ':', empty source, non-numeric txno) are
-    * dropped, mirroring [[gtidExecutedStream]]'s null-tolerant cast —
+    * dropped, mirroring [[graft.cdc.Changelog.gtidExecuted]]'s
+    * null-tolerant cast (that batch operator is also the streaming
+    * executed window: a min/max aggregate, complete or update mode) —
     * a bad line must not crash the query. */
   def gtidGaps(gtids: Dataset[String]): Dataset[GtidGap] = {
     import gtids.sparkSession.implicits._
@@ -376,20 +363,6 @@ object ChangelogStream {
         })
   }
 
-  /** B9: schema attach on a live stream — the reference runs
-    * `add-table-schema` INSIDE the binlog pipeline
-    * (`stream.clj:197-212`); here the versioned registry
-    * ([[graft.cdc.SchemaRegistry]]) is a STATIC control frame and the
-    * attach is a stream-static broadcast join re-planned per
-    * micro-batch: each streamed row picks up the schema version in
-    * force at its position. Rows whose table has no registry entry
-    * flow with NULL `schema_version` — filter them to a dead-letter
-    * sink, the streaming analogue of the reference's `:error` rows
-    * (`stream.clj:180-196`). Requires the stream to expose
-    * `(tbl, pos)`. */
-  def attachSchema(stream: DataFrame, registry: DataFrame): DataFrame =
-    graft.cdc.SchemaRegistry.attach(stream, registry)
-
   /** Raw binlog event for the table-map pairing operator: db/tbl are
     * set only on `kind = 'table_map'` rows. */
   case class RawEvent(file: String, pos: Long, kind: String,
@@ -398,17 +371,6 @@ object ChangelogStream {
   /** State of [[groupTableMaps]]: the current table map of one file. */
   case class TableMapState(db: String, tbl: String, pos: Long)
 
-  /** B8: `group-table-maps` on a live stream
-    * (`src/dumpr/stream.clj:76-97`): each write/update/delete inherits
-    * the (db, tbl) of the latest preceding table-map event of its
-    * binlog file; table-map rows are swallowed; other events pass
-    * alone. State (current table map per file) lives in the
-    * checkpointed store, so a table map at the tail of one micro-batch
-    * governs mutations at the head of the next — the property a real
-    * binlog source needs, since batch boundaries fall anywhere.
-    * Events are ordered by pos within each (file, batch) group before
-    * pairing (binlog order; groups are bounded by one file's share of
-    * a micro-batch). */
   /** One closed SCD2 version: `[validFrom, validTo)` with the value
     * that held over the interval. */
   case class ClosedVersion(tbl: String, id: Long, value: Double,
@@ -461,6 +423,17 @@ object ChangelogStream {
         })
   }
 
+  /** B8: `group-table-maps` on a live stream
+    * (`src/dumpr/stream.clj:76-97`): each write/update/delete inherits
+    * the (db, tbl) of the latest preceding table-map event of its
+    * binlog file; table-map rows are swallowed; other events pass
+    * alone. State (current table map per file) lives in the
+    * checkpointed store, so a table map at the tail of one micro-batch
+    * governs mutations at the head of the next — the property a real
+    * binlog source needs, since batch boundaries fall anywhere.
+    * Events are ordered by pos within each (file, batch) group before
+    * pairing (binlog order; groups are bounded by one file's share of
+    * a micro-batch). */
   def groupTableMaps(raw: Dataset[RawEvent]): Dataset[RawEvent] = {
     import raw.sparkSession.implicits._
     val mutations = Set("write", "update", "delete")

@@ -592,14 +592,14 @@ object EventStreams {
   def routeWithDlq(events: DataFrame, goodDir: String, dlqDir: String):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val b = batch.persist()
-      try {
+      graft.operators.Materialize.scoped { s =>
+        val b = s.persist(batch)
         val bad = graft.cdc.RowFormat.deadLetter(b)
         val good = graft.cdc.RowFormat.normalize(b)
           .join(bad.select(col("pos")), Seq("pos"), "left_anti")
         bad.write.mode("overwrite").parquet(s"$dlqDir/batch=$batchId")
         good.write.mode("overwrite").parquet(s"$goodDir/batch=$batchId")
-      } finally b.unpersist(blocking = false)
+      }
       ()
     }
 }

@@ -16,16 +16,4 @@ object RddBridge {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking)
       case _ => ()
     }
-
-  /** Unpersist EVERY checkpoint-backed leaf anywhere in the plan —
-    * for teardown of memoized frames whose checkpoint sits below
-    * projections/joins (the dup-closure memo), where the top-level
-    * match above can't see it. Only safe when the frame (and every
-    * plan sharing its leaves) is done for good: a truncated-lineage
-    * localCheckpoint cannot be recomputed after this. */
-  def unpersistAllCheckpoints(df: DataFrame, blocking: Boolean = false): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking)
-      case _ => ()
-    }
 }

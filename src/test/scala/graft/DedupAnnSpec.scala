@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ann, Dedup}
+import graft.operators.{Ann, Dedup, Materialize}
 import graft.functions.VectorFunctions
 
 class DedupAnnSpec extends AnyFunSuite {
@@ -407,7 +407,7 @@ class DedupAnnSpec extends AnyFunSuite {
     assert(leaked.size <= 1,
       s"only the result checkpoint may stay persisted, found ${leaked.size} new RDDs")
     assert(n > 0)
-    Dedup.release(out, blocking = true)
+    Materialize.release(out, blocking = true)
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(after.isEmpty,
       s"release must free the result checkpoint, still persisted: $after")
@@ -447,7 +447,7 @@ class DedupAnnSpec extends AnyFunSuite {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.size <= 1,
       s"capped path may leave only its result checkpoint, found ${leaked.size}")
-    Dedup.release(cappedDf, blocking = true)
+    Materialize.release(cappedDf, blocking = true)
     assert(capped == uncapped,
       s"escape must not change the pair set: capped ${capped.size} vs uncapped ${uncapped.size}")
     // the tight mode survives in full through the all-pairs route
@@ -478,13 +478,13 @@ class DedupAnnSpec extends AnyFunSuite {
     val leakedR = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leakedR.size <= 1,
       s"recall may leave only its result checkpoint, found ${leakedR.size} new RDDs")
-    Dedup.release(r, blocking = true)
+    Materialize.release(r, blocking = true)
     val front = Ann.paretoSweep(emb)
     assert(front.count() > 0)
     val leakedP = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leakedP.size <= 1,
       s"paretoSweep may leave only the front's checkpoint, found ${leakedP.size} new RDDs")
-    Dedup.release(front, blocking = true)
+    Materialize.release(front, blocking = true)
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(after.isEmpty,
       s"release must free the front's checkpoint, still persisted: $after")

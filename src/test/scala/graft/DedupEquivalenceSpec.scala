@@ -1,5 +1,6 @@
 package graft
 
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -17,10 +18,16 @@ import graft.operators.Dedup
   *    an identical-document flood (the classic boilerplate mega-bucket
   *    that blows up naive LSH with k² pair expansion) complete with the
   *    exact same per-doc rollup the naive computation would produce.
+  *
+  * The operators under test return lazy frames over plain `persist()`
+  * and leave the release to their caller, so every test and every
+  * property case clears the cache after itself, as the harnesses do.
   */
-class DedupEquivalenceSpec extends AnyFunSuite {
+class DedupEquivalenceSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  override def afterEach(): Unit = spark.catalog.clearCache()
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -176,15 +183,17 @@ class DedupEquivalenceSpec extends AnyFunSuite {
         Gen.listOfN(n, Gen.oneOf("alpha", "beta", "gamma", "delta", "x"))
           .map(_.mkString(" "))))
     val p = Prop.forAll(genDocs) { texts =>
-      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val df = docs.toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
-      val got = Dedup.minhashLsh(df).as[(Long, Long, Long, Int)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      val want = naiveMinhash(docs)
-      if (got != want) {
-        println(s"texts=$texts\ngot =$got\nwant=$want")
-      }
-      got == want
+      try {
+        val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        val df = docs.toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
+        val got = Dedup.minhashLsh(df).as[(Long, Long, Long, Int)].collect()
+          .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+        val want = naiveMinhash(docs)
+        if (got != want) {
+          println(s"texts=$texts\ngot =$got\nwant=$want")
+        }
+        got == want
+      } finally spark.catalog.clearCache()
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6), p)
     assert(res.passed, res.status.toString)
@@ -235,12 +244,14 @@ class DedupEquivalenceSpec extends AnyFunSuite {
         Gen.listOfN(n, Gen.oneOf("alpha", "beta", "gamma", "delta", "x"))
           .map(_.mkString(" "))))
     val p = Prop.forAll(genDocs) { texts =>
-      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val df = docs.toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
-      val got = Dedup.minhashLshPairs(df).as[(Long, Long)].collect().toSet
-      val want = naiveMinhashPairs(docs)
-      if (got != want) println(s"texts=$texts\ngot =$got\nwant=$want")
-      got == want
+      try {
+        val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        val df = docs.toDF("doc_id", "text").withColumn("n_chars", length(col("text")))
+        val got = Dedup.minhashLshPairs(df).as[(Long, Long)].collect().toSet
+        val want = naiveMinhashPairs(docs)
+        if (got != want) println(s"texts=$texts\ngot =$got\nwant=$want")
+        got == want
+      } finally spark.catalog.clearCache()
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6), p)
     assert(res.passed, res.status.toString)

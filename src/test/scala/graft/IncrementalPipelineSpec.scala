@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Sketch}
+import graft.operators.{Dedup, Materialize, Sketch}
 import graft.sinks.ZoneMap
 
 /** The DAY-2 pipeline: a new crawl batch lands against yesterday's
@@ -86,7 +86,7 @@ class IncrementalPipelineSpec extends AnyFunSuite {
     assert(n > 0)
     // Dataset.unpersist is a no-op on checkpoint blocks — the public
     // release helper frees them deterministically
-    Dedup.release(out, blocking = true)
+    Materialize.release(out, blocking = true)
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(after.isEmpty,
       s"release must free the result checkpoint, still persisted: $after")

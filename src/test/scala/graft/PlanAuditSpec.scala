@@ -184,10 +184,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // corpus-sized caches can be released before return) — audit the
     // underlying lazy plan via the internal builder
     spark.catalog.clearCache()
-    val (lazyPlan, cached) = graft.operators.Dedup.incrementalNearDupPlan(
-      Tables.documents(spark, sf), cutoff = 250L)
-    val p = TestSpark.fullPlan(lazyPlan)
-    cached.foreach(_.unpersist(blocking = false))
+    val p = graft.operators.Materialize.scoped(s => TestSpark.fullPlan(
+      graft.operators.Dedup.incrementalNearDupPlan(s, Tables.documents(spark, sf), cutoff = 250L)))
     // ONE deliberate text-carrying exchange exists: the round-robin
     // fan-out BEFORE shingling, so the expensive shingle compute runs
     // at full parallelism instead of at the scan's partition count
@@ -556,5 +554,29 @@ class PlanAuditSpec extends AnyFunSuite {
       spark.conf.set(aqeKey, aqe0)
       big.unpersist(blocking = true)
     }
+  }
+
+  test("caches and checkpoints are released only through Materialize") {
+    // structural guard: an operator that frees its own intermediates
+    // does it through Materialize's scope, never by hand. Comments may
+    // name the calls; code outside Materialize.scala and the Spark
+    // bridge may not.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(f => f.getFileName.toString == "Materialize.scala" ||
+        f.toString.contains("/graftbridge/"))
+      .toSeq
+    assert(files.exists(_.getFileName.toString == "Dedup.scala"), s"no sources under $root")
+    val banned = Seq("unpersist(", "localCheckpoint(", "RddBridge.")
+    val hits = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.split("//", 2)(0).trim
+      if !code.startsWith("*") && !code.startsWith("/*")
+      if banned.exists(code.contains)
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, s"release outside Materialize:\n${hits.mkString("\n")}")
   }
 }

@@ -114,7 +114,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
     val reg = SchemaRegistry.withAlters(baseReg, alters)
     val in = MemoryStream[(Long, String, String, Long)]
     val stream = in.toDF().toDF("pos", "op", "tbl", "id")
-    val q = graft.streaming.ChangelogStream.attachSchema(stream, reg)
+    val q = SchemaRegistry.attach(stream, reg)
       .select(col("pos"), col("tbl"), col("schema_version"), col("n_cols"))
       .writeStream.format("memory").queryName("b9").outputMode("append").start()
     in.addData((1L, "upsert", "t", 1L), (2L, "upsert", "nope", 9L))

@@ -258,7 +258,7 @@ class StreamingSpec extends AnyFunSuite {
   test("B28: streaming GTID window tracks per-source lo/hi; gap detector fires once across batches") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[String]
-    val win = ChangelogStream.gtidExecutedStream(in.toDS())
+    val win = graft.cdc.Changelog.gtidExecuted(in.toDS().toDF(), "value")
       .writeStream.format("memory").queryName("b28w").outputMode("complete").start()
     val gaps = ChangelogStream.gtidGaps(in.toDS())
       .writeStream.format("memory").queryName("b28g").outputMode("append").start()
