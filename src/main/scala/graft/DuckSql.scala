@@ -85,22 +85,13 @@ object DuckSql {
        |FROM ${finalize("(SELECT doc_id, " + fnvFold("text", 3) + " AS h0 FROM documents)",
                         "doc_id", "h0", "h")} f""".stripMargin
 
-  /** Oracle for `dedup_simhash` with chunk-pair banding: nChunks =
-    * maxHamming+2 equal-ish bit slices, one band per unordered chunk
-    * pair — pigeonhole: ≤ maxHamming differing bits damage at most
-    * maxHamming chunks, leaving ≥ 2 intact, so some intact pair
-    * matches. Must mirror [[graft.operators.Dedup.simhash]]. */
+  /** Oracle for `dedup_simhash` with chunk-pair banding: the band
+    * expressions are written from the engine's own geometry,
+    * [[graft.functions.Hashing.chunkPairBands]]. */
   def simhashOracle(maxHamming: Int): String = {
-    val nChunks = maxHamming + 2
-    val bounds = (0 to nChunks).map(i => (64 * i) / nChunks)
-    def chunk(i: Int): String = {
-      val lo = bounds(i); val w = bounds(i + 1) - lo
-      s"((shu // ${BigInt(1) << lo}) % ${BigInt(1) << w})"
-    }
-    val pairIdx = for { i <- 0 until nChunks; j <- (i + 1) until nChunks } yield (i, j)
-    val bandExprs = pairIdx.map { case (i, j) =>
-      val wj = bounds(j + 1) - bounds(j)
-      s"${chunk(i)} * ${BigInt(1) << wj} + ${chunk(j)}"
+    def chunk(c: (Int, Int)): String = s"((shu // ${BigInt(1) << c._1}) % ${BigInt(1) << c._2})"
+    val bandExprs = graft.functions.Hashing.chunkPairBands(maxHamming, 64).map { case (ci, cj) =>
+      s"${chunk(ci)} * ${BigInt(1) << cj._2} + ${chunk(cj)}"
     }
     val tokHashes = finalize(
       "(SELECT doc_id, " + fnvFold("tok", 2) + " AS h0 FROM " +
@@ -533,27 +524,22 @@ object DuckSql {
       val succ = if (wrap) (i + 1) % dim + 1 else i + 2
       s"(CASE WHEN fs[${i + 1}] > fs[$succ] THEN ${bitLit(i)} ELSE 0 END)"
     }.mkString(" | ")
-    val nChunks = maxHamming + 2
-    val bounds = (0 to nChunks).map(i => (dim * i) / nChunks)
+    val bands = graft.functions.Hashing.chunkPairBands(maxHamming, dim)
     // every chunk divisor below is a `1L << lo` BIGINT literal — at
     // lo = 63 (reachable: dim = 64, maxHamming = 62 passes the engine
     // require) the literal goes NEGATIVE and the unsigned-view chunk
     // extraction diverges from the engine's shiftrightunsigned; fail
     // fast instead of replaying a wrong oracle
-    require(bounds(nChunks - 1) <= 62,
-      s"phashOracle: chunk shift ${bounds(nChunks - 1)} exceeds 62 — " +
+    val topLo = bands.last._2._1
+    require(topLo <= 62,
+      s"phashOracle: chunk shift $topLo exceeds 62 — " +
         s"lower maxHamming (= $maxHamming) so all 1L << lo literals stay positive")
     // chunks extract from the UNSIGNED view (uph ∈ [0, 2^64) as
     // HUGEINT): BIGINT // and % are signed and go wrong on a set
     // bit 63 — this mirrors the engine's shiftrightunsigned
-    def chunk(i: Int): String = {
-      val lo = bounds(i); val w = bounds(i + 1) - lo
-      s"CAST((uph // ${1L << lo}) % ${1L << w} AS BIGINT)"
-    }
-    val pairIdx = for { i <- 0 until nChunks; j <- (i + 1) until nChunks } yield (i, j)
-    val bandExprs = pairIdx.map { case (i, j) =>
-      val wj = bounds(j + 1) - bounds(j)
-      s"${chunk(i)} * ${1L << wj} + ${chunk(j)}"
+    def chunk(c: (Int, Int)): String = s"CAST((uph // ${1L << c._1}) % ${1L << c._2} AS BIGINT)"
+    val bandExprs = bands.map { case (ci, cj) =>
+      s"${chunk(ci)} * ${1L << cj._2} + ${chunk(cj)}"
     }
     s"""WITH feat AS (
        |  SELECT media_id, d,

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{array, lit, shiftrightunsigned}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -365,67 +366,85 @@ object Hashing {
       })
   }
 
-  /** Kernel for [[SimHashFirstBand]] (also called from generated
-    * code): index of the FIRST chunk-pair band (same `(i,j)` i<j
-    * lexicographic enumeration as the banding in
-    * [[graft.operators.Dedup.simhash]]) where both chunks of the two
-    * signatures agree; -1 when no band matches. A colliding signature
-    * pair matches in every band whose two chunks are undamaged — so
-    * keeping only the `ci == firstBand` row deduplicates the pair
-    * MAP-SIDE, with no groupBy/distinct exchange at all. */
-  def simhashFirstBand(au: Long, bu: Long, maxHamming: Int): Int =
-    simhashFirstBand(au, bu, maxHamming, 64)
-
-  /** Width-generalized first-band kernel: `width` is the signature's
-    * bit width (64 for SimHash64; 16 for the multimodal dHash of
-    * [[graft.operators.Dedup.phashDedup]] — banding a narrow hash
-    * with 64-bit bounds would put every row's all-zero upper chunks
-    * in one mega-band). */
-  def simhashFirstBand(au: Long, bu: Long, maxHamming: Int, width: Int): Int = {
+  /** The chunk-pair band geometry of a `width`-bit SimHash-style
+    * signature at hamming radius `maxHamming`: `maxHamming + 2` chunks
+    * bounded at `(width * c) / nChunks`, and one band per unordered
+    * chunk pair (i, j), i < j, in lexicographic order, as
+    * ((lo_i, w_i), (lo_j, w_j)) bit offsets and widths. ≤ maxHamming
+    * differing bits damage at most maxHamming chunks, so two chunks
+    * survive intact and their band matches: the pigeonhole guarantee
+    * covers the full radius. The banding column, the first-band
+    * kernel and the DuckDB oracles all follow it. */
+  def chunkPairBands(maxHamming: Int, width: Int): IndexedSeq[((Int, Int), (Int, Int))] = {
+    // with fewer bits than chunks some chunks are zero-width, every
+    // row's band value collapses into one universal bucket and the
+    // band self-join silently goes quadratic — fail fast instead
+    require(maxHamming + 2 <= width,
+      s"need maxHamming + 2 <= width for non-empty band chunks, got maxHamming=$maxHamming width=$width")
     val nChunks = maxHamming + 2
-    val diff = au ^ bu
-    // per-chunk agreement under the same (width*i)/nChunks bounds
-    val agree = new Array[Boolean](nChunks)
-    var c = 0
-    while (c < nChunks) {
-      val lo = (width * c) / nChunks
-      val hi = (width * (c + 1)) / nChunks
-      val w = hi - lo
-      val mask = if (w == 64) -1L else (1L << w) - 1L
-      agree(c) = ((diff >>> lo) & mask) == 0L
-      c += 1
-    }
-    var idx = 0
-    var i = 0
-    while (i < nChunks - 1) {
-      var j = i + 1
-      while (j < nChunks) {
-        if (agree(i) && agree(j)) return idx
-        idx += 1
-        j += 1
-      }
-      i += 1
+    val bounds = (0 to nChunks).map(c => (width * c) / nChunks)
+    val chunks = bounds.zip(bounds.tail).map { case (lo, hi) => (lo, hi - lo) }
+    for { i <- 0 until nChunks; j <- (i + 1) until nChunks } yield (chunks(i), chunks(j))
+  }
+
+  /** The band values of signature `sig` under [[chunkPairBands]]: chunk
+    * i's bits above chunk j's. Chunks extract by unsigned shift, so a
+    * set bit 63 bands like any other. */
+  def chunkPairBandsCol(sig: Column, maxHamming: Int, width: Int): Column = {
+    def chunk(c: (Int, Int)): Column =
+      shiftrightunsigned(sig, c._1).bitwiseAND(lit((1L << c._2) - 1))
+    array(chunkPairBands(maxHamming, width).map { case (ci, cj) =>
+      chunk(ci) * lit(1L << cj._2) + chunk(cj)
+    }: _*)
+  }
+
+  /** Per [[chunkPairBands]] band, the mask of its two chunks' bits:
+    * two signatures agree in band k iff `(a ^ b) & masks(k)` is 0. */
+  def chunkPairMasks(maxHamming: Int, width: Int): Array[Long] =
+    chunkPairBands(maxHamming, width).map { case ((li, wi), (lj, wj)) =>
+      ((1L << wi) - 1) << li | ((1L << wj) - 1) << lj
+    }.toArray
+
+  /** Index of the FIRST [[chunkPairBands]] band in which two `width`-bit
+    * signatures agree (64 for SimHash64, the dHash width for
+    * [[graft.operators.Dedup.phashDedup]]); -1 when no band matches. A
+    * colliding signature pair matches in every band whose two chunks
+    * are undamaged — so keeping only the `ci == firstBand` row
+    * deduplicates the pair MAP-SIDE, with no groupBy/distinct exchange
+    * at all. */
+  def simhashFirstBand(au: Long, bu: Long, maxHamming: Int, width: Int = 64): Int =
+    firstBand(au ^ bu, chunkPairMasks(maxHamming, width))
+
+  /** Kernel for [[SimHashFirstBand]] (also called from generated code):
+    * the first band whose mask `diff` leaves clear, else -1. */
+  def firstBand(diff: Long, masks: Array[Long]): Int = {
+    var k = 0
+    while (k < masks.length) {
+      if ((diff & masks(k)) == 0L) return k
+      k += 1
     }
     -1
   }
 
   /** First matching chunk-pair band of two SimHash-style signatures
-    * of `width` bits. */
+    * of `width` bits; the band masks are a plan constant. */
   case class SimHashFirstBand(left: Expression, right: Expression, maxHamming: Int,
                               width: Int = 64)
       extends BinaryExpression {
+    @transient private lazy val masks = chunkPairMasks(maxHamming, width)
     override def dataType: DataType = IntegerType
     override def nullIntolerant: Boolean = true
     override protected def withNewChildrenInternal(l: Expression, r: Expression): SimHashFirstBand =
       copy(left = l, right = r)
 
     override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Integer.valueOf(
-        simhashFirstBand(a.asInstanceOf[Long], b.asInstanceOf[Long], maxHamming, width))
+      java.lang.Integer.valueOf(firstBand(a.asInstanceOf[Long] ^ b.asInstanceOf[Long], masks))
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val m = ctx.addReferenceObj("bandMasks", masks, "long[]")
       nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.Hashing.simhashFirstBand($a, $b, $maxHamming, $width);")
+        s"${ev.value} = graft.functions.Hashing.firstBand($a ^ $b, $m);")
+    }
   }
 
   /** splitmix64 of a long column with a compile-time seed — the
@@ -462,8 +481,6 @@ object Hashing {
     toColumn(HashedShinglesN(toExpr(words), ng))
   def fingerprint(text: Column): Column = toColumn(Fingerprint64(toExpr(text)))
   def hashLong64(v: Column, seed: Long): Column = toColumn(HashLong64(toExpr(v), seed))
-  def simhashFirstBandCol(a: Column, b: Column, maxHamming: Int): Column =
-    toColumn(SimHashFirstBand(toExpr(a), toExpr(b), maxHamming))
-  def simhashFirstBandCol(a: Column, b: Column, maxHamming: Int, width: Int): Column =
+  def simhashFirstBandCol(a: Column, b: Column, maxHamming: Int, width: Int = 64): Column =
     toColumn(SimHashFirstBand(toExpr(a), toExpr(b), maxHamming, width))
 }

@@ -19,7 +19,7 @@ import graft.functions.{Hashing, TextFunctions}
   *  - SimHash: 64-bit signature, chunk-PAIR banding (pigeonhole-correct
   *    for the configured hamming radius), popcount verify
   *  - embedding cosine: brute-force pair scan (correctness baseline;
-  *    the scale path is [[Ann.lshTopK]]-style bucketing)
+  *    the scale path is [[embeddingPairsLsh]]'s hyperplane banding)
   *
   * The near-dup operators collapse exact duplicates FIRST (identical
   * shingle sets for MinHash, identical signatures for SimHash): a
@@ -35,9 +35,11 @@ import graft.functions.{Hashing, TextFunctions}
   * row ([[graft.functions.Hashing]]); no driver-side loops, no forced
   * broadcasts of corpus-sized relations anywhere.
   *
-  * Operators that return a lazy frame over a persisted intermediate
-  * leave it cached for the caller to release (`catalog.clearCache()`);
-  * the eager ones scope their caches through [[Materialize]].
+  * The shared skeletons keep their intermediates through a `persist:
+  * DataFrame => DataFrame` argument: operators that return a lazy frame
+  * pass `_.persist()` and leave the caches for the caller to release
+  * (`catalog.clearCache()`); the eager and scoped ones pass a
+  * [[Materialize]] scope's `s.persist`.
   */
 object Dedup {
 
@@ -314,60 +316,66 @@ object Dedup {
     * back out to documents through arithmetic on group sizes. */
   def minhashLsh(docs: DataFrame, numHashes: Int = 128, bands: Int = 16,
                  threshold: Double = 0.5): DataFrame = {
-    val (members, verified, groups) = minhashParts(docs, numHashes, bands, threshold)
-    rollupPerDoc(members, verified, groups.select(col("gid"), col("m")), Seq.empty)
+    val (members, groups, verifiedAt) = minhashParts(docs, numHashes, threshold, _.persist())
+    rollupPerDoc(members, verifiedAt(bands), groups.select(col("gid"), col("m")), Seq.empty)
   }
 
-  /** The shared MinHash+LSH pipeline: exact-dup collapse → banded
-    * signatures → group-pair candidates → exact-Jaccard verdicts.
-    * Returns (members (doc_id, gid, m, grp_ok), verified group pairs
-    * (a_gid, b_gid, dup), groups (gid, m, grp_ok, sh)). */
-  private def minhashParts(docs: DataFrame, numHashes: Int, bands: Int,
-                           threshold: Double): (DataFrame, DataFrame, DataFrame) = {
-    val rows = numHashes / bands
-    val withKey = docs
+  /** The two-hash group key of `c`, (gk, gk2): two independent
+    * 64-bit hashes, so a false merge of unrelated payloads (which would
+    * mark their rows as verified dups) needs BOTH to collide (~2^-128
+    * per pair) — negligible even at billions of rows. */
+  private def groupKey(c: Column): Seq[Column] =
+    Seq(xxhash64(c).as("gk"), xxhash64(lit(1L), c).as("gk2"))
+
+  /** The exact-dup collapse of the MinHash family, both frames through
+    * `persist`: keyed (doc_id, [side,] sh, gk, gk2) feeds the collapse
+    * and the member attach; groups (…, gid, m, sh, grp_ok, sig) is one
+    * row per distinct shingle set (per `side`, when given) with its
+    * smallest doc id, size, and `numHashes`-perm signature. The
+    * shuffle carries ~one shingle array per DISTINCT document (partial
+    * aggregation); <3-token docs have empty shingle sets, which all
+    * share a group key, but Jaccard 0/0 is NOT a match — grp_ok = 0
+    * keeps them out of the banding and the rollup. */
+  private def shingleGroups(docs: DataFrame, numHashes: Int,
+      persist: DataFrame => DataFrame, side: Option[Column] = None): (DataFrame, DataFrame) = {
+    val sideCol = side.map(_.as("side")).toSeq
+    val keyed = persist(docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        Hashing.hashedShingles3Col(TextFunctions.tokens(col("text"))).as("sh"))
-      // two independent 64-bit group keys: a single-key collision would
-      // silently merge unrelated shingle sets and mark their docs as
-      // verified dups; requiring BOTH to collide (~2^-128 per pair)
-      // keeps that negligible even at billions of documents
-      .withColumn("gk", xxhash64(col("sh")))
-      .withColumn("gk2", xxhash64(lit(1L), col("sh")))
-      // persisted: feeds BOTH the collapse and the member attach —
-      // uncached, the corpus is scanned, fanned out (a text-carrying
-      // exchange) and re-shingled once per use
-      .persist()
-    // collapse: one row per distinct shingle set; min_by keeps the
-    // representative deterministic, partial aggregation means the
-    // shuffle carries ~one shingle array per DISTINCT document
-    val groups = withKey
-      .groupBy(col("gk"), col("gk2"))
+      .select((col("doc_id") +: sideCol) :+
+        Hashing.hashedShingles3Col(TextFunctions.tokens(col("text"))).as("sh"): _*)
+      .select(col("*") +: groupKey(col("sh")): _*))
+    val groups = persist(keyed
+      .groupBy(sideCol.map(_ => col("side")) ++ Seq(col("gk"), col("gk2")): _*)
       .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"),
         min_by(col("sh"), col("doc_id")).as("sh"))
-      // <3-token docs have empty shingle sets: they all share a group
-      // key, but Jaccard 0/0 is NOT a match — they are neither banded
-      // nor counted as each other's dups (grp_ok gates the rollup)
       .withColumn("grp_ok", (size(col("sh")) > 0).cast("int"))
-      .persist()
-    val members = withKey.select(col("doc_id"), col("gk"), col("gk2"))
+      .withColumn("sig", Hashing.minhash(col("sh"), numHashes)))
+    (keyed, groups)
+  }
+
+  /** `bands` (band, bh) rows per bandable group of [[shingleGroups]],
+    * keyed by gid (and `carry`): all the candidate join ever shuffles. */
+  private def bandRows(groups: DataFrame, numHashes: Int, bands: Int,
+                       carry: Column*): DataFrame =
+    groups.filter(col("grp_ok") === 1)
+      .select(carry :+ col("gid") :+
+        posexplode(Hashing.bandHashes(col("sig"), bands, numHashes / bands))
+          .as(Seq("band", "bh")): _*)
+
+  /** The MinHash+LSH skeleton of [[minhashLsh]], [[minhashLshPairs]]
+    * and every [[dedupPareto]] arm: exact-dup collapse → banded
+    * signatures → group-pair candidates → exact-Jaccard verdicts.
+    * Returns members (doc_id, gid, m, grp_ok), groups (gid, m, grp_ok,
+    * sh, …), and the verified group pairs (a_gid, b_gid, dup) at a band
+    * count — the signature is computed once, each band count only
+    * re-splits it. */
+  private def minhashParts(docs: DataFrame, numHashes: Int, threshold: Double,
+      persist: DataFrame => DataFrame): (DataFrame, DataFrame, Int => DataFrame) = {
+    val (keyed, groups) = shingleGroups(docs, numHashes, persist)
+    val members = keyed.select(col("doc_id"), col("gk"), col("gk2"))
       .join(groups.select(col("gk"), col("gk2"), col("gid"), col("m"), col("grp_ok")),
         Seq("gk", "gk2"))
-    // banded signature projection: `bands` small (gid, band, bh) rows
-    // per group — this is all the candidate join ever shuffles
-    val bh = groups
-      .filter(col("grp_ok") === 1)
-      .withColumn("sig", Hashing.minhash(col("sh"), numHashes))
-      .select(col("gid"),
-        posexplode(Hashing.bandHashes(col("sig"), bands, rows)).as(Seq("band", "bh")))
-      .persist()
-    val candG = bh.as("a")
-      .join(bh.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.gid") < col("b.gid"))
-      .select(col("a.gid").as("a_gid"), col("b.gid").as("b_gid"))
-      .distinct()
+      .select(col("doc_id"), col("gid"), col("m"), col("grp_ok"))
     val shProj = groups.select(col("gid"), col("sh"))
     // Split strategy (refined by the r11 A/B + its review; r13 gated
     // by measurement): the exact-dup collapse bounds BYTE-IDENTICAL
@@ -380,19 +388,28 @@ object Dedup {
     // group projection fits the budget, SHUFFLE_HASH past it); the
     // FIRST attach sorts only id-pair rows plus the group-linear
     // array side under SMJ, so it is left to AQE (the A/B measured
-    // pinning both at 29% slower at 10× data).
+    // pinning both at 29% slower at 10× data). One measured decision
+    // serves every band count: it is a property of the projection.
     val strat = attachStrategy(shProj, col("sh"))
-    val verified = shProj.select(col("gid").as("a_gid"), col("sh").as("a_sh"))
-      .join(candG, Seq("a_gid"))
-      .join(strat(shProj.select(col("gid").as("b_gid"), col("sh").as("b_sh"))),
-        Seq("b_gid"))
-      .withColumn("i", Hashing.sortedIntersectCount(col("a_sh"), col("b_sh")))
-      .withColumn("j",
-        col("i").cast("double") / (size(col("a_sh")) + size(col("b_sh")) - col("i")))
-      .withColumn("dup", (col("j") >= threshold).cast("int"))
-      .select(col("a_gid"), col("b_gid"), col("dup"))
-    (members.select(col("doc_id"), col("gid"), col("m"), col("grp_ok")), verified,
-      groups.select(col("gid"), col("m"), col("grp_ok"), col("sh")))
+    def verifiedAt(bands: Int): DataFrame = {
+      val bh = persist(bandRows(groups, numHashes, bands))
+      val candG = bh.as("a")
+        .join(bh.as("b"),
+          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
+            col("a.gid") < col("b.gid"))
+        .select(col("a.gid").as("a_gid"), col("b.gid").as("b_gid"))
+        .distinct()
+      shProj.select(col("gid").as("a_gid"), col("sh").as("a_sh"))
+        .join(candG, Seq("a_gid"))
+        .join(strat(shProj.select(col("gid").as("b_gid"), col("sh").as("b_sh"))),
+          Seq("b_gid"))
+        .withColumn("i", Hashing.sortedIntersectCount(col("a_sh"), col("b_sh")))
+        .withColumn("j",
+          col("i").cast("double") / (size(col("a_sh")) + size(col("b_sh")) - col("i")))
+        .withColumn("dup", (col("j") >= threshold).cast("int"))
+        .select(col("a_gid"), col("b_gid"), col("dup"))
+    }
+    (members, groups, verifiedAt)
   }
 
   /** Member-level verified dup PAIRS from the MinHash+LSH pipeline —
@@ -409,7 +426,7 @@ object Dedup {
     * shingle set). Returns (a_id, b_id), a_id < b_id. */
   def minhashLshPairs(docs: DataFrame, numHashes: Int = 128, bands: Int = 16,
                       threshold: Double = 0.5): DataFrame = {
-    val (members, verified, groups) = minhashParts(docs, numHashes, bands, threshold)
+    val (members, groups, verifiedAt) = minhashParts(docs, numHashes, threshold, _.persist())
     val okMembers = members
       .join(groups.filter(col("grp_ok") === 1).select(col("gid")), Seq("gid"), "left_semi")
       .select(col("gid"), col("doc_id"))
@@ -418,7 +435,7 @@ object Dedup {
         col("x.gid") === col("y.gid") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
     val mem = members.select(col("gid"), col("doc_id"))
-    val inter = verified.filter(col("dup") === 1)
+    val inter = verifiedAt(bands).filter(col("dup") === 1)
       .join(mem.select(col("gid").as("a_gid"), col("doc_id").as("x")), Seq("a_gid"))
       .join(mem.select(col("gid").as("b_gid"), col("doc_id").as("y")), Seq("b_gid"))
       .select(least(col("x"), col("y")).as("a_id"), greatest(col("x"), col("y")).as("b_id"))
@@ -482,64 +499,20 @@ object Dedup {
     * prefix is shared — `numHashes` is fixed across the sweep, only
     * the band SPLIT of the same signature differs — and the per-arm
     * rollup aggregates union into a single collect. Per-arm values
-    * are identical to independent [[minhashLsh]] runs by
-    * construction: each arm's band explode, candidate self-join,
-    * exact-Jaccard verify and per-doc rollup are the same expressions
-    * over the same collapsed groups. Returns (bands, Σn_cand/2,
-    * Σn_dup/2) per arm. */
+    * are identical to independent [[minhashLsh]] runs: each arm is
+    * [[minhashParts]]' verify at its band count, rolled up the same
+    * way. Returns (bands, Σn_cand/2, Σn_dup/2) per arm. */
   private def minhashSweep(docs: DataFrame, numHashes: Int,
                            bandsList: Seq[Int],
                            threshold: Double): Seq[(Int, Long, Long)] =
     Materialize.scoped { s =>
-      val withKey = s.persist(docs
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-        .select(col("doc_id"),
-          Hashing.hashedShingles3Col(TextFunctions.tokens(col("text"))).as("sh"))
-        .withColumn("gk", xxhash64(col("sh")))
-        .withColumn("gk2", xxhash64(lit(1L), col("sh"))))
-      // collapsed groups carry the FULL minhash signature once; each
-      // arm only re-splits it into its own band hashes
-      val groups = s.persist(withKey
-        .groupBy(col("gk"), col("gk2"))
-        .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"),
-          min_by(col("sh"), col("doc_id")).as("sh"))
-        .withColumn("grp_ok", (size(col("sh")) > 0).cast("int"))
-        .withColumn("sig", Hashing.minhash(col("sh"), numHashes)))
-      val members = withKey.select(col("doc_id"), col("gk"), col("gk2"))
-        .join(groups.select(col("gk"), col("gk2"), col("gid"), col("m"), col("grp_ok")),
-          Seq("gk", "gk2"))
-      val shProj = groups.select(col("gid"), col("sh"))
-      // one measured attach decision for every arm (the strategy is a
-      // property of the group projection, not of the band count)
-      val strat = attachStrategy(shProj, col("sh"))
-      val bhs = bandsList.map { b =>
-        s.persist(groups.filter(col("grp_ok") === 1)
-          .select(col("gid"),
-            posexplode(Hashing.bandHashes(col("sig"), b, numHashes / b))
-              .as(Seq("band", "bh"))))
-      }
-      val perArm = bandsList.zip(bhs).map { case (b, bh) =>
-        val candG = bh.as("a")
-          .join(bh.as("b"),
-            col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-              col("a.gid") < col("b.gid"))
-          .select(col("a.gid").as("a_gid"), col("b.gid").as("b_gid"))
-          .distinct()
-        val verified = shProj.select(col("gid").as("a_gid"), col("sh").as("a_sh"))
-          .join(candG, Seq("a_gid"))
-          .join(strat(shProj.select(col("gid").as("b_gid"), col("sh").as("b_sh"))),
-            Seq("b_gid"))
-          .withColumn("i", Hashing.sortedIntersectCount(col("a_sh"), col("b_sh")))
-          .withColumn("j",
-            col("i").cast("double") / (size(col("a_sh")) + size(col("b_sh")) - col("i")))
-          .withColumn("dup", (col("j") >= threshold).cast("int"))
-          .select(col("a_gid"), col("b_gid"), col("dup"))
-        rollupPerDoc(members, verified, groups.select(col("gid"), col("m")), Seq.empty)
+      val (members, groups, verifiedAt) = minhashParts(docs, numHashes, threshold, s.persist)
+      bandsList.map { b =>
+        rollupPerDoc(members, verifiedAt(b), groups.select(col("gid"), col("m")), Seq.empty)
           .agg((sum(col("n_cand")) / 2).cast("long").as("c"),
             (sum(col("n_dup")) / 2).cast("long").as("f"))
           .select(lit(b).as("bands"), col("c"), col("f"))
-      }
-      perArm.reduce(_.unionAll(_)).collect()
+      }.reduce(_.unionAll(_)).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
     }
 
@@ -555,47 +528,45 @@ object Dedup {
     * key wide (~16 bits for the default) so buckets stay selective at
     * scale. Exact-dup collapse on sh64 keeps identical-document floods
     * from forming quadratic buckets. */
-  def simhash(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
-    val s = docs
+  def simhash(docs: DataFrame, maxHamming: Int = 6): DataFrame =
+    hammingDedup(docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
-        Hashing.simhash(TextFunctions.tokens(col("text"))).as("sh64"))
-      .persist() // 16 B/row; scanned by both the collapse and the member join
-    val groups = s.groupBy(col("sh64"))
-      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"))
-      .persist()
-    // identical sh64 ⇒ hamming 0 ⇒ always a true dup: grp_ok is 1
-    val members = s.join(groups, Seq("sh64")).withColumn("grp_ok", lit(1))
-    val nChunks = maxHamming + 2
-    val bounds = (0 to nChunks).map(i => (64 * i) / nChunks)
-    def chunk(i: Int): Column = {
-      val lo = bounds(i); val w = bounds(i + 1) - lo
-      shiftrightunsigned(col("sh64"), lo).bitwiseAND(lit((1L << w) - 1))
-    }
-    val pairIdx = for { i <- 0 until nChunks; j <- (i + 1) until nChunks } yield (i, j)
-    val bandArr = array(pairIdx.map { case (i, j) =>
-      val wj = bounds(j + 1) - bounds(j)
-      chunk(i) * lit(1L << wj) + chunk(j) // < 2^26, no ANSI overflow
-    }: _*)
-    val bandsDf = groups
-      .select(col("gid"), col("sh64"), posexplode(bandArr).as(Seq("ci", "cv")))
-      .persist()
+      .select(col("doc_id"), Hashing.simhash(TextFunctions.tokens(col("text"))).as("sh64")),
+      "sh64", maxHamming, 64, _.persist())
+
+  /** The hamming-radius skeleton of [[simhash]] and [[phashDedup]] over
+    * (doc_id, `sig`) rows of a `width`-bit signature: exact-dup collapse
+    * on the signature, a [[Hashing.chunkPairBandsCol]] band self-join
+    * on 16 B rows, and the per-doc rollup (doc_id, `sig`, n_cand, n_dup,
+    * keep). The (doc_id, sig) rows are scanned by both the collapse and
+    * the member join, so they, the groups and the bands go through
+    * `persist`. */
+  private def hammingDedup(sigs: DataFrame, sig: String, maxHamming: Int, width: Int,
+                           persist: DataFrame => DataFrame): DataFrame = {
+    val bandArr = Hashing.chunkPairBandsCol(col(sig), maxHamming, width)
+    val s = persist(sigs)
+    val groups = persist(s.groupBy(col(sig))
+      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m")))
+    // identical signatures ⇒ hamming 0 ⇒ always a true dup: grp_ok is 1
+    val members = s.join(groups, Seq(sig)).withColumn("grp_ok", lit(1))
+    val bandsDf = persist(groups
+      .select(col("gid"), col(sig), posexplode(bandArr).as(Seq("ci", "cv"))))
     // pair dedup is MAP-SIDE: a colliding pair matches in every band
     // whose two chunks are intact, and both signatures sit in the
     // joined row — so keep only the row of the FIRST matching band
     // (one codegen'd integer kernel) instead of shuffling ~C(chunks,2)
     // copies of every pair through a groupBy. dup is decided inline
-    // (sh64 is functionally dependent on gid, so any copy agrees).
+    // (the signature is functionally dependent on gid, so any copy
+    // agrees).
+    val (a, b) = (col(s"a.$sig"), col(s"b.$sig"))
     val verified = bandsDf.as("a")
       .join(bandsDf.as("b"),
         col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") &&
           col("a.gid") < col("b.gid"))
-      .where(col("a.ci") ===
-        Hashing.simhashFirstBandCol(col("a.sh64"), col("b.sh64"), maxHamming))
+      .where(col("a.ci") === Hashing.simhashFirstBandCol(a, b, maxHamming, width))
       .select(col("a.gid").as("a_gid"), col("b.gid").as("b_gid"),
-        (bit_count(col("a.sh64").bitwiseXOR(col("b.sh64"))) <= maxHamming)
-          .cast("int").as("dup"))
-    rollupPerDoc(members, verified, groups.select(col("gid"), col("m")), Seq("sh64"))
+        (bit_count(a.bitwiseXOR(b)) <= maxHamming).cast("int").as("dup"))
+    rollupPerDoc(members, verified, groups.select(col("gid"), col("m")), Seq(sig))
   }
 
   /** The dHash column: bit i compares feature i against its
@@ -606,6 +577,7 @@ object Dedup {
     * every replaying engine. Shared by [[phashDedup]] and the
     * streaming twin [[graft.streaming.EventStreams.phashBandHits]]. */
   def phashCol(dim: Int, wrap: Boolean): Column = {
+    require(dim >= 2 && dim <= 64, s"dHash width must fit a long, got $dim")
     // fail short rows fast: the non-wrap form reads feature dim + 1,
     // and non-ANSI element_at past the end returns null — the top
     // bits would silently evaluate to 0 (corrupted hashes), which no
@@ -660,47 +632,12 @@ object Dedup {
     * ([[graft.DuckSql.phashOracle]]'s HUGEINT unsigned view). */
   def phashDedup(features: DataFrame, dim: Int = 16, maxHamming: Int = 2,
                  wrap: Boolean = true): DataFrame = {
-    require(dim >= 2 && dim <= 64, s"dHash width must fit a long, got $dim")
-    // pigeonhole banding needs maxHamming+2 NON-EMPTY chunks: with
-    // fewer bits than chunks some chunks are zero-width, every row's
-    // band value collapses to one universal bucket, and the self-join
-    // silently goes quadratic — fail fast instead
-    require(maxHamming + 2 <= dim,
-      s"need maxHamming + 2 <= dim for non-empty band chunks, got maxHamming=$maxHamming dim=$dim")
-    val ph = phashCol(dim, wrap)
-    val s = features
+    // the chunk-pair banding refuses maxHamming + 2 > dim (zero-width
+    // chunks would collapse every row into one band bucket)
+    hammingDedup(features
       .repartition(features.sparkSession.sparkContext.defaultParallelism, col("media_id"))
-      .select(col("media_id").as("doc_id"), ph.as("ph"))
-      .persist() // 16 B/row; scanned by both the collapse and the member join
-    val groups = s.groupBy(col("ph"))
-      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"))
-      .persist()
-    // identical ph ⇒ hamming 0 ⇒ always a true dup: grp_ok is 1
-    val members = s.join(groups, Seq("ph")).withColumn("grp_ok", lit(1))
-    val nChunks = maxHamming + 2
-    val bounds = (0 to nChunks).map(i => (dim * i) / nChunks)
-    def chunk(i: Int): Column = {
-      val lo = bounds(i); val w = bounds(i + 1) - lo
-      shiftrightunsigned(col("ph"), lo).bitwiseAND(lit((1L << w) - 1))
-    }
-    val pairIdx = for { i <- 0 until nChunks; j <- (i + 1) until nChunks } yield (i, j)
-    val bandArr = array(pairIdx.map { case (i, j) =>
-      val wj = bounds(j + 1) - bounds(j)
-      chunk(i) * lit(1L << wj) + chunk(j)
-    }: _*)
-    val bandsDf = groups
-      .select(col("gid"), col("ph"), posexplode(bandArr).as(Seq("ci", "cv")))
-      .persist()
-    val verified = bandsDf.as("a")
-      .join(bandsDf.as("b"),
-        col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") &&
-          col("a.gid") < col("b.gid"))
-      .where(col("a.ci") ===
-        Hashing.simhashFirstBandCol(col("a.ph"), col("b.ph"), maxHamming, dim))
-      .select(col("a.gid").as("a_gid"), col("b.gid").as("b_gid"),
-        (bit_count(col("a.ph").bitwiseXOR(col("b.ph"))) <= maxHamming)
-          .cast("int").as("dup"))
-    rollupPerDoc(members, verified, groups.select(col("gid"), col("m")), Seq("ph"))
+      .select(col("media_id").as("doc_id"), phashCol(dim, wrap).as("ph")),
+      "ph", maxHamming, dim, _.persist())
       .withColumnRenamed("doc_id", "media_id")
   }
 
@@ -804,9 +741,7 @@ object Dedup {
     * embedding scan (the [[attachStrategy]] measure-then-plan
     * pattern; runs a job at call time). */
   def distinctEmbeddingCount(embeddings: DataFrame): Long =
-    embeddings.select(xxhash64(col("embedding")).as("gk"),
-        xxhash64(lit(1L), col("embedding")).as("gk2"))
-      .distinct().count()
+    embeddings.select(groupKey(col("embedding")): _*).distinct().count()
 
   /** [[embeddingPairsLsh]] with the band geometry derived from the
     * corpus itself: measure the distinct-vector count, size the
@@ -859,28 +794,8 @@ object Dedup {
       embeddings: DataFrame, threshold: Double,
       bands: Int = 8, planesPerBand: Int = 6,
       dim: Int = 64): DataFrame = {
-    import graft.functions.VectorFunctions.{cosine, dot}
-    // Collapse exact-duplicate embeddings FIRST (two independent 64-bit
-    // hashes of the float array, same argument as minhashLsh's group
-    // key): a boilerplate flood of k identical vectors is ONE
-    // representative through the band join and the verify — without
-    // this the flood's shared bucket makes the candidate self-join
-    // quadratic in k. The final pair set is reconstituted exactly from
-    // group members (identical embeddings ⇒ identical buckets and
-    // cosines), so the result — and the DuckDB oracle — is unchanged.
-    // persisted: feeds both the collapse and the member attach —
-    // uncached, the embedding scan + double hash runs once per use
-    val keyed = persist(embeddings
-      .withColumn("gk", xxhash64(col("embedding")))
-      .withColumn("gk2", xxhash64(lit(1L), col("embedding"))))
-    val groups = persist(keyed
-      .groupBy(col("gk"), col("gk2"))
-      .agg(min(col("vec_id")).as("gid"),
-        min_by(col("embedding"), col("vec_id")).as("embedding")))
-    val members = persist(keyed.select(col("vec_id"), col("gk"), col("gk2"))
-      .join(groups.select(col("gk"), col("gk2"), col("gid")), Seq("gk", "gk2"))
-      .select(col("vec_id"), col("gid")))
-
+    import graft.functions.VectorFunctions.cosine
+    val (groups, members) = embeddingGroups(embeddings, persist)
     val planes = Ann.hyperplanes(bands * planesPerBand, dim)
     // signatures come from the FUSED plan-constant kernel (one flat
     // multiply-add loop over all bands×planes) — the per-plane
@@ -928,17 +843,47 @@ object Dedup {
       .where(cosine(col("a_emb"), col("b_emb")) >= threshold)
       .select(col("a_gid"), col("b_gid"))
 
-    // Reconstitute member pairs (both expansions are OUTPUT-sized —
-    // the pair contract itself enumerates them):
-    //  - within a group every member pair scores cos(v, v) — evaluate
-    //    THE SAME predicate the all-pairs baseline would, rather than
-    //    special-casing: that inherits Spark's NaN-is-greatest
-    //    comparison semantics for zero-norm vectors (cos(0,0) = NaN ≥ t
-    //    is TRUE in both Spark and DuckDB), keeping the result set
-    //    identical to [[embeddingPairs]] for every threshold;
-    //  - across verified rep pairs, every cross-member pair shares the
-    //    representatives' exact cosine.
-    val intraOk = base
+    memberPairs(base, members, repPairs, threshold)
+  }
+
+  /** Collapse exact-duplicate embeddings on the two-hash [[groupKey]]
+    * FIRST: a boilerplate flood of k identical vectors is ONE
+    * representative through the candidate step and the verify — without
+    * this the flood's shared bucket or cell makes the candidate join
+    * quadratic in k. Returns groups (gk, gk2, gid, embedding), gid the
+    * smallest vec_id, and members (vec_id, gid); the keyed input feeds
+    * both, so it and they go through `persist`. */
+  private def embeddingGroups(embeddings: DataFrame,
+      persist: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val keyed = persist(embeddings.select(col("*") +: groupKey(col("embedding")): _*))
+    val groups = persist(keyed
+      .groupBy(col("gk"), col("gk2"))
+      .agg(min(col("vec_id")).as("gid"),
+        min_by(col("embedding"), col("vec_id")).as("embedding")))
+    val members = persist(keyed.select(col("vec_id"), col("gk"), col("gk2"))
+      .join(groups.select(col("gk"), col("gk2"), col("gid")), Seq("gk", "gk2"))
+      .select(col("vec_id"), col("gid")))
+    (groups, members)
+  }
+
+  /** Member pairs (a_id, b_id), a_id < b_id, of [[embeddingGroups]]
+    * from the verified representative pairs (a_gid, b_gid); `reps`
+    * carries (gid, embedding). Both expansions are OUTPUT-sized — the
+    * pair contract itself enumerates them — so the result is exactly
+    * the uncollapsed one (identical embeddings ⇒ identical buckets,
+    * cells and cosines):
+    *  - within a group every member pair scores cos(v, v) — evaluate
+    *    THE SAME predicate the all-pairs baseline would, rather than
+    *    special-casing: that inherits Spark's NaN-is-greatest
+    *    comparison semantics for zero-norm vectors (cos(0,0) = NaN ≥ t
+    *    is TRUE in both Spark and DuckDB), keeping the result set
+    *    identical to [[embeddingPairs]] for every threshold;
+    *  - across verified rep pairs, every cross-member pair shares the
+    *    representatives' exact cosine. */
+  private def memberPairs(reps: DataFrame, members: DataFrame, repPairs: DataFrame,
+                          threshold: Double): DataFrame = {
+    import graft.functions.VectorFunctions.cosine
+    val intraOk = reps
       .where(cosine(col("embedding"), col("embedding")) >= threshold)
       .select(col("gid"))
     val okMembers = members.join(intraOk, Seq("gid"), "left_semi")
@@ -1031,27 +976,10 @@ object Dedup {
   private[graft] def incrementalNearDupPlan(s: Materialize.Scope,
       docs: DataFrame, cutoff: Long, numHashes: Int = 128,
       bands: Int = 16, threshold: Double = 0.5): DataFrame = {
-    val rows = numHashes / bands
-    // persisted: the frame feeds BOTH the collapse and the final
-    // member fan-out — without the cache the corpus would be scanned,
-    // fanned out (a text-carrying exchange) and re-shingled twice
-    // (plan-audited: exactly one text shuffle in the whole query)
-    val withKey = s.persist(docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), (col("doc_id") >= cutoff).as("side"),
-        Hashing.hashedShingles3Col(TextFunctions.tokens(col("text"))).as("sh"))
-      .withColumn("gk", xxhash64(col("sh")))
-      .withColumn("gk2", xxhash64(lit(1L), col("sh"))))
-    val groups = s.persist(withKey
-      .groupBy(col("side"), col("gk"), col("gk2"))
-      .agg(min(col("doc_id")).as("gid"), count(lit(1)).as("m"),
-        min_by(col("sh"), col("doc_id")).as("sh"))
-      .withColumn("grp_ok", (size(col("sh")) > 0).cast("int")))
-    val bh = groups
-      .filter(col("grp_ok") === 1)
-      .withColumn("sig", Hashing.minhash(col("sh"), numHashes))
-      .select(col("side"), col("gid"),
-        posexplode(Hashing.bandHashes(col("sig"), bands, rows)).as(Seq("band", "bh")))
+    // plan-audited: exactly one text shuffle in the whole query
+    val (keyed, groups) =
+      shingleGroups(docs, numHashes, s.persist, Some(col("doc_id") >= cutoff))
+    val bh = bandRows(groups, numHashes, bands, col("side"))
     val candG = bh.filter(col("side")).select(col("gid").as("b_gid"), col("band"), col("bh"))
       .join(bh.filter(!col("side")).select(col("gid").as("s_gid"), col("band"), col("bh")),
         Seq("band", "bh"))
@@ -1070,7 +998,7 @@ object Dedup {
         col("i").cast("double") / (size(col("b_sh")) + size(col("s_sh")) - col("i")))
       .filter(col("j") >= threshold)
       .groupBy(col("b_gid")).agg(sum(col("s_m")).as("n_dup"))
-    withKey.filter(col("side")).select(col("doc_id"), col("gk"), col("gk2"))
+    keyed.filter(col("side")).select(col("doc_id"), col("gk"), col("gk2"))
       .join(groups.filter(col("side")).select(col("gk"), col("gk2"), col("gid")),
         Seq("gk", "gk2"))
       .join(perGroup.withColumnRenamed("b_gid", "gid"), Seq("gid"), "left")
@@ -1342,9 +1270,8 @@ object Dedup {
     * playbook), so the row hash-matches at any corpus size.
     *
     * EAGER like [[incrementalNearDup]] ([[Materialize.eager]]): the
-    * three cached frames (`keyed`/`groups`/`members`) feed both the
-    * collapse and the member fan-out and are released before the call
-    * returns its checkpoint.
+    * collapse's caches are released before the call returns its
+    * checkpoint.
     *
     * `clusterCap` (default OFF): arm the Σ(mode size²) escape hatch —
     * representative cells past the cap verify through scoped banding
@@ -1353,17 +1280,7 @@ object Dedup {
   def semanticPairsScaled(embeddings: DataFrame, threshold: Double,
                           iters: Int = 2, trainPct: Int = 100,
                           clusterCap: Long = Long.MaxValue): DataFrame = Materialize.eager { s =>
-    import graft.functions.VectorFunctions.cosine
-    val keyed = s.persist(embeddings
-      .withColumn("gk", xxhash64(col("embedding")))
-      .withColumn("gk2", xxhash64(lit(1L), col("embedding"))))
-    val groups = s.persist(keyed
-      .groupBy(col("gk"), col("gk2"))
-      .agg(min(col("vec_id")).as("gid"),
-        min_by(col("embedding"), col("vec_id")).as("embedding")))
-    val members = s.persist(keyed.select(col("vec_id"), col("gk"), col("gk2"))
-      .join(groups.select(col("gk"), col("gk2"), col("gid")), Seq("gk", "gk2"))
-      .select(col("vec_id"), col("gid")))
+    val (groups, members) = embeddingGroups(embeddings, s.persist)
     // the collapse count IS the geometry input (one job; the same
     // two-hash distinct a separate distinctEmbeddingCount would run)
     val k = Cluster.semanticK(groups.count())
@@ -1372,29 +1289,7 @@ object Dedup {
       (if (clusterCap == Long.MaxValue) semanticPairs(reps, k, iters, threshold, trainPct)
        else semanticPairsCapped(reps, k, iters, threshold, trainPct, clusterCap))
         .select(col("a_id").as("a_gid"), col("b_id").as("b_gid"))
-    // reconstitution contract shared with embeddingPairsLsh: intra
-    // pairs evaluate THE SAME cos(v,v) ≥ t predicate the all-pairs
-    // baseline would (NaN-is-greatest keeps zero-norm groups in, in
-    // both engines); inter pairs inherit the representatives' cosine
-    val intraOk = groups
-      .where(cosine(col("embedding"), col("embedding")) >= threshold)
-      .select(col("gid"))
-    val okMembers = members.join(intraOk, Seq("gid"), "left_semi")
-    val intra = okMembers.as("x")
-      .join(okMembers.as("y"),
-        col("x.gid") === col("y.gid") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
-    // member attaches SHUFFLE_HASH-pinned like the verify attaches
-    // (r18): the rep-pair stream is OUTPUT-sized (a dup flood makes
-    // it quadratic), so it must never be sorted — the id-only member
-    // side builds the hash table
-    val inter = repPairs
-      .join(members.select(col("gid").as("a_gid"), col("vec_id").as("x"))
-        .hint("SHUFFLE_HASH"), Seq("a_gid"))
-      .join(members.select(col("gid").as("b_gid"), col("vec_id").as("y"))
-        .hint("SHUFFLE_HASH"), Seq("b_gid"))
-      .select(least(col("x"), col("y")).as("a_id"), greatest(col("x"), col("y")).as("b_id"))
-    intra.unionAll(inter)
+    memberPairs(groups, members, repPairs, threshold)
   }
 
   /** Keeper selection per duplicate component: given `comps` from

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -381,27 +381,13 @@ object EventStreams {
                     watermark: String = "10 minutes",
                     stateTtlMs: Long = 2L * 3600 * 1000,
                     wrap: Boolean = true): DataFrame = {
-    require(dim >= 2 && dim <= 64, s"dHash width must fit a long, got $dim")
-    // same guard as Dedup.phashDedup: zero-width chunks would collapse
-    // banding into one universal bucket (quadratic self-pairing)
-    require(maxHamming + 2 <= dim,
-      s"need maxHamming + 2 <= dim for non-empty band chunks, got maxHamming=$maxHamming dim=$dim")
     val spark = media.sparkSession
     import spark.implicits._
     // the shared dHash kernel: 64-bit production shape is wrap=false
     // over dim+1 features; bits OR-assemble (Dedup.phashCol)
     val ph = graft.operators.Dedup.phashCol(dim, wrap)
-    val nChunks = maxHamming + 2
-    val bounds = (0 to nChunks).map(i => (dim * i) / nChunks)
-    def chunk(i: Int): Column = {
-      val lo = bounds(i); val w = bounds(i + 1) - lo
-      shiftrightunsigned(col("ph"), lo).bitwiseAND(lit((1L << w) - 1))
-    }
-    val pairIdx = for { i <- 0 until nChunks; j <- (i + 1) until nChunks } yield (i, j)
-    val bandArr = array(pairIdx.map { case (i, j) =>
-      val wj = bounds(j + 1) - bounds(j)
-      chunk(i) * lit(1L << wj) + chunk(j)
-    }: _*)
+    // the batch miner's banding, guard included (Hashing.chunkPairBands)
+    val bandArr = Hashing.chunkPairBandsCol(col("ph"), maxHamming, dim)
     media
       .withWatermark("ts", watermark)
       .select(col("media_id"), col("ts"), ph.as("ph"))

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -33,27 +34,47 @@ class DedupEquivalenceSpec extends AnyFunSuite with BeforeAndAfterEach {
 
   test("simhash banded n_dup equals brute-force all-pairs hamming count") {
     val docs = Tables.documents(spark, sf)
-    val maxH = 6
-    val out = Dedup.simhash(docs, maxH)
-      .select("doc_id", "sh64", "n_dup", "keep")
-      .as[(Long, Long, Long, Int)].collect()
-    val sh = out.map(r => r._1 -> r._2).toMap
-    // brute force over all pairs on the driver (500 docs → 125k pairs)
-    val ids = sh.keys.toArray.sorted
-    val bruteDup = collection.mutable.Map[Long, Long]().withDefaultValue(0L)
-    val bruteMinDup = collection.mutable.Map[Long, Long]()
-    for {
-      i <- ids.indices
-      j <- (i + 1) until ids.length
-      if java.lang.Long.bitCount(sh(ids(i)) ^ sh(ids(j))) <= maxH
-    } {
-      bruteDup(ids(i)) += 1; bruteDup(ids(j)) += 1
-      bruteMinDup.updateWith(ids(j))(m => Some(m.fold(ids(i))(math.min(_, ids(i)))))
-    }
-    assert(bruteDup.values.sum > 0, "driver data plants near-dup docs")
-    out.foreach { case (id, _, nDup, keep) =>
-      assert(nDup == bruteDup(id), s"doc $id: banded n_dup $nDup != brute ${bruteDup(id)}")
-      assert(keep == (if (bruteMinDup.contains(id)) 0 else 1), s"doc $id keep")
+    val decoded = graft.multimodal.Multimodal.decodeFeatures(
+      graft.multimodal.Multimodal.mediaFromDocuments(docs), dim = 65).toDF()
+      .select("media_id", "features")
+    // the decoded media hold no near-dups, so plant twins: raising
+    // feature k above its neighbours flips at most dHash bits k-1 and k
+    def bumped(ks: Column*): Column = transform(col("features"), (f, i) =>
+      when(ks.map(i === _).reduce(_ || _), lit(2.0f)).otherwise(f))
+    val id = col("media_id")
+    val media = decoded
+      .unionByName(decoded.where(id % 3 === 0)
+        .select((id + 1000000L).as("media_id"), bumped(id % 63 + 1).as("features")))
+      .unionByName(decoded.where(id % 7 === 0)
+        .select((id + 2000000L).as("media_id"),
+          bumped(id % 31 + 1, id % 31 + 33).as("features")))
+      .unionByName(decoded.where(id % 11 === 0)
+        .select((id + 3000000L).as("media_id"), col("features")))
+    // SimHash64 over text, and the production 64-bit dHash over media
+    val inputs = Seq(
+      ("simhash", 6, Dedup.simhash(docs, 6).select("doc_id", "sh64", "n_dup", "keep")),
+      ("phashDedup", 2, Dedup.phashDedup(media, dim = 64, maxHamming = 2, wrap = false)
+        .select("media_id", "ph", "n_dup", "keep")))
+    for ((name, maxH, frame) <- inputs) {
+      val out = frame.as[(Long, Long, Long, Int)].collect()
+      val sh = out.map(r => r._1 -> r._2).toMap
+      // brute force over all pairs in the test (≤ 800 rows → ≤ 320k pairs)
+      val ids = sh.keys.toArray.sorted
+      val bruteDup = collection.mutable.Map[Long, Long]().withDefaultValue(0L)
+      val bruteMinDup = collection.mutable.Map[Long, Long]()
+      for {
+        i <- ids.indices
+        j <- (i + 1) until ids.length
+        if java.lang.Long.bitCount(sh(ids(i)) ^ sh(ids(j))) <= maxH
+      } {
+        bruteDup(ids(i)) += 1; bruteDup(ids(j)) += 1
+        bruteMinDup.updateWith(ids(j))(m => Some(m.fold(ids(i))(math.min(_, ids(i)))))
+      }
+      assert(bruteDup.values.sum > 0, s"$name: the input holds near-dup rows")
+      out.foreach { case (id, _, nDup, keep) =>
+        assert(nDup == bruteDup(id), s"$name $id: banded n_dup $nDup != brute ${bruteDup(id)}")
+        assert(keep == (if (bruteMinDup.contains(id)) 0 else 1), s"$name $id keep")
+      }
     }
   }
 

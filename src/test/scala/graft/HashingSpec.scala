@@ -49,6 +49,49 @@ class HashingSpec extends AnyFunSuite {
     assert(Hashing.simhashFirstBand(0L, -1L, 6) == -1)
   }
 
+  test("chunk-pair band column agrees with simhashFirstBand (scalacheck, fixed seed)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.scalacheck.rng.Seed
+    // pairs of `w`-bit signatures: `b` flips either up to maxHamming
+    // distinct bits of `a` (near) or one bit in every chunk (damaged);
+    // chunk c spans bits [(w*c)/n, (w*(c+1))/n), n = maxHamming + 2
+    def genPairs(w: Int, maxH: Int): Gen[List[(Long, Long, Boolean)]] = {
+      val n = maxH + 2
+      val mask = if (w == 64) -1L else (1L << w) - 1
+      val near = for {
+        a <- Gen.long
+        k <- Gen.choose(0, maxH)
+        bits <- Gen.pick(k, 0 until w)
+      } yield (a & mask, bits.foldLeft(a & mask)((x, i) => x ^ (1L << i)), true)
+      val damaged = for {
+        a <- Gen.long
+        offs <- Gen.sequence[List[Int], Int]((0 until n).map { c =>
+          val (lo, hi) = ((w * c) / n, (w * (c + 1)) / n)
+          Gen.choose(lo, hi - 1)
+        })
+      } yield (a & mask, offs.foldLeft(a & mask)((x, i) => x ^ (1L << i)), false)
+      Gen.listOfN(40, Gen.oneOf(near, damaged))
+    }
+    for (w <- Seq(16, 64); maxH <- Seq(2, 6)) {
+      val p = Prop.forAll(genPairs(w, maxH)) { pairs =>
+        val sigs = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+        val bands = sigs.toDF("sig")
+          .select(col("sig"), Hashing.chunkPairBandsCol(col("sig"), maxH, w).as("b"))
+          .as[(Long, Seq[Long])].collect().toMap
+        pairs.forall { case (a, b, isNear) =>
+          val first = bands(a).zip(bands(b)).indexWhere(x => x._1 == x._2)
+          val kernel = Hashing.simhashFirstBand(a, b, maxH, w)
+          val ok = first == kernel && (if (isNear) first >= 0 else first == -1)
+          if (!ok) println(s"w=$w maxH=$maxH a=$a b=$b near=$isNear first=$first kernel=$kernel")
+          ok
+        }
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(4)
+        .withInitialSeed(Seed(20261019L)), p)
+      assert(res.passed, s"w=$w maxH=$maxH: ${res.status}")
+    }
+  }
+
   test("fingerprint distinguishes texts; codegen and interpreted agree") {
     val df = Seq((1L, "alpha beta"), (2L, "alpha betb")).toDF("id", "text")
     val viaPlan = df.select(col("id"), Hashing.fingerprint(col("text")).as("fp"))

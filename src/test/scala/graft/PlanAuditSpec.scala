@@ -579,4 +579,34 @@ class PlanAuditSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, s"release outside Materialize:\n${hits.mkString("\n")}")
   }
+
+  test("the near-dup group key and chunk-pair band geometry each live in one place") {
+    // structural guard: the two-hash exact-dup key is Dedup.groupKey,
+    // and the chunk-pair enumeration and chunk bounds are
+    // Hashing.chunkPairBands; a copy elsewhere could drift from the
+    // banding the first-band kernel and the DuckDB oracles follow.
+    // Comment lines are skipped.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val lines = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if { val c = line.split("//", 2)(0).trim
+              !c.startsWith("*") && !c.startsWith("/*") } =>
+            (f.getFileName.toString, s"$f:${i + 1}: ${line.trim}", line.split("//", 2)(0))
+        }
+      }
+    // (file name, file:line: code) of each code line matching `pattern`
+    def sites(pattern: String): Seq[(String, String)] =
+      lines.filter(l => pattern.r.findFirstIn(l._3).isDefined).map(l => (l._1, l._2))
+    val key = sites("""xxhash64\(lit\(1L\)""")
+    assert(key.map(_._1) == Seq("Dedup.scala"),
+      s"two-hash group key outside Dedup.groupKey:\n${key.map(_._2).mkString("\n")}")
+    val pairs = sites("""<-\s*\(?\w+\s*\+\s*1\)?\s*until\s+nChunks""")
+    assert(pairs.map(_._1) == Seq("Hashing.scala"),
+      s"chunk-pair enumeration outside Hashing.chunkPairBands:\n${pairs.map(_._2).mkString("\n")}")
+    val bounds = sites("""\)\s*/\s*nChunks""").filterNot(_._1 == "Hashing.scala")
+    assert(bounds.isEmpty, s"chunk bounds outside Hashing:\n${bounds.map(_._2).mkString("\n")}")
+  }
 }
