@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -95,73 +95,33 @@ object ChangelogStream {
     * `tombstoneTtlMs`: with 0 (default) a deleted entity's tombstone
     * stays in the state store forever — correct ordering defense, but
     * on a delete-heavy log the store grows with every entity that EVER
-    * existed, not the live set. With a positive TTL, a tombstone that
-    * sees no further changes for that long is REMOVED from the store
-    * (processing-time timeout): past the TTL a replayed/late position
-    * for the entity is treated as new, the same trade every CDC
-    * consumer makes when it compacts deletes. Live entities are never
-    * timed out — their state IS the view.
-    *
-    * Known gap (THIS processing-time variant only): a tombstone
-    * supplied via `initial` has no timer until its key next receives
-    * traffic — Spark seeds initial state without invoking the fold,
-    * and a wall-clock TTL cannot be applied retroactively the way
-    * [[entityStateEventTtl]] applies its event-time horizon. A
-    * snapshot carrying dead entities should drop them first
-    * (`filter(_.live)`), or accept that silent bootstrap tombstones
-    * persist until first touch; the event-time twin closes this gap
-    * properly and is the recommended bootstrap path. */
+    * existed, not the live set. With a positive TTL a tombstone that
+    * sees no further changes for that long leaves the store
+    * ([[KeyedFold.Idle]], armed on every tombstone touch and never on a
+    * live row — live state IS the view): past the TTL a replayed/late
+    * position for the entity is treated as new, the same trade every
+    * CDC consumer makes when it compacts deletes. A tombstone supplied
+    * via `initial` has no timer until its key next receives traffic (a
+    * wall-clock TTL cannot be applied retroactively); drop dead
+    * entities from the snapshot first (`filter(_.live)`), or use
+    * [[entityStateEventTtl]], which closes that gap. */
   def entityState(
       changes: Dataset[Change],
       initial: Option[Dataset[Entity]] = None,
       tombstoneTtlMs: Long = 0): Dataset[Entity] = {
     import changes.sparkSession.implicits._
-    val grouped = changes.groupByKey(c => (c.tbl, c.id))
-    val timeoutConf =
-      if (tombstoneTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-
-    def fold(key: (String, Long), rows: Iterator[Change], state: GroupState[Entity]): Iterator[Entity] = {
-      if (tombstoneTtlMs > 0 && state.hasTimedOut) {
-        // only tombstones register timeouts, so this is a quiet
-        // delete leaving the store — no output, downstream already saw
-        // the live=false row when the delete happened
-        state.remove()
-        return Iterator.empty
-      }
-      val cur = Entity.fold(key, state.getOption, rows)
-      cur.foreach { e =>
-        state.update(e)
-        // a group invocation clears any previously-registered timeout,
-        // so re-arm it on every tombstone touch and never on live rows
-        if (tombstoneTtlMs > 0 && !e.live) state.setTimeoutDuration(tombstoneTtlMs)
-      }
-      cur.iterator
-    }
-
-    initial match {
-      case Some(init) =>
-        grouped.flatMapGroupsWithState(
-          OutputMode.Update, timeoutConf,
-          init.groupByKey(e => (e.tbl, e.id)))(fold)
-      case None =>
-        grouped.flatMapGroupsWithState(OutputMode.Update, timeoutConf)(fold)
-    }
+    foldEntities(changes.groupByKey(c => (c.tbl, c.id)), initial,
+      KeyedFold.idle(tombstoneTtlMs))(identity, (_, _) => false)
   }
 
-  /** [[entityState]] with an EVENT-TIME tombstone TTL: a deleted
-    * entity's tombstone leaves the state store when the WATERMARK
-    * passes its position's time + `tombstoneTtlMs` — the B31c/B18
-    * convention (event-time timers never busy-spin an idle stream
-    * with empty micro-batches; the flip side is that a quiet stream
-    * stops advancing the watermark and tombstones then outlive the
-    * TTL until traffic resumes — for a compaction horizon that's the
-    * safe direction: no traffic means no late positions to defend
-    * against either). `pos` is interpreted as event-time MICROS —
-    * the changelog position is the log's own clock (Debezium's
+  /** [[entityState]] with an EVENT-TIME tombstone TTL
+    * ([[KeyedFold.EventTime]]): a deleted entity's tombstone leaves the
+    * state store when the WATERMARK passes its position's time +
+    * `tombstoneTtlMs`, so a replay of the same log expires the same
+    * tombstones. `pos` is interpreted as event-time MICROS — the
+    * changelog position is the log's own clock (Debezium's
     * `ts_ms`-derived positions, file offsets stamped at write);
-    * `watermark` is the lateness bound on it. Live entities never
-    * register timers — their state IS the view. Fold semantics are
+    * `watermark` is the lateness bound on it. Fold semantics are
     * identical to [[entityState]].
     *
     * Snapshot bootstrap (`initial`): seeded entities carry the
@@ -170,20 +130,16 @@ object ChangelogStream {
     * stream is additionally FLOORED at snapshot-position − delay
     * (pre-snapshot stragglers drop exactly as a continuous run's
     * watermark would have dropped them — see the floor comment in the
-    * body).
-    * Spark seeds initial state WITHOUT invoking the fold (timers can
-    * only be armed inside an invocation), so a seeded tombstone's
-    * removal timer arms lazily — and the fold therefore applies the
-    * TTL **retroactively at first touch**: a stored tombstone whose
-    * `pos + ttl` is already behind the watermark is treated as
-    * REMOVED before folding, which makes the observable state
-    * bit-identical to a from-scratch replay of snapshot+log
-    * (spec-pinned, the B7 convention). The residual difference is
-    * store RETENTION only: a seeded tombstone whose key never sees
-    * traffic occupies its store slot until touched — bounded by the
-    * snapshot's dead-entity count; a compaction-horizon bootstrap
-    * can still pre-drop them (`filter(_.live)`) when the snapshot is
-    * known compacted. */
+    * body). A seeded tombstone has no timer until first touch, so the
+    * fold applies the TTL **retroactively**: a stored tombstone whose
+    * `pos + ttl` is already behind the watermark is treated as REMOVED
+    * before folding, which makes the observable state bit-identical to
+    * a from-scratch replay of snapshot+log (spec-pinned, the B7
+    * convention). The residual difference is store RETENTION only: a
+    * seeded tombstone whose key never sees traffic occupies its store
+    * slot until touched — bounded by the snapshot's dead-entity count;
+    * a compaction-horizon bootstrap can still pre-drop them
+    * (`filter(_.live)`) when the snapshot is known compacted. */
   def entityStateEventTtl(
       changes: Dataset[Change],
       initial: Option[Dataset[Entity]] = None,
@@ -216,54 +172,41 @@ object ChangelogStream {
       .as[(Long, String, String, Long, Double, java.sql.Timestamp)]
       .withWatermark("ets", watermark)
       .groupByKey(c => (c._3, c._4))
-
-    def fold(key: (String, Long),
-             rows: Iterator[(Long, String, String, Long, Double, java.sql.Timestamp)],
-             state: GroupState[Entity]): Iterator[Entity] = {
-      if (state.hasTimedOut) {
-        // only tombstones register timers — a quiet delete leaving
-        // the store; downstream already saw the live=false row
-        state.remove()
-        return Iterator.empty
-      }
-      // retroactive TTL: a stored tombstone already past its horizon
-      // (snapshot-seeded keys whose timer never armed, or a timer that
-      // lost the race to same-batch data) is logically gone — treat
-      // the incoming rows as arriving at an empty key, exactly what a
-      // from-scratch replay would see. Makes expiry a pure function of
-      // (positions, watermark), not of timer scheduling.
-      val prior = state.getOption.filterNot(e =>
-        !e.live && e.lastPos / 1000L + tombstoneTtlMs <= state.getCurrentWatermarkMs())
-      val cur = Entity.fold(key, prior, rows.map(c => Change(c._1, c._2, c._3, c._4, c._5)))
-      cur.foreach { e =>
-        state.update(e)
-        // group invocation clears any prior timer; re-arm only on
-        // tombstones. The timestamp must sit at/after the current
-        // watermark or Spark rejects it — clamp for late stragglers.
-        if (!e.live) {
-          val wm = state.getCurrentWatermarkMs()
-          state.setTimeoutTimestamp(math.max(e.lastPos / 1000L + tombstoneTtlMs, wm + 1))
-        }
-      }
-      cur.iterator
-    }
-
-    initial match {
-      case Some(init) =>
-        grouped.flatMapGroupsWithState(
-          OutputMode.Update, GroupStateTimeout.EventTimeTimeout,
-          init.groupByKey(e => (e.tbl, e.id)))(fold)
-      case None =>
-        grouped.flatMapGroupsWithState(
-          OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(fold)
-    }
+    // retroactive TTL: a stored tombstone already past its horizon
+    // (snapshot-seeded keys whose timer never armed, or a timer that
+    // lost the race to same-batch data) is logically gone — the
+    // incoming rows arrive at an empty key, exactly what a
+    // from-scratch replay would see. Makes expiry a pure function of
+    // (positions, watermark), not of timer scheduling.
+    foldEntities(grouped, initial, KeyedFold.EventTime(tombstoneTtlMs))(
+      c => Change(c._1, c._2, c._3, c._4, c._5),
+      (e, state) => !e.live && e.lastPos / 1000L + tombstoneTtlMs <= state.getCurrentWatermarkMs())
   }
+
+  /** The entity fold of [[entityState]] and [[entityStateEventTtl]]:
+    * a prior entity for which `expired` holds counts as absent, and a
+    * tombstone arms `expiry` from its position (event-time millis). */
+  private def foldEntities[V](
+      grouped: KeyValueGroupedDataset[(String, Long), V], initial: Option[Dataset[Entity]],
+      expiry: KeyedFold.Expiry)(
+      change: V => Change, expired: (Entity, GroupState[Entity]) => Boolean)(
+      implicit key: Encoder[(String, Long)], entity: Encoder[Entity]): Dataset[Entity] =
+    KeyedFold(grouped, OutputMode.Update, expiry, initial.map(_.groupByKey(e => (e.tbl, e.id)))) {
+      (key: (String, Long), rows: Iterator[V], state: GroupState[Entity]) =>
+        val cur = Entity.fold(key, state.getOption.filterNot(expired(_, state)), rows.map(change))
+        cur.foreach { e =>
+          state.update(e)
+          if (!e.live) expiry.arm(state, e.lastPos / 1000L)
+        }
+        cur.iterator
+    }
 
   /** B4: transaction atomicity on a stream — buffer each tx, release
     * on commit, drop on rollback, strip the markers. With
     * `txTimeoutMs > 0` an open tx is dropped (like a never-committed
-    * tx) after that much processing-time silence; `0` disables
-    * timeouts (bounded test streams).
+    * tx) after that much processing-time silence
+    * ([[KeyedFold.Idle]], re-armed on every buffered call); `0`
+    * disables timeouts (bounded test streams).
     *
     * The map side of the `tx` exchange runs at most one task per task
     * slot (`defaultParallelism`): the input is coalesced first, with
@@ -276,34 +219,27 @@ object ChangelogStream {
     * is released sorted by `seq`. */
   def filterCommitted(events: Dataset[TxEvent], txTimeoutMs: Long = 60000): Dataset[Change] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (txTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
+    val expiry = KeyedFold.idle(txTimeoutMs)
+    val byTx = events
       .coalesce(events.sparkSession.sparkContext.defaultParallelism)
       .groupByKey(_.tx)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (tx: Long, rows: Iterator[TxEvent], state: GroupState[Seq[TxEvent]]) => {
-          if (txTimeoutMs > 0 && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val buf = state.getOption.getOrElse(Seq.empty) ++ rows
-            val committed = buf.exists(_.kind == "commit")
-            val rolledBack = buf.exists(_.kind == "rollback")
-            if (committed) {
-              state.remove()
-              buf.sortBy(_.seq).iterator.filter(_.kind == "data").map(_.change)
-            } else if (rolledBack) {
-              state.remove()
-              Iterator.empty
-            } else {
-              state.update(buf)
-              if (txTimeoutMs > 0) state.setTimeoutDuration(txTimeoutMs)
-              Iterator.empty
-            }
-          }
-        })
+    KeyedFold(byTx, OutputMode.Append, expiry) {
+      (tx: Long, rows: Iterator[TxEvent], state: GroupState[Seq[TxEvent]]) =>
+        val buf = state.getOption.getOrElse(Seq.empty) ++ rows
+        val committed = buf.exists(_.kind == "commit")
+        val rolledBack = buf.exists(_.kind == "rollback")
+        if (committed) {
+          state.remove()
+          buf.sortBy(_.seq).iterator.filter(_.kind == "data").map(_.change)
+        } else if (rolledBack) {
+          state.remove()
+          Iterator.empty
+        } else {
+          state.update(buf)
+          expiry.arm(state, 0L)
+          Iterator.empty
+        }
+    }
   }
 
   /** B2: resume-token stream — running max position (complete mode),

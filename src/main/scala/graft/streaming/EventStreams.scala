@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 
 import graft.functions.{Hashing, TextFunctions}
 
@@ -130,97 +130,63 @@ object EventStreams {
     * `idleTtlMs`: with 0 (default) a user's stage counter lives in the
     * state store forever — that IS the funnel's definition, but the
     * store then grows with every user that EVER appeared. A positive
-    * TTL drops users silent for that long (PROCESSING-time timeout,
-    * same trade as [[graft.streaming.ChangelogStream.entityState]]'s
-    * tombstone TTL): a churned user who returns past the horizon
-    * restarts the funnel from stage 0. Processing-time is the right
-    * default for a funnel TTL — the point is bounding the store when
-    * traffic STOPS, and an event-time timer can only fire while the
-    * watermark still advances — but it costs the idle-timer
-    * empty-micro-batch spin the B18 note documents;
-    * [[funnelStagesEventTtl]] is the event-time twin for deployments
-    * where the watermark is the only clock allowed to expire state.
-    * The per-user per-batch event list is materialized on the heap
-    * for the sort — fine at per-user volumes, which are
-    * human-action-sized by construction. */
+    * TTL drops users silent for that long ([[KeyedFold.Idle]], re-armed
+    * on every call): a churned user who returns past the horizon
+    * restarts the funnel from stage 0. Processing time bounds the store
+    * even when traffic STOPS; [[funnelStagesEventTtl]] is the
+    * event-time twin for deployments where the watermark is the only
+    * clock allowed to expire state. The per-user per-batch event list
+    * is materialized on the heap for the sort — fine at per-user
+    * volumes, which are human-action-sized by construction. */
   def funnelStages(events: Dataset[FunnelEvent],
                    stages: Seq[String] = Seq("view", "click", "purchase"),
                    idleTtlMs: Long = 0): Dataset[FunnelAdvance] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTtlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf)(
-        (user: Long, rows: Iterator[FunnelEvent], state: GroupState[Int]) => {
-          if (idleTtlMs > 0 && state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = Seq.newBuilder[FunnelAdvance]
-            var cur = state.getOption.getOrElse(0)
-            rows.toSeq.sortBy(e => (e.ts, e.etype)).foreach { e =>
-              if (cur < stages.length && e.etype == stages(cur)) {
-                cur += 1
-                out += FunnelAdvance(user, cur, e.ts)
-              }
-            }
-            state.update(cur)
-            if (idleTtlMs > 0) state.setTimeoutDuration(idleTtlMs)
-            out.result().iterator
-          }
-        })
+    foldFunnel(events.groupByKey(_.userId), stages, KeyedFold.idle(idleTtlMs))(identity)
   }
 
-  /** [[funnelStages]] with an EVENT-TIME idle TTL: a user's stage
-    * counter expires when the WATERMARK passes their last event's
-    * time + `idleTtlMs` — the B18 convention (event-time timers never
-    * busy-spin an idle stream with empty micro-batches; the flip side
-    * is that a fully quiet stream stops advancing the watermark and
-    * state then outlives the TTL until traffic resumes — for a funnel
-    * that's usually acceptable: no traffic, no store growth either).
-    * `watermark` is the lateness bound on `ts` (interpreted as
-    * event-time MICROS, the [[FunnelEvent]] contract); timer
-    * resolution is the watermark's granularity. Advance semantics are
-    * identical to [[funnelStages]]. */
+  /** [[funnelStages]] with an EVENT-TIME idle TTL
+    * ([[KeyedFold.EventTime]], re-armed from the newest event of each
+    * call): a user's stage counter expires when the WATERMARK passes
+    * their last event's time + `idleTtlMs`. `watermark` is the lateness
+    * bound on `ts` (interpreted as event-time MICROS, the
+    * [[FunnelEvent]] contract); timer resolution is the watermark's
+    * granularity. Advance semantics are identical to [[funnelStages]]. */
   def funnelStagesEventTtl(events: Dataset[FunnelEvent],
                            stages: Seq[String] = Seq("view", "click", "purchase"),
                            idleTtlMs: Long = 3600000L,
                            watermark: String = "10 minutes"): Dataset[FunnelAdvance] = {
     require(idleTtlMs > 0, s"funnelStagesEventTtl: idleTtlMs=$idleTtlMs must be > 0")
     import events.sparkSession.implicits._
-    events
+    val grouped = events
       .withColumn("ets", timestamp_micros(col("ts")))
       .withWatermark("ets", watermark)
       .as[(Long, String, Long, java.sql.Timestamp)]
       .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        (user: Long, rows: Iterator[(Long, String, Long, java.sql.Timestamp)],
-         state: GroupState[Int]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val out = Seq.newBuilder[FunnelAdvance]
-            var cur = state.getOption.getOrElse(0)
-            var maxTsMs = Long.MinValue
-            rows.toSeq.sortBy(e => (e._3, e._2)).foreach { e =>
-              if (cur < stages.length && e._2 == stages(cur)) {
-                cur += 1
-                out += FunnelAdvance(user, cur, e._3)
-              }
-              maxTsMs = math.max(maxTsMs, e._3 / 1000L)
-            }
-            state.update(cur)
-            // expire when the watermark passes last-seen + TTL; the
-            // timestamp must sit at/after the current watermark or
-            // Spark rejects it — clamp for deeply late stragglers
-            val wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(math.max(maxTsMs + idleTtlMs, wm + 1))
-            out.result().iterator
-          }
-        })
+    foldFunnel(grouped, stages, KeyedFold.EventTime(idleTtlMs))(e => FunnelEvent(e._1, e._2, e._3))
   }
+
+  /** The stage fold of [[funnelStages]] and [[funnelStagesEventTtl]];
+    * every call re-arms `expiry` from its newest event (millis). */
+  private def foldFunnel[V](grouped: KeyValueGroupedDataset[Long, V], stages: Seq[String],
+                            expiry: KeyedFold.Expiry)(event: V => FunnelEvent)(
+      implicit intEnc: Encoder[Int], advEnc: Encoder[FunnelAdvance]): Dataset[FunnelAdvance] =
+    KeyedFold(grouped, OutputMode.Append, expiry) {
+      (user: Long, rows: Iterator[V], state: GroupState[Int]) =>
+        val out = Seq.newBuilder[FunnelAdvance]
+        var cur = state.getOption.getOrElse(0)
+        var maxTsMs = Long.MinValue
+        rows.map(event).toSeq.sortBy(e => (e.ts, e.etype)).foreach { e =>
+          if (cur < stages.length && e.etype == stages(cur)) {
+            cur += 1
+            out += FunnelAdvance(user, cur, e.ts)
+          }
+          maxTsMs = math.max(maxTsMs, e.ts / 1000L)
+        }
+        state.update(cur)
+        expiry.arm(state, maxTsMs)
+        out.result().iterator
+    }
 
   /** B30: windowed corpus quantiles — the live twin of the batch
     * quantile sketch (`group_quantiles`/`corpus_quantiles`): per
@@ -370,8 +336,7 @@ object EventStreams {
     * owner's hash — so every later hit is emitted WITH its exact
     * hamming distance to the owner (verified in-flight; the batch
     * twin's bit_count verify, folded into the stateful op). State per
-    * bucket is 16 bytes and expires `stateTtlMs` past the bucket's
-    * newest event time, exactly the B18 retention contract.
+    * bucket is 16 bytes under [[nearDupBandHits]]'s event-time TTL.
     *
     * Input columns: (media_id, ts, features). Output: one
     * [[PhashHit]] per (row, band) — `hamming ≤ maxHamming` rows are
@@ -388,30 +353,15 @@ object EventStreams {
     val ph = graft.operators.Dedup.phashCol(dim, wrap)
     // the batch miner's banding, guard included (Hashing.chunkPairBands)
     val bandArr = Hashing.chunkPairBandsCol(col("ph"), maxHamming, dim)
-    media
+    val rows = media
       .withWatermark("ts", watermark)
       .select(col("media_id"), col("ts"), ph.as("ph"))
       .select(col("media_id"), col("ts"), col("ph"),
         posexplode(bandArr).as(Seq("band", "bh")))
       .as[(Long, java.sql.Timestamp, Long, Int, Long)]
-      .groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState[(Long, Long), PhashHit](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, Long), it: Iterator[(Long, java.sql.Timestamp, Long, Int, Long)],
-         state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val rowsArr = it.toArray
-            val first = rowsArr.minBy(_._1)
-            val (owner, ownerPh) = state.getOption.getOrElse((first._1, first._3))
-            if (!state.exists) state.update((owner, ownerPh))
-            val newest = rowsArr.map(_._2.getTime).max
-            state.setTimeoutTimestamp(
-              math.max(newest + stateTtlMs, state.getCurrentWatermarkMs() + 1))
-            rowsArr.iterator.map(r =>
-              PhashHit(r._1, key._1, owner, java.lang.Long.bitCount(r._3 ^ ownerPh)))
-          }
-      }.toDF()
+    bandOwners(rows, stateTtlMs)(r => (r._4, r._5), _._1, _._2.getTime, r => (r._1, r._3)) {
+      (r, owner) => PhashHit(r._1, r._4, owner._1, java.lang.Long.bitCount(r._3 ^ owner._2))
+    }
   }
 
   /** One embedding band hit: `vec_id` collided with bucket `owner` in
@@ -450,10 +400,10 @@ object EventStreams {
     * the B18c in-flight-verify pattern over embeddings.
     *
     * State per bucket is 8 B + one dim-float vector (dim 64 → ~264 B)
-    * — bounded per OCCUPIED bucket, never per row, expiring
-    * `stateTtlMs` past the bucket's newest event time (the B18
-    * retention contract: a near-dup arriving later than the TTL may
-    * pass, and the batch pass downstream catches it). Geometry is a
+    * — bounded per OCCUPIED bucket, never per row, under
+    * [[nearDupBandHits]]'s event-time TTL (a near-dup arriving later
+    * than the TTL may pass, and the batch pass downstream catches it).
+    * Geometry is a
     * PARAMETER, not measured — a stream has no corpus cardinality to
     * pre-measure; size it at deploy time from the expected resident
     * cardinality with [[graft.operators.Dedup.lshGeometry]] (the 8×6
@@ -471,30 +421,15 @@ object EventStreams {
     val spark = vecs.sparkSession
     import spark.implicits._
     val planes = graft.operators.Ann.hyperplanes(bands * planesPerBand, dim)
-    vecs
+    val rows = vecs
       .withWatermark("ts", watermark)
       .select(col("vec_id"), col("ts"), col("embedding"),
         posexplode(graft.functions.VectorFunctions.signBuckets(
           col("embedding"), planes, bands, planesPerBand)).as(Seq("band", "bk")))
       .as[(Long, java.sql.Timestamp, Seq[Float], Int, Long)]
-      .groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState[(Long, Seq[Float]), EmbHit](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, Long), it: Iterator[(Long, java.sql.Timestamp, Seq[Float], Int, Long)],
-         state: GroupState[(Long, Seq[Float])]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val rowsArr = it.toArray
-            val first = rowsArr.minBy(_._1)
-            val (owner, ownerEmb) = state.getOption.getOrElse((first._1, first._3))
-            if (!state.exists) state.update((owner, ownerEmb))
-            val newest = rowsArr.map(_._2.getTime).max
-            state.setTimeoutTimestamp(
-              math.max(newest + stateTtlMs, state.getCurrentWatermarkMs() + 1))
-            rowsArr.iterator.map(r =>
-              EmbHit(r._1, key._1, owner, cosineOf(r._3, ownerEmb)))
-          }
-      }.toDF()
+    bandOwners(rows, stateTtlMs)(r => (r._4, r._5), _._1, _._2.getTime, r => (r._1, r._3)) {
+      (r, owner) => EmbHit(r._1, r._4, owner._1, cosineOf(r._3, owner._2))
+    }
   }
 
   /** Streaming NEAR-duplicate detection (SURVEY §2 B18): the
@@ -507,15 +442,13 @@ object EventStreams {
     *
     * State discipline at scale: an entry is (16 B key, 8 B owner) per
     * DISTINCT occupied bucket — never text, signatures, or shingles
-    * (the same body-never-shuffles rule as everywhere else). An
-    * EVENT-time TTL (`stateTtl` past the `ts` watermark) expires
-    * buckets not re-hit, bounding the store the same way
-    * [[dedupDocs]]'s watermark does — a near-dup arriving later than
-    * the TTL may pass, and the batch MinHash pass downstream catches
-    * it. Event-time (not processing-time) timeouts matter
-    * operationally too: they fire as the WATERMARK advances, so an
-    * idle stream does not busy-spin no-data micro-batches purging
-    * state (processing-time timeouts schedule extra batches).
+    * (the same body-never-shuffles rule as everywhere else). Buckets
+    * expire under [[KeyedFold.EventTime]]: `stateTtlMs` past the
+    * newest event time of the bucket's latest hit, on the `ts`
+    * watermark, bounding the store the same way [[dedupDocs]]'s
+    * watermark does — a near-dup arriving later than the TTL may pass,
+    * and the batch MinHash pass downstream catches it. The three
+    * `*BandHits` miners share this retention contract ([[bandOwners]]).
     *
     * Emits band-level hits (Update mode); roll up per doc with
     * [[nearDupSink]]. Docs with fewer than 3 tokens have no shingles
@@ -539,25 +472,30 @@ object EventStreams {
         posexplode(Hashing.bandHashes(Hashing.minhash(col("sh"), numHashes),
           bands, rows)).as(Seq("band", "bh")))
       .as[(Long, java.sql.Timestamp, Int, Long)]
-    exploded.groupByKey(r => (r._3, r._4))
-      .flatMapGroupsWithState[Long, BandHit](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, Long), it: Iterator[(Long, java.sql.Timestamp, Int, Long)],
-         state: GroupState[Long]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val rowsArr = it.toArray
-            val ids = rowsArr.map(_._1).sorted
-            val owner = state.getOption.getOrElse(ids.head)
-            if (!state.exists) state.update(owner)
-            // expire this bucket stateTtl past the newest hit's event
-            // time (never earlier than the current watermark)
-            val newest = rowsArr.map(_._2.getTime).max
-            state.setTimeoutTimestamp(
-              math.max(newest + stateTtlMs, state.getCurrentWatermarkMs() + 1))
-            ids.iterator.map(d => BandHit(d, key._1, owner))
-          }
-      }.toDF()
+    bandOwners(exploded, stateTtlMs)(r => (r._3, r._4), _._1, _._2.getTime, _._1) {
+      (r, owner) => BandHit(r._1, r._3, owner)
+    }
+  }
+
+  /** The bucket-owner fold of the `*BandHits` miners: rows are grouped
+    * by (band, bucket), the lowest `id` of the first batch that reaches
+    * a bucket claims it (`claim` is the stored owner state), and every
+    * row is reported against that owner by `hit`, which may verify the
+    * row against the owner's state. Each call re-arms the bucket's
+    * event-time timer from the newest `tsMs` of its rows. */
+  private def bandOwners[R, S: Encoder, H: Encoder](rows: Dataset[R], stateTtlMs: Long)(
+      bucket: R => (Int, Long), id: R => Long, tsMs: R => Long, claim: R => S)(
+      hit: (R, S) => H): DataFrame = {
+    import rows.sparkSession.implicits._
+    val expiry = KeyedFold.EventTime(stateTtlMs)
+    KeyedFold(rows.groupByKey(bucket), OutputMode.Update, expiry) {
+      (_: (Int, Long), it: Iterator[R], state: GroupState[S]) =>
+        val batch = it.toIndexedSeq
+        if (!state.exists) state.update(claim(batch.minBy(id)))
+        val owner = state.get
+        expiry.arm(state, batch.iterator.map(tsMs).max)
+        batch.iterator.map(hit(_, owner))
+    }.toDF()
   }
 
   /** Per-doc rollup of [[nearDupBandHits]]: one row per doc per

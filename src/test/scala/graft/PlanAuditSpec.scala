@@ -556,28 +556,46 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("caches and checkpoints are released only through Materialize") {
-    // structural guard: an operator that frees its own intermediates
-    // does it through Materialize's scope, never by hand. Comments may
-    // name the calls; code outside Materialize.scala and the Spark
-    // bridge may not.
+  /** `file:line: code` of each code line under src/main/scala that
+    * contains one of `banned`, in files `exempt` does not match.
+    * Comments may name the calls. */
+  private def bannedCodeSites(banned: Seq[String])(exempt: java.nio.file.Path => Boolean): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(f => f.getFileName.toString == "Materialize.scala" ||
-        f.toString.contains("/graftbridge/"))
+      .filterNot(exempt)
       .toSeq
     assert(files.exists(_.getFileName.toString == "Dedup.scala"), s"no sources under $root")
-    val banned = Seq("unpersist(", "localCheckpoint(", "RddBridge.")
-    val hits = for {
+    for {
       f <- files
       (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
       code = line.split("//", 2)(0).trim
       if !code.startsWith("*") && !code.startsWith("/*")
       if banned.exists(code.contains)
     } yield s"$f:${i + 1}: ${line.trim}"
+  }
+
+  test("caches and checkpoints are released only through Materialize") {
+    // structural guard: an operator that frees its own intermediates
+    // does it through Materialize's scope, never by hand. Code outside
+    // Materialize.scala and the Spark bridge may not name the calls.
+    val hits = bannedCodeSites(Seq("unpersist(", "localCheckpoint(", "RddBridge.")) { f =>
+      f.getFileName.toString == "Materialize.scala" || f.toString.contains("/graftbridge/")
+    }
     assert(hits.isEmpty, s"release outside Materialize:\n${hits.mkString("\n")}")
+  }
+
+  test("keyed-state timeouts are chosen, armed and fired only in KeyedFold") {
+    // structural guard: the expiry protocol of the stateful stream
+    // folds (timeout mode, silent removal of a timed-out key, re-arm
+    // after each group call, the watermark + 1 clamp) is written once;
+    // a fold that arms or checks a timer by hand can drift from it
+    val hits = bannedCodeSites(Seq("ProcessingTimeTimeout", "EventTimeTimeout",
+        "setTimeoutDuration", "setTimeoutTimestamp", "hasTimedOut")) {
+      _.getFileName.toString == "KeyedFold.scala"
+    }
+    assert(hits.isEmpty, s"keyed-state expiry outside KeyedFold:\n${hits.mkString("\n")}")
   }
 
   test("the near-dup group key and chunk-pair band geometry each live in one place") {

@@ -168,6 +168,41 @@ class RocksDbStateSpec extends AnyFunSuite {
     }
   }
 
+  test("embeddingBandHits owner vectors survive a RocksDB restart (cosine vs pre-restart owner)") {
+    implicit val sqlCtx = spark.sqlContext
+    withRocksDb { ckpt =>
+      val in = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long, Double)]()
+      def start() = EventStreams.embeddingBandHits(
+          in.toDF().toDF("vec_id", "ts", "embedding"))
+        .writeStream.foreachBatch {
+          (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.collect().foreach(r => out.add((r.getLong(0), r.getLong(2), r.getDouble(3))))
+        }
+        .option("checkpointLocation", ckpt).outputMode("update").start()
+
+      def t(ms: Long) = new java.sql.Timestamp(1700000000000L + ms)
+      val v = (0 until 64).map(i => ((i * 37 % 19) - 9) / 9.0f)
+      val q1 = start()
+      in.addData((1L, t(0), v))
+      q1.processAllAvailable()
+      assertRocksDb(q1)
+      q1.stop()
+
+      // restart: an identical vector lands in every bucket of vec 1 and
+      // is verified against the owner's STORED embedding — a reset store
+      // would make vec 2 its own owner
+      val q2 = start()
+      in.addData((2L, t(1), v))
+      q2.processAllAvailable(); q2.stop()
+
+      import scala.jdk.CollectionConverters._
+      val hits2 = out.asScala.filter(_._1 == 2L).toSeq
+      assert(hits2.size == 8 && hits2.forall(h => h._2 == 1L && (h._3 - 1.0).abs < 1e-12),
+        s"vec 2 must match pre-restart owner 1 at cosine 1 in all 8 bands, got $hits2")
+    }
+  }
+
   test("funnelStages per-user counters survive a RocksDB restart") {
     implicit val sqlCtx = spark.sqlContext
     withRocksDb { ckpt =>

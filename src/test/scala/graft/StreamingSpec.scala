@@ -632,6 +632,40 @@ class StreamingSpec extends AnyFunSuite {
     assert(m(10L) == false && m(50L) == false && m(51L) == false)
     assert(m(60L) == false,
       "buckets idle past the TTL are gone — the late dup re-claims them (batch pass catches it)")
+
+    // the same scenario through the perceptual and the semantic owner:
+    // fillers that share no bucket with the base advance the watermark,
+    // the base's idle buckets time out, and its late exact copy
+    // re-claims every band it lands in
+    def lateCopyOwners(name: String, base: Array[Float], filler: Array[Float])(
+        hits: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] = {
+      val vin = MemoryStream[(Long, java.sql.Timestamp, Array[Float])]
+      val vq = hits(vin.toDF())
+        .writeStream.format("memory").queryName(name).outputMode("update").start()
+      for ((id, sec, v) <- Seq((10L, 100L, base), (50L, 400L, filler), (51L, 401L, filler),
+                               (60L, 500L, base))) {
+        vin.addData((id, new java.sql.Timestamp(sec * 1000), v)); vq.processAllAvailable()
+      }
+      vq.stop()
+      spark.table(name).collect().toSeq.groupBy(_.getLong(0))
+        .map { case (id, rs) => (id, rs.map(_.getLong(2)).toSet) }
+    }
+    val ramp = Array.tabulate(16)(i => if (i % 2 == 0) 0.1f else 0.9f)
+    val phashOwners = lateCopyOwners("b18b_phash", ramp, ramp.map(1.0f - _)) { df =>
+      EventStreams.phashBandHits(df.toDF("media_id", "ts", "features"),
+        watermark = "1 second", stateTtlMs = 60000L)
+    }
+    val emb = Array.tabulate(64)(i => ((i * 37 % 19) - 9) / 9.0f)
+    val embOwners = lateCopyOwners("b18b_emb", emb, emb.map(-_)) { df =>
+      EventStreams.embeddingBandHits(df.toDF("vec_id", "ts", "embedding"),
+        watermark = "1 second", stateTtlMs = 60000L)
+    }
+    for ((owners, miner) <- Seq((phashOwners, "phashBandHits"), (embOwners, "embeddingBandHits"))) {
+      assert(owners(10L) == Set(10L) && owners(50L) == Set(50L) && owners(51L) == Set(50L),
+        s"$miner: base and fillers own disjoint buckets, got $owners")
+      assert(owners(60L) == Set(60L),
+        s"$miner: the late copy re-claims the expired buckets, got ${owners(60L)}")
+    }
   }
 
   test("B20: windowed distinct sketch streams — below-k windows exact, agg state crosses batches") {
