@@ -9,11 +9,11 @@ Default threshold 2.0 (a >2× rate drop at the same resident-key count
 is a structural regression, not host noise — the committed artifacts
 show <1.3× round-to-round variance).
 
-Ops present only in NEW are reported but never fail the gate (new
-instruments appear); none may silently vanish — a MISSING op that
-existed in OLD fails, and so does a (op, size) cell present in OLD
-but absent from NEW (r16 advisor: evidence must not silently narrow
-at either granularity).
+The two artifacts must cover the same ops and cells. An op or an
+(op, size) cell present in OLD but absent from NEW fails (evidence must
+not silently narrow), and so does one present only in NEW: a gate with
+no baseline for an op cannot see that op slow down. A new instrument
+lands together with a baseline regenerated to include it.
 """
 import sys, json
 
@@ -38,8 +38,10 @@ for op, sizes in sorted(old["ops"].items()):
               f"({ratio:.2f}x slower) {flag}")
         if ratio > threshold:
             fails.append(f"{op}@{size}: {ratio:.2f}x rate drop (>{threshold}x)")
-for op in sorted(set(new["ops"]) - set(old["ops"])):
-    print(f"  {op}: new op, no baseline")
+for op, sizes in sorted(new["ops"].items()):
+    for size in sorted(set(sizes) - set(old["ops"].get(op, {})), key=int):
+        fails.append(f"{op}@{size}: measured in {new_p} but NO BASELINE in "
+                     f"{old_p} (regenerate the baseline to include it)")
 
 if fails:
     print("\nREGRESSIONS:")

@@ -302,21 +302,6 @@ object EventStreams {
       .drop(v("user_id"))
   }
 
-  /** Streaming dead-letter routing (SURVEY §2 B17): the live twin of
-    * the batch `cdc_dlq` query — the reference's `:error` row type on
-    * the streaming path (`src/dumpr/stream.clj:196-210` emits error
-    * rows inline when schema load/validation fails, so one poison row
-    * never kills the stream).
-    *
-    * Each micro-batch is split ONCE: rows failing validation land in
-    * the DLQ sink carrying their reason; everything else normalizes
-    * onward. Both sinks are replay-idempotent without any table
-    * format: a batch OVERWRITES its own deterministic `batch=<id>`
-    * subdirectory, so a foreachBatch replay after a crash rewrites
-    * identical files instead of appending duplicates (same convention
-    * as [[UpsertSink]]'s version directories). The split is two
-    * filters over one persisted batch — the batch is scanned once
-    * from the source, not twice. */
   /** One LSH band-bucket hit: `doc_id` landed in a bucket owned by
     * `owner` (owner == doc_id means this doc claimed the bucket). */
   case class BandHit(doc_id: Long, band: Int, owner: Long)
@@ -513,6 +498,21 @@ object EventStreams {
         ()
     }
 
+  /** Streaming dead-letter routing (SURVEY §2 B17): the live twin of
+    * the batch `cdc_dlq` query — the reference's `:error` row type on
+    * the streaming path (`src/dumpr/stream.clj:196-210` emits error
+    * rows inline when schema load/validation fails, so one poison row
+    * never kills the stream).
+    *
+    * Each micro-batch is split ONCE: rows failing validation land in
+    * the DLQ sink carrying their reason; everything else normalizes
+    * onward. Both sinks are replay-idempotent without any table
+    * format: a batch OVERWRITES its own deterministic `batch=<id>`
+    * subdirectory, so a foreachBatch replay after a crash rewrites
+    * identical files instead of appending duplicates (same convention
+    * as [[UpsertSink]]'s version directories). The split is two
+    * filters over one persisted batch — the batch is scanned once
+    * from the source, not twice. */
   def routeWithDlq(events: DataFrame, goodDir: String, dlqDir: String):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -407,16 +407,20 @@ private[graft] object ViewLayout {
     * all folded into the buckets they touch once they outgrow the base
     * in bytes or in files. A manifest with no `-1` line is the
     * copy-on-write layout. Measured on a 12,500-key, 64-bucket view
-    * (`local[4]`, 4 cores, a 900-change batch, medians of 5): keeping
-    * a delta publishes in 0.21-0.28 s (1 job) whatever the batch
-    * touches; folding it at once takes 0.73-0.78 s (5 jobs) for 1-4
-    * buckets up to 1.42 s for 64; a point read beside one live delta
-    * takes 0.28-0.33 s (2 jobs) against 0.15-0.17 s (1 job), and a
-    * range read is faster beside it (0.17-0.19 s against 0.24-0.31 s).
-    * So folding at once pays only for a version that takes more than
-    * ~3 point reads (1 bucket touched) to ~10 (64 buckets): the
-    * numBuckets/2 bound keeps just the smallest batches copy-on-write
-    * and is not a cost crossing.
+    * with `lastPos` zone maps (`local[4]`, 4 cores, a 900-change batch,
+    * medians of 5 after a warm-up, `file://` through
+    * [[graft.sources.LocalFs]]): keeping a 300-key delta publishes in
+    * 0.19 s (1 job, as `ViewReadSpec` pins); folding a delta at once
+    * takes 0.62 s for 1 bucket, 0.65 s for 4 and 0.84 s for 32; a
+    * point read beside one live delta takes 0.23 s against 0.12 s
+    * after a fold, and a range read is faster beside it (0.14 s
+    * against 0.20 s). With Hadoop's stock local file system the same
+    * runs gave 0.20 s to keep and 0.61, 0.68 and 1.02 s to fold; an
+    * earlier measurement, also before `LocalFs`, folded 64 buckets in
+    * 1.42 s. So folding at once pays only for a version that takes
+    * more than ~4 point reads (1 bucket touched) to ~6 (32 buckets):
+    * the numBuckets/2 bound keeps just the smallest batches
+    * copy-on-write and is not a cost crossing.
     *
     * The protocol:
     *  1. a `batchId` that already published the current version returns
