@@ -2,7 +2,6 @@ package graft.sources
 
 import java.net.URI
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
@@ -14,8 +13,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * With no native Hadoop library, the stock `RawLocalFileSystem` forks
   * `chmod` for every permission it sets (each created file and dir)
   * and `readlink` for every link-status query (each `FileContext`
-  * rename). [[Raw]] does both in the JVM and keeps the stock path for
-  * what NIO cannot express: a sticky bit, and a path that IS a symlink
+  * rename). [[Raw]] does both in the JVM: it sets the whole mode,
+  * sticky bit included, with one `chmod(2)` through NIO's `unix` view,
+  * and keeps the stock path only for a path that IS a symlink
   * (dangling or not). [[Checksummed]] is its `FileSystem` form
   * (`fs.file.impl`) and [[Context]] its `FileContext` form
   * (`fs.AbstractFileSystem.file.impl`, used by Spark's streaming
@@ -30,10 +30,7 @@ object LocalFs {
 
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =
-      if (permission.getStickyBit) super.setPermission(p, permission)
-      else Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(
-        permission.getUserAction.SYMBOL + permission.getGroupAction.SYMBOL +
-          permission.getOtherAction.SYMBOL))
+      Files.setAttribute(pathToFile(p).toPath, "unix:mode", Int.box(permission.toShort & 0xfff))
 
     override def getFileLinkStatus(f: Path): FileStatus =
       if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)

@@ -414,12 +414,9 @@ private[graft] object ViewLayout {
     * takes 0.62 s for 1 bucket, 0.65 s for 4 and 0.84 s for 32; a
     * point read beside one live delta takes 0.23 s against 0.12 s
     * after a fold, and a range read is faster beside it (0.14 s
-    * against 0.20 s). With Hadoop's stock local file system the same
-    * runs gave 0.20 s to keep and 0.61, 0.68 and 1.02 s to fold; an
-    * earlier measurement, also before `LocalFs`, folded 64 buckets in
-    * 1.42 s. So folding at once pays only for a version that takes
-    * more than ~4 point reads (1 bucket touched) to ~6 (32 buckets):
-    * the numBuckets/2 bound keeps just the smallest batches
+    * against 0.20 s). So folding at once pays only for a version that
+    * takes more than ~4 point reads (1 bucket touched) to ~6 (32
+    * buckets): the numBuckets/2 bound keeps just the smallest batches
     * copy-on-write and is not a cost crossing.
     *
     * The protocol:
