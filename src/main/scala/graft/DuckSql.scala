@@ -937,27 +937,6 @@ object DuckSql {
        |  FROM scored)
        |SELECT q_id, n_id, rnk FROM r WHERE rnk <= $k""".stripMargin
 
-  /** Oracle for `ann_lsh`: sign-bucket from literal hyperplanes (same
-    * deterministic planes as [[graft.operators.Ann.hyperplanes]]),
-    * bucket equi-join, cosine top-k. */
-  def annLshOracle(planes: Array[Array[Double]], nQueries: Int, k: Int): String = {
-    val bucketExpr = planes.zipWithIndex
-      .map { case (p, i) => s"(CASE WHEN ${dotLit(p)} > 0 THEN ${1 << i} ELSE 0 END)" }
-      .mkString(" + ")
-    s"""WITH e AS (SELECT vec_id, embedding, $bucketExpr AS bucket FROM embeddings),
-       |p AS (
-       |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-       |         list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-       |                                CAST(c.embedding AS DOUBLE[])) AS cos
-       |  FROM e q JOIN e c ON q.bucket = c.bucket
-       |  WHERE q.vec_id < $nQueries AND c.vec_id <> q.vec_id),
-       |r AS (
-       |  SELECT q_id, n_id,
-       |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS INT) AS rnk
-       |  FROM p)
-       |SELECT q_id, n_id, rnk FROM r WHERE rnk <= $k""".stripMargin
-  }
-
   /** Oracle for `ann_lsh` (adaptive-geometry form): replay of
     * [[graft.operators.Ann.lshTopKBanded]] — per-band sign buckets
     * from the same literal hyperplanes, asymmetric band-bucket join

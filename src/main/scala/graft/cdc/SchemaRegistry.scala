@@ -1,16 +1,20 @@
 package graft.cdc
 
+import java.nio.ByteBuffer
+import java.nio.charset.{CharacterCodingException, Charset, CharsetDecoder, CodingErrorAction,
+  StandardCharsets}
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression,
+  TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.{toColumn, toExpr}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType,
-  StringType, StructField, StructType}
+  MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Versioned table-schema registry — the Spark-native analogue of the
@@ -33,7 +37,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    driver state.
   *  - `convert-with-schema` (`stream.clj:214-268`) zips raw row values
   *    with column names and decodes text-typed columns per their
-  *    column charset → [[convertWithSchema]].
+  *    column charset → [[convertWithSchema]], one codegen'd kernel.
+  *  - Beyond the reference, [[migrateToLatest]] projects converted
+  *    rows onto their table's latest schema.
   *
   * Scale shape: the registry is a control relation (tables × schema
   * versions — thousands of rows, not billions). [[attach]] broadcasts
@@ -47,15 +53,12 @@ object SchemaRegistry {
     * (`table_schema.clj:7-10`): name, type keyword, charset. */
   case class ColSpec(name: String, ctype: String, charset: String = null)
 
-  private val TextTypes = Seq("tinytext", "text", "mediumtext", "longtext", "varchar", "char")
-
   /** Native synthesis of the demo's raw row values: `n` binary cells
     * of `tbl:id:ordinal` UTF-8 bytes, one tight JVM loop per row
     * (r6-ADVICE: codegen the synthesized values — the interpreted
     * `transform(sequence, encode∘concat_ws)` lambda stack was the
-    * dominant cost of `cdc_schema_migrate`). Bit-identical output to
-    * that HOF pipeline; the downstream per-charset DECODE still runs
-    * on the engine path. */
+    * dominant cost of `cdc_schema_migrate`). The decode of these bytes
+    * is [[convertWithSchema]]'s, as for any other raw row. */
   case class SynthVals(first: Expression, second: Expression, third: Expression)
       extends TernaryExpression {
     override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
@@ -76,7 +79,7 @@ object SchemaRegistry {
     val out = new Array[Any](math.max(n, 0))
     var j = 1
     while (j <= n) {
-      out(j - 1) = (prefix + j).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      out(j - 1) = (prefix + j).getBytes(StandardCharsets.UTF_8)
       j += 1
     }
     new GenericArrayData(out)
@@ -86,111 +89,125 @@ object SchemaRegistry {
   def synthValsCol(tbl: Column, id: Column, n: Column): Column =
     toColumn(SynthVals(toExpr(tbl), toExpr(id), toExpr(n.cast("int"))))
 
-  /** Native per-charset decode of a raw `array<binary>` row under its
-    * attached schema arrays into a positional `array<string>` — the
-    * codegen'd form of [[convertWithSchema]]'s decode: same TextTypes
-    * gate, same MySQL→JVM charset mapping, same "unknown charset name RAISES" contract as Spark's
-    * `decode` (names outside the decodable set throw instead of
-    * resolving through the JVM alias registry). The decode is REAL
-    * (`java.nio.charset` per cell); only the per-element lambda
-    * interpretation of the HOF form is eliminated. */
-  case class DecodeVals(first: Expression, second: Expression, third: Expression)
-      extends TernaryExpression {
-    override def dataType: DataType = ArrayType(org.apache.spark.sql.types.StringType)
+  /** Column types decoded per their column charset (the reference's
+    * `convert-text`); every other type decodes as UTF-8. */
+  private val TextTypes = Set("tinytext", "text", "mediumtext", "longtext", "varchar", "char")
+
+  /** MySQL charset name → JVM charset. The reference remaps only
+    * utf8mb3/utf8mb4 and hands every other name verbatim to
+    * `Charset/forName` (`stream.clj:214-223`), leaning on the JVM's
+    * alias registry; here the aliases it relies on (latin1, ascii,
+    * utf16, …) are spelled out over the canonical names Spark's
+    * `decode` accepts, which are accepted as given too. A name outside
+    * this map RAISES, as `Charset/forName` does on an unknown name (an
+    * error row, not silent mojibake). One deliberate divergence: a
+    * NULL charset decodes as UTF-8 instead of NPE-ing. */
+  private val Charsets: Map[String, Charset] = {
+    val canonical = Seq("iso-8859-1", "us-ascii", "utf-8", "utf-16", "utf-16be", "utf-16le",
+      "utf-32").map(n => n -> Charset.forName(n)).toMap
+    canonical ++ Map("utf8mb4" -> "utf-8", "utf8mb3" -> "utf-8", "utf8" -> "utf-8",
+      "latin1" -> "iso-8859-1", "ascii" -> "us-ascii", "utf16" -> "utf-16",
+      "utf16le" -> "utf-16le", "utf32" -> "utf-32").map { case (m, c) => m -> canonical(c) }
+  }
+
+  /** Reporting decoders by charset name, one set per task thread (a
+    * decoder is stateful). */
+  private val decoders = ThreadLocal.withInitial(() => new java.util.HashMap[String, CharsetDecoder]())
+
+  /** Decode `raw` under MySQL charset `cs`. Malformed or unmappable
+    * bytes raise `MALFORMED_CHARACTER_CODING`, as Spark's `decode`
+    * does, instead of decoding to replacement characters. */
+  private def decodeCell(raw: Array[Byte], cs: String): UTF8String = {
+    val name = if (cs == null) "utf-8" else cs
+    val d = decoders.get.computeIfAbsent(name, n => Charsets.getOrElse(n,
+      throw new IllegalArgumentException(s"unsupported charset for decode: $n"))
+      .newDecoder().onMalformedInput(CodingErrorAction.REPORT)
+      .onUnmappableCharacter(CodingErrorAction.REPORT))
+    try UTF8String.fromString(d.decode(ByteBuffer.wrap(raw)).toString)
+    catch {
+      case e: CharacterCodingException => throw new IllegalArgumentException(
+        s"[MALFORMED_CHARACTER_CODING] Invalid value found when performing `decode` with ${d.charset}", e)
+    }
+  }
+
+  /** `convert-with-schema` (`stream.clj:214-268`) as one codegen'd
+    * pass per row: zip the column names with the raw `array<binary>`
+    * values into `map<string,string>`, pairing up to the shorter side
+    * like `zipmap`, decoding text-typed columns per their column
+    * charset and every other column as UTF-8. The map's entries keep
+    * the schema's column order, which [[AlignSig]] relies on. */
+  case class DecodeVals(first: Expression, second: Expression, third: Expression,
+      fourth: Expression) extends QuaternaryExpression {
+    override def dataType: DataType = MapType(StringType, StringType)
     override def nullIntolerant: Boolean = true
     override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): DecodeVals = copy(f, s, t)
-    override def nullSafeEval(vals: Any, types: Any, charsets: Any): Any =
-      SchemaRegistry.decodeVals(vals.asInstanceOf[ArrayData],
+        f: Expression, s: Expression, t: Expression, u: Expression): DecodeVals = copy(f, s, t, u)
+    override def nullSafeEval(names: Any, vals: Any, types: Any, charsets: Any): Any =
+      SchemaRegistry.decodeVals(names.asInstanceOf[ArrayData], vals.asInstanceOf[ArrayData],
         types.asInstanceOf[ArrayData], charsets.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (v, t, c) =>
-        s"${ev.value} = graft.cdc.SchemaRegistry.decodeVals($v, $t, $c);")
+      nullSafeCodeGen(ctx, ev, (n, v, t, c) =>
+        s"${ev.value} = graft.cdc.SchemaRegistry.decodeVals($n, $v, $t, $c);")
   }
 
-  private val textTypeSet: java.util.Set[String] = {
-    val s = new java.util.HashSet[String](); TextTypes.foreach(s.add); s
-  }
-  private val charsetCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.charset.Charset]()
-  /** Spark `decode`'s accepted canonical names (others raise, like the
-    * reference's `Charset/forName` on an unknown name). */
-  private val decodableSet: java.util.Set[String] = {
-    val s = new java.util.HashSet[String]()
-    Seq("iso-8859-1", "us-ascii", "utf-8", "utf-16", "utf-16be", "utf-16le", "utf-32")
-      .foreach(s.add)
-    s
-  }
-  private def charsetFor(name: String): java.nio.charset.Charset = {
-    if (!decodableSet.contains(name))
-      throw new IllegalArgumentException(s"unsupported charset for decode: $name")
-    charsetCache.computeIfAbsent(name, java.nio.charset.Charset.forName(_))
-  }
-  /** `mysqlToSparkCharset`, kernel form. */
-  private def mapCharset(cs: String): String = cs match {
-    case null | "utf8mb4" | "utf8mb3" | "utf8" => "utf-8"
-    case "latin1" => "iso-8859-1"
-    case "ascii" => "us-ascii"
-    case "utf16" => "utf-16"
-    case "utf16le" => "utf-16le"
-    case "utf32" => "utf-32"
-    case other => other
-  }
-
-  /** Kernel for [[DecodeVals]] (also called from generated code).
-    * Pairs up to the shorter of values/types, like `zipmap`. */
-  def decodeVals(vals: ArrayData, types: ArrayData, charsets: ArrayData): ArrayData = {
-    val n = math.min(vals.numElements(), types.numElements())
+  /** Kernel for [[DecodeVals]] (also called from generated code). */
+  def decodeVals(names: ArrayData, vals: ArrayData, types: ArrayData,
+                 charsets: ArrayData): MapData = {
+    val n = math.min(names.numElements(), vals.numElements())
+    val keys = new Array[Any](n)
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
-      val raw = vals.getBinary(i)
-      if (raw != null) {
-        val t = if (types.isNullAt(i)) null else types.getUTF8String(i).toString
-        val cs =
-          if (t != null && textTypeSet.contains(t)) {
-            val c = if (i < charsets.numElements() && !charsets.isNullAt(i))
-              charsets.getUTF8String(i).toString else null
-            mapCharset(c)
-          } else "utf-8"
-        out(i) = UTF8String.fromString(new String(raw, charsetFor(cs)))
+      keys(i) = names.getUTF8String(i).copy()
+      if (!vals.isNullAt(i)) {
+        val text = i < types.numElements() && !types.isNullAt(i) &&
+          TextTypes.contains(types.getUTF8String(i).toString)
+        val cs = if (text && i < charsets.numElements() && !charsets.isNullAt(i))
+          charsets.getUTF8String(i).toString else null
+        out(i) = decodeCell(vals.getBinary(i), cs)
       }
       i += 1
     }
-    new GenericArrayData(out)
+    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(out))
   }
 
-  /** Native migrated-signature builder — the codegen'd twin of the
-    * `array_join(transform(sequence…))` projection in [[migrateDemo]]:
-    * one StringBuilder pass over `(target_cols, align_idx, vals_dec)`.
-    * Absent alignments (NULL index) and NULL values render `∅`. */
+  /** Migrated-signature kernel: one StringBuilder pass over
+    * `(target_cols, align_idx, row_map)`, reading the k-th target
+    * column at the 1-based `align_idx(k)` of the row map's entries.
+    * Absent alignments (NULL index, or past the row's values) and NULL
+    * values render `∅`. */
   case class AlignSig(first: Expression, second: Expression, third: Expression)
       extends TernaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.StringType
+    override def dataType: DataType = StringType
     override def nullIntolerant: Boolean = true
     override protected def withNewChildrenInternal(
         f: Expression, s: Expression, t: Expression): AlignSig = copy(f, s, t)
-    override def nullSafeEval(cols: Any, idx: Any, vals: Any): Any =
+    override def nullSafeEval(cols: Any, idx: Any, rowMap: Any): Any =
       SchemaRegistry.alignSig(cols.asInstanceOf[ArrayData],
-        idx.asInstanceOf[ArrayData], vals.asInstanceOf[ArrayData])
+        idx.asInstanceOf[ArrayData], rowMap.asInstanceOf[MapData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (c, x, v) =>
-        s"${ev.value} = graft.cdc.SchemaRegistry.alignSig($c, $x, $v);")
+      nullSafeCodeGen(ctx, ev, (c, x, m) =>
+        s"${ev.value} = graft.cdc.SchemaRegistry.alignSig($c, $x, $m);")
   }
 
-  /** Kernel for [[AlignSig]] (also called from generated code). */
-  def alignSig(targetCols: ArrayData, alignIdx: ArrayData, valsDec: ArrayData): UTF8String = {
+  /** Kernel for [[AlignSig]] (also called from generated code). An
+    * entry whose key is not the column it is aligned to raises: the
+    * map is not in its schema version's column order. */
+  def alignSig(targetCols: ArrayData, alignIdx: ArrayData, rowMap: MapData): UTF8String = {
+    val keys = rowMap.keyArray()
+    val vals = rowMap.valueArray()
     val n = targetCols.numElements()
     val sb = new java.lang.StringBuilder(n * 16)
     var k = 0
     while (k < n) {
       if (k > 0) sb.append(',')
-      sb.append(targetCols.getUTF8String(k).toString).append('=')
-      val absent = alignIdx.isNullAt(k)
-      val v: UTF8String = if (absent) null else {
-        val i = alignIdx.getInt(k) - 1
-        if (i < 0 || i >= valsDec.numElements() || valsDec.isNullAt(i)) null
-        else valsDec.getUTF8String(i)
+      val c = targetCols.getUTF8String(k)
+      sb.append(c.toString).append('=')
+      val i = if (alignIdx.isNullAt(k)) -1 else alignIdx.getInt(k) - 1
+      val v: UTF8String = if (i < 0 || i >= vals.numElements()) null else {
+        if (keys.getUTF8String(i) != c)
+          throw new IllegalArgumentException(s"row_map entry ${i + 1} is not column $c")
+        if (vals.isNullAt(i)) null else vals.getUTF8String(i)
       }
       sb.append(if (v == null) "∅" else v.toString)
       k += 1
@@ -264,7 +281,7 @@ object SchemaRegistry {
     *
     * Both inputs are control-sized (see the header), so they are
     * collected and folded into versions on the driver and the result
-    * is a local frame: its readers ([[attach]], [[alignToLatest]])
+    * is a local frame: its readers ([[attach]], [[migrateToLatest]])
     * plan no window or join over it, and local inputs run no job. */
   def withAlters(baseReg: DataFrame, alters: DataFrame): DataFrame = {
     val bases = baseReg.select("tbl", "version", "from_pos", "col_names", "col_types", "col_charsets")
@@ -313,15 +330,7 @@ object SchemaRegistry {
       .drop("from_pos", "until_pos")
   }
 
-  /** Driver-query wiring (`cdc_schema_attach`, SURVEY §3 synthetic
-    * rules): ALTER TABLE events are committed `purchase` rows with
-    * `id % 10 = 3 AND id < 1000` (routed to their row's table; the id
-    * bound keeps the version count scale-independent — see
-    * [[migrateDemo]]); base schemas are
-    * fixed 4-column specs per synthetic table. The ALTER rows
-    * themselves are removed from the output, exactly like the
-    * reference's `add-table-schema` filters `:alter-table` events
-    * after clearing the cache (`stream.clj:198-212`). */
+  /** [[attachDemo]]'s ALTER rule. */
   private def isDemoAlter: Column = col("etype") === "purchase" && col("id") % 10 === 3 &&
     col("id") < 1000
 
@@ -354,8 +363,17 @@ object SchemaRegistry {
         col("schema_version"), col("n_cols"), col("cols_sig"))
   }
 
-  /** Migrate-on-read: project every row — decoded under the schema
-    * version in force AT ITS POSITION — onto its table's LATEST
+  /** `convert-with-schema`: the [[DecodeVals]] kernel over the
+    * attached schema arrays and the raw `valsCol: array<binary>`,
+    * into `row_map`. A row of an unregistered table (NULL
+    * `schema_version`, so NULL schema arrays) flows on with a NULL
+    * `row_map`, DLQ-routable like [[attach]]'s output. */
+  def convertWithSchema(attached: DataFrame, valsCol: String): DataFrame =
+    attached.withColumn("row_map", toColumn(DecodeVals(toExpr(col("col_names")),
+      toExpr(col(valsCol)), toExpr(col("col_types")), toExpr(col("col_charsets")))))
+
+  /** Migrate-on-read: project every converted row — decoded under the
+    * schema version in force AT ITS POSITION — onto its table's LATEST
     * registered schema, aligning by COLUMN NAME: columns the latest
     * schema shares with the row's version carry their value, columns
     * added since appear as absent (∅), columns dropped since vanish.
@@ -364,53 +382,39 @@ object SchemaRegistry {
     * stops at per-row as-of decode (`stream.clj:197-241`), leaving
     * the alignment to the reader.
     *
-    * Scale shape: the latest-version frame is one row per table
-    * (control-sized, broadcast); the projection is a map-only
-    * transform over the already-attached rows — migration adds ZERO
-    * exchanges on top of the attach. */
+    * The name matching runs once per schema version, not per row: the
+    * registry (control-sized, read from its `tbl`, `version` and
+    * `col_names`) is collected and, per version, `align_idx(k)` is the
+    * 1-based ordinal of the latest schema's k-th column in that
+    * version's `col_names` (NULL when it did not exist yet). That
+    * local frame broadcast-joins on `(tbl, schema_version)` and
+    * [[AlignSig]] indexes each row's `row_map` entries, which must be
+    * in the version's column order, as [[convertWithSchema]] builds
+    * them, so migration adds no exchange over the attach. Adds
+    * `target_version`, `target_cols`, `target_n_cols` and
+    * `migrated_sig`; rows without a registered version keep flowing
+    * with NULLs. */
   def migrateToLatest(converted: DataFrame, registry: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("tbl")).orderBy(col("version").desc)
-    val latest = registry
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select(col("tbl"), col("version").as("target_version"),
-        col("col_names").as("target_cols"))
-    converted.join(broadcast(latest), Seq("tbl"), "left")
+    val spark = converted.sparkSession
+    import spark.implicits._
+    val alignment = registry.select("tbl", "version", "col_names").collect()
+      .groupBy(_.getString(0)).toSeq.flatMap { case (tbl, versions) =>
+        val latest = versions.maxBy(_.getInt(1))
+        val target = Option(latest.getSeq[String](2))
+        versions.map { v =>
+          val own = Option(v.getSeq[String](2)).getOrElse(Nil)
+          (tbl, v.getInt(1), latest.getInt(1), target,
+            target.map(_.map(c => Some(own.indexOf(c) + 1).filter(_ > 0))))
+        }
+      }.toDF("tbl", "schema_version", "target_version", "target_cols", "align_idx")
+    converted.join(broadcast(alignment), Seq("tbl", "schema_version"), "left")
       .withColumn("target_n_cols", size(col("target_cols")))
-      .withColumn("migrated_sig",
-        array_join(transform(col("target_cols"), c =>
-          concat(c, lit("="), coalesce(element_at(col("row_map"), c), lit("∅")))), ","))
-  }
-
-  /** Scale path for migrate-on-read: the name-alignment of every
-    * schema version onto its table's LATEST version, computed ONCE on
-    * the control-sized registry. `align_idx(k)` is the 1-based ordinal
-    * of the latest schema's k-th column inside this version's
-    * `col_names` (NULL when that column didn't exist yet). A log row
-    * then migrates by pure O(1) array indexing — the O(width²)
-    * per-row name scan of the naive map-lookup plan moves onto
-    * ~#versions rows of schema METADATA, where it belongs. Semantics
-    * are identical to [[migrateToLatest]] (align by name); only the
-    * place the name matching happens changes. */
-  def alignToLatest(registry: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("tbl")).orderBy(col("version").desc)
-    val latest = registry
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .select(col("tbl"), col("version").as("target_version"),
-        col("col_names").as("target_cols"))
-    registry.select(col("tbl"), col("version"), col("col_names"))
-      .join(latest, Seq("tbl"))
-      .withColumn("align_idx", transform(col("target_cols"),
-        c => {
-          val p = array_position(col("col_names"), c)
-          when(p > 0, p.cast("int"))
-        }))
-      .select(col("tbl"), col("version").as("schema_version"),
-        col("target_version"), col("target_cols"),
-        size(col("target_cols")).as("target_n_cols"), col("align_idx"))
+      .withColumn("migrated_sig", toColumn(AlignSig(
+        toExpr(col("target_cols")), toExpr(col("align_idx")), toExpr(col("row_map")))))
   }
 
   /** Driver-query wiring (`cdc_schema_migrate`): the [[attachDemo]]
-    * pipeline extended end-to-end — attach the as-of schema,
+    * pipeline extended end-to-end — [[attach]] the as-of schema,
     * synthesize each row's raw binary values (`tbl:id:ordinal` UTF-8
     * bytes, one per attached column — deterministic, so the decode
     * path runs for real and the oracle can replay it), decode via
@@ -448,68 +452,9 @@ object SchemaRegistry {
       .repartition(committed.sparkSession.sparkContext.defaultParallelism, col("pos"))
     val attached = attach(fan, registry)
       .withColumn("vals_raw", synthValsCol(col("tbl"), col("id"), col("n_cols")))
-    // migrate via the index-aligned scale path: per row, decode is one
-    // native pass and each target cell is one O(1) index into the
-    // decoded positional values — no per-row map building, no per-cell
-    // name scan, no interpreted lambdas
-    attached
-      .withColumn("vals_dec", toColumn(DecodeVals(
-        toExpr(col("vals_raw")), toExpr(col("col_types")), toExpr(col("col_charsets")))))
-      .join(broadcast(alignToLatest(registry)), Seq("tbl", "schema_version"))
-      .withColumn("migrated_sig", toColumn(AlignSig(
-        toExpr(col("target_cols")), toExpr(col("align_idx")), toExpr(col("vals_dec")))))
+    migrateToLatest(convertWithSchema(attached, "vals_raw"), registry)
       .select(col("pos"), col("op"), col("tbl"), col("id"),
         col("schema_version"), col("target_version"),
         col("target_n_cols"), col("migrated_sig"))
-  }
-
-  /** MySQL charset name → the name Spark's `decode` accepts.
-    *
-    * The reference remaps ONLY utf8mb3/utf8mb4 and hands every other
-    * name VERBATIM to `Charset/forName` (`stream.clj:214-223`),
-    * leaning on the JVM's alias registry (latin1, ascii, utf16, … are
-    * registered aliases). Spark's `decode` accepts only canonical
-    * names (iso-8859-1, us-ascii, utf-8, utf-16/16be/16le, utf-32),
-    * so the alias resolution the reference gets for free is spelled
-    * out here. Names outside Spark's decodable set pass through
-    * verbatim and RAISE at run time — the same observable behavior as
-    * the reference's `Charset/forName` throwing on an unknown name
-    * (an error row, not silent mojibake). One deliberate divergence:
-    * a NULL charset (collation info missing from the schema row)
-    * decodes as UTF-8 instead of NPE-ing like the reference. */
-  private def mysqlToSparkCharset(cs: Column): Column =
-    when(cs.isNull, lit("utf-8"))
-      .when(cs.isin("utf8mb4", "utf8mb3", "utf8"), lit("utf-8"))
-      .when(cs === "latin1", lit("iso-8859-1"))
-      .when(cs === "ascii", lit("us-ascii"))
-      .when(cs === "utf16", lit("utf-16"))
-      .when(cs === "utf16le", lit("utf-16le"))
-      .when(cs === "utf32", lit("utf-32"))
-      .otherwise(cs)
-
-  /** Decode per the row's column charset (dynamic second argument —
-    * the charset comes from the attached schema, not a plan literal). */
-  private def decodePerCharset(raw: Column, cs: Column): Column =
-    call_function("decode", raw, mysqlToSparkCharset(cs))
-
-  /** `convert-with-schema`: zip a raw `vals: array<binary>` column
-    * with the attached column names into a row map, decoding text-ish
-    * columns per their column charset (the reference's
-    * `convert-text`, `stream.clj:225-241`) and rendering others as
-    * UTF-8. Pairs up to the shorter of names/values, like `zipmap`. */
-  def convertWithSchema(attached: DataFrame, valsCol: String): DataFrame = {
-    val n = least(size(col("col_names")), size(col(valsCol)))
-    val entries = transform(sequence(lit(1), n), i => {
-      val ctype = element_at(col("col_types"), i)
-      val cs = element_at(col("col_charsets"), i)
-      val raw = element_at(col(valsCol), i)
-      struct(
-        element_at(col("col_names"), i).as("key"),
-        when(ctype.isin(TextTypes: _*), decodePerCharset(raw, cs))
-          .otherwise(decode(raw, "UTF-8")).as("value"))
-    })
-    attached.withColumn("row_map",
-      when(n >= 1, map_from_entries(entries))
-        .otherwise(expr("map()").cast("map<string,string>")))
   }
 }

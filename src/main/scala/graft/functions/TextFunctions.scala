@@ -29,11 +29,6 @@ object TextFunctions {
   /** Whitespace tokens (keeps empties, same as DuckDB string_split). */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Occurrences of exactly `word` among tokens. (HOF reference
-    * formulation — use [[tokenStats]] in hot paths.) */
-  def tokenCount(toks: Column, word: String): Column =
-    size(filter(toks, _ === word))
-
   private val TokThe = UTF8String.fromString("the")
   private val TokA = UTF8String.fromString("a")
   private val TokData = UTF8String.fromString("data")
@@ -145,22 +140,6 @@ object TextFunctions {
     val num = t * least(t, lit(300L)) * 8 + (t - s) * 1800 + m * 225
     num.cast("double") / (t * 6000).cast("double")
   }
-
-  /** Composite quality score of a text — one TokenStats pass. */
-  def qualityScore(text: Column, nChars: Column): Column = {
-    val st = tokenStats(tokens(text))
-    qualityFromCounts(st.getField("n_tok"),
-      st.getField("n_the") + st.getField("n_a"), nChars)
-  }
-
-  /** BPE-ish piece count: ⌈len/4⌉ per whitespace token (SURVEY D10).
-    * HOF reference formulation — hot paths read `n_bpe` from
-    * [[tokenStats]] instead. */
-  def bpeishCount(toks: Column): Column =
-    aggregate(
-      transform(toks, t => ((length(t) + 3) / 4).cast("long")),
-      lit(0L),
-      (acc, v) => acc + v)
 
   /** One-pass repetition kernel (also called from generated code):
     * token count, distinct-token count, max single-token frequency,

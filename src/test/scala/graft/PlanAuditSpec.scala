@@ -99,6 +99,19 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"log-carrying shuffle(s): $bad")
   }
 
+  test("convertWithSchema: the decode is the native kernel, no interpreted lambda") {
+    import graft.cdc.SchemaRegistry
+    import spark.implicits._
+    val log = Seq((1L, "upsert", "t", 1L, Seq("42".getBytes("UTF-8"))))
+      .toDF("pos", "op", "tbl", "id", "vals")
+    val reg = SchemaRegistry.withAlters(
+      SchemaRegistry.base(spark, Map("t" -> Seq(SchemaRegistry.ColSpec("body", "text", "latin1")))),
+      Seq(("t", 5L)).toDF("tbl", "pos"))
+    val p = TestSpark.fullPlan(SchemaRegistry.convertWithSchema(SchemaRegistry.attach(log, reg), "vals"))
+    assert(p.contains("decodevals") || p.contains("DecodeVals"), "native decode kernel missing")
+    assert(!p.contains("lambdafunction"), s"interpreted lambda in the convert plan:\n$p")
+  }
+
   test("cdc_gtid_valid: executed-window control frame broadcasts; the log shuffles only parsed gtid pairs") {
     val p = formatted("cdc_gtid_valid")
     assert(p.contains("BroadcastHashJoin"), "token validation must broadcast the executed window")

@@ -49,6 +49,16 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(out.length == 1 && out(0).isNullAt(1))
   }
 
+  test("convertWithSchema passes an unregistered table's row on with a NULL row_map") {
+    val log = Seq((1L, "upsert", "t", 1L, Seq("42".getBytes("UTF-8"), "x".getBytes("UTF-8"))),
+        (2L, "upsert", "nope", 2L, Seq("7".getBytes("UTF-8"))))
+      .toDF("pos", "op", "tbl", "id", "vals")
+    val reg = SchemaRegistry.withAlters(baseReg, log.limit(0).select(col("tbl"), col("pos")))
+    val out = SchemaRegistry.convertWithSchema(SchemaRegistry.attach(log, reg), "vals")
+      .select(col("tbl"), col("row_map")).as[(String, Option[Map[String, String]])].collect().toMap
+    assert(out == Map("t" -> Some(Map("id" -> "42", "body" -> "x")), "nope" -> None))
+  }
+
   test("convertWithSchema zips values with column names and decodes per column charset") {
     val cafeLatin1 = Array[Byte](99, 97, 102, 0xE9.toByte) // 'café' in ISO-8859-1
     val log = Seq((1L, "upsert", "t", 1L, Seq("42".getBytes("UTF-8"), cafeLatin1)))
@@ -105,6 +115,19 @@ class SchemaRegistrySpec extends AnyFunSuite {
         .select(col("row_map")).collect()
     }
     assert(e.getMessage.toLowerCase.contains("charset"), e.getMessage)
+  }
+
+  test("malformed bytes raise instead of decoding to replacement characters") {
+    val log = Seq((1L, "upsert", "t", 1L, Seq(Array[Byte](0xC3.toByte, 0x28))))
+      .toDF("pos", "op", "tbl", "id", "vals")
+    val reg = SchemaRegistry.withAlters(
+      SchemaRegistry.base(spark, Map("t" -> Seq(ColSpec("body", "text", "utf8mb4")))),
+      log.limit(0).select(col("tbl"), col("pos")))
+    val e = intercept[Exception] {
+      SchemaRegistry.convertWithSchema(SchemaRegistry.attach(log, reg), "vals")
+        .select(col("row_map")).collect()
+    }
+    assert(e.getMessage.contains("MALFORMED_CHARACTER_CODING"), e.getMessage)
   }
 
   test("streaming schema attach: stream-static join attaches versions, DLQ-routes unknowns") {
@@ -202,5 +225,15 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(out(0) == ((0, 1, 2, "a=1,c=∅")),
       "v0 row: shared a carries, dropped b vanishes, added c is absent")
     assert(out(1) == ((1, 1, 2, "a=3,c=4")), "latest-version row is identity")
+  }
+
+  test("migrateToLatest raises on a row_map that is not in its version's column order") {
+    val registry = Seq(("t", 0, Seq("a", "b"))).toDF("tbl", "version", "col_names")
+    val converted = Seq(("t", 0, Map("b" -> "2", "a" -> "1")))
+      .toDF("tbl", "schema_version", "row_map")
+    val e = intercept[Exception] {
+      SchemaRegistry.migrateToLatest(converted, registry).select(col("migrated_sig")).collect()
+    }
+    assert(e.getMessage.contains("is not column a"), e.getMessage)
   }
 }
