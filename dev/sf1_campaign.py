@@ -13,8 +13,12 @@ sbt, so a concurrent sbt session can't deadlock the campaign; compile
 with sbt first.
 
 Usage:
-  python3 dev/sf1_campaign.py <x10dir> <workdir> <out.json> \
+  python3 dev/sf1_campaign.py <x10dir> <workdir> <out.json> <timings.json> \
       [--budget 1800] [--chunk 10] [--skip k1,k2] [--only k1,k2] [--all]
+
+<timings.json> is the `_timings.json` of a full graft.Verify run (e.g.
+the sf0.01 check run's `<outDir>/_timings.json`): it names every key
+that run attempted, failed ones included, so its keys are the surface.
 
 dedup_pareto is EXCLUDED by default (its sf1 oracle replay needs a
 ~105 GB DuckDB memory_limit and a dedicated temp dir — run it solo,
@@ -22,11 +26,11 @@ see `git show 6c9821a:SURVEY.md` §18), then merged in from its solo artifact.
 """
 import sys, os, json, subprocess
 
-x10, work, out = sys.argv[1], sys.argv[2], sys.argv[3]
+x10, work, out, timings = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4]
 budget, chunk_sz = 1800, 10
 DEFAULT_SKIP = {"dedup_pareto"}
 user_skip, only, run_all = set(), None, False
-args = sys.argv[4:]
+args = sys.argv[5:]
 while args:
     a = args.pop(0)
     if a == "--budget": budget = int(args.pop(0))
@@ -59,14 +63,11 @@ JAVA = ["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAM
     "-cp", f"{CLASSES}:/opt/spark/jars/*",
 ]
 
-# key list = every query graft.Bench ran into its committed default
-# artifact (its status map names failed queries too: the full surface)
-latest = "BENCH_LAST.json"
-keys = sorted(json.load(open(latest))["status"].keys())
+keys = sorted(json.load(open(timings)).keys())
 if only is not None:
     keys = [k for k in keys if k in only]
 keys = [k for k in keys if k not in skip]
-print(f"[sf1] {len(keys)} keys from {latest}, chunk={chunk_sz}, budget={budget}s")
+print(f"[sf1] {len(keys)} keys from {timings}, chunk={chunk_sz}, budget={budget}s")
 
 os.makedirs(work, exist_ok=True)
 env = dict(os.environ)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** One-command scaling sweep: times a representative query subset at a
   * list of data-scale factors and emits the scaling table of
   * `git show 6c9821a:SURVEY.md` §14 as a JSON artifact, so scaling
@@ -14,10 +12,12 @@ import org.apache.spark.sql.SparkSession
   *  - factor 1 reads `baseDir` directly; factor N materializes (once —
   *    a `_SCALE_OK` marker makes re-runs reuse it) a [[ScaleData]]
   *    replica under `workDir/x<N>`;
-  *  - each query runs ONCE per factor (cold-ish single samples — the
-  *    sweep's signal is the RATIO between factors, which host noise
-  *    affects far less than absolute medians; `graft.Bench` remains
-  *    the absolute-throughput instrument);
+  *  - each query runs ONCE per factor through [[Verify.timed]]
+  *    (cold-ish single samples — the sweep's signal is the RATIO
+  *    between factors, which host noise affects far less than
+  *    absolute medians), materialized through the `noop` sink: a bare
+  *    `count()` would let Catalyst prune most of a projection-only
+  *    plan, while noop executes the full plan and discards the rows;
   *  - output: one JSON line (stdout) and a file
   *    (`$SPARK_GRAFT_SCALE_OUT`, default `SCALE_LAST.json`) with
   *    per-query seconds per factor and the largest/smallest-factor
@@ -77,12 +77,8 @@ object ScaleBench {
     val unknown = queries.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.benchLocal(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-scalebench"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt))
     spark.range(1000000L).selectExpr("sum(id)").collect() // JVM warmup
 
     // the marker pins (factor, base, base fingerprint): a re-run
@@ -138,10 +134,16 @@ object ScaleBench {
         // operator cost (r14's cdc_debezium_decode 13× was mostly this)
         SparkEntry.warmInputs(spark, dir)
         queries.map { name =>
-          val out = Bench.runOnce(spark, dir, name, SparkEntry.queries(name))
+          val (secs, err) = Verify.timed(spark, dir, SparkEntry.queries(name)) { df =>
+            try df.write.format("noop").mode("overwrite").save()
+            // checkpoint-backed results (incrementalNearDup) hold RDD
+            // blocks clearCache can't see; release is a no-op otherwise
+            finally graft.operators.Materialize.release(df)
+          }
+          val out = err.map(Verify.message).toLeft(secs)
           System.err.println(f"[scalebench] x$f $name: " +
-            out.fold(e => s"FAILED $e", s => f"$s%.2f s"))
-          (name, f, out)
+            out.fold(e => s"FAILED ${e.take(200)}", s => f"$s%.2f s"))
+          (name, f, out.left.map(_.take(80)))
         }
       }
 

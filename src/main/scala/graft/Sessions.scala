@@ -33,9 +33,9 @@ import graft.sources.LocalFs
   *    for the synthetic corpus; ICU's static init and per-char calls
   *    dominate small benchmarks), and the UI off.
   *
-  * The harness mains (Verify, Bench, StreamBench, ScaleBench) and the
-  * perfbench runner build their `local[...]` sessions with
-  * [[benchLocal]].
+  * The harness mains (Verify, StreamBench, ScaleBench) build their
+  * sessions with [[local]], and the perfbench runner builds its
+  * `local[...]` session with [[benchLocal]].
   */
 object Sessions {
 

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SQLContext}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -31,8 +31,10 @@ import graft.streaming.EventStreams.FunnelEvent
   * state-size axis: the SAME row volume spread over 10k vs 100k
   * distinct keys — an operator whose per-row cost grows with resident
   * state (store lookup depth, snapshot maintenance) separates the two
-  * columns. The state-store provider is the session default (the
-  * RocksDB contract is pinned separately by RocksDbStateSpec). */
+  * columns. Those columns use the session's default state-store
+  * provider; a RocksDB column re-runs a subset of the same cells at
+  * the largest key size (the RocksDB contract itself is pinned by
+  * RocksDbStateSpec). */
 object StreamBench {
 
   private case class OpRun(name: String, keys: Int, rows: Long, secs: Double,
@@ -40,11 +42,26 @@ object StreamBench {
     def rate: Double = rows / secs
   }
 
-  /** Pump `rows` generated rows through `query(in)` in `chunk`-sized
-    * micro-batches; return the wall-clocked run. */
-  private def run[T](name: String, keys: Int, rows: Long, chunk: Int,
-                     mode: String, in: MemoryStream[T],
-                     query: DataFrame, gen: Long => T): OpRun = {
+  /** Resident-key columns: the same row volume over 10k and 100k keys. */
+  private val keySizes = Seq(10000, 100000)
+
+  /** One operator cell: `rows` generated rows (at rowsScale 1) pumped
+    * through `query` in `chunk`-row micro-batches; `gen(keys)(i)` is
+    * row `i` over `keys` distinct keys. */
+  private case class Cell[T](name: String, rows: Int, chunk: Int, mode: String,
+                             query: Dataset[T] => DataFrame, gen: Int => Long => T)(
+      implicit enc: Encoder[T]) {
+    def run(label: String, keys: Int, rows: Long)(implicit sql: SQLContext): OpRun = {
+      val in = MemoryStream[T]
+      pump(label, keys, rows, chunk, mode, in, query(in.toDS()), gen(keys))
+    }
+  }
+
+  /** Pump `rows` generated rows through `query` (fed by `in`) in
+    * `chunk`-sized micro-batches; return the wall-clocked run. */
+  private def pump[T](name: String, keys: Int, rows: Long, chunk: Int,
+                      mode: String, in: MemoryStream[T],
+                      query: DataFrame, gen: Long => T): OpRun = {
     val ckpt = Files.createTempDirectory(s"streambench_$name").toString
     val sank = new java.util.concurrent.atomic.LongAdder
     val q: StreamingQuery = query.writeStream
@@ -71,87 +88,63 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val scale = if (args.nonEmpty) args(0).toDouble else 1.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Sessions.benchLocal(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-streambench"),
-      cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors())(_.toInt))
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+    implicit val sqlCtx: SQLContext = spark.sqlContext
 
-    // resident-key columns; override for deep-state probes (e.g.
-    // "10000,100000,1000000" with a row `scale` ≥ keys/100k so the
-    // biggest column actually touches every key a few times)
-    val keySizes = sys.env.get("SPARK_GRAFT_STREAMBENCH_KEYS")
-      .map(_.split(',').map(_.trim.toInt).toSeq)
-      .getOrElse(Seq(10000, 100000))
     val baseTs = 1700000000000L // fixed epoch-ms base: deterministic event time
     def ts(i: Long) = new java.sql.Timestamp(baseTs + i)
-    def rowsOf(n: Int): Long = (n * scale).toLong
+    def rowsOf(c: Cell[_]): Long = (c.rows * scale).toLong
+    def change(value: Long => Double): Int => Long => Change = keys => i =>
+      Change(i, if (i % 11 == 0) "delete" else "upsert", "t", i % keys, value(i))
+
+    val entityState = Cell[Change]( // B1: the CDC fold — hot path of every live view
+      "entityState", 400000, 50000, "update",
+      ChangelogStream.entityState(_).toDF(), change(_ * 0.5))
+    val cells: Seq[Cell[_]] = Seq(
+      entityState,
+      Cell[Change]( // B24: append-on-close version history
+        "scd2Versions", 400000, 50000, "append",
+        ChangelogStream.scd2Versions(_).toDF(), change(i => (i % 7) * 1.0)),
+      Cell[FunnelEvent]( // B31: per-user stage counter
+        "funnelStages", 400000, 50000, "append",
+        EventStreams.funnelStages(_).toDF(),
+        keys => i => FunnelEvent(i % keys, Seq("view", "click", "purchase")((i / keys % 3).toInt),
+          baseTs * 1000 + i)),
+      Cell[(Long, java.sql.Timestamp, String)]( // B18: minhash + banded bucket state (16 bands/doc)
+        "nearDupBandHits", 60000, 20000, "update",
+        ds => EventStreams.nearDupBandHits(ds.toDF("doc_id", "ts", "text")),
+        keys => i => {
+          val d = i % keys
+          (i, ts(i), (0 until 12).map(t => s"w${(d * 31 + t * 7) % (keys * 4)}").mkString(" "))
+        }),
+      Cell[(Long, java.sql.Timestamp, Seq[Float])]( // B18c: perceptual banding (6 bands/row at dim 16)
+        "phashBandHits", 120000, 30000, "update",
+        ds => EventStreams.phashBandHits(ds.toDF("media_id", "ts", "features")),
+        keys => i => {
+          val d = i % keys
+          (i, ts(i), (0 until 16).map(j => ((d * 2654435761L + j * 40503L) % 1000L) / 1000.0f))
+        }),
+      // B18d: hyperplane banding + in-flight cosine verify (8 bands/row
+      // at dim 64 — the heaviest per-row state payload of the banded
+      // family: owner id + vector)
+      Cell[(Long, java.sql.Timestamp, Seq[Float])](
+        "embeddingBandHits", 60000, 20000, "update",
+        ds => EventStreams.embeddingBandHits(ds.toDF("vec_id", "ts", "embedding")),
+        keys => i => {
+          val d = i % keys
+          (i, ts(i), (0 until 64).map(j =>
+            (((d * 2654435761L + j * 40503L) % 2000L) - 1000L) / 1000.0f))
+        }))
 
     // unmeasured warmup: the first streaming query of a JVM pays JIT +
     // state-store init that would otherwise land entirely on the first
     // measured cell (the 10k-keys column of whichever op runs first)
-    locally {
-      val in = MemoryStream[Change]
-      run("warmup", 0, 20000, 20000, "update", in,
-        ChangelogStream.entityState(in.toDS()).toDF(),
-        i => Change(i, "upsert", "t", i % 1000, 0.0))
-    }
+    entityState.run("warmup", 1000, 20000)
 
     val runs = scala.collection.mutable.ArrayBuffer[OpRun]()
-    for (keys <- keySizes) {
-      locally { // B1 entityState: the CDC fold — hot path of every live view
-        val in = MemoryStream[Change]
-        runs += run("entityState", keys, rowsOf(400000), 50000, "update", in,
-          ChangelogStream.entityState(in.toDS()).toDF(),
-          i => Change(i, if (i % 11 == 0) "delete" else "upsert", "t", i % keys, i * 0.5))
-      }
-      locally { // B24 scd2Versions: append-on-close version history
-        val in = MemoryStream[Change]
-        runs += run("scd2Versions", keys, rowsOf(400000), 50000, "append", in,
-          ChangelogStream.scd2Versions(in.toDS()).toDF(),
-          i => Change(i, if (i % 11 == 0) "delete" else "upsert", "t", i % keys, (i % 7) * 1.0))
-      }
-      locally { // B31 funnelStages: per-user stage counter
-        val in = MemoryStream[FunnelEvent]
-        runs += run("funnelStages", keys, rowsOf(400000), 50000, "append", in,
-          EventStreams.funnelStages(in.toDS()).toDF(),
-          i => FunnelEvent(i % keys, Seq("view", "click", "purchase")((i / keys % 3).toInt),
-            baseTs * 1000 + i))
-      }
-      locally { // B18 nearDupBandHits: minhash + banded bucket state (16 bands/doc)
-        val in = MemoryStream[(Long, java.sql.Timestamp, String)]
-        runs += run("nearDupBandHits", keys, rowsOf(60000), 20000, "update", in,
-          EventStreams.nearDupBandHits(in.toDF().toDF("doc_id", "ts", "text")),
-          i => {
-            val d = i % keys
-            (i, ts(i), (0 until 12).map(t => s"w${(d * 31 + t * 7) % (keys * 4)}").mkString(" "))
-          })
-      }
-      locally { // B18c phashBandHits: perceptual banding (6 bands/row at dim 16)
-        val in = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
-        runs += run("phashBandHits", keys, rowsOf(120000), 30000, "update", in,
-          EventStreams.phashBandHits(in.toDF().toDF("media_id", "ts", "features")),
-          i => {
-            val d = i % keys
-            (i, ts(i), (0 until 16).map(j => ((d * 2654435761L + j * 40503L) % 1000L) / 1000.0f))
-          })
-      }
-      locally { // B18d embeddingBandHits: hyperplane banding + in-flight
-        // cosine verify (8 bands/row at dim 64 — the heaviest per-row
-        // state payload of the banded family: owner id + vector)
-        val in = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
-        runs += run("embeddingBandHits", keys, rowsOf(60000), 20000, "update", in,
-          EventStreams.embeddingBandHits(in.toDF().toDF("vec_id", "ts", "embedding")),
-          i => {
-            val d = i % keys
-            (i, ts(i), (0 until 64).map(j =>
-              (((d * 2654435761L + j * 40503L) % 2000L) - 1000L) / 1000.0f))
-          })
-      }
-    }
+    for (keys <- keySizes; c <- cells) runs += c.run(c.name, keys, rowsOf(c))
 
     // RocksDB provider column (r16 verdict stretch, banded ops added
     // r17 verdict #4): the two CDC fold ops PLUS the two banded
@@ -162,52 +155,19 @@ object StreamBench {
     // banded ops have the most store-sensitive access pattern
     // (per-bucket point lookups + event-time timers), exactly where a
     // provider regression would hide.
+    val rocksDbCells = Set("entityState", "scd2Versions", "nearDupBandHits", "phashBandHits")
     locally {
       val provKey = "spark.sql.streaming.stateStore.providerClass"
       val prev = spark.conf.getOption(provKey)
       spark.conf.set(provKey,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       try {
-        val keys = keySizes.max
-        locally { // unmeasured RocksDB warmup (advisor r17): the first
-          // RocksDB query pays native-library + provider init that
-          // would otherwise bias the first measured cell low — mirror
-          // of the default-provider warmup above
-          val in = MemoryStream[Change]
-          run("warmup_rocksdb", 0, 20000, 20000, "update", in,
-            ChangelogStream.entityState(in.toDS()).toDF(),
-            i => Change(i, "upsert", "t", i % 1000, 0.0))
-        }
-        locally {
-          val in = MemoryStream[Change]
-          runs += run("entityState_rocksdb", keys, rowsOf(400000), 50000, "update", in,
-            ChangelogStream.entityState(in.toDS()).toDF(),
-            i => Change(i, if (i % 11 == 0) "delete" else "upsert", "t", i % keys, i * 0.5))
-        }
-        locally {
-          val in = MemoryStream[Change]
-          runs += run("scd2Versions_rocksdb", keys, rowsOf(400000), 50000, "append", in,
-            ChangelogStream.scd2Versions(in.toDS()).toDF(),
-            i => Change(i, if (i % 11 == 0) "delete" else "upsert", "t", i % keys, (i % 7) * 1.0))
-        }
-        locally {
-          val in = MemoryStream[(Long, java.sql.Timestamp, String)]
-          runs += run("nearDupBandHits_rocksdb", keys, rowsOf(60000), 20000, "update", in,
-            EventStreams.nearDupBandHits(in.toDF().toDF("doc_id", "ts", "text")),
-            i => {
-              val d = i % keys
-              (i, ts(i), (0 until 12).map(t => s"w${(d * 31 + t * 7) % (keys * 4)}").mkString(" "))
-            })
-        }
-        locally {
-          val in = MemoryStream[(Long, java.sql.Timestamp, Seq[Float])]
-          runs += run("phashBandHits_rocksdb", keys, rowsOf(120000), 30000, "update", in,
-            EventStreams.phashBandHits(in.toDF().toDF("media_id", "ts", "features")),
-            i => {
-              val d = i % keys
-              (i, ts(i), (0 until 16).map(j => ((d * 2654435761L + j * 40503L) % 1000L) / 1000.0f))
-            })
-        }
+        // unmeasured RocksDB warmup (advisor r17): the first RocksDB
+        // query pays native-library + provider init that would
+        // otherwise bias the first measured cell low
+        entityState.run("warmup_rocksdb", 1000, 20000)
+        for (c <- cells if rocksDbCells(c.name))
+          runs += c.run(s"${c.name}_rocksdb", keySizes.max, rowsOf(c))
       } finally prev match {
         case Some(p) => spark.conf.set(provKey, p)
         case None => spark.conf.unset(provKey)
@@ -216,9 +176,9 @@ object StreamBench {
 
     def jnum(d: Double): String = f"$d%.1f"
     val byOp = runs.groupBy(_.name).toSeq.sortBy(_._1).map { case (op, rs) =>
-      val cells = rs.sortBy(_.keys)
+      val rates = rs.sortBy(_.keys)
         .map(r => "\"" + r.keys + "\":" + jnum(r.rate)).mkString("{", ",", "}")
-      "\"" + op + "\":" + cells
+      "\"" + op + "\":" + rates
     }.mkString("{", ",", "}")
     val line = s"""{"metric":"streambench","unit":"rows_per_sec","scale":$scale,""" +
       s""""key_sizes":[${keySizes.mkString(",")}],"ops":$byOp}"""

@@ -100,25 +100,27 @@ object Debezium {
       .otherwise(struct(
         env.fields.toSeq.map(f => parsed.getField(f.name).as(f.name)): _*))
 
+  /** Output column → the `source` field backing it. */
+  private val outToSource = Seq(
+    "src_name" -> "name", "db" -> "db", "tbl_name" -> "table",
+    "file" -> "file", "pos" -> "pos", "gtid" -> "gtid")
+
   /** Decode a frame of raw Debezium JSON strings (`jsonCol`) into
     * typed envelope columns. Handles both the schema-wrapped and the
     * flat form in a SINGLE `from_json` pass (see [[autoSchema]]).
     * Output columns: `before`, `after`, `op`, `src_name`, `db`,
     * `tbl_name`, `file`, `pos`, `gtid`, `ts_ms`, `tx_id` + every input
     * column except `jsonCol`. Undecodable lines yield NULL `op` —
-    * route them with [[decodeWithDlq]]. */
-  /** `format`: "auto" (default) handles mixed feeds at one parse per
+    * route them with [[decodeWithDlq]].
+    *
+    * `format`: "auto" (default) handles mixed feeds at one parse per
     * row via the merged [[autoSchema]]. A real connector's converter
     * mode is fixed configuration, so pinning "wrapped" or "flat"
     * parses against the exact single-form schema (rows of the other
     * form then land in the DLQ, which is the correct reading of a
-    * misconfigured feed). */
-  /** Output column → the `source` field backing it. */
-  private val outToSource = Seq(
-    "src_name" -> "name", "db" -> "db", "tbl_name" -> "table",
-    "file" -> "file", "pos" -> "pos", "gtid" -> "gtid")
-
-  /** `columns` (optional): SCHEMA-PRUNED decode — parse only the
+    * misconfigured feed).
+    *
+    * `columns` (optional): SCHEMA-PRUNED decode — parse only the
     * envelope fields the listed output columns need. Entries are
     * output-column names (`op`, `tbl_name`, `ts_ms`, `tx_id`, …);
     * `before`/`after` may be narrowed to single row fields as
@@ -251,6 +253,12 @@ object Debezium {
       routed.filter(col("op").isNull).select(col(rc).as("raw")))
   }
 
+  /** The `columns` pruning set for a [[decode]] whose only consumer
+    * is [[toImagedChanges]] — the canonical-pipeline case: 7 leaf
+    * fields out of the 13 the full envelope materializes. */
+  val ImagedChangeColumns: Seq[String] =
+    Seq("op", "tbl_name", "file", "pos", "before.id", "after.id", "after.value")
+
   /** Canonical-row envelope → [[ImagedChange]] stream: `c`/`r` (insert
     * / snapshot read) and `u` map to upserts/updates with both images
     * (a PK-changing update carries `before.id ≠ after.id` — exactly
@@ -261,12 +269,6 @@ object Debezium {
     * `toImagedChanges(decode(raw)) |> expandUpdates |> entityState`
     * (or `UpsertSink.materialize`) — the full reference pipeline from
     * a public wire format, no broker required. */
-  /** The `columns` pruning set for a [[decode]] whose only consumer
-    * is [[toImagedChanges]] — the canonical-pipeline case: 7 leaf
-    * fields out of the 13 the full envelope materializes. */
-  val ImagedChangeColumns: Seq[String] =
-    Seq("op", "tbl_name", "file", "pos", "before.id", "after.id", "after.value")
-
   def toImagedChanges(decoded: DataFrame): Dataset[ImagedChange] = {
     import decoded.sparkSession.implicits._
     decoded.select(

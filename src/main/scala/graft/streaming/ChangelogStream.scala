@@ -70,16 +70,17 @@ object ChangelogStream {
     * [[UpsertSink.materialize]] see only primitive ops. Within one
     * position the fold applies deletes before upserts (see
     * [[entityState]]), so PK swaps inside one multi-row UPDATE
-    * resolve exactly like the batch path. */
+    * resolve exactly like the batch path. The expansion IS the batch
+    * path's, [[graft.cdc.Changelog.expandUpdateImages]]; its NULL
+    * before-image value reads as 0.0 here. */
   def expandUpdates(changes: Dataset[ImagedChange]): Dataset[Change] = {
     import changes.sparkSession.implicits._
-    changes.flatMap { c =>
-      if (c.op != "update") Seq(Change(c.pos, c.op, c.tbl, c.id, c.value))
-      else if (c.oldId != c.id)
-        Seq(Change(c.pos, "delete", c.tbl, c.oldId, 0.0),
-            Change(c.pos, "upsert", c.tbl, c.id, c.value))
-      else Seq(Change(c.pos, "upsert", c.tbl, c.id, c.value))
-    }
+    graft.cdc.Changelog.expandUpdateImages(
+      changes.withColumnRenamed("oldId", "old_id").withColumnRenamed("value", "val"))
+      .withColumn("val", coalesce(col("val"), lit(0.0)))
+      .drop("img")
+      .withColumnRenamed("val", "value")
+      .as[Change]
   }
 
   /** B1: fold a changelog stream into live entity state (update mode).
